@@ -256,9 +256,7 @@ def main() -> None:
             if child.returncode != 0:
                 sys.stderr.write(child.stdout[-2000:] + child.stderr[-4000:])
                 raise RuntimeError(f"scale-tier subprocess {entry} failed")
-            payload = json.loads(
-                [ln for ln in child.stdout.splitlines() if ln.startswith("{")][-1]
-            )
+            payload = _scale_payload(entry, child)
             scale_timings.update(payload["scale_timings"])
             extra.update(payload["scale_extra"])
         timings.update({k: round(v, 3) for k, v in scale_timings.items()})
@@ -308,6 +306,27 @@ def main() -> None:
     )
     if SCALE_DOCS <= 0:
         spark.stop()
+
+
+def _scale_payload(entry: str, child) -> dict:
+    """The result line a scale-tier child printed last; a child that
+    exited 0 without one raises a RuntimeError naming the entry and
+    echoing the tail of its output."""
+    lines = [ln for ln in child.stdout.splitlines() if ln.startswith("{")]
+    payload: dict = {}
+    if lines:
+        try:
+            payload = json.loads(lines[-1])
+        except json.JSONDecodeError:
+            pass
+    missing = sorted({"scale_timings", "scale_extra"} - set(payload))
+    if missing:
+        raise RuntimeError(
+            f"scale-tier subprocess {entry} printed no result line with "
+            f"{', '.join(missing)}; output tail:\n"
+            f"{child.stdout[-2000:]}{child.stderr[-2000:]}"
+        )
+    return payload
 
 
 def scale_main(entry: str) -> None:

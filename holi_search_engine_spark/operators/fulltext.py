@@ -546,10 +546,11 @@ _DIST_RANGES = 8  # pinned: deterministic quantile range bounds per Q2-style det
 def search_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTRIBUTED block-index BM25 plan as a driver-checked entry —
     the 10^12-turn serving path (``query/distributed.py:
-    distributed_bm25_local_topk``: bucket-partition-pruned + term-pushed
-    block scan, broadcast doc-key-range join, cogroup→applyInPandas
-    block-sweep kernel, per-range local top-k unioned and merged), checked
-    against the SAME DuckDB oracle as ``search_bm25_topk``.
+    distributed_bm25_local_topk_many`` over a batch of one query:
+    bucket-partition-pruned + term-pushed block scan, broadcast
+    doc-key-range join, cogroup→applyInPandas block-sweep kernel,
+    per-range local top-k unioned and merged), checked against the SAME
+    DuckDB oracle as ``search_bm25_topk``.
 
     The block artifacts are built inside the entry from the driver-verified
     surface token stream (``index_term_tf``) via the production encoder
@@ -577,7 +578,7 @@ def search_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..plans.compression import build_block_index
     from ..plans.index_build import IndexPaths, build_wmetric
-    from ..query.distributed import distributed_bm25_local_topk
+    from ..query.distributed import distributed_bm25_local_topk_many
     from ..sources.catalog import write_table
 
     # cached: the stream is materialized by the avgdl action, the block
@@ -630,14 +631,15 @@ def search_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle's df
     write_table(build_wmetric(tf, int(n)), paths.wmetric)
     tf.unpersist()
-    local = distributed_bm25_local_topk(
-        spark, paths, BM25_QUERY_TEXT, k=10, n_ranges=_DIST_RANGES
+    local = distributed_bm25_local_topk_many(
+        spark, paths, [BM25_QUERY_TEXT], k=10, n_ranges=_DIST_RANGES
     )
     if local is None:  # no terms / empty corpus
         return spark.createDataFrame([], "doc_id long, score double")
     # the union of per-range top-ks contains the global top-k (every
     # posting of a doc shares its key); this merge is the Spark-side twin
-    # of distributed_bm25_topk's driver merge, rounded to the oracle's 6dp
+    # of distributed_bm25_topk_many's driver merge, rounded to the
+    # oracle's 6dp
     return (
         local.select(
             F.col("doc_key").alias("doc_id"), F.round("score", 6).alias("score")

@@ -1,20 +1,28 @@
-"""Distributed reference-semantics search: the same Ranker steps 1-11 as
-``query/ranker.py`` executed as a Spark job over the block index — the
-path a 10^12-turn corpus needs when a Zipf-head term's posting list cannot
-sit in driver memory.
+"""Distributed reference-semantics and BM25 search: the same Ranker steps
+1-11 as ``query/ranker.py``, and the same block-max sweep as
+``query/bm25.py``, executed as Spark jobs over the block index — the path
+a 10^12-turn corpus needs when a Zipf-head term's posting list cannot sit
+in driver memory.
 
-Plan shape per query:
-- block scan pruned TWICE: partition pruning on ``bucket`` (computed for
-  the query's terms) + predicate pushdown on ``term``;
-- mapInPandas decode of only those blocks → (term, doc_key, tf) rows;
-- candidate aggregation (occurrence, first-term-order for quirk Q5) —
-  one shuffle keyed by doc;
-- top-250 occurrence cut (TakeOrdered, no full sort);
+Each semantics has ONE plan, and it scores a batch of queries; a single
+query is a batch of one (:meth:`DistributedRanker.search`,
+:func:`distributed_bm25_topk`).
+
+Reference-semantics plan (:meth:`DistributedRanker.search_many`):
+- block scan pruned TWICE to the union of the batch's lookup terms:
+  partition pruning on ``bucket`` + predicate pushdown on ``term``;
+- mapInPandas decode of only those blocks → (term, doc_key, tf) rows,
+  fanned out to the queries that look each term up;
+- candidate aggregation per (query, doc) (occurrence, first-term order
+  for quirk Q5), with one pooled count action deciding the two-step
+  expansion (re-run with stopwords included when candidates < 50,
+  ``Ranker.java:177-200``) for every query at once;
+- top-250 occurrence cut per query (rank window);
 - scoring joins against broadcast idf + doc-keyed ntf/doc_meta.
 
-The two-step expansion control flow (re-run with stopwords included when
-candidates < 50, ``Ranker.java:177-200``) costs one extra count() action,
-exactly mirroring the reference's behavior.
+BM25 plan (:func:`distributed_bm25_topk_many`): one doc-key-range cogroup
+whose kernel sweeps every query's blocks per range, then a driver merge
+of the per-range local top-ks.
 """
 
 from __future__ import annotations
@@ -45,11 +53,11 @@ _DECODE_SCHEMA = "term string, doc_key long, tf double"
 
 
 def _query_meta(query: str) -> dict | None:
-    """The reference's query preamble, shared by :meth:`DistributedRanker.
-    search` and :meth:`~DistributedRanker.search_many` so the quirk
-    ordering (COLLECTION-constructor HashSet order for the expansion
-    pass, add-loop order for the first pass — Q11) lives in ONE place.
-    None ⇔ no tokens (Java's ``words.length < 1`` guard)."""
+    """The reference's query preamble for one query of a
+    :meth:`~DistributedRanker.search_many` batch: the quirk ordering
+    (COLLECTION-constructor HashSet order for the expansion pass, add-loop
+    order for the first pass — Q11).  None ⇔ no tokens (Java's
+    ``words.length < 1`` guard)."""
     words = java_query_tokens(query)  # Java trim + ASCII-\s split
     if not words:
         return None
@@ -73,10 +81,9 @@ def _query_meta(query: str) -> dict | None:
 
 def _keyword_bonus_expr(qraw, sw_set, n_sw):
     """The reference's title keyword bonus (``Ranker.java:223-232``) over
-    COLUMN operands — literals in the single-query path, per-query
-    columns in the batch — so the formula (full-substring 10.0, else
-    overlap ≥ 0.6 → overlap·10, else 0) is defined ONCE.
-    ``array_intersect`` dedups, so no array_distinct is needed."""
+    per-query COLUMN operands: full-substring 10.0, else overlap ≥ 0.6 →
+    overlap·10, else 0.  ``array_intersect`` dedups, so no
+    array_distinct is needed."""
     n_overlap = F.size(F.array_intersect(_title_tokens_expr(), sw_set))
     overlap = F.when(
         n_sw > F.lit(0), n_overlap.cast("double") / n_sw
@@ -101,8 +108,7 @@ def _title_tokens_expr():
     trim class are exact).  ς→σ folds the final-sigma forms like
     ``java_query_tokens`` does on the query side (see
     ``functions/javacompat.py`` — Spark's lower() and Java's toLowerCase
-    disagree on the contextual rule).  Shared by the single-query and
-    batched keyword-bonus paths so a parity fix cannot diverge them."""
+    disagree on the contextual rule)."""
     return F.split(
         F.regexp_replace(
             F.lower(
@@ -158,146 +164,21 @@ class DistributedRanker:
         # dominating a serving path whose p95 budget is ~10 ms
         return {t: term_bucket(t, self.buckets) for t in terms}
 
-    def _postings_df(self, lookup_terms: list[str]) -> DataFrame:
-        """(term, ord, doc_key, tf) for the query terms, bucket-pruned.
-        ``lookup_terms`` must already be in the reference's iteration
-        order for this pass (see ``RankerEngine._candidates`` — the first
-        pass and the expansion pass bucket differently)."""
-        order = {t: i for i, t in enumerate(lookup_terms)}
-        tb = self._term_buckets(list(order))
-        blocks = (
-            read_table(self.spark, self.paths.blocks)
-            .where(F.col("bucket").isin(sorted(set(tb.values()))))
-            .where(F.col("term").isin(list(order)))
-            .select("term", "doc_bytes", "tf_bytes")
-        )
-        decoded = blocks.mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-        odf = self.spark.createDataFrame(
-            [(t, o) for t, o in order.items()], "term string, ord int"
-        )
-        return decoded.join(F.broadcast(odf), "term")
-
-    def _candidates(self, hits: DataFrame) -> DataFrame:
-        return hits.groupBy("doc_key").agg(
-            F.count(F.lit(1)).alias("occurrence"), F.min("ord").alias("first_ord")
-        )
-
     def search(self, query: str, limit: int | None = None) -> pd.DataFrame:
-        qm = _query_meta(query)
-        if qm is None:  # unreachable, like Java's words.length < 1 guard
-            return self._empty()
-        words = qm["words"]
-        words_set_order = qm["words_set_order"]
-        first_order = qm["first_order"]
-        hits = self._postings_df(first_order).cache()
-        cand = self._candidates(hits)
-        n_cand = cand.count()
-        # expansion branch (Q4 stemming is ∅); skipped only when the
-        # re-run would iterate identically — the reference's second pass
-        # iterates words_set in COLLECTION-constructor bucket order, which
-        # can differ from the first pass's add-loop order at a capacity
-        # boundary (see RankerEngine.search), shifting the Q5 tf-drops
-        if n_cand < EXPAND_THRESHOLD and first_order != words_set_order:
-            hits.unpersist()
-            hits = self._postings_df(words_set_order).cache()
-            cand = self._candidates(hits)
-            n_cand = cand.count()
-        if n_cand == 0:
-            hits.unpersist()
-            return self._empty()
-
-        cut = cand.orderBy(F.col("occurrence").desc(), "doc_key").limit(TOP_CUT)
-
-        key = doc_key_expr(self.doc_cols)
-        ntf = read_table(self.spark, self.paths.ntf).select(
-            key.alias("doc_key"), "ntf"
-        )
-        word_count = qm["word_count"]
-        # idfs resolved driver-side in ONE pruned read (|query| rows) so
-        # qdf is a local literal frame — no join — and the Java NaN quirk
-        # below is decidable before the plan is built
-        wm_pdf = (
-            read_table(self.spark, self.paths.wmetric)
-            .where(F.col("term").isin(list(word_count)))
-            .select("term", "idf")
-            .toPandas()
-        )
-        idf_map = dict(zip(wm_pdf["term"], wm_pdf["idf"]))
-        # Ranker.java:249 accumulates qtf·pow(idf,1.5)·wf over EVERY query
-        # word for EVERY candidate, with wf = 0 when the word misses the
-        # doc — and Java's NaN·0.0 = NaN, so one negative-idf word (Q3:
-        # df == n gives ln(n/(n+1)) < 0) poisons every candidate's weight.
-        nan_poison = any(
-            float(idf_map.get(t, 0.0)) < 0.0 for t in word_count
-        )
-        if nan_poison:
-            # every weight is NaN regardless of the postings, so skip the
-            # plan's most expensive stage (the scoring joins + shuffle)
-            # entirely; NaN must reach every candidate, including ones the
-            # scoring join would have lost to an absent ntf row — Java
-            # poisons those too
-            base = cut.withColumn("weight", F.lit(float("nan")))
-        else:
-            qdf = self.spark.createDataFrame(
-                [(t, c, float(idf_map.get(t, 0.0))) for t, c in word_count.items()],
-                "term string, qtf int, idf double",  # Q8: absent → 0
-            )
-            # Q5: rows whose ord == first_ord contribute 0 (tf dropped)
-            weight_sum = F.sum(
-                F.when(F.col("ord") == F.col("first_ord"), F.lit(0.0)).otherwise(
-                    F.col("qtf") * F.pow("idf", 1.5) * F.col("tf") / F.col("ntf")
-                )
-            )
-            scored_hits = (
-                cut.join(hits, "doc_key")
-                .join(F.broadcast(qdf), "term")
-                .join(ntf, "doc_key")
-                .groupBy("doc_key")
-                .agg(weight_sum.alias("weight"))
-            )
-            base = cut.join(scored_hits, "doc_key", "left").na.fill({"weight": 0.0})
-        meta_df = read_table(self.spark, self.paths.doc_meta).select(
-            key.alias("doc_key"), "title"
-        )
-        sw_set = qm["sw_set"]
-        # the shared kw/score builders with LITERAL operands (sw_set is
-        # never empty here — the stopword fallback guarantees it — so
-        # the builder's n_sw>0 guard is equivalent to the old Python
-        # `if sw_set` branch)
-        kw = _keyword_bonus_expr(
-            F.lit(query),
-            F.array(*[F.lit(t) for t in sw_set]),
-            F.lit(len(sw_set)),
-        )
-        base = self._with_pagerank(base.join(meta_df, "doc_key", "left"))
-        result = (
-            base.select(
-                "doc_key",
-                "occurrence",
-                F.col("weight").alias("tf_idf_weight"),
-                "page_rank",
-                kw.alias("keyword_match"),
-                _final_score_expr(kw).alias("score"),
-            )
-            .orderBy(F.col("score").desc(), "doc_key")
-        )
-        if limit is not None:
-            result = result.limit(limit)
-        pdf = result.toPandas()
-        hits.unpersist()
-        keys = pdf["doc_key"].to_numpy(dtype=np.int64)
-        out = doc_key_to_cols(keys, self.doc_cols)
-        return pd.concat([out.reset_index(drop=True), pdf.reset_index(drop=True)], axis=1)
+        """Reference-semantics search for one query: :meth:`search_many`
+        over a batch of one, without the ``query_id`` column."""
+        return self.search_many([query], limit).drop(columns="query_id")
 
     def _empty(self) -> pd.DataFrame:
         cols = [*self.doc_cols, "doc_key", "occurrence", "tf_idf_weight",
                 "page_rank", "keyword_match", "score"]
-        return pd.DataFrame(columns=cols)
+        out = pd.DataFrame(columns=cols)
+        out.insert(0, "query_id", pd.Series([], dtype="int32"))
+        return out
 
     def _with_pagerank(self, base: DataFrame) -> DataFrame:
         """Static prior 0.75·pagerank (``Ranker.java:255``): per-candidate
-        join against the doc-keyed pageranks artifact when built, else 0
-        — shared by the single-query and batched scorers."""
+        join against the doc-keyed pageranks artifact when built, else 0."""
         if self._has_pagerank:
             pr = read_table(self.spark, self.paths.pageranks).select(
                 "doc_key", F.col("rank").alias("page_rank")
@@ -334,175 +215,204 @@ class DistributedRanker:
     def search_many(
         self, queries: list[str], limit: int | None = None
     ) -> pd.DataFrame:
-        """Reference-semantics search for a BATCH of queries in one job
-        chain — the fixture-replay / evaluation-sweep shape of
-        :meth:`search`, which pays ~4 Spark actions per query (postings
-        scan, candidate count, possible expansion recount, scoring
-        collect).  This runs the whole batch in 4: one pooled
-        candidate-count action (all queries' first passes in one scan),
-        one expansion re-scan for just the queries the reference's
-        ``numResults < 50`` branch re-runs, one pruned wmetric read for
-        the union of the batch's words, one scoring/collect job.
+        """Reference-semantics search for a BATCH of queries in 3 Spark
+        actions however many queries it holds: one pooled candidate-count
+        action (all queries' first passes in one scan), one pruned
+        wmetric read for the union of the batch's words, and one
+        scoring/collect job, which also re-scans the blocks for just the
+        queries the reference's ``numResults < 50`` branch re-runs.
 
-        Semantics per query are IDENTICAL to :meth:`search` (same
-        expansion control flow, Q5 first-term drop per query, Q8
-        absent-idf zero, the Java NaN-poisoning quirk, title keyword
-        bonus on the RAW query string, 0.75·pagerank prior) — pinned in
-        ``tests/test_distributed.py`` including NaN-set equality.  The
-        per-query score-sum order is Spark-aggregation order, same as
-        :meth:`search` (ulp-level vs the HashMap-order single-node
-        engine, Q12).  Output adds a leading ``query_id`` (position in
-        ``queries``); rows per query are in (score desc, doc_key asc)
-        order with NaN scores first, as Spark's desc sort places them.
-        Queries with no tokens or no candidates contribute zero rows.
+        Semantics per query follow ``Ranker.java`` (expansion control
+        flow, Q5 first-term drop per query, Q8 absent-idf zero, the Java
+        NaN-poisoning quirk, title keyword bonus on the RAW query string,
+        0.75·pagerank prior) — pinned against the oracle and the
+        single-node engine in ``tests/test_distributed.py``, including
+        NaN-set equality.  The per-query score-sum order is
+        Spark-aggregation order (ulp-level vs the HashMap-order
+        single-node engine, Q12).  Output adds a leading ``query_id``
+        (position in ``queries``); rows per query are in (score desc,
+        doc_key asc) order with NaN scores first, as Spark's desc sort
+        places them, and ``limit`` applies per query.  Queries with no
+        tokens or no candidates contribute zero rows.  The cached
+        postings are released on every exit.
         """
+        from pyspark.sql import Window
+
         metas: dict[int, dict] = {}
         for qid, query in enumerate(queries):
             qm = _query_meta(query)
             if qm is not None:
                 metas[qid] = qm
         if not metas:
-            out = self._empty()
-            out.insert(0, "query_id", pd.Series([], dtype="int32"))
-            return out
+            return self._empty()
+
+        def candidates(hits: DataFrame) -> DataFrame:
+            return hits.groupBy("query_id", "doc_key").agg(
+                F.count(F.lit(1)).alias("occurrence"),
+                F.min("ord").alias("first_ord"),
+            )
 
         hits1 = self._postings_df_many(
             {qid: m["first_order"] for qid, m in metas.items()}
         ).cache()
-        cand1 = hits1.groupBy("query_id", "doc_key").agg(
-            F.count(F.lit(1)).alias("occurrence"),
-            F.min("ord").alias("first_ord"),
-        )
-        counts = {
-            int(r["query_id"]): int(r["n"])
-            for r in cand1.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        expand = {
-            qid
-            for qid, m in metas.items()
-            if counts.get(qid, 0) < EXPAND_THRESHOLD
-            and m["first_order"] != m["words_set_order"]
-        }
-        if expand:
-            hits2 = self._postings_df_many(
-                {qid: metas[qid]["words_set_order"] for qid in expand}
-            ).cache()
-            cand2 = hits2.groupBy("query_id", "doc_key").agg(
-                F.count(F.lit(1)).alias("occurrence"),
-                F.min("ord").alias("first_ord"),
-            )
-            keep1 = [qid for qid in metas if qid not in expand]
-            hits = hits1.where(F.col("query_id").isin(keep1)).unionByName(hits2)
-            cand = cand1.where(F.col("query_id").isin(keep1)).unionByName(cand2)
-        else:
-            hits, cand = hits1, cand1
-
-        from pyspark.sql import Window
-
-        cut_rank = F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("occurrence").desc(), "doc_key"
-            )
-        )
-        cut = (
-            cand.withColumn("_rk", cut_rank)
-            .where(F.col("_rk") <= TOP_CUT)
-            .drop("_rk")
-        )
-
-        union_words = sorted({w for m in metas.values() for w in m["word_count"]})
-        wm_pdf = (
-            read_table(self.spark, self.paths.wmetric)
-            .where(F.col("term").isin(union_words))
-            .select("term", "idf")
-            .toPandas()
-        )
-        idf_map = dict(zip(wm_pdf["term"], wm_pdf["idf"]))
-        poisoned = {
-            qid
-            for qid, m in metas.items()
-            if any(float(idf_map.get(t, 0.0)) < 0.0 for t in m["word_count"])
-        }
-        healthy = [qid for qid in metas if qid not in poisoned]
-        parts = []
-        if poisoned:
-            parts.append(
-                cut.where(F.col("query_id").isin(sorted(poisoned))).withColumn(
-                    "weight", F.lit(float("nan"))
-                )
-            )
-        if healthy:
-            key = doc_key_expr(self.doc_cols)
-            ntf = read_table(self.spark, self.paths.ntf).select(
-                key.alias("doc_key"), "ntf"
-            )
-            qdf = self.spark.createDataFrame(
-                [
-                    (qid, t, c, float(idf_map.get(t, 0.0)))
-                    for qid in healthy
-                    for t, c in metas[qid]["word_count"].items()
-                ],
-                "query_id int, term string, qtf int, idf double",
-            )
-            weight_sum = F.sum(
-                F.when(F.col("ord") == F.col("first_ord"), F.lit(0.0)).otherwise(
-                    F.col("qtf") * F.pow("idf", 1.5) * F.col("tf") / F.col("ntf")
-                )
-            )
-            cut_h = cut.where(F.col("query_id").isin(healthy))
-            scored = (
-                cut_h.join(hits, ["query_id", "doc_key"])
-                .join(F.broadcast(qdf), ["query_id", "term"])
-                .join(ntf, "doc_key")
-                .groupBy("query_id", "doc_key")
-                .agg(weight_sum.alias("weight"))
-            )
-            parts.append(
-                cut_h.join(scored, ["query_id", "doc_key"], "left").na.fill(
-                    {"weight": 0.0}
-                )
-            )
-        base = parts[0]
-        for p in parts[1:]:
-            base = base.unionByName(p)
-
-        key = doc_key_expr(self.doc_cols)
-        meta_df = read_table(self.spark, self.paths.doc_meta).select(
-            key.alias("doc_key"), "title"
-        )
-        qmeta = self.spark.createDataFrame(
-            [
-                (qid, m["query"], m["sw_set"], len(m["sw_set"]))
+        hits2 = None
+        try:
+            hits, cand = hits1, candidates(hits1)
+            counts = {
+                int(r["query_id"]): int(r["n"])
+                for r in cand.groupBy("query_id")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            # expansion branch (Q4 stemming is ∅); skipped only when the
+            # re-run would iterate identically — the reference's second
+            # pass iterates words_set in COLLECTION-constructor bucket
+            # order, which can differ from the first pass's add-loop order
+            # at a capacity boundary (see RankerEngine.search), shifting
+            # the Q5 tf-drops
+            expand = {
+                qid
                 for qid, m in metas.items()
-            ],
-            "query_id int, qraw string, sw_set array<string>, n_sw int",
-        )
-        # the shared kw/score builders with per-query COLUMN operands
-        kw = _keyword_bonus_expr(F.col("qraw"), F.col("sw_set"), F.col("n_sw"))
-        base = self._with_pagerank(
-            base.join(meta_df, "doc_key", "left").join(
-                F.broadcast(qmeta), "query_id"
+                if counts.get(qid, 0) < EXPAND_THRESHOLD
+                and m["first_order"] != m["words_set_order"]
+            }
+            # a query with no first-pass candidates that does not expand
+            # has no rows (the reference's numResults == 0 return)
+            metas = {
+                qid: m for qid, m in metas.items() if qid in counts or qid in expand
+            }
+            if not metas:
+                return self._empty()
+            if expand:
+                hits2 = self._postings_df_many(
+                    {qid: metas[qid]["words_set_order"] for qid in expand}
+                ).cache()
+                keep1 = [qid for qid in metas if qid not in expand]
+                hits = hits1.where(F.col("query_id").isin(keep1)).unionByName(hits2)
+                cand = cand.where(F.col("query_id").isin(keep1)).unionByName(
+                    candidates(hits2)
+                )
+
+            cut_rank = F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("occurrence").desc(), "doc_key"
+                )
             )
+            cut = (
+                cand.withColumn("_rk", cut_rank)
+                .where(F.col("_rk") <= TOP_CUT)
+                .drop("_rk")
+            )
+
+            # idfs resolved driver-side in ONE pruned read so the Java NaN
+            # quirk below is decidable per query before the plan is built
+            union_words = sorted(
+                {w for m in metas.values() for w in m["word_count"]}
+            )
+            wm_pdf = (
+                read_table(self.spark, self.paths.wmetric)
+                .where(F.col("term").isin(union_words))
+                .select("term", "idf")
+                .toPandas()
+            )
+            idf_map = dict(zip(wm_pdf["term"], wm_pdf["idf"]))
+            # Ranker.java:249 accumulates qtf·pow(idf,1.5)·wf over EVERY
+            # query word for EVERY candidate, with wf = 0 when the word
+            # misses the doc — and Java's NaN·0.0 = NaN, so one
+            # negative-idf word (Q3: df == n gives ln(n/(n+1)) < 0)
+            # poisons every candidate's weight, including ones the scoring
+            # join would lose to an absent ntf row; those queries skip the
+            # scoring joins entirely
+            poisoned = {
+                qid
+                for qid, m in metas.items()
+                if any(float(idf_map.get(t, 0.0)) < 0.0 for t in m["word_count"])
+            }
+            healthy = [qid for qid in metas if qid not in poisoned]
+            key = doc_key_expr(self.doc_cols)
+            parts = []
+            if poisoned:
+                parts.append(
+                    cut.where(F.col("query_id").isin(sorted(poisoned))).select(
+                        "query_id",
+                        "doc_key",
+                        "occurrence",
+                        F.lit(float("nan")).alias("weight"),
+                    )
+                )
+            if healthy:
+                ntf = read_table(self.spark, self.paths.ntf).select(
+                    key.alias("doc_key"), "ntf"
+                )
+                qdf = self.spark.createDataFrame(
+                    [
+                        (qid, t, c, float(idf_map.get(t, 0.0)))  # Q8: absent → 0
+                        for qid in healthy
+                        for t, c in metas[qid]["word_count"].items()
+                    ],
+                    "query_id int, term string, qtf int, idf double",
+                )
+                # Q5: rows whose ord == first_ord contribute 0 (tf dropped)
+                weight_sum = F.sum(
+                    F.when(F.col("ord") == F.col("first_ord"), F.lit(0.0)).otherwise(
+                        F.col("qtf") * F.pow("idf", 1.5) * F.col("tf") / F.col("ntf")
+                    )
+                )
+                # one aggregation over the cut's hits; a doc without an
+                # ntf row keeps weight 0 (the sum of nulls is filled)
+                parts.append(
+                    cut.where(F.col("query_id").isin(healthy))
+                    .join(hits, ["query_id", "doc_key"])
+                    .join(F.broadcast(qdf), ["query_id", "term"])
+                    .join(ntf, "doc_key", "left")
+                    .groupBy("query_id", "doc_key", "occurrence")
+                    .agg(weight_sum.alias("weight"))
+                    .na.fill({"weight": 0.0})
+                )
+            base = parts[0]
+            for p in parts[1:]:
+                base = base.unionByName(p)
+
+            meta_df = read_table(self.spark, self.paths.doc_meta).select(
+                key.alias("doc_key"), "title"
+            )
+            qmeta = self.spark.createDataFrame(
+                [
+                    (qid, m["query"], m["sw_set"], len(m["sw_set"]))
+                    for qid, m in metas.items()
+                ],
+                "query_id int, qraw string, sw_set array<string>, n_sw int",
+            )
+            # sw_set is never empty (the stopword fallback guarantees it)
+            kw = _keyword_bonus_expr(F.col("qraw"), F.col("sw_set"), F.col("n_sw"))
+            base = self._with_pagerank(
+                base.join(meta_df, "doc_key", "left").join(
+                    F.broadcast(qmeta), "query_id"
+                )
+            )
+            pdf = base.select(
+                "query_id",
+                "doc_key",
+                "occurrence",
+                F.col("weight").alias("tf_idf_weight"),
+                "page_rank",
+                kw.alias("keyword_match"),
+                _final_score_expr(kw).alias("score"),
+            ).toPandas()
+        finally:
+            hits1.unpersist()
+            if hits2 is not None:
+                hits2.unpersist()
+        # ≤ TOP_CUT rows per query: rank driver-side (score desc with NaN
+        # first, as Spark's desc sort places it; doc_key asc)
+        pdf = pdf.sort_values(
+            ["query_id", "score", "doc_key"],
+            ascending=[True, False, True],
+            na_position="first",
+            kind="mergesort",
         )
-        result = base.select(
-            "query_id",
-            "doc_key",
-            "occurrence",
-            F.col("weight").alias("tf_idf_weight"),
-            "page_rank",
-            kw.alias("keyword_match"),
-            _final_score_expr(kw).alias("score"),
-        )
-        out_rank = F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_key")
-        )
-        result = result.withColumn("_rk", out_rank)
         if limit is not None:
-            result = result.where(F.col("_rk") <= limit)
-        pdf = result.orderBy("query_id", "_rk").drop("_rk").toPandas()
-        hits1.unpersist()
-        if expand:
-            hits2.unpersist()
+            pdf = pdf.groupby("query_id", sort=False).head(limit)
         keys = pdf["doc_key"].to_numpy(dtype=np.int64)
         out = doc_key_to_cols(keys, self.doc_cols)
         qcol = pdf.pop("query_id").astype("int32")
@@ -543,12 +453,11 @@ def _bm25_scan_frames(
     n_ranges: int | None,
     meta: dict,
 ):
-    """The scan/range setup SHARED by the single-query and batched
-    local-topk plans — one place owns the df-1 idf-quirk undo, the
-    quantile range bounds, the bucket-partition-pruned + term-pushed
-    block scan, and the broadcast range joins, so the two plans cannot
-    drift.  Returns ``(w_by_term, blocks, dl_r)`` or None when nothing
-    can score (no indexed terms / empty corpus)."""
+    """The scan/range setup of the local-topk plan: the df-1 idf-quirk
+    undo, the quantile range bounds, the bucket-partition-pruned +
+    term-pushed block scan, and the broadcast range joins.  Returns
+    ``(w_by_term, blocks, dl_r)`` or None when nothing can score (no
+    indexed terms / empty corpus)."""
     from .bm25 import bm25_idf
 
     n_docs = meta["n_docs"]
@@ -596,111 +505,6 @@ def _bm25_scan_frames(
     return w_by_term, blocks, dl_r
 
 
-def distributed_bm25_local_topk(
-    spark: SparkSession,
-    paths: IndexPaths,
-    query: str,
-    k: int = 10,
-    n_ranges: int | None = None,
-    meta: dict | None = None,
-) -> DataFrame | None:
-    """The Spark side of :func:`distributed_bm25_topk`: per-range local
-    top-k rows (doc_key, score), BEFORE the driver merge.  Exposed
-    separately so the plan audit can assert the job's physical shape
-    (bucket partition pruning + term pushdown at the block scan, broadcast
-    range join, cogroup→applyInPandas kernel).  Returns None when the
-    query can produce no rows (no terms / no matching terms / empty
-    corpus).  ``meta`` lets the wrapper share its one artifact read."""
-    from .bm25 import BM25_B, _NormLookup, _TermSweep, block_sweep_topk
-
-    if meta is None:
-        meta = read_meta(paths)
-    avgdl = meta.get("avgdl") or 1.0
-    terms = list(dict.fromkeys(_RE_PUNCT.sub(" ", query).strip().lower().split()))
-    if not terms:
-        return None
-    frames = _bm25_scan_frames(spark, paths, terms, n_ranges, meta)
-    if frames is None:
-        return None
-    weights, blocks, dl_r = frames
-
-    b_avgdl, b_weights, b_k = float(avgdl), dict(weights), int(k)
-
-    def kernel(key, blocks_pdf, dl_pdf):
-        # empty dl_pdf: the range overlaps a block's [key_min, key_max]
-        # but contains no actual docs (packed keys are sparse) — nothing
-        # can score, and _NormLookup over zero rows would IndexError
-        if not len(blocks_pdf) or not len(dl_pdf):
-            return pd.DataFrame({"doc_key": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        lo = int(blocks_pdf["lo"].iloc[0])
-        hi = int(blocks_pdf["hi"].iloc[0])
-        norms = _NormLookup(
-            dl_pdf["doc_key"].to_numpy(dtype=np.int64),
-            1.0 - BM25_B + BM25_B * dl_pdf["dl"].to_numpy(dtype=np.float64) / b_avgdl,
-        )
-        sweeps = []
-        for t, g in blocks_pdf.groupby("term", sort=False):
-            sweeps.append(
-                _TermSweep(
-                    g.sort_values("block_no").reset_index(drop=True),
-                    b_weights[t],
-                    norms,
-                )
-            )
-        top = block_sweep_topk(sweeps, b_k, lo=lo, hi=hi)
-        return pd.DataFrame(
-            {"doc_key": [d for d, _ in top], "score": [s for _, s in top]}
-        ).astype({"doc_key": "int64", "score": "float64"})
-
-    return (
-        blocks.groupBy("range_id")
-        .cogroup(dl_r.groupBy("range_id"))
-        .applyInPandas(kernel, schema="doc_key long, score double")
-    )
-
-
-def distributed_bm25_topk(
-    spark: SparkSession,
-    paths: IndexPaths,
-    query: str,
-    k: int = 10,
-    n_ranges: int | None = None,
-) -> pd.DataFrame:
-    """Exact distributed BM25 top-k over the EXISTING term-bucketed block
-    index by partitioning the DOC-KEY SPACE at query time.
-
-    Each range task receives only the query terms' blocks overlapping its
-    key range (``key_min``/``key_max`` are plain columns, so the overlap
-    predicate prunes at the scan) plus its range's slice of the
-    doc-length table, runs the same :func:`~..query.bm25.block_sweep_topk`
-    bounded to the range, and emits a local top-k.  Every posting of a
-    doc shares its key, so a range sees each doc's full score or none of
-    it — the union of per-range top-ks contains the global top-k, and one
-    tiny driver-side merge finishes exactly (scores AND doc-asc
-    tie-breaks identical to ``BM25Engine.search``).
-
-    This is the 10^12-turn path: no executor ever holds more than its
-    range's blocks, the hot term's list splits across ranges, and adding
-    executors adds ranges.  Tested rank-identical to the single-node
-    engine in ``tests/test_distributed.py``; physical shape locked in
-    PLANS.md / ``tests/test_plans.py`` (bucket partition pruning, term
-    pushdown, broadcast range join, cogroup kernel).
-    """
-    meta = read_meta(paths)  # one read, shared with the local-topk plan
-    local = distributed_bm25_local_topk(spark, paths, query, k, n_ranges, meta=meta)
-    if local is None:
-        return doc_key_to_cols(np.array([], dtype=np.int64), meta["doc_cols"]).assign(
-            score=pd.Series([], dtype="float64")
-        )
-    rows = local.orderBy(F.col("score").desc(), "doc_key").limit(k).collect()
-    out = doc_key_to_cols(
-        np.array([r["doc_key"] for r in rows], dtype=np.int64), meta["doc_cols"]
-    )
-    out["score"] = [r["score"] for r in rows]
-    return out
-
-
 def distributed_bm25_local_topk_many(
     spark: SparkSession,
     paths: IndexPaths,
@@ -709,28 +513,26 @@ def distributed_bm25_local_topk_many(
     n_ranges: int | None = None,
     meta: dict | None = None,
 ) -> DataFrame | None:
-    """Per-range local top-k rows ``(query_id, doc_key, score)`` for MANY
-    queries in ONE Spark job — the batch-scoring shape of
-    :func:`distributed_bm25_local_topk`.
+    """The Spark side of :func:`distributed_bm25_topk_many`: per-range
+    local top-k rows ``(query_id, doc_key, score)`` for a batch of
+    queries, BEFORE the driver merge.  Exposed separately so the plan
+    audit can assert the job's physical shape (bucket partition pruning +
+    term pushdown at the block scan, broadcast range join,
+    cogroup→applyInPandas kernel) and the driver-contract entry can merge
+    Spark-side.
 
-    The single-query path pays per query: a wmetric read, a
-    min/max + approxQuantile pass over doc_len for the range bounds, a
-    block scan, and a cogroup shuffle — four job chains each.  A batch
-    workload (evaluation query sets, offline relevance sweeps, the
-    reference's own fixture replay) amortizes ALL of it: one pruned
-    wmetric read for the union of the batch's terms, one range-bounds
-    computation, one block scan pruned to the union's buckets+terms, one
-    cogroup — and a term shared by multiple queries ships its blocks to
-    a range task ONCE, where each query's sweep reuses the same block
-    rows (block-max skipping keeps per-query decode sub-linear, so the
-    duplicate decode across queries touching the same term is bounded by
-    each sweep's own skip behavior).
+    One pruned wmetric read for the union of the batch's terms, one
+    range-bounds computation, one block scan pruned to the union's
+    buckets+terms, one cogroup — and a term shared by multiple queries
+    ships its blocks to a range task ONCE, where each query's sweep
+    reuses the same block rows (block-max skipping keeps per-query decode
+    sub-linear, so the duplicate decode across queries touching the same
+    term is bounded by each sweep's own skip behavior).
 
     ``query_id`` is the position in ``queries``; a query with no
-    tokenizable / indexed terms contributes zero rows (the wrapper
-    restores its empty per-query frame).  Exactness per query is
-    pytest-pinned rank-identical to the single-query path and the
-    single-node engine (``tests/test_distributed.py``).
+    tokenizable / indexed terms contributes zero rows.  Returns None when
+    no query can produce rows (no terms / no matching terms / empty
+    corpus).  ``meta`` lets the caller share its one artifact read.
     """
     from .bm25 import BM25_B, _NormLookup, _TermSweep, block_sweep_topk
 
@@ -828,20 +630,33 @@ def distributed_bm25_topk_many(
     n_ranges: int | None = None,
 ) -> pd.DataFrame:
     """Exact distributed BM25 top-k for a BATCH of queries in one Spark
-    job; returns ``(query_id, <doc_cols...>, score)`` with each query's
-    rows in rank order (score desc, doc asc — the engine's tie-break).
+    job, over the EXISTING term-bucketed block index by partitioning the
+    DOC-KEY SPACE at query time; returns ``(query_id, <doc_cols...>,
+    score)`` with each query's rows in rank order (score desc, doc asc —
+    the engine's tie-break).
 
-    Same doc-range partition contract as :func:`distributed_bm25_topk`
-    (each range sees a doc's full score or none of it, so per-range
-    top-ks union exactly); the driver merge handles ≤ |queries|·r·k tiny
-    rows.  Past ``_DRIVER_MERGE_ROWS`` candidate rows (a relevance sweep
-    over tens of thousands of queries at high range counts) the
-    per-query top-k is taken Spark-side first — a rank window over
-    (query_id) on the already-tiny local-topk frame — so the driver only
-    ever collects the final |queries|·k rows.  Queries with no indexed
-    terms yield zero rows for their ``query_id`` — callers batching
-    heterogeneous query sets get the same empty-result signal as the
-    single-query path's empty frame.
+    Each range task receives only the batch's blocks overlapping its key
+    range (``key_min``/``key_max`` are plain columns, so the overlap
+    predicate prunes at the scan) plus its range's slice of the
+    doc-length table, runs the same :func:`~..query.bm25.block_sweep_topk`
+    per query bounded to the range, and emits local top-ks.  Every
+    posting of a doc shares its key, so a range sees each doc's full
+    score or none of it — the union of per-range top-ks contains the
+    global top-k, and a tiny driver merge of ≤ |queries|·r·k rows
+    finishes exactly (scores AND doc-asc tie-breaks identical to
+    ``BM25Engine.search``).  Past ``_DRIVER_MERGE_ROWS`` candidate rows
+    (a relevance sweep over tens of thousands of queries at high range
+    counts) the per-query top-k is taken Spark-side first — a rank
+    window over (query_id) on the already-tiny local-topk frame — so the
+    driver only ever collects the final |queries|·k rows.  Queries with
+    no indexed terms yield zero rows for their ``query_id``.
+
+    This is the 10^12-turn path: no executor ever holds more than its
+    range's blocks, the hot term's list splits across ranges, and adding
+    executors adds ranges.  Tested rank-identical to the single-node
+    engine in ``tests/test_distributed.py``; physical shape locked in
+    PLANS.md / ``tests/test_plans.py`` (bucket partition pruning, term
+    pushdown, broadcast range join, cogroup kernel).
     """
     from pyspark.sql import Window
 
@@ -883,3 +698,18 @@ def distributed_bm25_topk_many(
         part["score"] = top["score"].to_numpy(dtype=np.float64)
         out_parts.append(part)
     return pd.concat(out_parts, ignore_index=True)
+
+
+def distributed_bm25_topk(
+    spark: SparkSession,
+    paths: IndexPaths,
+    query: str,
+    k: int = 10,
+    n_ranges: int | None = None,
+) -> pd.DataFrame:
+    """Exact distributed BM25 top-k for one query: a batch of one through
+    :func:`distributed_bm25_topk_many`; returns ``(<doc_cols...>,
+    score)`` in rank order."""
+    return distributed_bm25_topk_many(spark, paths, [query], k, n_ranges).drop(
+        columns="query_id"
+    )

@@ -105,9 +105,9 @@ AUDIT: list[tuple[str, list[str], list[str]]] = [
         ],
         ["SortMergeJoin"],
     ),
-    # the batched multi-query plan must keep the EXACT same physical
-    # shape as the single-query plan (one block scan pruned to the
-    # union of the batch's buckets+terms, broadcast range join, one
+    # the same plan over a three-query batch must keep the EXACT same
+    # physical shape as the batch of one above (one block scan pruned to
+    # the union of the batch's buckets+terms, broadcast range join, one
     # cogroup kernel) — batching amortizes job chains, it must not
     # introduce a per-query scan or a shuffle join
     (
@@ -166,7 +166,6 @@ def special_frames(spark) -> dict:
     )
     from holi_search_engine_spark.plans.index_build import build_index
     from holi_search_engine_spark.query.distributed import (
-        distributed_bm25_local_topk,
         distributed_bm25_local_topk_many,
     )
 
@@ -181,8 +180,9 @@ def special_frames(spark) -> dict:
         build_postings_table=False,
     )
     frames = {
-        "distributed_bm25_topk": distributed_bm25_local_topk(
-            spark, paths, "the data pipeline", 10, n_ranges=4
+        # a single query is a batch of one
+        "distributed_bm25_topk": distributed_bm25_local_topk_many(
+            spark, paths, ["the data pipeline"], 10, n_ranges=4
         ),
         "distributed_bm25_topk_many": distributed_bm25_local_topk_many(
             spark,

@@ -4,8 +4,9 @@ For each random corpus (same generator as ``scripts/soak_javadiff.py``,
 whose compiled-Java differential pins the single-node ``RankerEngine``
 bit-exactly), this drives the two distributed plans and requires:
 
-- ``DistributedRanker.search`` rank-equivalent to ``RankerEngine.search``
-  under the documented contract (``rank_check``): same doc set, per-doc
+- ``DistributedRanker.search`` (a batch of one) rank-equivalent to
+  ``RankerEngine.search`` under the documented contract (``rank_check``
+  in ``scripts/rank_contract.py``): same doc set, per-doc
   scores within 1e-9, sequence non-increasing in the engine's scores up
   to 1e-9 — NOT exact sequence equality, because the Spark aggregation
   sums score terms in partition order rather than the engine's HashMap
@@ -13,7 +14,8 @@ bit-exactly), this drives the two distributed plans and requires:
   seed 119).  For NaN-poisoned queries (negative idf) the same
   candidate SET with all-NaN scores on both sides (NaN order is
   unspecified in the reference too, Q10).
-- ``distributed_bm25_topk`` rank-identical (docs AND scores to 1e-9) to
+- ``distributed_bm25_topk`` (a batch of one) rank-identical (docs AND
+  scores to 1e-9) to
   ``BM25Engine.search`` at n_ranges in {1, 5} — the degenerate
   single-task case and a forced multi-task split.
 - ``distributed_bm25_topk_many`` over ALL of the corpus's queries in one
@@ -33,7 +35,10 @@ Seeds 71,88,95,104,119 then caught the strict-order check itself being
 wrong (the seed-119 near-tie swap described above, flagged on BOTH the
 single and batched paths — diagnosed to 1-ulp engine scores summed
 equal Spark-side); re-run with ``rank_check`` over the same five seeds
-— 0 mismatches.  Exits nonzero on any mismatch.
+— 0 mismatches.  Re-run after the single-query entry points became
+batches of one, with ``rank_check`` moved to ``scripts/rank_contract.py``
+and folding in the NaN-set check: seed 137 x 12 queries (4 vCPU) — 0
+mismatches.  Exits nonzero on any mismatch.
 """
 import os
 import random
@@ -56,36 +61,8 @@ from holi_search_engine_spark.query.distributed import (  # noqa: E402
 )
 from holi_search_engine_spark.query.ranker import RankerEngine  # noqa: E402
 
-from soak_javadiff import make_queries  # noqa: E402  (scripts/ on sys.path)
-
-
-def rank_check(exp, got, atol=1e-9):
-    """The Spark paths' actual rank contract vs the single-node engine:
-    same doc set, per-doc scores within ``atol``, and the Spark
-    sequence non-increasing in the ENGINE's scores up to ``atol``.
-    Exact sequence equality is STRONGER than the documented contract —
-    the Spark aggregation sums score terms in partition order, not the
-    engine's HashMap order (quirk Q12), so two docs whose engine scores
-    differ by 1 ulp can legitimately swap (first seen at seed 119:
-    engine 0.06386309394396882 vs ...88, Spark computed them equal and
-    broke the tie doc-asc).  A genuinely misplaced doc still fails: its
-    engine score is out of non-increasing order by more than atol.
-    Returns None or a short failure tag."""
-    if len(exp) != len(got):
-        return "len"
-    es = dict(zip(exp["doc_key"], exp["score"].astype(float)))
-    if set(es) != set(got["doc_key"]):
-        return "docset"
-    for d, s in zip(got["doc_key"], got["score"].astype(float)):
-        # NaN-safe: `abs(diff) > atol` is False for NaN and would let a
-        # partially-NaN regression through; require proven closeness
-        if not (abs(es[d] - s) <= atol):
-            return "score"
-    seq = [es[d] for d in got["doc_key"]]
-    for i in range(len(seq) - 1):
-        if seq[i] < seq[i + 1] - atol:
-            return "order"
-    return None
+from rank_contract import rank_check  # noqa: E402  (scripts/ on sys.path)
+from soak_javadiff import make_queries  # noqa: E402
 
 
 def run_corpus(spark, vocab, seed, workdir, n_queries):
@@ -114,21 +91,9 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
     for qid, q in enumerate(queries):
         exp = engine.search(q)
         exp_by_qid[qid] = exp
-        got = dist.search(q)
-        if len(exp) != len(got):
-            fails.append((q, "ranker-len", len(got), len(exp)))
-            continue
-        if len(exp):
-            e_nan = exp["score"].isna().all()
-            g_nan = got["score"].isna().all()
-            if e_nan or g_nan:
-                if e_nan != g_nan or set(exp["doc_key"]) != set(got["doc_key"]):
-                    fails.append((q, "ranker-nan", e_nan, g_nan))
-                continue
-            bad = rank_check(exp, got)
-            if bad:
-                fails.append((q, f"ranker-{bad}", None, None))
-                continue
+        bad = rank_check(exp, dist.search(q))
+        if bad:
+            fails.append((q, f"ranker-{bad}", None, None))
     # BM25 distributed on a subset (each query is several Spark jobs)
     for q in queries[: max(4, n_queries // 4)]:
         exp = bm25.search(q, 10)
@@ -141,26 +106,13 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
                                               atol=1e-9):
                 fails.append((q, f"bm25-score-nr{nr}", None, None))
     # the batched reference-semantics replay: ALL queries in one job
-    # chain, each query's slice identical to the single-query engine
-    # (NaN queries: set equality, Q10)
+    # chain, each query's slice held to the same contract
     rbatch = dist.search_many(queries)
     for qid, q in enumerate(queries):
         exp = exp_by_qid[qid]  # same reference frame as the single check
-        g = rbatch[rbatch["query_id"] == qid]
-        if len(g) != len(exp):
-            fails.append((q, "ranker-batch-len", len(g), len(exp)))
-            continue
-        if not len(exp):
-            continue
-        e_nan = exp["score"].isna().all()
-        if e_nan or g["score"].isna().all():
-            if e_nan != g["score"].isna().all() or \
-               set(g["doc_key"]) != set(exp["doc_key"]):
-                fails.append((q, "ranker-batch-nan", None, None))
-        else:
-            bad = rank_check(exp, g)
-            if bad:
-                fails.append((q, f"ranker-batch-{bad}", None, None))
+        bad = rank_check(exp, rbatch[rbatch["query_id"] == qid])
+        if bad:
+            fails.append((q, f"ranker-batch-{bad}", None, None))
     # the batched bm25 plan: ALL of the corpus's queries in one job, each
     # query's slice rank-identical to the engine
     batch = distributed_bm25_topk_many(spark, paths, queries, 10, n_ranges=5)

@@ -314,33 +314,31 @@ def test_unicode_whitespace_title_java_parity(spark, tmp_path_factory):
 
 
 def test_distributed_bm25_many_matches_single(spark, built_index, vocabulary):
-    """The batched multi-query plan must be rank-identical, query for
-    query, to the single-query distributed path (itself pinned to the
-    single-node engine above) — including a no-term query mixed into the
-    batch (zero rows for its query_id), a duplicate query (same answer
-    under a different query_id), and shared terms across queries (whose
-    blocks ship to each range once).  Swept at 1 range (degenerate
-    single-task) and 7 (blocks split across tasks)."""
-    import numpy as np
-
+    """Each query's rows of the batched plan must meet the rank contract
+    against the single-node engine ``BM25Engine.search`` — including a
+    no-term and a punctuation-only query mixed into the batch (zero rows
+    for their query_ids), a duplicate query (same answer under a
+    different query_id), and shared terms across queries (whose blocks
+    ship to each range once).  Swept at 1 range (degenerate single-task)
+    and 7 (blocks split across tasks)."""
     from holi_search_engine_spark.corpus import make_query_fixtures
+    from holi_search_engine_spark.query.bm25 import BM25Engine
     from holi_search_engine_spark.query.distributed import (
-        distributed_bm25_topk,
         distributed_bm25_topk_many,
     )
+    from scripts.rank_contract import rank_check
 
+    eng = BM25Engine(spark, built_index)
     qs = [q for _, q in make_query_fixtures(vocabulary)[:6]]
     batch = qs + ["", "???", qs[0]]  # empty + punctuation-only + duplicate
+    exp = [eng.search(q, 10) for q in batch]
     for nr in (1, 7):
         got = distributed_bm25_topk_many(spark, built_index, batch, 10, n_ranges=nr)
-        for qid, q in enumerate(batch):
-            exp = distributed_bm25_topk(spark, built_index, q, 10, n_ranges=nr)
+        assert not got["query_id"].isin([6, 7]).any(), nr
+        for qid in range(len(batch)):
             g = got[got["query_id"] == qid]
-            assert list(g["conv_id"]) == list(exp["conv_id"]), (qid, nr)
-            assert list(g["turn_idx"]) == list(exp["turn_idx"]), (qid, nr)
-            assert np.allclose(
-                g["score"].to_numpy(), exp["score"].to_numpy(), atol=1e-9
-            ), (qid, nr)
+            bad = rank_check(exp[qid], g, key=["conv_id", "turn_idx"])
+            assert bad is None, (qid, nr, bad)
     # all-unindexed batch: the well-typed empty frame, not an error
     none = distributed_bm25_topk_many(spark, built_index, ["", "???"], 10)
     assert list(none.columns) == ["query_id", "conv_id", "turn_idx", "score"]
@@ -373,41 +371,69 @@ def test_distributed_bm25_many_spark_side_merge(
 
 
 def test_distributed_ranker_many_matches_single(spark, built_index, vocabulary):
-    """The batched reference-semantics path must reproduce ``search``
-    query for query: same doc sequence and scores to 1e-9 for healthy
-    queries, same candidate SET with all-NaN scores for NaN-poisoned
-    ones (Q10 — NaN order is unspecified in the reference too), zero
-    rows for tokenless queries."""
+    """Each query's rows of the batched reference-semantics plan must meet
+    the rank contract against the single-node ``RankerEngine.search``
+    (itself rank-identical to the oracle): same docs, scores to 1e-9 in
+    near-tie order, and every per-doc column to 1e-9 for healthy
+    queries; the same candidate SET with all-NaN scores for NaN-poisoned
+    ones (Q10 — NaN order is unspecified in the reference too); zero
+    rows for tokenless queries; ``limit`` applied per query."""
     import numpy as np
 
     from holi_search_engine_spark.corpus import make_query_fixtures
     from holi_search_engine_spark.query.distributed import DistributedRanker
+    from holi_search_engine_spark.query.ranker import RankerEngine
+    from scripts.rank_contract import rank_check
 
+    eng = RankerEngine(spark, built_index, preload=True)
     dist = DistributedRanker(spark, built_index)
     qs = [q for _, q in make_query_fixtures(vocabulary)[:10]] + [""]
     batch = dist.search_many(qs)
     assert list(batch.columns)[0] == "query_id"
     for qid, q in enumerate(qs):
-        exp = dist.search(q)
+        exp = eng.search(q)
         g = batch[batch["query_id"] == qid]
-        assert len(g) == len(exp), (qid, q)
-        if not len(exp):
+        bad = rank_check(exp, g)
+        assert bad is None, (qid, q, bad)
+        if not len(exp) or exp["score"].isna().all():
             continue
-        e_nan = exp["score"].isna().all()
-        g_nan = g["score"].isna().all()
-        assert e_nan == g_nan, (qid, q)
-        if e_nan:
-            assert set(g["doc_key"]) == set(exp["doc_key"]), (qid, q)
-            continue
-        assert list(g["doc_key"]) == list(exp["doc_key"]), (qid, q)
+        m = g.merge(exp, on="doc_key", suffixes=("_g", "_e"))
         for col in ("occurrence", "tf_idf_weight", "page_rank",
-                    "keyword_match", "score"):
+                    "keyword_match"):
             assert np.allclose(
-                g[col].to_numpy(dtype=float),
-                exp[col].to_numpy(dtype=float),
+                m[f"{col}_g"].to_numpy(dtype=float),
+                m[f"{col}_e"].to_numpy(dtype=float),
                 atol=1e-9,
             ), (qid, q, col)
     # limit applies per query
     lim = dist.search_many(qs, limit=3)
-    for qid in set(lim["query_id"]):
-        assert len(lim[lim["query_id"] == qid]) <= 3
+    for qid in range(len(qs)):
+        n = int((batch["query_id"] == qid).sum())
+        assert int((lim["query_id"] == qid).sum()) == min(3, n), qid
+
+
+def test_distributed_ranker_many_releases_cache_on_error(
+    spark, built_index, vocabulary, monkeypatch
+):
+    """A failure in the final collect must not leak the cached postings:
+    the session holds no more persisted data after the failed call than
+    before it."""
+    from holi_search_engine_spark.corpus import make_query_fixtures
+    from holi_search_engine_spark.query.distributed import DistributedRanker
+
+    dist = DistributedRanker(spark, built_index)
+    qs = [q for _, q in make_query_fixtures(vocabulary)[:10]]
+    frame_cls = type(spark.range(1))
+    real_to_pandas = frame_cls.toPandas
+
+    def failing_to_pandas(self):
+        if "score" in self.columns:  # the final scoring collect only
+            raise RuntimeError("injected collect failure")
+        return real_to_pandas(self)
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(frame_cls, "toPandas", failing_to_pandas)
+    with pytest.raises(RuntimeError, match="injected collect failure"):
+        dist.search_many(qs)
+    assert jsc.getPersistentRDDs().size() <= before

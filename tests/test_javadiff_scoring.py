@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import base64
 import math
+import os
 import random
 import re
 import subprocess
@@ -350,6 +351,10 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
     return qs
 
 
+@pytest.mark.skipif(
+    not os.path.exists(_REF_RANKER),
+    reason="reference tree not mounted",
+)
 def test_scoring_matches_compiled_java_reference(spark, vocabulary,
                                                  scoring_corpus, tmp_path):
     from holi_search_engine_spark.query.ranker import RankerEngine
