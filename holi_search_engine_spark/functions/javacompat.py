@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 #: ``Ranker.java:152/223``'s punctuation class — the query/title
 #: normalization alphabet, canonical for every ENGINE path.  The pandas
 #: oracle keeps its own independent copy (``oracle/pandas_oracle.py``) so a
@@ -53,14 +51,6 @@ def java_query_tokens(s: str) -> list[str]:
     s = RE_QUERY_PUNCT.sub(" ", s)
     s = s.strip(_JAVA_TRIM_CHARS).lower().replace("ς", "σ")
     return _RE_JAVA_WS_RUN.split(s)
-
-
-def java_title_tokens(titles: pd.Series) -> pd.Series:
-    """Vectorized :func:`java_query_tokens` over a title column; returns a
-    Series of token lists (``['']`` for blank titles, as in Java)."""
-    s = titles.fillna("").str.replace(RE_QUERY_PUNCT, " ", regex=True)
-    s = s.str.strip(_JAVA_TRIM_CHARS).str.lower().str.replace("ς", "σ")
-    return s.str.split(_RE_JAVA_WS_RUN)
 
 
 def java_string_hash(s: str) -> int:

@@ -64,18 +64,52 @@ def doc_cols_from_key_exprs(doc_cols: list[str]):
     raise ValueError(f"no doc-key inverse for {doc_cols}")
 
 
-def doc_key_to_cols(keys: np.ndarray, doc_cols: list[str]) -> pd.DataFrame:
-    """Inverse of :func:`doc_key_expr` for surfacing results."""
+def doc_key_columns(keys: np.ndarray, doc_cols: list[str]) -> dict:
+    """Inverse of :func:`doc_key_expr` as ``{column: values}``, ready to
+    open a result frame's constructor (one ``pd.DataFrame`` call per
+    answer; column inserts cost more than scoring a small query)."""
     if doc_cols == ["conv_id", "turn_idx"]:
         conv = keys >> TURN_BITS
         turn = keys & ((1 << TURN_BITS) - 1)
-        return pd.DataFrame(
-            {
-                "conv_id": [f"conv-{int(c):08d}" for c in conv],
-                "turn_idx": turn.astype("int32"),
-            }
-        )
-    return pd.DataFrame({doc_cols[0]: keys})
+        return {
+            "conv_id": [f"conv-{int(c):08d}" for c in conv],
+            "turn_idx": turn.astype("int32"),
+        }
+    return {doc_cols[0]: keys}
+
+
+def doc_key_to_cols(keys: np.ndarray, doc_cols: list[str]) -> pd.DataFrame:
+    """Inverse of :func:`doc_key_expr` for surfacing results."""
+    return pd.DataFrame(doc_key_columns(keys, doc_cols))
+
+
+class DocKeyLookup:
+    """doc_key → per-doc values via sorted-array binary search (a pandas
+    reindex costs ~1µs/key in hash lookups; searchsorted is ~20ns).
+    ``vals`` is 1-D, or 2-D with one column per stored field."""
+
+    __slots__ = ("keys", "vals")
+
+    def __init__(self, keys: np.ndarray, vals: np.ndarray) -> None:
+        order = np.argsort(keys, kind="stable")
+        self.keys = keys[order]
+        self.vals = vals[order]
+
+    def __call__(self, want: np.ndarray) -> np.ndarray:
+        """Values for keys known to be in a non-empty table; an absent key
+        gets a neighbour's value (the BM25 sweeps decode whole blocks, and
+        keys outside the scored doc range are never read)."""
+        idx = np.searchsorted(self.keys, want)
+        return self.vals[np.minimum(idx, len(self.vals) - 1)]
+
+    def get(self, want: np.ndarray, default) -> np.ndarray:
+        """Values for ``want``, ``default`` wherever a key is absent."""
+        if not len(self.keys):
+            return np.full((len(want), *self.vals.shape[1:]), default, self.vals.dtype)
+        idx = np.minimum(np.searchsorted(self.keys, want), len(self.keys) - 1)
+        out = self.vals[idx]
+        out[self.keys[idx] != want] = default
+        return out
 
 
 # ---------------------------------------------------------------- varbyte

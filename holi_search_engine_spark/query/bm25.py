@@ -27,9 +27,10 @@ from pyspark.sql import SparkSession, functions as F
 from ..plans.compression import (
     BM25_B,
     BM25_K1,
+    DocKeyLookup,
     decode_block,
+    doc_key_columns,
     doc_key_expr,
-    doc_key_to_cols,
 )
 from ..functions.javacompat import RE_QUERY_PUNCT as _RE_PUNCT  # ONE alphabet
 from ..plans.index_build import IndexPaths, read_meta
@@ -39,22 +40,6 @@ from ..sources.catalog import read_table
 def bm25_idf(n_docs: int, df: int) -> float:
     """Robertson-Sparck-Jones idf with the +1 floor (Lucene form)."""
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-class _NormLookup:
-    """doc_key → BM25 length norm via sorted-array binary search (a pandas
-    reindex here costs ~1µs/key in hash lookups; searchsorted is ~20ns)."""
-
-    __slots__ = ("keys", "vals")
-
-    def __init__(self, keys: np.ndarray, vals: np.ndarray) -> None:
-        order = np.argsort(keys)
-        self.keys = keys[order]
-        self.vals = vals[order]
-
-    def __call__(self, want: np.ndarray) -> np.ndarray:
-        idx = np.searchsorted(self.keys, want)
-        return self.vals[np.minimum(idx, len(self.vals) - 1)]
 
 
 class _TermSweep:
@@ -72,7 +57,7 @@ class _TermSweep:
         self,
         blocks: pd.DataFrame,
         weight: float,
-        dl_norm: "_NormLookup",
+        dl_norm: DocKeyLookup,
         decode_counter: list[int] | None = None,
     ) -> None:
         self.key_min_arr = blocks["key_min"].to_numpy(dtype=np.int64)
@@ -278,7 +263,7 @@ class BM25Engine:
             .select(key.alias("doc_key"), "dl")
             .toPandas()
         )
-        self._dl_norm = _NormLookup(
+        self._dl_norm = DocKeyLookup(
             dl["doc_key"].to_numpy(dtype=np.int64),
             1.0 - BM25_B + BM25_B * dl["dl"].to_numpy(dtype=np.float64) / self.avgdl,
         )
@@ -507,14 +492,13 @@ class BM25Engine:
         return self._to_frame(block_sweep_topk(sweeps, k))
 
     def _to_frame(self, pairs: list[tuple[int, float]]) -> pd.DataFrame:
-        if not pairs:
-            out = doc_key_to_cols(np.array([], dtype=np.int64), self.doc_cols)
-            out["score"] = pd.Series([], dtype="float64")
-            return out
         keys = np.array([d for d, _ in pairs], dtype=np.int64)
-        out = doc_key_to_cols(keys, self.doc_cols)
-        out["score"] = [s for _, s in pairs]
-        return out
+        return pd.DataFrame(
+            {
+                **doc_key_columns(keys, self.doc_cols),
+                "score": np.array([s for _, s in pairs], dtype=np.float64),
+            }
+        )
 
 
 def block_sweep_topk_and(

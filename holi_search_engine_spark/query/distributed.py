@@ -39,7 +39,7 @@ from ..functions.javacompat import (
 from ..functions.xxhash import term_bucket
 import numpy as np
 
-from ..plans.compression import decode_block, doc_key_expr, doc_key_to_cols
+from ..plans.compression import DocKeyLookup, decode_block, doc_key_expr, doc_key_to_cols
 from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
 from .ranker import EXPAND_THRESHOLD, TOP_CUT
@@ -534,7 +534,7 @@ def distributed_bm25_local_topk_many(
     no query can produce rows (no terms / no matching terms / empty
     corpus).  ``meta`` lets the caller share its one artifact read.
     """
-    from .bm25 import BM25_B, _NormLookup, _TermSweep, block_sweep_topk
+    from .bm25 import BM25_B, _TermSweep, block_sweep_topk
 
     if meta is None:
         meta = read_meta(paths)
@@ -573,7 +573,7 @@ def distributed_bm25_local_topk_many(
             return _empty
         lo = int(blocks_pdf["lo"].iloc[0])
         hi = int(blocks_pdf["hi"].iloc[0])
-        norms = _NormLookup(
+        norms = DocKeyLookup(
             dl_pdf["doc_key"].to_numpy(dtype=np.int64),
             1.0 - BM25_B + BM25_B * dl_pdf["dl"].to_numpy(dtype=np.float64) / b_avgdl,
         )

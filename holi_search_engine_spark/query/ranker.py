@@ -6,10 +6,12 @@ Two execution modes:
 
 - ``driver`` (default, low latency): posting blocks of the query's terms
   are fetched via a term-pruned (and bucket-partition-pruned) parquet read,
-  decoded with numpy, and scored vectorized in pandas.  With ``preload``
-  the per-term block bytes live in an in-process dict (what the reference's
-  single ranker node does with its KVS point-gets, minus the per-candidate
-  HTTP round trips — ``Ranker.java:231-251`` issues O(250·|q|) gets).
+  decoded and scored with numpy; the answer is one DataFrame built at the
+  end.  With ``preload`` the per-term block bytes live in an in-process
+  dict and the per-doc ntf, title and pagerank sit in sorted doc-key
+  arrays (what the reference's single ranker node does with its KVS
+  point-gets, minus the per-candidate HTTP round trips —
+  ``Ranker.java:231-251`` issues O(250·|q|) gets).
 - ``distributed``: candidate generation and scoring run as a Spark job —
   the path a 10^12-turn corpus needs when a Zipf-head term's posting list
   exceeds driver memory (see ``search_distributed``).
@@ -31,8 +33,14 @@ import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from ..functions.javacompat import java_hashmap_value_order, java_hashset_order
-from ..functions.javacompat import java_query_tokens, java_title_tokens
-from ..plans.compression import decode_block, doc_key_expr, doc_key_to_cols
+from ..functions.javacompat import java_query_tokens
+from ..plans.compression import (
+    DocKeyLookup,
+    decode_block,
+    doc_key_columns,
+    doc_key_expr,
+    doc_key_to_cols,
+)
 from ..plans.index_build import IndexPaths, artifact_nbytes, read_meta
 from ..sources.catalog import read_table, table_exists
 from .stopwords import STOPWORDS
@@ -97,15 +105,16 @@ class RankerEngine:
         ) or len(self.doc_cols) == 1
         self._blocks: dict[str, pd.DataFrame] | None = None
         self._wmetric: dict[str, float] | None = None
-        self._ntf: pd.Series | None = None
-        self._meta_pdf: pd.DataFrame | None = None
+        # preloaded per-doc lookups: ntf, and doc_meta's (title, snippet)
+        self._ntf: DocKeyLookup | None = None
+        self._meta: DocKeyLookup | None = None
         self._postings_cache: OrderedDict[str, tuple[np.ndarray, np.ndarray]] = (
             OrderedDict()
         )
         self._postings_cache_bytes = 0
         # optional static prior (the reference's pageranks table,
         # Ranker.java:112-120); absent ⇒ every doc's prior is 0
-        self._pagerank: pd.Series | None = None
+        self._pagerank: DocKeyLookup | None = None
         self._has_pagerank = table_exists(spark, paths.pageranks)
         self.preloaded = _should_preload(paths, preload, preload_max_bytes)
         if self.preloaded:
@@ -127,16 +136,16 @@ class RankerEngine:
             .select(key.alias("doc_key"), "ntf")
             .toPandas()
         )
-        self._ntf = ntf.set_index("doc_key")["ntf"]
+        self._ntf = _lookup(ntf, "ntf")
         dm = (
             read_table(self.spark, self.paths.doc_meta)
             .select(key.alias("doc_key"), "title", "snippet")
             .toPandas()
         )
-        self._meta_pdf = dm.set_index("doc_key")
+        self._meta = _lookup(dm, ["title", "snippet"])
         if self._has_pagerank:
             pr = read_table(self.spark, self.paths.pageranks).toPandas()
-            self._pagerank = pr.set_index("doc_key")["rank"]
+            self._pagerank = _lookup(pr, "rank")
 
     #: decoded-postings LRU caps.  Zipf-head terms (stopword fallback
     #: queries) dominate decode cost and repeat across queries; a small
@@ -230,52 +239,60 @@ class RankerEngine:
             .toPandas()
         )
 
+    def _doc_values(
+        self, preloaded: DocKeyLookup | None, path: str, keys: np.ndarray,
+        cols: str | list[str], default,
+    ) -> np.ndarray:
+        """Per-candidate values of ``cols`` in key order, ``default`` for
+        keys the artifact has no row for: from the preloaded lookup, or
+        (degraded mode) from a pruned read of just these keys' rows."""
+        if preloaded is None:
+            names = [cols] if isinstance(cols, str) else cols
+            preloaded = _lookup(self._keyed_rows(path, keys, *names), cols)
+        return preloaded.get(keys, default)
+
     def _ntf_for(self, keys: np.ndarray) -> np.ndarray:
-        if self._ntf is not None:
-            return self._ntf.reindex(keys).to_numpy(dtype=np.float64)
-        pdf = self._keyed_rows(self.paths.ntf, keys, "ntf")
-        return pdf.set_index("doc_key")["ntf"].reindex(keys).to_numpy(dtype=np.float64)
+        ntf = self._doc_values(self._ntf, self.paths.ntf, keys, "ntf", np.nan)
+        return ntf.astype(np.float64, copy=False)
 
     def _pagerank_for(self, keys: np.ndarray) -> np.ndarray:
-        """Static prior per candidate: 0 when the artifact is absent or
-        the doc has no rank row (reference default).  The pageranks table
-        stores doc_key directly, so the degraded-mode read prunes on it."""
+        """Static prior per candidate: 0 when the artifact is absent, the
+        doc has no rank row (reference default) or its stored rank is
+        NaN.  The pageranks table stores doc_key directly, so the
+        degraded-mode read prunes on it."""
         if not self._has_pagerank:
             return np.zeros(len(keys), dtype=np.float64)
-        if self._pagerank is not None:
-            return (
-                self._pagerank.reindex(keys).fillna(0.0).to_numpy(dtype=np.float64)
+        ranks = self._pagerank
+        if ranks is None:
+            pdf = (
+                read_table(self.spark, self.paths.pageranks)
+                .where(F.col("doc_key").isin([int(k) for k in keys]))
+                .toPandas()
             )
-        pdf = (
-            read_table(self.spark, self.paths.pageranks)
-            .where(F.col("doc_key").isin([int(k) for k in keys]))
-            .toPandas()
-        )
-        return (
-            pdf.set_index("doc_key")["rank"]
-            .reindex(keys)
-            .fillna(0.0)
-            .to_numpy(dtype=np.float64)
-        )
+            ranks = _lookup(pdf, "rank")
+        rank = ranks.get(keys, 0.0).astype(np.float64, copy=False)
+        return np.where(np.isnan(rank), 0.0, rank)
 
-    def _titles_for(self, keys: np.ndarray) -> pd.Series:
-        if self._meta_pdf is not None:
-            return self._meta_pdf["title"].reindex(keys).fillna("")
-        pdf = self._keyed_rows(self.paths.doc_meta, keys, "title")
-        return pdf.set_index("doc_key")["title"].reindex(keys).fillna("")
+    def _titles_for(self, keys: np.ndarray) -> list[str]:
+        """Title per candidate; a missing row or a null title is ``""``."""
+        titles = self._doc_values(
+            self._meta, self.paths.doc_meta, keys, ["title"], None
+        )[:, 0]
+        return [t if isinstance(t, str) else "" for t in titles]
 
-    def _meta_for(self, keys: np.ndarray) -> pd.DataFrame:
-        """(title, snippet) per candidate key, preserving key order; rows
-        absent from doc_meta come back as NaN (serialized like Gson
+    def _meta_for(self, keys: np.ndarray) -> np.ndarray:
+        """(title, snippet) rows per candidate key, preserving key order;
+        rows absent from doc_meta come back as None (serialized like Gson
         serializes a null field: omitted)."""
-        if self._meta_pdf is not None:
-            return self._meta_pdf[["title", "snippet"]].reindex(keys)
-        pdf = self._keyed_rows(self.paths.doc_meta, keys, "title", "snippet")
-        return pdf.set_index("doc_key")[["title", "snippet"]].reindex(keys)
+        return self._doc_values(
+            self._meta, self.paths.doc_meta, keys, ["title", "snippet"], None
+        )
 
     # ---------------------------------------------------------- search
 
-    def _candidates(self, lookup_terms: list[str]) -> pd.DataFrame:
+    def _candidates(
+        self, lookup_terms: list[str]
+    ) -> tuple[np.ndarray, np.ndarray, dict[str, np.ndarray]]:
         """Union of postings in the order GIVEN; implements Q5 (the first
         term hitting a doc does not record its tf).  The caller supplies
         the reference's iteration order — these differ per call site: the
@@ -286,12 +303,9 @@ class RankerEngine:
         (``Ranker.java:156,176,192``) — so the same term set can iterate
         differently in the two passes, shifting which term Q5-drops.
 
-        Returns columns: doc_key, occurrence, plus one ``tf:<term>`` column
-        per term (NaN where unmatched or Q5-dropped).  The ``tf:`` prefix
-        namespaces term columns away from doc_key/occurrence — ':' is in
-        the tokenizer's punctuation alphabet, so no indexed term contains
-        it; without the prefix a query word literally named "occurrence"
-        overwrote the match counts the pre-rank cut sorts on.
+        Returns ``(doc_key, occurrence, tfs)``: doc-key-ordered arrays, and
+        per matched term its tf per doc (NaN where unmatched or
+        Q5-dropped).
         """
         key_arrays: list[np.ndarray] = []
         tf_arrays: list[np.ndarray] = []
@@ -306,10 +320,7 @@ class RankerEngine:
             orders.append(order)
             terms_present.append(term)
         if not key_arrays:
-            return pd.DataFrame(columns=["doc_key", "occurrence"])
-        # pure-numpy union + per-term tf columns (a pandas groupby/pivot
-        # here dominated query latency; posting lists are already doc-keyed
-        # numpy arrays, so the accumulator is array math)
+            return np.empty(0, np.int64), np.empty(0, np.int64), {}
         lens = [len(k) for k in key_arrays]
         uniq, inv = np.unique(np.concatenate(key_arrays), return_inverse=True)
         occ = np.bincount(inv, minlength=len(uniq))
@@ -321,19 +332,16 @@ class RankerEngine:
             unseen = first[idx] == -1
             first[idx[unseen]] = o
             off += n
-        out: dict[str, np.ndarray] = {
-            "doc_key": uniq.astype(np.int64),
-            "occurrence": occ,
-        }
+        tf_cols: dict[str, np.ndarray] = {}
         off = 0
         for term, n, o, tfs in zip(terms_present, lens, orders, tf_arrays):
             col = np.full(len(uniq), np.nan)
             col[inv[off : off + n]] = tfs
             # Q5: the earliest term (HashSet order) to hit a doc drops its tf
             col[first == o] = np.nan
-            out["tf:" + term] = col
+            tf_cols[term] = col
             off += n
-        return pd.DataFrame(out)
+        return uniq.astype(np.int64), occ, tf_cols
 
     def search(self, query: str, limit: int | None = None) -> pd.DataFrame:
         """Full ranked results (reference steps 1-11); ``limit`` truncates
@@ -348,7 +356,7 @@ class RankerEngine:
         if not words_sw:
             words_sw = removed
         first_order = java_hashset_order(words_sw)
-        cands = self._candidates(first_order)
+        keys, occ, tfs = self._candidates(first_order)
         # expansion (Q4 makes the stemmed branch a no-op).  The reference
         # re-runs candidate generation over words_set whose ITERATION
         # ORDER is the collection-constructor bucket order (capacity sized
@@ -359,24 +367,19 @@ class RankerEngine:
         # a capacity boundary (e.g. 13+ raw tokens, <=12 distinct)
         # iterates the re-run differently and shifts the Q5 tf-drops even
         # when no stopword was removed.
-        if len(cands) < EXPAND_THRESHOLD and first_order != words_set_order:
-            cands = self._candidates(words_set_order)
-        if not len(cands):
+        if len(keys) < EXPAND_THRESHOLD and first_order != words_set_order:
+            keys, occ, tfs = self._candidates(words_set_order)
+        if not len(keys):
             return self._empty_result()
         # pre-rank: occurrence desc, doc key asc (normalized tie-break), cut 250
-        # (np.lexsort on the two int columns — pandas' multi-key
-        # sort_values factorizes every column and dominated tail latency)
-        order = np.lexsort(
-            (cands["doc_key"].to_numpy(), -cands["occurrence"].to_numpy())
-        )[:TOP_CUT]
-        cands = cands.iloc[order]
-        keys = cands["doc_key"].to_numpy(dtype=np.int64)
+        cut = np.lexsort((keys, -occ))[:TOP_CUT]
+        keys, occ = keys[cut], occ[cut]
         ntf = self._ntf_for(keys)
         # qtf over ALL raw query words incl. stopwords (Ranker.java:207-210)
         word_count: dict[str, int] = {}
         for w in words:
             word_count[w] = word_count.get(w, 0) + 1
-        weight = np.zeros(len(cands), dtype=np.float64)
+        weight = np.zeros(len(keys), dtype=np.float64)
         idfs = self._idfs(list(word_count))
         # Java accumulates over wordCount.entrySet() in HashMap bucket
         # order (Ranker.java:232-249); float addition is non-associative,
@@ -391,47 +394,37 @@ class RankerEngine:
             # weight accumulation for any corpus-ubiquitous term (Q3's
             # df+1 makes idf = ln(n/(n+1)) < 0 when df == n).
             idf_pow = idf ** 1.5 if idf >= 0.0 else float("nan")
-            if "tf:" + w in cands.columns:
-                tf = cands["tf:" + w].to_numpy(dtype=np.float64)
-            else:
-                tf = np.full(len(cands), np.nan)
+            tf = tfs[w][cut] if w in tfs else np.full(len(keys), np.nan)
             wf = np.where(np.isnan(tf) | (ntf == 0) | np.isnan(ntf), 0.0, tf / np.where(ntf == 0, 1, ntf))
             weight += qtf * idf_pow * wf
         # title bonus (Ranker.java:211-230); words_sw is never empty here
         # (the all-stopword query falls back to the removed words above)
-        titles = self._titles_for(keys)
-        exact = titles.str.contains(query, regex=False).to_numpy()
         sw_set = set(words_sw)
-        toksets = java_title_tokens(titles)  # Ranker.java:223 semantics
-        overlap = np.array(
-            [
-                (len(sw_set & set(t)) / len(sw_set)) if isinstance(t, list) else 0.0
-                for t in toksets
-            ]
-        )
-        bonus = np.where((~exact) & (overlap >= 0.6), overlap * 10, 0.0)
-        kw = np.where(exact, 10.0, bonus)
+        kw = np.zeros(len(keys), dtype=np.float64)
+        for i, title in enumerate(self._titles_for(keys)):
+            if query in title:
+                kw[i] = 10.0
+                continue
+            # Ranker.java:223 normalizes each title like the query
+            overlap = len(sw_set.intersection(java_query_tokens(title))) / len(sw_set)
+            if overlap >= 0.6:
+                kw[i] = overlap * 10
         # static prior: 0.75·pagerank (Ranker.java:255); zeros unless the
         # optional pageranks artifact was built (build_reply_pagerank)
         page_rank = self._pagerank_for(keys)
         score = 3 * weight + 0.75 * page_rank + kw
-        out = pd.DataFrame(
+        rank = np.lexsort((keys, -score))[:limit]
+        return pd.DataFrame(
             {
-                "doc_key": keys,
-                "occurrence": cands["occurrence"].to_numpy(),
-                "tf_idf_weight": weight,
-                "page_rank": page_rank,
-                "keyword_match": kw,
-                "score": score,
+                **doc_key_columns(keys[rank], self.doc_cols),
+                "doc_key": keys[rank],
+                "occurrence": occ[rank],
+                "tf_idf_weight": weight[rank],
+                "page_rank": page_rank[rank],
+                "keyword_match": kw[rank],
+                "score": score[rank],
             }
         )
-        out = out.iloc[
-            np.lexsort((out["doc_key"].to_numpy(), -out["score"].to_numpy()))
-        ].reset_index(drop=True)
-        if limit is not None:
-            out = out.head(limit)
-        doc_cols_pdf = doc_key_to_cols(out["doc_key"].to_numpy(dtype=np.int64), self.doc_cols)
-        return pd.concat([doc_cols_pdf.reset_index(drop=True), out.reset_index(drop=True)], axis=1)
 
     def _empty_result(self) -> pd.DataFrame:
         cols = [*self.doc_cols, "doc_key", "occurrence", "tf_idf_weight",
@@ -473,7 +466,7 @@ class RankerEngine:
         for c in self.doc_cols[1:]:
             urls = urls + ":" + chunk[c].astype(str)
         out = []
-        for url, title, snippet in zip(urls, meta["title"], meta["snippet"]):
+        for url, (title, snippet) in zip(urls, meta):
             row: dict = {}
             # Gson field-declaration order: title, url, page_head
             if isinstance(title, str):
@@ -490,6 +483,12 @@ class RankerEngine:
         out-of-range page (``Ranker.java:263-265``, ``README.md:43-53``)."""
         env = self.paginate(self.search(query), page)
         return env if isinstance(env, str) else gson_dumps(env)
+
+
+def _lookup(pdf: pd.DataFrame, cols: str | list[str]) -> DocKeyLookup:
+    """Sorted doc-key lookup over a ``doc_key`` + ``cols`` frame: 1-D
+    values for one column name, one value column per name for a list."""
+    return DocKeyLookup(pdf["doc_key"].to_numpy(dtype=np.int64), pdf[cols].to_numpy())
 
 
 def gson_dumps(obj) -> str:

@@ -93,12 +93,19 @@ def write_table(
 def table_exists(spark: SparkSession, path: str) -> bool:
     """Whether the artifact at ``path`` exists AND is readable in
     whichever store holds it — the probe for OPTIONAL artifacts (e.g. the
-    pageranks prior).  The parquet branch probes through Spark (one
-    schema-inference call at engine init), not driver-local ``isdir``:
-    schemeless paths resolve against the cluster's default filesystem,
-    and an empty directory left by a crashed write must read as absent."""
+    pageranks prior).  The parquet branch asks the session's Hadoop
+    ``FileSystem`` first, not driver-local ``isdir``: schemeless paths
+    resolve against the cluster's default filesystem, and an absent path
+    never reaches ``spark.read`` (whose failure logs a Java stack trace
+    at every engine open).  A present path is probed through Spark (one
+    schema-inference call), so an empty directory left by a crashed
+    write reads as absent."""
     if use_iceberg(spark):
         return spark.catalog.tableExists(table_for(path))
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not jpath.getFileSystem(conf).exists(jpath):
+        return False
     try:
         spark.read.parquet(path)
         return True

@@ -124,8 +124,12 @@ def _make_sweep(postings, weight, block_size, counter):
     """Encode a (doc -> tf) dict into a blocks frame and wrap a _TermSweep."""
     import pandas as pd
 
-    from holi_search_engine_spark.plans.compression import BM25_K1, encode_block
-    from holi_search_engine_spark.query.bm25 import _NormLookup, _TermSweep
+    from holi_search_engine_spark.plans.compression import (
+        BM25_K1,
+        DocKeyLookup,
+        encode_block,
+    )
+    from holi_search_engine_spark.query.bm25 import _TermSweep
 
     keys = np.array(sorted(postings), dtype=np.uint64)
     tfs = np.array([postings[k] for k in sorted(postings)], dtype=np.uint64)
@@ -139,7 +143,7 @@ def _make_sweep(postings, weight, block_size, counter):
         rows,
         columns=["block_no", "n", "key_min", "key_max", "ub_bm25", "doc_bytes", "tf_bytes"],
     )
-    norms = _NormLookup(np.array([0], dtype=np.int64), np.array([1.0]))
+    norms = DocKeyLookup(np.array([0], dtype=np.int64), np.array([1.0]))
     return _TermSweep(blocks, weight, norms, counter)
 
 

@@ -5,6 +5,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from holi_search_engine_spark.plans.compression import (
+    DocKeyLookup,
     decode_block,
     encode_block,
     varbyte_decode,
@@ -62,6 +63,29 @@ def test_compression_is_compact():
     db, tb = encode_block(keys, tfs)
     assert len(db) < 10_100  # first absolute key + 1 byte per gap
     assert len(tb) == 10_000
+
+
+def test_doc_key_lookup_absent_keys():
+    """get() fills every key the table lacks — below its minimum, above its
+    maximum, inside a gap — with the default, for 1-D and 2-D values and
+    for an empty table; present keys read their own row in any order."""
+    keys = np.array([40, 10, 20], dtype=np.int64)  # unsorted, like a read
+    ntf = DocKeyLookup(keys, np.array([4.0, 1.0, 2.0]))
+    want = np.array([20, 5, 30, 50, 10, 40], dtype=np.int64)
+    got = ntf.get(want, np.nan)
+    np.testing.assert_array_equal(got, [2.0, np.nan, np.nan, np.nan, 1.0, 4.0])
+    assert got.dtype == np.float64
+    meta = DocKeyLookup(keys, np.array([["d", "s4"], [None, "s1"], ["b", "s2"]], dtype=object))
+    assert meta.get(want, None).tolist() == [
+        ["b", "s2"], [None, None], [None, None], [None, None], [None, "s1"], ["d", "s4"],
+    ]
+    # the stored values are not written through by a fill
+    assert ntf.vals.tolist() == [1.0, 2.0, 4.0]
+    empty = DocKeyLookup(np.empty(0, np.int64), np.empty((0, 2), dtype=object))
+    assert empty.get(want[:2], None).tolist() == [[None, None], [None, None]]
+    assert DocKeyLookup(np.empty(0, np.int64), np.empty(0)).get(want, 0.0).tolist() == [0.0] * 6
+    # __call__ is the present-keys fast path the BM25 sweeps use
+    np.testing.assert_array_equal(ntf(np.array([10, 40])), [1.0, 4.0])
 
 
 def test_doc_key_exprs_roundtrip(spark):

@@ -85,9 +85,9 @@ def clustered_index(spark, dictionary, tmp_path_factory):
 
 def test_distributed_sparse_clustered_keys(spark, clustered_index, vocabulary):
     """High n_ranges over the sparse clustered key space: doc-free ranges
-    spanned by blocks must score as empty (regression: _NormLookup over an
-    empty dl slice raised IndexError), and results stay rank-identical to
-    the single-node engine."""
+    spanned by blocks must score as empty (regression: the doc-key lookup
+    over an empty dl slice raised IndexError), and results stay
+    rank-identical to the single-node engine."""
     import numpy as np
 
     from holi_search_engine_spark.corpus import make_query_fixtures

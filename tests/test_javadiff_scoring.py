@@ -284,11 +284,11 @@ def _export_payload(engine, queries: list[str]) -> str:
             f"{int(k)}:{repr(float(t))}" for k, t in zip(keys, tfs)
         )
         lines.append(f"IDX {b64(term)} {b64(row)}")
-    for doc_key, ntf in engine._ntf.items():
+    for doc_key, ntf in zip(engine._ntf.keys, engine._ntf.vals):
         lines.append(f"NTF {b64(str(int(doc_key)))} {repr(float(ntf))}")
     for term, idf in engine._wmetric.items():
         lines.append(f"IDF {b64(term)} {repr(float(idf))}")
-    for doc_key, title in engine._meta_pdf["title"].items():
+    for doc_key, title in zip(engine._meta.keys, engine._meta.vals[:, 0]):
         lines.append(f"TIT {b64(str(int(doc_key)))} {b64(title)}")
     for q in queries:
         lines.append(f"QRY {b64(q)}")
@@ -299,6 +299,8 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
     """Fixture queries + adversarial shapes: duplicates straddling the
     HashSet 16->32 capacity boundary INSIDE the <50-candidate expansion
     branch, stopword-only, exact-title substrings, repeated rare words."""
+    import numpy as np
+
     from holi_search_engine_spark.corpus import make_query_fixtures
     from holi_search_engine_spark.functions.javacompat import java_hashset_order
 
@@ -327,13 +329,15 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
         # doc matches >= 2 of the reordered terms), and the candidate set
         # must stay under the expansion threshold so the reference's
         # second findAllMatchingURLs pass actually runs
-        a = engine._candidates(coll)
-        b = engine._candidates(java_hashset_order(coll))
-        if not len(a) or len(a) >= 50:
+        keys_a, occ_a, tfs_a = engine._candidates(coll)
+        keys_b, occ_b, tfs_b = engine._candidates(java_hashset_order(coll))
+        if not len(keys_a) or len(keys_a) >= 50:
             continue
-        a = a.sort_values("doc_key").reset_index(drop=True).sort_index(axis=1)
-        b = b.sort_values("doc_key").reset_index(drop=True).sort_index(axis=1)
-        if not a.equals(b):
+        # both passes return doc-key-ordered arrays over the same term set
+        same = np.array_equal(keys_a, keys_b) and np.array_equal(occ_a, occ_b) and all(
+            np.array_equal(tfs_a[t], tfs_b[t], equal_nan=True) for t in tfs_a
+        )
+        if not same:
             boundary = " ".join(words)
             break
     assert boundary is not None, "no Q5-order-sensitive boundary query found"
@@ -349,6 +353,22 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
     qs.append(f"{rare_terms[2]} {rare_terms[2]} {rare_terms[2]}")
     qs.append(f"the {rare_terms[3]} of {rare_terms[4]} and")
     return qs
+
+
+def test_export_payload_covers_every_doc(spark, scoring_corpus):
+    """The kernel's stdin exporter runs without the reference tree, so it
+    cannot rot unseen while the differential below skips: one NTF line
+    and one TIT line per indexed doc, and one QRY line per query."""
+    from holi_search_engine_spark.plans.index_build import read_meta
+    from holi_search_engine_spark.query.ranker import RankerEngine
+
+    _, paths = scoring_corpus
+    engine = RankerEngine(spark, paths, preload=True)
+    payload = _export_payload(engine, ["alpha beta", "the"])
+    kinds = [line.split(" ", 1)[0] for line in payload.splitlines()]
+    n_docs = read_meta(paths)["n_docs"]
+    assert kinds.count("NTF") == kinds.count("TIT") == n_docs
+    assert kinds.count("QRY") == 2
 
 
 @pytest.mark.skipif(

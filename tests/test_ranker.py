@@ -100,6 +100,27 @@ def test_auto_degraded_mode_identical(spark, built_index, engine, fixture_querie
         )
 
 
+def test_search_frame_columns_and_dtypes(engine, fixture_queries):
+    """One frame per answer: the doc columns, then the score columns, with
+    fixed dtypes for a hit and for limit=3; a miss is an empty frame with
+    the same columns, all of dtype object."""
+    import pandas as pd
+
+    cols = ["conv_id", "turn_idx", "doc_key", "occurrence", "tf_idf_weight",
+            "page_rank", "keyword_match", "score"]
+    dtypes = ["object", "int32", "int64", "int64"] + ["float64"] * 4
+    q = next(q for _, q in fixture_queries if len(engine.search(q)) > 3)
+    full, top3 = engine.search(q), engine.search(q, limit=3)
+    for got in (full, top3):
+        assert list(got.columns) == cols
+        assert [str(t) for t in got.dtypes] == dtypes
+        assert isinstance(got.index, pd.RangeIndex) and got.index.start == 0
+    pd.testing.assert_frame_equal(top3, full.head(3), check_exact=True)
+    miss = engine.search("zzzzqqqqxx yyqqzzww")
+    assert list(miss.columns) == cols and len(miss) == 0
+    assert [str(t) for t in miss.dtypes] == ["object"] * len(cols)
+
+
 def test_envelope_shape_and_page_math(engine, oracle_index, fixture_queries):
     """§2.4 step 11 (Ranker.java:256-279, README.md:43-53): the serving
     envelope — 10/page chunks numbered from 1, totalPages = ceil(n/10),
@@ -274,6 +295,48 @@ def test_query_word_colliding_with_result_columns(spark, edge_index):
             assert int(g) == c.occurrence, q
 
 
+def test_missing_doc_rows_score_as_reference(spark, edge_index, tmp_path):
+    """Candidates the per-doc artifacts lack: no doc_meta row or a null
+    title scores keyword_match 0 (the reference reads a blank title), a
+    missing or stored-NaN pagerank scores 0, and the preloaded and the
+    degraded (pruned-read) modes serve the same frame."""
+    import shutil
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from holi_search_engine_spark.plans.index_build import IndexPaths
+
+    paths, _ = edge_index
+    q = "rate decay path"  # docs 0, 1 and 3: keys 0, 64 and 192
+    base = RankerEngine(spark, paths, preload=True).search(q).set_index("doc_key")
+    assert (base.loc[[64, 192], "keyword_match"] > 0).all()
+
+    holed = IndexPaths(str(tmp_path / "holed"))
+    shutil.copytree(paths.root, holed.root)
+    conv = F.col("conv_id")
+    (
+        spark.read.parquet(paths.doc_meta)
+        .where(conv != "conv-00000003")
+        .withColumn("title", F.when(conv == "conv-00000001", F.lit(None)).otherwise(F.col("title")))
+        .write.mode("overwrite").parquet(holed.doc_meta)
+    )
+    spark.createDataFrame(
+        [(0, 0.5), (64, float("nan"))], "doc_key long, rank double"
+    ).write.parquet(holed.pageranks)
+
+    pre = RankerEngine(spark, holed, preload=True).search(q)
+    deg = RankerEngine(spark, holed, preload=False).search(q)
+    pd.testing.assert_frame_equal(pre, deg, check_exact=True)
+    got = pre.set_index("doc_key")
+    assert list(got.loc[[64, 192], "keyword_match"]) == [0.0, 0.0]
+    assert list(got.loc[[0, 64, 192], "page_rank"]) == [0.5, 0.0, 0.0]
+    np.testing.assert_array_equal(
+        got["tf_idf_weight"], base.loc[got.index, "tf_idf_weight"]
+    )
+
+
 def test_negative_idf_scores_nan_like_java(spark, edge_index):
     """'signal' is in every doc, so Q3 gives idf = ln(5/6) < 0.  Java
     Math.pow(idf, 1.5) is NaN and the reference's weight accumulation
@@ -301,12 +364,9 @@ def test_java_query_tokens_semantics():
     so Unicode whitespace (NBSP, ideographic space) stays INSIDE tokens —
     Python's str.split()/str.strip() are Unicode-aware and would diverge
     from the reference on exactly those titles."""
-    import pandas as pd
-
     from holi_search_engine_spark.functions.javacompat import (
         RE_QUERY_PUNCT,
         java_query_tokens,
-        java_title_tokens,
     )
 
     cases = ["", "   ", "a,b", "Hello, world", "\x01Hi  there\x1f",
@@ -319,11 +379,12 @@ def test_java_query_tokens_semantics():
     assert java_query_tokens("Hello, world") == ["hello", " world"]
     assert java_query_tokens("\x01Hi  there\x1f") == ["hi", "there"]
     assert java_query_tokens("tab　wide") == ["tab　wide"]
-    # vectorized title variant matches element-wise (None -> blank title)
-    s = pd.Series(cases + [None])
-    assert java_title_tokens(s).tolist() == [
-        java_query_tokens(c) for c in cases
-    ] + [[""]]
+    # per-title path (Ranker.java:223): the engine tokenizes each title
+    # with java_query_tokens, reading a null title as "" (-> [""])
+    titles = cases + [None]
+    assert [
+        java_query_tokens(t if isinstance(t, str) else "") for t in titles
+    ] == [O._java_query_tokens(c) for c in cases] + [[""]]
     # drift guard: the engine and oracle punctuation alphabets are declared
     # independently (sharing would let one bug hide both) but must stay
     # textually identical; note re.compile's cache may intern the objects

@@ -40,6 +40,37 @@ def test_write_read_table_parquet_roundtrip(spark, tmp_path):
     assert got == {(1, "a2"), (2, "b")}
 
 
+def test_table_exists_parquet_branch(spark, tmp_path, monkeypatch):
+    """The optional-artifact probe: a written table is present; an empty
+    directory (a crashed write) and an absent path are absent, and the
+    absent path is answered by the Hadoop FileSystem without a failing
+    ``spark.read`` (which logged a Java stack trace at every engine
+    open).  Errors other than absence still propagate."""
+    from pyspark.sql import DataFrameReader
+
+    from holi_search_engine_spark.sources import catalog as C
+
+    monkeypatch.delenv(C.ENV_DB, raising=False)
+    present = str(tmp_path / "present")
+    spark.range(3).write.parquet(present)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert C.table_exists(spark, present)
+    assert not C.table_exists(spark, str(empty))
+
+    reads = []
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, p: reads.append(p))
+    assert not C.table_exists(spark, str(tmp_path / "absent"))
+    assert reads == []
+
+    def unreadable(self, p):
+        raise PermissionError(p)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
+    with pytest.raises(PermissionError):
+        C.table_exists(spark, present)
+
+
 class _RecWriter:
     def __init__(self, calls):
         self.calls = calls
