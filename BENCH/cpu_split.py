@@ -22,12 +22,12 @@ n = corpus.count()
 warm = generate_transcripts_df(spark, 1500, partitions={CPUS})
 shutil.rmtree("/dev/shm/holi_split_warm", ignore_errors=True)
 build_index(spark, warm, "/dev/shm/holi_split_warm", vocab, buckets=8,
-            build_blocks=True, build_postings_table=False)
+            build_blocks=True)
 shutil.rmtree("/dev/shm/holi_split_warm", ignore_errors=True)
 shutil.rmtree({OUT!r}, ignore_errors=True)
 print("BUILD_START", flush=True); input_ready = time.time()
 build_index(spark, corpus, {OUT!r}, vocab, buckets=8,
-            build_blocks=True, build_postings_table=False)
+            build_blocks=True)
 print("BUILD_END", time.time() - input_ready, flush=True)
 time.sleep(2)
 spark.stop()

@@ -33,7 +33,7 @@ out = "/dev/shm/holi_profile_idx_{cpus}"
 shutil.rmtree(out, ignore_errors=True)
 t0 = time.time()
 paths = build_index(spark, corpus, out, frozenset(make_vocabulary()), buckets=8,
-                    build_blocks=True, build_postings_table=False)
+                    build_blocks=True)
 wall = time.time() - t0
 stages = {{}}
 for f in sorted(glob.glob(os.path.join(out, "_manifest", "*.json"))):

@@ -4,8 +4,8 @@
 ``local[$SPARK_GRAFT_CPUS]``; prints ONE JSON line.
 
 Headline metrics mirror BASELINE.md §B:
-- ``index_build``: full resumable index build (tokenize → salted postings →
-  compressed blocks) over a deterministically generated transcripts corpus;
+- ``index_build``: full resumable index build (tokenize → doc stats, df/idf
+  and compressed blocks) over a deterministically generated transcripts corpus;
   reported with turns/sec in ``extra``.
 - ``query_p95``: p95 latency over the 38-query fixture set against the
   built index (3 passes, preloaded engine — the reference's single-node
@@ -153,7 +153,6 @@ def main() -> None:
         t0 = time.time()
         paths = build_index(
             spark, corpus, idx_dir, dictionary, buckets=8, build_blocks=True,
-            build_postings_table=False,  # the block index IS the index
         )
         walls.append(time.time() - t0)
     timings["index_build"] = min(walls)
@@ -446,7 +445,7 @@ def scale_main(entry: str) -> None:
         t0 = time.time()
         paths_sc = build_index(
             spark, corpus_sc, f"{sc_dir}/idx", dictionary, buckets=8,
-            build_blocks=True, build_postings_table=False,
+            build_blocks=True,
         )
         scale_timings["scale_bm25_index_build"] = time.time() - t0
         before = _stages(spark)

@@ -334,9 +334,9 @@ def build_block_index(
     """Build the compressed block index (``bucket=None`` → all buckets in
     one job, a list/int → only those, pruned to their term_tf partitions).
 
-    Plan shape: bucket-pruned parquet scan (or, on a fresh fused build,
-    the in-memory persisted token stream via ``term_stream``) →
-    shuffle-join ntf (doc-keyed) → repartition by term →
+    Plan shape: bucket-pruned parquet scan of the (term, doc, tf, ntf, dl)
+    stream (or a caller's in-memory ``term_stream`` of the same columns) →
+    repartition by term →
     sortWithinPartitions(term, doc_key) → mapInPandas block encoder →
     parquet partitioned by bucket.  No stage materializes a whole posting
     list in memory; the sort is Spark's spillable external sort.
@@ -373,15 +373,9 @@ def build_block_index(
     norm = (
         F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl").cast("double") / F.lit(avgdl)
     ).alias("bm25_norm")
-    if {"ntf", "dl"} <= set(term_tf.columns):
-        # per-doc stats ride on the token stream (tokenize emits them) —
-        # no doc-keyed join, the term repartition is the ONLY shuffle
-        joined = term_tf.select("term", key.alias("doc_key"), "tf", "ntf", norm)
-    else:
-        doc_stats = read_table(spark, paths.doc_stats)
-        joined = term_tf.join(doc_stats, on=doc_cols).select(
-            "term", key.alias("doc_key"), "tf", "ntf", norm
-        )
+    # per-doc stats ride on the token stream (tokenize emits them) — no
+    # doc-keyed join, the term repartition is the ONLY shuffle
+    joined = term_tf.select("term", key.alias("doc_key"), "tf", "ntf", norm)
     # 4 tasks per core: term-hash partitions are Zipf-skewed, so finer
     # granularity lets the scheduler even out the tail (a partition that
     # drew a head term finishes late; with 4× tasks the other cores keep

@@ -7,8 +7,9 @@ ntf), ``jobs/Idf.java:22-87`` (df/idf), ``ranker/CrawlProcess.java:19-66``
 segment writes, 8-way external sort, binary merge, same-key collapse
 (``kvs/AppendOnly.java:139-155``, ``jobs/Sort.java``) — is exactly what
 Spark's sort-based shuffle does natively, so the "merge" here IS the
-shuffle; we add what Spark does not give us (SURVEY.md §4): head-term skew
-salting for the posting aggregation and per-bucket resumable orchestration.
+shuffle; we add what Spark does not give us (SURVEY.md §4): per-bucket
+resumable orchestration, and posting lists streamed into compressed blocks
+so no head term is ever one row in one task.
 
 Scale design (100 TB / 10^12 turns):
 - ONE pass over the corpus tokenizes via ``mapInPandas`` (Arrow batches,
@@ -22,11 +23,10 @@ Scale design (100 TB / 10^12 turns):
   passes;
 - doc_stats / df / idf are pure JVM aggregations over the columnar stream
   (whole-stage codegen, map-side partial agg);
-- posting-list aggregation is two-phase with a salt on the doc key:
-  ``groupBy(term, salt)`` builds doc-ordered runs, ``groupBy(term)``
-  concatenates+re-sorts the ≤S runs — the hot stopword-like terms
-  (Zipf head) never funnel their full posting stream through one task's
-  sort buffer in phase 1;
+- the index both engines read is the block table
+  (``compression.build_block_index``): each term's doc-sorted postings
+  stream through Spark's spillable sort into 128-entry compressed blocks,
+  so a Zipf-head term never materializes as one row;
 - on a cluster every output table is Iceberg partitioned by
   ``bucket(B, term)``; in this sandbox plain parquet ``bucket=K/``
   directories give the same pruning via partition discovery.
@@ -46,7 +46,6 @@ from ..sources.catalog import read_table, write_table
 
 DOC_COLS = ["conv_id", "turn_idx"]
 DEFAULT_BUCKETS = 8
-DEFAULT_SALT = 16
 
 
 def tokenize_terms(
@@ -155,37 +154,6 @@ def build_wmetric(term_tf: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
-def build_postings(
-    term_tf: DataFrame,
-    doc_cols: list[str] | None = None,
-    salt: int = DEFAULT_SALT,
-    carry_cols: list[str] | None = None,
-) -> DataFrame:
-    """term → doc-ordered ``array<struct<doc..., tf>>`` via salted two-phase
-    aggregation (SURVEY.md §4 custom work #1).
-
-    Phase 1 groups on ``(term, salt(doc))`` so a Zipf-head term's postings
-    are built as ``salt`` doc-ordered runs in parallel; phase 2 concatenates
-    the runs and re-sorts (cheap: ≤ ``salt`` pre-sorted arrays per term).
-
-    ``carry_cols`` are term-functional columns (e.g. ``bucket``) passed
-    through both groupings without changing cardinality.
-    """
-    doc_cols = doc_cols or DOC_COLS
-    carry = carry_cols or []
-    doc_struct = F.struct(*[F.col(c) for c in doc_cols], F.col("tf"))
-    salted = term_tf.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in doc_cols]), F.lit(salt))
-    )
-    phase1 = salted.groupBy("term", *carry, "_salt").agg(
-        F.sort_array(F.collect_list(doc_struct)).alias("run")
-    )
-    phase2 = phase1.groupBy("term", *carry).agg(
-        F.array_sort(F.flatten(F.collect_list("run"))).alias("postings")
-    )
-    return phase2.withColumn("df", F.size("postings"))
-
-
 def build_doc_meta(
     df: DataFrame, doc_cols: list[str] | None = None, text_col: str = "text"
 ) -> DataFrame:
@@ -237,10 +205,6 @@ class IndexPaths:
         return os.path.join(self.root, "doc_stats")
 
     @property
-    def postings(self) -> str:
-        return os.path.join(self.root, "postings")
-
-    @property
     def blocks(self) -> str:
         return os.path.join(self.root, "blocks")
 
@@ -264,15 +228,21 @@ def _manifest_path(paths: IndexPaths, stage: str, bucket: int | None = None) -> 
     return os.path.join(paths.manifest, name)
 
 
-def _manifest_done(paths: IndexPaths, stage: str, bucket: int | None = None) -> bool:
+def _manifest_record(paths: IndexPaths, stage: str, bucket: int | None = None) -> dict | None:
+    """The stage's (or bucket's) record if it is done, else None."""
     p = _manifest_path(paths, stage, bucket)
     if not os.path.exists(p):
-        return False
+        return None
     try:
         with open(p) as f:
-            return json.load(f).get("status") == "done"
+            rec = json.load(f)
     except Exception:
-        return False
+        return None
+    return rec if rec.get("status") == "done" else None
+
+
+def _manifest_done(paths: IndexPaths, stage: str, bucket: int | None = None) -> bool:
+    return _manifest_record(paths, stage, bucket) is not None
 
 
 def _manifest_write(paths: IndexPaths, stage: str, record: dict, bucket: int | None = None) -> None:
@@ -292,19 +262,25 @@ def build_index(
     doc_cols: list[str] | None = None,
     text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
-    salt: int = DEFAULT_SALT,
     n_for_idf: int | None = None,
     build_blocks: bool = True,
-    build_postings_table: bool = True,
+    build_postings_table: bool = False,
     resume: bool = True,
 ) -> IndexPaths:
     """Full resumable build: stage A (tokenize + stats, one corpus pass),
-    stage B (per-term-hash-bucket posting lists).
+    then doc_stats, wmetric and the per-term-hash-bucket block index.
 
     Restart skips completed stages/buckets via the ``_manifest`` records
     (precedent: the reference crawler's resume-from-table,
-    ``jobs/Crawler.java:28-31``).
+    ``jobs/Crawler.java:28-31``).  A blocks bucket also counts as not
+    done when its record's avgdl differs from ``_meta.json``: its
+    block-max BM25 bounds were computed with the old one.
+
+    ``build_postings_table`` is accepted only as False: the array-per-term
+    postings table that no engine read is no longer built.
     """
+    if build_postings_table:
+        raise ValueError("the array-per-term postings table is no longer built")
     doc_cols = doc_cols or DOC_COLS
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
@@ -312,7 +288,7 @@ def build_index(
     # AQE's stage-coordination loop inserts multi-second idle gaps between
     # the build's (fixed-shape, explicitly-partitioned) jobs — measured ~5s
     # of zero-CPU per write under concurrent job submission.  The build
-    # handles skew itself (salted aggregation, streamed block encode), so
+    # handles skew itself (streamed block encode, 4 tasks per core), so
     # AQE buys nothing here; restore the caller's setting afterwards.
     prev = {
         k: spark.conf.get(k, None)
@@ -326,8 +302,7 @@ def build_index(
     try:
         return _build_index_inner(
             spark, transcripts, paths, dictionary, doc_cols, text_col,
-            buckets, salt, n_for_idf, build_blocks, build_postings_table,
-            resume,
+            buckets, n_for_idf, build_blocks, resume,
         )
     finally:
         for k, v in prev.items():
@@ -345,10 +320,8 @@ def _build_index_inner(
     doc_cols: list[str],
     text_col: str,
     buckets: int,
-    salt: int,
     n_for_idf: int | None,
     build_blocks: bool,
-    build_postings_table: bool,
     resume: bool,
 ) -> IndexPaths:
     out_dir = paths.root
@@ -508,19 +481,7 @@ def _build_index_inner(
             _manifest_write(paths, "doc_stats", {"degenerate": True})
             _manifest_write(paths, "wmetric", {"degenerate": True})
             for b in range(buckets):
-                _manifest_write(paths, "blocks", {"bucket": b, "degenerate": True}, bucket=b)
-                _manifest_write(paths, "postings", {"bucket": b, "n_terms": 0, "n_postings": 0, "degenerate": True}, bucket=b)
-            write_table(
-                spark.createDataFrame(
-                    [],
-                    schema=(
-                        "term string, postings array<struct<"
-                        + ", ".join(f"{c}:{src_types[c]}" for c in doc_cols)
-                        + ", tf:int>>, df int, bucket int"
-                    ),
-                ).coalesce(1),
-                paths.postings,
-            )
+                _manifest_write(paths, "blocks", {"bucket": b, "avgdl": 0.0, "degenerate": True}, bucket=b)
             return paths
         sub["term_tf_write_meta"] = time.time() - t0
         n_docs = n_turns
@@ -574,36 +535,21 @@ def _build_index_inner(
     # term_tf — run all three concurrently.
     need_doc_stats = not (resume and _manifest_done(paths, "doc_stats"))
     need_wmetric = not (resume and _manifest_done(paths, "wmetric"))
-    blocks_remaining = (
-        [b for b in range(buckets) if not (resume and _manifest_done(paths, "blocks", b))]
-        if build_blocks
-        else []
-    )
+    # a bucket's ub_bm25 bounds hold only for the avgdl they were built
+    # with; a streaming ingest + refresh_global_stats changes avgdl for
+    # every bucket, not just the ones whose manifests the stream removed
+    avgdl = read_meta(paths)["avgdl"]
+    blocks_remaining = [
+        b for b in range(buckets)
+        if not resume
+        or (_manifest_record(paths, "blocks", b) or {}).get("avgdl") != avgdl
+    ] if build_blocks else []
 
     def doc_stats_job() -> None:
         from .compression import doc_cols_from_key_exprs
 
         t = time.time()
         tf_r = read_table(spark, paths.term_tf)
-        if "ntf" not in tf_r.columns or "dl" not in tf_r.columns:
-            # term_tf written by an older build (before the per-doc stats
-            # rode the token stream): recompute the aggregates the old way
-            # instead of failing the resume
-            key = ["doc_key"] if "doc_key" in tf_r.columns else doc_cols
-            stats = tf_r.groupBy(*key).agg(
-                # sqrt∘sqrt (bit-exact Indexer.java:136-139), not pow(·,¼)
-                F.sqrt(F.sqrt(F.sum(F.col("tf") * F.col("tf")))).alias("ntf"),
-                F.sum("tf").cast("long").alias("dl"),
-            )
-            if key == ["doc_key"]:
-                stats = stats.select(
-                    *doc_cols_from_key_exprs(doc_cols), "ntf", "dl", "doc_key"
-                )
-            write_table(stats, paths.doc_stats)
-            _manifest_write(
-                paths, "doc_stats", {"wall_sec": time.time() - t, "legacy_tf": True}
-            )
-            return
         if "doc_key" in tf_r.columns:
             # aggregate on the narrow key; reconstruct the user-facing doc
             # columns only on the ~n_docs output rows
@@ -657,6 +603,7 @@ def _build_index_inner(
                 "blocks",
                 {
                     "bucket": b,
+                    "avgdl": avgdl,
                     "wall_sec": wall / len(blocks_remaining),
                     "n_terms": int(r["n_terms"]) if r else 0,
                     "n_blocks": int(r["n_blocks"]) if r else 0,
@@ -700,61 +647,6 @@ def _build_index_inner(
         with ThreadPoolExecutor(max_workers=len(stage2)) as pool:
             for f in [pool.submit(j) for j in stage2]:
                 f.result()
-
-    # ---- stage B: posting lists, resumable at bucket granularity.
-    # Fresh build → ONE job across all buckets (write partitioned by
-    # bucket); partial resume → only the missing buckets, each pruned to
-    # its term_tf partition.  Either way the manifest records per-bucket
-    # lineage (term/posting counts + wall time).
-    # The array-per-term postings table is a reference-parity artifact
-    # (the "index" table shape, ``jobs/Indexer.java:142-176``); the
-    # production index is the compressed block table, built directly from
-    # the sorted term stream — a Zipf-head term's full posting array in one
-    # row is exactly the single-task hot spot the block path avoids, so
-    # headline builds skip this stage.
-    remaining = (
-        [b for b in range(buckets) if not (resume and _manifest_done(paths, "postings", b))]
-        if build_postings_table
-        else []
-    )
-    if remaining:
-        t0 = time.time()
-        term_tf_r = read_table(spark, paths.term_tf)
-        if len(remaining) < buckets:
-            term_tf_r = term_tf_r.where(F.col("bucket").isin(remaining))
-        if "doc_key" in term_tf_r.columns:
-            # reference-parity postings carry the user-facing doc columns;
-            # reconstruct them from the packed key (pure expressions)
-            from .compression import doc_cols_from_key_exprs
-
-            term_tf_r = term_tf_r.select(
-                *doc_cols_from_key_exprs(doc_cols), "term", "tf", "bucket"
-            )
-        postings = build_postings(term_tf_r, doc_cols, salt, carry_cols=["bucket"])
-        # dynamic overwrite: a partial resume must not wipe completed buckets
-        write_table(postings, paths.postings, partition_by=["bucket"], dynamic=True)
-        wall = time.time() - t0
-        stats = (
-            read_table(spark, paths.postings)
-            .where(F.col("bucket").isin(remaining))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings"))
-            .collect()
-        )
-        by_bucket = {r["bucket"]: r for r in stats}
-        for b in remaining:
-            r = by_bucket.get(b)
-            _manifest_write(
-                paths,
-                "postings",
-                {
-                    "bucket": b,
-                    "n_terms": int(r["n_terms"]) if r else 0,
-                    "n_postings": int(r["n_postings"]) if r else 0,
-                    "wall_sec": wall / len(remaining),
-                },
-                bucket=b,
-            )
 
     return paths
 

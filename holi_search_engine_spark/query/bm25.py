@@ -22,7 +22,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from ..plans.compression import (
     BM25_B,
@@ -30,11 +30,10 @@ from ..plans.compression import (
     DocKeyLookup,
     decode_block,
     doc_key_columns,
-    doc_key_expr,
 )
 from ..functions.javacompat import RE_QUERY_PUNCT as _RE_PUNCT  # ONE alphabet
-from ..plans.index_build import IndexPaths, read_meta
-from ..sources.catalog import read_table
+from ..plans.index_build import IndexPaths
+from .index_reader import IndexReader
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -215,17 +214,17 @@ def block_sweep_topk(
 
 
 class BM25Engine:
-    """Driver-side BM25 engine over a built index.
+    """Driver-side BM25 engine over an :class:`IndexReader`.
 
     Preloaded mode (small indexes) holds the block BYTES in-process and
     decodes lazily per touched block.  Above the block-table size
-    threshold (see ``ranker.PRELOAD_MAX_BYTES``) the engine auto-degrades:
-    each query batch-fetches only its own terms' blocks and df rows via
-    term-pruned parquet reads (one Spark job each per query, LRU-cached) —
-    identical results, no caller change.  Doc-length norms stay preloaded
-    in both modes: at 16 B/doc they are orders of magnitude smaller than
-    the block table, and WAND consults them per decoded posting; the
-    corpus size where *they* no longer fit is the documented hand-off to
+    threshold (``index_reader.PRELOAD_MAX_BYTES``) the reader
+    auto-degrades: each query fetches only its own terms' blocks and df
+    rows, one term-pruned read of each per query (LRU-cached) — identical
+    results, no caller change.  Doc-length norms stay preloaded in both
+    modes: at 16 B/doc they are orders of magnitude smaller than the
+    block table, and WAND consults them per decoded posting; the corpus
+    size where *they* no longer fit is the documented hand-off to
     ``query/distributed.py``."""
 
     def __init__(
@@ -235,105 +234,35 @@ class BM25Engine:
         preload: bool | None = None,
         preload_max_bytes: int | None = None,
     ) -> None:
-        from .ranker import _should_preload
-
         self.spark = spark
         self.paths = paths
-        meta = read_meta(paths)
+        self.reader = IndexReader(spark, paths, preload, preload_max_bytes)
+        self.preloaded = self.reader.preloaded
+        meta = self.reader.meta
         self.doc_cols: list[str] = meta["doc_cols"]
         self.n_docs: int = meta["n_docs"]
         self.avgdl: float = meta.get("avgdl") or 1.0
-        self.preloaded = _should_preload(paths, preload, preload_max_bytes)
-        self._blocks: dict[str, pd.DataFrame] | None = None
-        self._df: dict[str, int] | None = None
-        self._block_cache: dict[str, pd.DataFrame | None] = {}
-        self._df_cache: dict[str, int] = {}
-        if self.preloaded:
-            blocks = read_table(spark, paths.blocks).toPandas()
-            self._blocks = {
-                t: g.sort_values("block_no").reset_index(drop=True)
-                for t, g in blocks.groupby("term", sort=False)
-            }
-            wm = read_table(spark, paths.wmetric).toPandas()
-            # stored df carries the reference's +1 quirk; undo it for BM25 idf
-            self._df = {t: int(d) - 1 for t, d in zip(wm["term"], wm["df"])}
-        key = doc_key_expr(self.doc_cols)
-        dl = (
-            read_table(spark, paths.doc_len)
-            .select(key.alias("doc_key"), "dl")
-            .toPandas()
-        )
+        dl = self.reader.read_docs(paths.doc_len, ("dl",))
         self._dl_norm = DocKeyLookup(
-            dl["doc_key"].to_numpy(dtype=np.int64),
-            1.0 - BM25_B + BM25_B * dl["dl"].to_numpy(dtype=np.float64) / self.avgdl,
+            dl.keys,
+            1.0 - BM25_B + BM25_B * dl.vals.astype(np.float64) / self.avgdl,
         )
         # instrumentation for skip-rate tests: count of blocks actually
         # decoded by WAND cursors (shared mutable cell, summed per search)
         self._decode_counter: list[int] = [0]
         self._score_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
-    SCORE_CACHE_TERMS = 64
-
     @property
     def blocks_decoded(self) -> int:
         return self._decode_counter[0]
-
-    def _ensure_terms(self, terms: list[str]) -> None:
-        """Degraded mode: one term-pruned read of blocks and one of
-        wmetric fetches every still-missing query term (batched — two
-        Spark jobs per query, not two per term)."""
-        if self._blocks is not None:
-            return
-        missing = [t for t in terms if t not in self._block_cache]
-        if not missing:
-            return
-        pdf = (
-            read_table(self.spark, self.paths.blocks)
-            .where(F.col("term").isin(missing))
-            .toPandas()
-        )
-        wm = (
-            read_table(self.spark, self.paths.wmetric)
-            .where(F.col("term").isin(missing))
-            .toPandas()
-        )
-        dfmap = {t: int(d) - 1 for t, d in zip(wm["term"], wm["df"])}
-        for t in missing:
-            g = pdf[pdf["term"] == t]
-            self._block_cache[t] = (
-                g.sort_values("block_no").reset_index(drop=True) if len(g) else None
-            )
-            self._df_cache[t] = dfmap.get(t, 0)
-        # never evict below the CURRENT query's term count — evicting
-        # just-fetched entries would make search() re-fetch them one
-        # Spark job per term, exactly the round-trips batching avoids
-        cap = max(self.SCORE_CACHE_TERMS, len(terms))
-        for cache in (self._block_cache, self._df_cache):
-            while len(cache) > cap:
-                evict = next(k for k in cache if k not in terms)
-                cache.pop(evict)
-
-    def _term_blocks(self, term: str) -> pd.DataFrame | None:
-        if self._blocks is not None:
-            return self._blocks.get(term)
-        if term not in self._block_cache:
-            self._ensure_terms([term])
-        return self._block_cache.get(term)
-
-    def _term_df(self, term: str) -> int:
-        if self._df is not None:
-            return self._df.get(term, 0)
-        if term not in self._df_cache:
-            self._ensure_terms([term])
-        return self._df_cache.get(term, 0)
 
     def total_blocks(self, query: str) -> int:
         """Number of index blocks the query's terms hold in total (the
         decode count a skip-free scorer would pay)."""
         terms = self._tokenize(query)
-        self._ensure_terms(terms)
+        self.reader.fetch(terms)
         return sum(
-            len(g) for g in (self._term_blocks(t) for t in terms) if g is not None
+            len(g) for g in (self.reader.blocks(t) for t in terms) if g is not None
         )
 
     def _tokenize(self, query: str) -> list[str]:
@@ -347,7 +276,7 @@ class BM25Engine:
         return out
 
     def _weight(self, term: str) -> float:
-        return bm25_idf(self.n_docs, self._term_df(term))
+        return bm25_idf(self.n_docs, self.reader.df(term))
 
     def search_and(self, query: str, k: int = 10) -> pd.DataFrame:
         """Conjunctive (AND) exact BM25 top-k: only docs containing EVERY
@@ -355,8 +284,8 @@ class BM25Engine:
         skips hot terms' blocks between the rarest term's docs without
         decoding; dense conjunctions route to the vectorized path."""
         terms = self._tokenize(query)
-        self._ensure_terms(terms)
-        term_blocks = [(t, self._term_blocks(t)) for t in terms]
+        self.reader.fetch(terms)
+        term_blocks = [(t, self.reader.blocks(t)) for t in terms]
         if any(g is None for _, g in term_blocks) or not term_blocks:
             return self._to_frame([])  # a missing term empties the AND
         # candidate mass is bounded by the RAREST term's list.  Route to
@@ -366,7 +295,7 @@ class BM25Engine:
         # huge list in block units between the rare docs, while brute
         # force pays the full union decode.  Brute-force only when the
         # lists are comparably sized (no gap to exploit) or single-term.
-        dfs = [self._term_df(t) for t, _ in term_blocks]
+        dfs = [self.reader.df(t) for t, _ in term_blocks]
         rarest, total = min(dfs), sum(dfs)
         if len(term_blocks) == 1 or (
             rarest > self.TAAT_THRESHOLD and total < self.AND_ASYM_RATIO * rarest
@@ -385,11 +314,11 @@ class BM25Engine:
         every term matched (each term contributes one posting per doc, so
         the match count equals the term count exactly there)."""
         terms = self._tokenize(query)
-        self._ensure_terms(terms)
+        self.reader.fetch(terms)
         key_parts: list[np.ndarray] = []
         score_parts: list[np.ndarray] = []
         for t in terms:
-            if self._term_blocks(t) is None:
+            if self.reader.blocks(t) is None:
                 return self._to_frame([])
             keys, scores = self._term_scores(t)
             key_parts.append(keys)
@@ -412,11 +341,11 @@ class BM25Engine:
         queries score nearly every document, so skipping buys nothing and
         the per-pivot loop loses to array math)."""
         terms = self._tokenize(query)
-        self._ensure_terms(terms)
+        self.reader.fetch(terms)
         key_parts: list[np.ndarray] = []
         score_parts: list[np.ndarray] = []
         for t in terms:
-            if self._term_blocks(t) is None:
+            if self.reader.blocks(t) is None:
                 continue
             keys, scores = self._term_scores(t)
             key_parts.append(keys)
@@ -433,17 +362,18 @@ class BM25Engine:
         order = cand[np.lexsort((uniq[cand], -acc[cand]))][:k]
         return self._to_frame([(int(uniq[i]), float(acc[i])) for i in order])
 
+    #: per-term scores over the reader's decoded postings: Zipf-head
+    #: terms recur across queries, and their length-norm lookup costs
+    #: more than the decode the reader already caches
+    SCORE_CACHE_TERMS = 64
+
     def _term_scores(self, term: str) -> tuple[np.ndarray, np.ndarray]:
-        """Decoded (doc_keys, bm25_scores) for one term; small LRU since
-        Zipf-head terms recur across queries and dominate decode cost."""
+        """(doc_keys, bm25_scores) for one term; small LRU."""
         hit = self._score_cache.get(term)
         if hit is not None:
             self._score_cache[term] = self._score_cache.pop(term)  # refresh
             return hit
-        g = self._term_blocks(term)
-        parts = [decode_block(d, b) for d, b in zip(g["doc_bytes"], g["tf_bytes"])]
-        keys = np.concatenate([p[0] for p in parts]).astype(np.int64)
-        tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
+        keys, tf = self.reader.postings(term)
         norm = self._dl_norm(keys)
         w = self._weight(term)
         scores = w * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * norm)
@@ -471,9 +401,9 @@ class BM25Engine:
         switching to the vectorized exhaustive path for dense queries
         (both are exact with the same doc-asc tie-break)."""
         terms = self._tokenize(query)
-        self._ensure_terms(terms)
-        term_blocks = [(t, self._term_blocks(t)) for t in terms]
-        total = sum(self._term_df(t) for t, g in term_blocks if g is not None)
+        self.reader.fetch(terms)
+        term_blocks = [(t, self.reader.blocks(t)) for t in terms]
+        total = sum(self.reader.df(t) for t, g in term_blocks if g is not None)
         n_live = sum(1 for _, g in term_blocks if g is not None)
         # single-term queries: block-max bounds cannot prune (every block
         # of the one list is a candidate until the heap fills with ITS own

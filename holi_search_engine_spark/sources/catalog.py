@@ -4,7 +4,7 @@ runtime jar is on the classpath AND an Iceberg database is configured
 
 Every index artifact write/read in ``plans/`` routes through
 :func:`write_table` / :func:`read_table`, so flipping the env var on a
-cluster moves the WHOLE artifact chain (term_tf → doc_stats → postings →
+cluster moves the WHOLE artifact chain (term_tf → doc_stats →
 blocks → wmetric) onto Iceberg tables — snapshot isolation, ACID
 per-bucket overwrites (``overwritePartitions`` replaces the parquet
 ``partitionOverwriteMode=dynamic`` trick), and compaction — with zero
@@ -41,7 +41,7 @@ def use_iceberg(spark: SparkSession) -> bool:
 def table_for(path: str) -> str:
     """Map an artifact directory path to its Iceberg table name: the
     basename under the configured db (artifact basenames — term_tf,
-    doc_stats, postings, blocks, wmetric, doc_meta — are unique per
+    doc_stats, blocks, wmetric, doc_meta — are unique per
     index root; multi-index deployments point ENV_DB at distinct dbs)."""
     return f"{iceberg_db()}.{os.path.basename(os.path.normpath(path))}"
 

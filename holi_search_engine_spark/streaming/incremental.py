@@ -6,11 +6,14 @@ is iterative batch with resume-from-table (``jobs/Crawler.java:26-51``).
 This module is the Spark-native upgrade of that pattern: new transcript
 files land in a directory, each micro-batch is tokenized with the SAME
 vectorized kernel as the batch build, and its (term, doc, tf) delta is
-appended to the bucket-partitioned term stream.  Postings/blocks for the
-touched buckets are then rebuilt by the ordinary resumable stage-B jobs
-(delete the touched buckets' manifests → ``build_index`` redoes only
+appended to the bucket-partitioned term stream.  The block index of the
+touched buckets is then rebuilt by the ordinary resumable build (delete
+the touched buckets' ``blocks`` manifests → ``build_index`` redoes only
 them), which is exactly the SPIMI "segments then merge" lifecycle with
-Spark's shuffle as the merge.
+Spark's shuffle as the merge.  ``refresh_global_stats`` runs between the
+two: it rewrites df/idf and avgdl, and since every block's BM25 bound
+depends on avgdl, a changed avgdl makes the resumed build re-encode every
+bucket (the manifests record the avgdl their bounds were built with).
 
 ``stream_events_windowed`` is the watermarked windowed-agg operator over
 an event stream (late data dropped beyond the watermark).
@@ -48,8 +51,8 @@ def stream_transcript_deltas(
 ):
     """File-source stream → tokenize per micro-batch → append term_tf
     deltas partitioned by term-hash bucket, and invalidate the touched
-    buckets' stage-B manifests so the next ``build_index`` call rebuilds
-    exactly those posting lists.
+    buckets' ``blocks`` manifests so the next ``build_index`` call
+    rebuilds those buckets' block index.
 
     Returns the StreamingQuery (caller awaits termination).
     """
@@ -92,13 +95,12 @@ def stream_transcript_deltas(
         build_doc_meta(batch_df).write.mode("append").parquet(paths.doc_meta)
         term_tf.unpersist()
         batch_df.unpersist()
-        # invalidate stage-B outputs for the touched buckets → the next
-        # resumable build_index() run re-merges only these
+        # invalidate the touched buckets' block index → the next
+        # resumable build_index() run re-merges these
         for b in touched:
-            for stage in ("postings", "blocks"):
-                p = _manifest_path(paths, stage, b)
-                if os.path.exists(p):
-                    os.remove(p)
+            p = _manifest_path(paths, "blocks", b)
+            if os.path.exists(p):
+                os.remove(p)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

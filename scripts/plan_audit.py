@@ -177,7 +177,6 @@ def special_frames(spark) -> dict:
         frozenset(make_vocabulary()),
         buckets=4,
         build_blocks=True,
-        build_postings_table=False,
     )
     frames = {
         # a single query is a batch of one

@@ -80,8 +80,7 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
     dist = DistributedRanker(spark, paths)
     bm25 = BM25Engine(spark, paths)
 
-    by_df = sorted(engine._blocks,
-                   key=lambda t: -len(engine._term_postings(t)[0]))
+    by_df = sorted(engine.reader.terms(), key=lambda t: -engine.reader.df(t))
     hot, mid, rare = (by_df[:8], by_df[len(by_df)//3:len(by_df)//3+20],
                       by_df[-20:])
     queries = make_queries(rng, (hot, mid, rare), pdf, n_queries)

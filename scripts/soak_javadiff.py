@@ -119,7 +119,7 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
                         frozenset(vocab), buckets=2)
     engine = RankerEngine(spark, paths, preload=True)
 
-    by_df = sorted(engine._blocks, key=lambda t: -len(engine._term_postings(t)[0]))
+    by_df = sorted(engine.reader.terms(), key=lambda t: -engine.reader.df(t))
     hot, mid, rare = by_df[:8], by_df[len(by_df)//3:len(by_df)//3+20], by_df[-20:]
     queries = make_queries(rng, (hot, mid, rare), pdf, n_queries)
 
@@ -134,7 +134,7 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
         if line.startswith("P "):
             term_b64, hexpow = line[2:].split("|")
             term = base64.b64decode(term_b64).decode()
-            idf = float(engine._wmetric[term])
+            idf = engine.reader.idf(term)
             mine = idf ** 1.5 if idf >= 0.0 else float("nan")
             if _bits(mine) != _bits(float.fromhex(hexpow)):
                 pow_div.add(term)

@@ -9,6 +9,11 @@ import shutil
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+# The session's default driver heap (48g) outgrows a test host: G1 expands
+# toward it rather than collect, and mid-suite the JVM alone held ~13 GB RSS
+# on a 16 GB host, leaving too little memory for the Python workers.  Every
+# test fits in 4g.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

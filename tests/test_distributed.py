@@ -79,7 +79,7 @@ def clustered_index(spark, dictionary, tmp_path_factory):
     shutil.rmtree(out, ignore_errors=True)
     return build_index(
         spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=True, build_postings_table=False,
+        build_blocks=True,
     )
 
 
@@ -139,7 +139,6 @@ def test_distributed_empty_corpus(spark, dictionary, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index") / "empty")
     paths = build_index(
         spark, empty, out, dictionary, buckets=2, build_blocks=True,
-        build_postings_table=False,
     )
     got = distributed_bm25_topk(spark, paths, "alpha bravo", 10, n_ranges=4)
     assert len(got) == 0

@@ -7,31 +7,18 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from holi_search_engine_spark.plans.compression import decode_block
 
 
-def _postings_as_dict(spark, paths):
-    pp = spark.read.parquet(paths.postings).toPandas()
-    return {
-        r.term: [((p["conv_id"], p["turn_idx"]), p["tf"]) for p in r.postings]
-        for r in pp.itertuples()
-    }
-
-
-def test_postings_match_oracle(spark, built_index, oracle_index):
-    got = _postings_as_dict(spark, built_index)
-    assert set(got) == set(oracle_index.postings)
-    for term, plist in oracle_index.postings.items():
-        assert got[term] == plist, term
-
-
-def test_postings_doc_ordered(spark, built_index):
-    pp = spark.read.parquet(built_index.postings).toPandas()
-    for r in pp.itertuples():
-        keys = [(p["conv_id"], p["turn_idx"]) for p in r.postings]
-        assert keys == sorted(keys), r.term
+def _blocks_frame(spark, paths):
+    """The whole block table in a canonical row order."""
+    return (
+        spark.read.parquet(paths.blocks)
+        .toPandas()
+        .sort_values(["term", "block_no"])
+        .reset_index(drop=True)
+    )
 
 
 def test_ntf_matches_oracle(spark, built_index, oracle_index):
@@ -69,26 +56,55 @@ def test_df_equals_distinct_term_doc(spark, built_index):
     assert ((wm["df"] - 1) == counts.reindex(wm.index)).all()
 
 
-def test_blocks_roundtrip_to_postings(spark, built_index, oracle_index):
-    bl = spark.read.parquet(built_index.blocks).toPandas()
+def _decoded_blocks(spark, paths):
+    """Per term: its block rows in block order and the decoded keys/tfs of
+    each block."""
+    bl = spark.read.parquet(paths.blocks).toPandas()
+    out = {}
     for term, g in bl.groupby("term"):
-        g = g.sort_values("block_no")
-        keys = np.concatenate(
-            [decode_block(d, t)[0] for d, t in zip(g.doc_bytes, g.tf_bytes)]
-        )
-        tfs = np.concatenate(
-            [decode_block(d, t)[1] for d, t in zip(g.doc_bytes, g.tf_bytes)]
-        )
-        exp = oracle_index.postings[term]
+        g = g.sort_values("block_no").reset_index(drop=True)
+        out[term] = (g, [decode_block(d, t) for d, t in zip(g.doc_bytes, g.tf_bytes)])
+    return out
+
+
+def test_postings_match_oracle(spark, built_index, oracle_index):
+    """Decoded blocks hold exactly the oracle's postings: the same term
+    set, and per term the same doc-ordered (doc, tf) list."""
+    got = _decoded_blocks(spark, built_index)
+    assert set(got) == set(oracle_index.postings)
+    for term, plist in oracle_index.postings.items():
+        blocks = got[term][1]
+        keys = np.concatenate([k for k, _ in blocks])
+        tfs = np.concatenate([t for _, t in blocks])
         exp_keys = np.array(
-            [(int(c.split("-")[1]) << 6) + t for (c, t), _ in exp], dtype=np.uint64
+            [(int(c.split("-")[1]) << 6) + t for (c, t), _ in plist], dtype=np.uint64
         )
-        exp_tfs = np.array([tf for _, tf in exp], dtype=np.uint64)
+        exp_tfs = np.array([tf for _, tf in plist], dtype=np.uint64)
+        assert len(keys) == len(exp_keys), term
         assert (keys == exp_keys).all(), term
         assert (tfs == exp_tfs).all(), term
-        # skip metadata correct
-        assert (g["key_min"].to_numpy()[0] == int(exp_keys[0]))
-        assert (g["key_max"].to_numpy()[-1] == int(exp_keys[-1]))
+
+
+def test_postings_doc_ordered(spark, built_index):
+    """Block numbers are contiguous from 0 and doc keys strictly increase
+    within and across block boundaries."""
+    for term, (g, blocks) in _decoded_blocks(spark, built_index).items():
+        assert (g["block_no"].to_numpy() == np.arange(len(g))).all(), term
+        keys = np.concatenate([k for k, _ in blocks])
+        assert (np.diff(keys.astype(np.int64)) > 0).all(), term
+        kmin, kmax = g["key_min"].to_numpy(), g["key_max"].to_numpy()
+        assert (kmax[:-1] < kmin[1:]).all(), term
+
+
+def test_blocks_roundtrip_to_postings(spark, built_index, oracle_index):
+    """Each block's skip metadata (n, key_min, key_max, max_tf) equals what
+    its decoded postings say, and a term's blocks together hold its df."""
+    for term, (g, blocks) in _decoded_blocks(spark, built_index).items():
+        for r, (keys, tfs) in zip(g.itertuples(), blocks):
+            assert r.n == len(keys) == len(tfs) > 0, (term, r.block_no)
+            assert r.key_min == int(keys[0]) and r.key_max == int(keys[-1]), term
+            assert r.max_tf == int(tfs.max()), (term, r.block_no)
+        assert int(g["n"].sum()) == len(oracle_index.postings[term]), term
 
 
 def test_manifest_written_and_resume_skips(spark, built_index, xs_df, dictionary):
@@ -99,10 +115,12 @@ def test_manifest_written_and_resume_skips(spark, built_index, xs_df, dictionary
     stage_a = json.load(open(os.path.join(built_index.manifest, "stage_a.json")))
     assert stage_a["status"] == "done"
     assert stage_a["n_turns"] > 0 and stage_a["turns_per_sec"] > 0
-    bucket_manifests = [m for m in manifest_files if "postings_bucket" in m]
+    bucket_manifests = [m for m in manifest_files if "blocks_bucket" in m]
     assert len(bucket_manifests) == 2
     rec = json.load(open(bucket_manifests[0]))
-    assert rec["n_terms"] > 0 and rec["n_postings"] > 0
+    assert rec["n_terms"] > 0 and rec["n_blocks"] > 0 and rec["n_postings"] > 0
+    meta = json.load(open(built_index.meta_json))
+    assert rec["avgdl"] == meta["avgdl"]
     # resume: all stages done → rebuild touches nothing (mtimes unchanged)
     mtimes = {m: os.path.getmtime(m) for m in manifest_files}
     build_index(
@@ -117,17 +135,17 @@ def test_resume_rebuilds_only_invalidated_bucket(spark, xs_df, dictionary, tmp_p
     from holi_search_engine_spark.plans.index_build import build_index
 
     out = str(tmp_path / "idx_resume")
-    paths = build_index(spark, xs_df, out, dictionary, buckets=2, build_blocks=False)
-    m0 = os.path.join(paths.manifest, "postings_bucket_0000.json")
-    m1 = os.path.join(paths.manifest, "postings_bucket_0001.json")
+    paths = build_index(spark, xs_df, out, dictionary, buckets=2)
+    m0 = os.path.join(paths.manifest, "blocks_bucket_0000.json")
+    m1 = os.path.join(paths.manifest, "blocks_bucket_0001.json")
     t0_before = os.path.getmtime(m0)
     os.remove(m1)
-    before = _postings_as_dict(spark, paths)
-    build_index(spark, xs_df, out, dictionary, buckets=2, build_blocks=False)
+    before = _blocks_frame(spark, paths)
+    build_index(spark, xs_df, out, dictionary, buckets=2)
     assert os.path.getmtime(m0) == t0_before  # untouched bucket skipped
     assert os.path.exists(m1)  # invalidated bucket rebuilt
-    after = _postings_as_dict(spark, paths)
-    assert before == after  # content identical after partial rebuild
+    # content identical after the partial rebuild
+    pd.testing.assert_frame_equal(_blocks_frame(spark, paths), before, check_exact=True)
 
 
 def test_per_row_invariant_roundtrip(spark, xs_df, xs_pdf):
@@ -159,24 +177,13 @@ def test_build_deterministic_across_parallelism(
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        p2 = build_index(
-            spark, xs_df.repartition(3), out2, dictionary, buckets=2, build_blocks=False
-        )
+        p2 = build_index(spark, xs_df.repartition(3), out2, dictionary, buckets=2)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-    def canon(paths):
-        return (
-            spark.read.parquet(paths.postings)
-            .select("term", F.to_json("postings").alias("p"))
-            .orderBy("term")
-            .toPandas()
-        )
-
-    a, b = canon(p2), canon(built_index)
-    assert len(a) == len(b)
-    assert (a["term"].to_numpy() == b["term"].to_numpy()).all()
-    assert (a["p"].to_numpy() == b["p"].to_numpy()).all()
+    pd.testing.assert_frame_equal(
+        _blocks_frame(spark, p2), _blocks_frame(spark, built_index), check_exact=True
+    )
 
 
 def test_degenerate_corpus_builds_empty_index(spark, dictionary, tmp_path):
@@ -193,7 +200,7 @@ def test_degenerate_corpus_builds_empty_index(spark, dictionary, tmp_path):
     )
     out = str(tmp_path / "idx_degenerate")
     paths = build_index(spark, df, out, dictionary, buckets=2)
-    for p in (paths.term_tf, paths.doc_stats, paths.blocks, paths.wmetric, paths.postings):
+    for p in (paths.term_tf, paths.doc_stats, paths.blocks, paths.wmetric):
         assert spark.read.parquet(p).count() == 0, p
     assert len(RankerEngine(spark, paths).search("anything at all")) == 0
     assert len(BM25Engine(spark, paths).search("anything at all")) == 0
@@ -293,59 +300,3 @@ def test_tokenize_terms_doc_key_guard_raises(spark):
     out = tokenize_terms(df, frozenset(), ["conv_id", "turn_idx"], emit_doc_key=True)
     with pytest.raises(Exception, match="doc_key packing violated"):
         out.collect()
-
-
-def test_resume_legacy_term_tf_without_stats(spark, xs_df, dictionary, tmp_path):
-    """Resuming over a term_tf written by a pre-stats build (no ntf/dl
-    columns) must recompute doc_stats the old way, not crash."""
-    from holi_search_engine_spark.plans.index_build import build_index
-
-    out = str(tmp_path / "idx_legacy")
-    paths = build_index(spark, xs_df, out, dictionary, buckets=2, build_blocks=False)
-    expected = (
-        spark.read.parquet(paths.doc_stats)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    legacy = spark.read.parquet(paths.term_tf).drop("ntf", "dl", "fd").toPandas()
-    import shutil
-
-    shutil.rmtree(paths.term_tf)
-    spark.createDataFrame(legacy).write.partitionBy("bucket").parquet(paths.term_tf)
-    os.remove(os.path.join(paths.manifest, "doc_stats.json"))
-    build_index(spark, xs_df, out, dictionary, buckets=2, build_blocks=False)
-    got = (
-        spark.read.parquet(paths.doc_stats)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert (got["conv_id"] == expected["conv_id"]).all()
-    assert np.allclose(got["ntf"], expected["ntf"])
-    assert (got["dl"].to_numpy() == expected["dl"].to_numpy()).all()
-
-
-def test_salted_postings_zipf_head_term(spark):
-    # a head term present in EVERY doc: the salted two-phase assembly must
-    # return one complete, doc-ordered posting list identical to a plain
-    # single-phase groupBy, at any salt and any input partitioning
-    from pyspark.sql import functions as F
-
-    from holi_search_engine_spark.plans.index_build import build_postings
-
-    rows = [(f"conv-{i:08d}", i % 7, "the", 1 + (i % 3)) for i in range(500)]
-    rows += [(f"conv-{i:08d}", i % 7, f"rare{i}", 1) for i in range(0, 500, 50)]
-    tf = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, term string, tf int"
-    ).repartition(13)
-
-    got = {
-        r["term"]: (r["df"], [tuple(p) for p in r["postings"]])
-        for r in build_postings(tf, ["conv_id", "turn_idx"], salt=4).collect()
-    }
-    assert got["the"][0] == 500
-    expect = sorted((f"conv-{i:08d}", i % 7, 1 + (i % 3)) for i in range(500))
-    assert got["the"][1] == expect
-    # rare terms survive alongside the head term
-    assert got["rare0"] == (1, [("conv-00000000", 0, 1)])

@@ -277,18 +277,21 @@ def _export_payload(engine, queries: list[str]) -> str:
     """Engine artifacts -> kernel stdin, in the reference's formats."""
     b64 = lambda s: base64.b64encode(s.encode()).decode()
     lines: list[str] = []
-    assert engine._blocks is not None  # preloaded mode
-    for term in engine._blocks:
-        keys, tfs = engine._term_postings(term)
+    reader = engine.reader
+    terms = reader.terms()  # preloaded mode
+    for term in terms:
+        keys, tfs = reader.postings(term)
         row = ",".join(
             f"{int(k)}:{repr(float(t))}" for k, t in zip(keys, tfs)
         )
         lines.append(f"IDX {b64(term)} {b64(row)}")
-    for doc_key, ntf in zip(engine._ntf.keys, engine._ntf.vals):
-        lines.append(f"NTF {b64(str(int(doc_key)))} {repr(float(ntf))}")
-    for term, idf in engine._wmetric.items():
-        lines.append(f"IDF {b64(term)} {repr(float(idf))}")
-    for doc_key, title in zip(engine._meta.keys, engine._meta.vals[:, 0]):
+    ntf = reader.load_docs(engine.paths.ntf, ("ntf",))
+    for doc_key, v in zip(ntf.keys, ntf.vals):
+        lines.append(f"NTF {b64(str(int(doc_key)))} {repr(float(v))}")
+    for term in terms:
+        lines.append(f"IDF {b64(term)} {repr(reader.idf(term))}")
+    meta = reader.load_docs(engine.paths.doc_meta, ("title", "snippet"))
+    for doc_key, title in zip(meta.keys, meta.vals[:, 0]):
         lines.append(f"TIT {b64(str(int(doc_key)))} {b64(title)}")
     for q in queries:
         lines.append(f"QRY {b64(q)}")
@@ -310,10 +313,7 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
     # built from RARE terms (df <= 4) so the candidate union stays under
     # the expansion threshold and the reference's second
     # findAllMatchingURLs pass actually runs with the reordered set
-    rare_terms = sorted(
-        t for t in engine._blocks
-        if len(engine._term_postings(t)[0]) <= 4
-    )
+    rare_terms = sorted(t for t in engine.reader.terms() if engine.reader.df(t) <= 4)
     assert len(rare_terms) >= 12, "corpus must have rare terms"
     rng = random.Random(20260820)
     boundary = None
@@ -415,7 +415,7 @@ def test_scoring_matches_compiled_java_reference(spark, vocabulary,
             continue
         term_b64, hexpow = line[2:].split("|")
         term = base64.b64decode(term_b64).decode()
-        idf = float(engine._wmetric[term])
+        idf = engine.reader.idf(term)
         mine = idf ** 1.5 if idf >= 0.0 else float("nan")
         assert _bits(mine) == _bits(float.fromhex(hexpow)), (
             f"Math.pow-vs-libm ulp divergence on idf({term!r})={idf!r}: "

@@ -56,7 +56,7 @@ def prior_index(spark, dictionary, tmp_path_factory):
     shutil.rmtree(out, ignore_errors=True)
     paths = build_index(
         spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=True, build_postings_table=False,
+        build_blocks=True,
     )
     build_reply_pagerank(spark, paths)
     return paths

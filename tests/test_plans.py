@@ -25,30 +25,3 @@ def queries():
 def test_plan_shape(spark, queries, name, must, must_not):
     _, problems = audit_one(queries, spark, name, must, must_not)
     assert not problems, f"{name}: {problems}"
-
-
-def test_salted_postings_plan_shape(spark):
-    """The posting assembly must be the salted two-phase aggregate: an
-    exchange on (term, salt) building parallel runs, then an exchange on
-    term alone — a single-phase groupBy(term) would funnel each Zipf-head
-    term through one task."""
-    import contextlib
-    import io
-
-    from holi_search_engine_spark.plans.index_build import build_postings
-
-    tf = spark.createDataFrame(
-        [("conv-00000001", 0, "the", 2)],
-        "conv_id string, turn_idx int, term string, tf int",
-    )
-    df = build_postings(tf, ["conv_id", "turn_idx"], salt=8)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "hashpartitioning(term" in plan
-    assert "_salt" in plan.split("hashpartitioning(term", 1)[1].split(")")[0], plan
-    # the second (final) aggregation exchanges on term only
-    second = plan.split("hashpartitioning(term", 2)
-    assert len(second) >= 3, "expected two term exchanges (salted then final)"
-    assert "_salt" not in second[2].split(")")[0]

@@ -81,14 +81,16 @@ def test_spark_submit_with_pyfiles_zip(tmp_path):
 
 
 def test_pyfiles_zip_not_stale():
-    """Every .py in the package must be byte-identical inside dist/…zip —
-    a stale bundle ships old code to the cluster silently."""
+    """dist/…zip holds exactly the package's .py files, byte for byte — a
+    stale bundle ships old code (or a deleted module) to the cluster
+    silently."""
     import zipfile
 
     zip_path = os.path.join(REPO, "dist", "holi_search_engine_spark.zip")
     assert os.path.exists(zip_path), "run make_pyfiles.sh"
     z = zipfile.ZipFile(zip_path)
     names = set(z.namelist())
+    package = set()
     for root, _, files in os.walk(os.path.join(REPO, "holi_search_engine_spark")):
         if "__pycache__" in root:
             continue
@@ -97,8 +99,11 @@ def test_pyfiles_zip_not_stale():
                 continue
             p = os.path.join(root, f)
             rel = os.path.relpath(p, REPO)
+            package.add(rel)
             assert rel in names, f"{rel} missing from bundle (run make_pyfiles.sh)"
             with open(p, "rb") as fh:
                 assert z.read(rel) == fh.read(), (
                     f"{rel} differs from the bundle (run make_pyfiles.sh)"
                 )
+    extra = names - package
+    assert not extra, f"bundle holds files the package lacks: {sorted(extra)} (run make_pyfiles.sh)"

@@ -4,66 +4,126 @@ build, and watermarked windowed aggregation matches the batch window agg."""
 import os
 import shutil
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+
+def _index_tables(spark, paths) -> dict:
+    """Blocks, wmetric and doc_stats of an index in a canonical row order."""
+    return {
+        name: spark.read.parquet(path).toPandas().sort_values(order).reset_index(drop=True)
+        for name, path, order in (
+            ("blocks", paths.blocks, ["term", "block_no"]),
+            ("wmetric", paths.wmetric, ["term"]),
+            ("doc_stats", paths.doc_stats, ["doc_key"]),
+        )
+    }
+
+
+def _stream_in(spark, pdf, inbox, paths, dictionary, buckets):
+    """Land ``pdf`` as a new file drop and stream it into the index."""
+    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(str(inbox))
+    from holi_search_engine_spark.streaming.incremental import stream_transcript_deltas
+
+    q = stream_transcript_deltas(spark, str(inbox), paths, dictionary, buckets=buckets)
+    q.awaitTermination(120)
 
 
 def test_incremental_index_converges_to_batch(
     spark, xs_pdf, dictionary, tmp_path
 ):
-    """Stream the corpus in two file drops; after stage-B rebuild the
-    postings must equal a one-shot batch build over the full corpus."""
+    """Stream the corpus in two file drops; after refresh_global_stats and
+    the resumed build, the block index, wmetric and doc_stats equal a
+    one-shot batch build over the full corpus: bytes, ints and strings
+    exactly, float columns within 1e-9."""
     from holi_search_engine_spark.plans.index_build import build_index
-    from holi_search_engine_spark.streaming.incremental import (
-        stream_transcript_deltas,
-    )
+    from holi_search_engine_spark.streaming.incremental import refresh_global_stats
 
     pdf = xs_pdf.copy()
     pdf["ts"] = pdf["ts"].dt.tz_localize(None)
     half = pdf["conv_id"] < "conv-00000025"
     part1, part2 = pdf[half], pdf[~half]
-
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
     idx_dir = str(tmp_path / "idx_stream")
 
-    # bootstrap: batch-build on the first half
-    df1 = spark.createDataFrame(part1)
-    paths = build_index(spark, df1, idx_dir, dictionary, buckets=2, build_blocks=False)
+    # bootstrap: batch-build on the first half, then stream the second in
+    paths = build_index(spark, spark.createDataFrame(part1), idx_dir, dictionary, buckets=2)
+    _stream_in(spark, part2, tmp_path / "inbox", paths, dictionary, buckets=2)
+    refresh_global_stats(spark, paths)
 
-    # drop the second half as a new file; stream it in
-    spark.createDataFrame(part2).coalesce(1).write.mode("overwrite").parquet(
-        str(inbox / "drop2")
-    )
-    q = stream_transcript_deltas(
-        spark, str(inbox / "drop2"), paths, dictionary, buckets=2
-    )
-    q.awaitTermination(120)
-
-    # stage-B manifests were invalidated → resumable build redoes them;
-    # stage A must NOT rerun (its manifest still stands)
+    # the invalidated buckets are rebuilt; stage A must NOT rerun (its
+    # manifest still stands)
     stage_a = os.path.join(paths.manifest, "stage_a.json")
     mtime = os.path.getmtime(stage_a)
     df_all = spark.createDataFrame(pdf)
-    build_index(spark, df_all, idx_dir, dictionary, buckets=2, build_blocks=False)
+    build_index(spark, df_all, idx_dir, dictionary, buckets=2)
     assert os.path.getmtime(stage_a) == mtime
 
-    # compare to a fresh one-shot batch build
-    batch_dir = str(tmp_path / "idx_batch")
-    batch = build_index(spark, df_all, batch_dir, dictionary, buckets=2, build_blocks=False)
-
-    def canon(p):
-        return (
-            spark.read.parquet(p.postings)
-            .select("term", F.to_json("postings").alias("p"))
-            .orderBy("term")
-            .toPandas()
+    batch = build_index(spark, df_all, str(tmp_path / "idx_batch"), dictionary, buckets=2)
+    got, exp = _index_tables(spark, paths), _index_tables(spark, batch)
+    for name in exp:
+        pd.testing.assert_frame_equal(
+            got[name], exp[name], check_exact=False, rtol=0, atol=1e-9, obj=name
         )
 
-    a, b = canon(paths), canon(batch)
-    assert len(a) == len(b)
-    assert (a["term"].to_numpy() == b["term"].to_numpy()).all()
-    assert (a["p"].to_numpy() == b["p"].to_numpy()).all()
+
+def test_ingest_rebuilds_stale_bm25_bounds(spark, xs_pdf, dictionary, vocabulary, tmp_path):
+    """Each block's ub_bm25 is computed with the avgdl current at build
+    time.  A drop of long single-term turns touches one bucket but moves
+    avgdl for all of them: after stream → refresh_global_stats →
+    build_index, the bounds of the buckets the stream did not touch must
+    be rebuilt too, or block-max WAND prunes with wrong bounds."""
+    from holi_search_engine_spark.plans.compression import (
+        BM25_B, BM25_K1, DocKeyLookup, decode_block,
+    )
+    from holi_search_engine_spark.plans.index_build import build_index, read_meta
+    from holi_search_engine_spark.query.bm25 import BM25Engine
+    from holi_search_engine_spark.streaming.incremental import refresh_global_stats
+
+    buckets = 8
+    pdf = xs_pdf.copy()
+    pdf["ts"] = pdf["ts"].dt.tz_localize(None)
+    paths = build_index(
+        spark, spark.createDataFrame(pdf), str(tmp_path / "idx"), dictionary, buckets=buckets
+    )
+    avgdl0 = read_meta(paths)["avgdl"]
+    drop = pdf[pdf["conv_id"] < "conv-00000003"].copy()
+    drop["conv_id"] = drop["conv_id"].str.replace("conv-0000", "conv-0001")
+    drop["text"] = " ".join([vocabulary[2000]] * 400)
+    _stream_in(spark, drop, tmp_path / "inbox", paths, dictionary, buckets)
+    kept = [
+        b for b in range(buckets)
+        if os.path.exists(os.path.join(paths.manifest, f"blocks_bucket_{b:04d}.json"))
+    ]
+    assert len(kept) == buckets - 1  # the one-term drop touched one bucket
+    refresh_global_stats(spark, paths)
+    meta = read_meta(paths)
+    assert meta["avgdl"] > 1.05 * avgdl0
+    build_index(spark, spark.createDataFrame(pd.concat([pdf, drop])), paths.root,
+                dictionary, buckets=buckets)
+
+    ds = spark.read.parquet(paths.doc_stats).toPandas()
+    dl = DocKeyLookup(ds["doc_key"].to_numpy(), ds["dl"].to_numpy(dtype=float))
+    blocks = spark.read.parquet(paths.blocks).toPandas()
+    assert set(blocks["bucket"]) == set(range(buckets))
+    for row in blocks.itertuples():
+        keys, tfs = decode_block(row.doc_bytes, row.tf_bytes)
+        tf = tfs.astype(float)
+        norm = 1.0 - BM25_B + BM25_B * dl(keys.astype(np.int64)) / meta["avgdl"]
+        ub = float(np.max(tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * norm)))
+        assert abs(ub - row.ub_bm25) <= 1e-9, (row.term, row.bucket, ub, row.ub_bm25)
+
+    # the symptom: WAND top-k equals exhaustive scoring on terms of the
+    # untouched buckets
+    eng = BM25Engine(spark, paths)
+    terms = sorted(blocks.loc[blocks["bucket"].isin(kept), "term"].unique())
+    rng = np.random.default_rng(5)
+    for _ in range(200):
+        q = " ".join(rng.choice(terms, 2, replace=False))
+        got, exp = eng.search(q, 10), eng.search_bruteforce(q, 10)
+        assert list(got["conv_id"]) == list(exp["conv_id"]), q
+        assert list(got["turn_idx"]) == list(exp["turn_idx"]), q
 
 
 def test_windowed_stream_matches_batch(spark, tmp_path):
