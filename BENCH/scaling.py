@@ -234,14 +234,12 @@ n_turns = corpus.count()
 # and these constants amortize to zero.
 warm = generate_transcripts_df(spark, 1500, partitions={cpus})
 shutil.rmtree("/dev/shm/holi_scaling_warm", ignore_errors=True)
-build_index(spark, warm, "/dev/shm/holi_scaling_warm", vocab, buckets=8,
-            build_blocks=True)
+build_index(spark, warm, "/dev/shm/holi_scaling_warm", vocab, buckets=8)
 shutil.rmtree("/dev/shm/holi_scaling_warm", ignore_errors=True)
 out = "/dev/shm/holi_scaling_idx_{cpus}"
 shutil.rmtree(out, ignore_errors=True)
 t0 = time.time()
-build_index(spark, corpus, out, vocab, buckets=8,
-            build_blocks=True)
+build_index(spark, corpus, out, vocab, buckets=8)
 wall = time.time() - t0
 calib_after = calibrate({cpus})
 bw_after = calibrate_bw({cpus})

@@ -151,9 +151,7 @@ def main() -> None:
     for _ in range(BUILD_REPEATS):
         shutil.rmtree(idx_dir, ignore_errors=True)
         t0 = time.time()
-        paths = build_index(
-            spark, corpus, idx_dir, dictionary, buckets=8, build_blocks=True,
-        )
+        paths = build_index(spark, corpus, idx_dir, dictionary, buckets=8)
         walls.append(time.time() - t0)
     timings["index_build"] = min(walls)
     extra["n_turns"] = float(n_turns)
@@ -444,8 +442,7 @@ def scale_main(entry: str) -> None:
         corpus_sc = spark.read.parquet(corpus_sc_dir)
         t0 = time.time()
         paths_sc = build_index(
-            spark, corpus_sc, f"{sc_dir}/idx", dictionary, buckets=8,
-            build_blocks=True,
+            spark, corpus_sc, f"{sc_dir}/idx", dictionary, buckets=8
         )
         scale_timings["scale_bm25_index_build"] = time.time() - t0
         before = _stages(spark)

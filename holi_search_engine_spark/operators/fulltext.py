@@ -587,9 +587,12 @@ def search_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = term_tf(spark, sf_dir).cache()
     docs = load(spark, sf_dir, "documents")
     n = docs.count()
-    # build_ntf's Q1 formula (Σtf²)^¼ fused with the BM25 doc length into
-    # ONE aggregate (reusing build_ntf verbatim would cost a second
-    # groupBy pass for dl); if Q1 ever changes, change both sites
+    # quirk Q1 (Indexer.java:131-139): ntf = (Σtf²)^¼, fused with the BM25
+    # doc length into ONE aggregate.  Nested sqrt, NOT pow(x, 0.25):
+    # Indexer.java applies Math.sqrt twice, and the two correctly-rounded
+    # forms differ in the last ulp.  The tokenize kernel
+    # (functions/tokenizer.tokenize_batch) computes the same; if Q1 ever
+    # changes, change both sites
     stats = tf.groupBy("doc_id").agg(
         F.sqrt(F.sqrt(F.sum(F.col("tf").cast("double") * F.col("tf")))).alias("ntf"),
         F.sum("tf").cast("long").alias("dl"),
@@ -606,7 +609,6 @@ def search_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_turns": int(n),
                 "buckets": _DIST_BUCKETS,
                 "avgdl": float(avgdl),
-                "packed_doc_key": True,  # doc_key IS doc_id (already int64)
             },
             f,
         )
@@ -618,7 +620,7 @@ def search_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dl",
     )
     build_block_index(
-        spark, paths, bucket=None, doc_cols=["doc_id"], buckets=_DIST_BUCKETS,
+        spark, paths, bucket=None, buckets=_DIST_BUCKETS,
         term_stream=stream, avgdl=float(avgdl),
     )
     write_table(

@@ -12,10 +12,11 @@ Python.  The reference has no compression at all (postings are ASCII
 ``"url:tf,..."`` strings, ``jobs/Indexer.java:142-176``); this is the part
 the north rule adds on top.
 
-Doc keys: a 64-bit orderable key per document.  For the transcripts corpus
-``doc_key = conv_num * 64 + turn_idx`` (conv ids embed their index;
-turn_idx < 12 < 64), a pure-expression mapping that needs no global sort at
-any scale.  Corpora without numeric ids supply their own key expression.
+Doc keys: a 64-bit orderable key per document, ``doc_key = conv_num * 64
++ turn_idx`` (conv ids are ``conv-%08d`` of their index; turn_idx < 64), a
+pure-expression mapping that needs no global sort at any scale.  This
+module is the only place that packs or unpacks it: the build stores it in
+every per-doc table, and no reader derives it again.
 """
 
 from __future__ import annotations
@@ -32,36 +33,58 @@ BLOCK_SIZE = 128
 TURN_BITS = 6  # doc_key = conv_num << TURN_BITS | turn_idx
 
 
-def doc_key_expr(doc_cols: list[str]):
-    """64-bit orderable doc key as a Catalyst expression (no UDF)."""
-    if doc_cols == ["conv_id", "turn_idx"]:
-        conv_num = F.regexp_extract(F.col("conv_id"), r"(\d+)", 1).cast("long")
-        return F.shiftleft(conv_num, TURN_BITS) + F.col("turn_idx")
-    if len(doc_cols) == 1:
-        return F.col(doc_cols[0]).cast("long")
-    raise ValueError(f"no doc-key mapping for {doc_cols}")
+def doc_key_expr():
+    """The packed doc key of a (conv_id, turn_idx) row as a Catalyst
+    expression (no UDF).  Lossless only where :func:`doc_key_valid_expr`
+    holds."""
+    conv_num = F.regexp_extract(F.col("conv_id"), r"(\d+)", 1).cast("long")
+    return F.shiftleft(conv_num, TURN_BITS) + F.col("turn_idx")
 
 
-def doc_cols_from_key_exprs(doc_cols: list[str]):
+def doc_key_valid_expr():
+    """True where a (conv_id, turn_idx) row packs losslessly: conv_id is
+    exactly ``conv-%08d`` of its first digit run (``a7``/``b7`` would
+    collide) and turn_idx fits TURN_BITS (a larger one would corrupt keys
+    silently).  try_cast, not cast: under Spark 4's default ANSI mode a
+    digit-less conv_id makes a plain cast of the extracted "" throw, and
+    this check must survive exactly the input it exists to detect (a
+    null here means invalid)."""
+    conv_num = F.regexp_extract(F.col("conv_id"), r"(\d+)", 1).try_cast("long")
+    return (
+        (F.col("conv_id") == F.format_string("conv-%08d", conv_num))
+        & (F.col("turn_idx") >= 0)
+        & (F.col("turn_idx") < (1 << TURN_BITS))
+    )
+
+
+def pack_doc_keys(pdf: pd.DataFrame) -> np.ndarray:
+    """:func:`doc_key_expr` over a pandas batch (the tokenize kernel packs
+    the key before the Python→JVM transfer, so the conv_id strings never
+    cross it).  Raises instead of corrupting keys on a row that breaks the
+    packing contract, behind build_index's corpus-wide check."""
+    conv = pdf["conv_id"].str.extract(r"(\d+)", expand=False)
+    ti = pdf["turn_idx"].to_numpy(dtype=np.int64)
+    if conv.isna().any() or (ti < 0).any() or (ti >= (1 << TURN_BITS)).any():
+        raise ValueError(
+            "doc_key packing violated: conv_id must embed digits and "
+            f"0 <= turn_idx < {1 << TURN_BITS}"
+        )
+    return (conv.astype("int64").to_numpy() << TURN_BITS) | ti
+
+
+def doc_cols_from_key_exprs():
     """Inverse of :func:`doc_key_expr` as Catalyst expressions — lets hot
     stages carry the 8-byte ``doc_key`` instead of the ~13-byte conv_id
     string (the single widest column of the token stream; on a
     bandwidth-bound host the narrower rows are a direct throughput win)
     and reconstruct the user-facing columns only at the small table
     boundaries."""
-    if doc_cols == ["conv_id", "turn_idx"]:
-        return [
-            F.format_string(
-                "conv-%08d", F.shiftright(F.col("doc_key"), TURN_BITS)
-            ).alias("conv_id"),
-            F.col("doc_key")
-            .bitwiseAND(F.lit((1 << TURN_BITS) - 1))
-            .cast("int")
-            .alias("turn_idx"),
-        ]
-    if len(doc_cols) == 1:
-        return [F.col("doc_key").alias(doc_cols[0])]
-    raise ValueError(f"no doc-key inverse for {doc_cols}")
+    conv_num = F.shiftright(F.col("doc_key"), TURN_BITS)
+    turn = F.col("doc_key").bitwiseAND(F.lit((1 << TURN_BITS) - 1))
+    return [
+        F.format_string("conv-%08d", conv_num).alias("conv_id"),
+        turn.cast("int").alias("turn_idx"),
+    ]
 
 
 def doc_key_columns(keys: np.ndarray, doc_cols: list[str]) -> dict:
@@ -116,24 +139,7 @@ class DocKeyLookup:
 
 def varbyte_encode(values: np.ndarray) -> bytes:
     """Vectorized LEB128-style encoding of a uint64 array."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if len(v) == 0:
-        return b""
-    n = np.ones(len(v), dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        n += tmp > 0
-        tmp >>= np.uint64(7)
-    ends = np.cumsum(n)
-    total = int(ends[-1])
-    starts = ends - n
-    idx = np.arange(total, dtype=np.int64)
-    pos = idx - np.repeat(starts, n)
-    vals = np.repeat(v, n)
-    chunk = (vals >> (pos.astype(np.uint64) * np.uint64(7))) & np.uint64(0x7F)
-    is_last = pos == np.repeat(n - 1, n)
-    out = chunk.astype(np.uint8) | np.where(is_last, 0, 0x80).astype(np.uint8)
-    return out.tobytes()
+    return _varbyte_encode_all(values)[0]
 
 
 def varbyte_decode(buf: bytes) -> np.ndarray:
@@ -325,7 +331,6 @@ def build_block_index(
     spark: SparkSession,
     paths,
     bucket: int | list[int] | None,
-    doc_cols: list[str],
     buckets: int | None = None,
     partitions: int | None = None,
     term_stream: DataFrame | None = None,
@@ -334,7 +339,7 @@ def build_block_index(
     """Build the compressed block index (``bucket=None`` → all buckets in
     one job, a list/int → only those, pruned to their term_tf partitions).
 
-    Plan shape: bucket-pruned parquet scan of the (term, doc, tf, ntf, dl)
+    Plan shape: bucket-pruned parquet scan of the (term, doc_key, tf, ntf, dl)
     stream (or a caller's in-memory ``term_stream`` of the same columns) →
     repartition by term →
     sortWithinPartitions(term, doc_key) → mapInPandas block encoder →
@@ -352,30 +357,13 @@ def build_block_index(
         from .index_build import read_meta as _read_meta
 
         avgdl = _read_meta(paths).get("avgdl") or 1.0
-    if "doc_key" not in term_tf.columns:
-        from .index_build import read_meta as _rm
-
-        if _rm(paths).get("packed_doc_key") is False:
-            # the build recorded that this corpus FAILED the conv-%08d
-            # round-trip: packing via doc_key_expr would merge distinct
-            # docs ('a7'/'b7' → same key) — refuse instead of corrupting
-            raise ValueError(
-                "block index unavailable for a string-keyed index "
-                "(corpus failed the packed-doc-key round-trip check); "
-                "remap conv_id to the canonical form first"
-            )
-    key = (
-        F.col("doc_key")
-        if "doc_key" in term_tf.columns
-        else doc_key_expr(doc_cols)
-    )
     # bm25_norm = 1 − b + b·dl/avgdl, precomputed per doc (pinned knobs)
     norm = (
         F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl").cast("double") / F.lit(avgdl)
     ).alias("bm25_norm")
     # per-doc stats ride on the token stream (tokenize emits them) — no
     # doc-keyed join, the term repartition is the ONLY shuffle
-    joined = term_tf.select("term", key.alias("doc_key"), "tf", "ntf", norm)
+    joined = term_tf.select("term", "doc_key", "tf", "ntf", norm)
     # 4 tasks per core: term-hash partitions are Zipf-skewed, so finer
     # granularity lets the scheduler even out the tail (a partition that
     # drew a head term finishes late; with 4× tasks the other cores keep

@@ -16,13 +16,16 @@ Scale design (100 TB / 10^12 turns):
   vectorized pandas inside — no per-row Python); the kernel emits each
   doc's ntf/dl inline (a doc never spans a batch), so no downstream stage
   ever joins back to a doc-stats table;
-- the (term, doc, tf, ntf, dl) stream is written partitioned by ``bucket =
+- the (doc_key, term, tf, ntf, dl) stream is written partitioned by ``bucket =
   pmod(xxhash64(term), B)`` so every downstream job is partition-pruned
   per bucket and the build is resumable at bucket granularity; corpus
   globals (avgdl, doc count) are observed during that write, zero extra
   passes;
 - doc_stats / df / idf are pure JVM aggregations over the columnar stream
   (whole-stage codegen, map-side partial agg);
+- every table stores the packed ``doc_key`` of ``plans/compression.py``
+  (term_tf, doc_stats, doc_meta, the blocks' keys), so no reader derives
+  it again;
 - the index both engines read is the block table
   (``compression.build_block_index``): each term's doc-sorted postings
   stream through Spark's spillable sort into 128-entry compressed blocks,
@@ -48,88 +51,57 @@ DOC_COLS = ["conv_id", "turn_idx"]
 DEFAULT_BUCKETS = 8
 
 
-def tokenize_terms(
-    df: DataFrame,
-    dictionary: frozenset[str],
-    doc_cols: list[str] | None = None,
-    text_col: str = "text",
-    with_stats: bool = False,
-    emit_doc_key: bool = False,
-) -> DataFrame:
-    """Corpus → one row per (doc, term) with tf.
+def tokenize_terms(df: DataFrame, dictionary: frozenset[str]) -> DataFrame:
+    """Corpus → one row per (doc, term): the packed ``doc_key``, term, tf
+    and the per-doc ``ntf``/``dl``/``fd``.
 
     Vectorized two-pass tokenization (quirks Q6/Q7) runs per Arrow batch in
     ``mapInPandas``; the dictionary is shipped once per executor via a Spark
-    broadcast, not per task.  ``with_stats`` adds the per-doc columns
-    ``ntf``/``dl``/``fd`` (computed batch-locally — a doc never spans
-    batches), which is what lets the build tokenize ONCE and skip any
-    doc-stats join downstream.  ``emit_doc_key`` replaces the doc columns
-    with the packed 8-byte ``doc_key`` right inside the kernel, so even
-    the Python→JVM Arrow transfer never carries the conv_id strings
-    (pandas mirror of ``compression.doc_key_expr`` — kept in lockstep).
+    broadcast, not per task.  The per-doc columns are computed batch-locally
+    (a doc never spans batches), which is what lets the build tokenize ONCE
+    and skip any doc-stats join downstream.  The kernel packs the doc key
+    itself (``compression.pack_doc_keys``), so even the Python→JVM Arrow
+    transfer never carries the conv_id strings.
     """
-    doc_cols = doc_cols or DOC_COLS
-    if emit_doc_key and doc_cols != ["conv_id", "turn_idx"]:
-        raise ValueError(f"emit_doc_key unsupported for doc_cols={doc_cols}")
-    spark = df.sparkSession
-    bdict = spark.sparkContext.broadcast(dictionary)
-
-    src_schema = dict(zip(df.schema.names, [f.dataType.simpleString() for f in df.schema.fields]))
-    if emit_doc_key:
-        doc_schema = "doc_key long"
-    else:
-        doc_schema = ", ".join(f"{c} {src_schema[c]}" for c in doc_cols)
-    out_schema = f"{doc_schema}, term string, tf int"
-    if with_stats:
-        out_schema += ", ntf double, dl long, fd tinyint"
+    bdict = df.sparkSession.sparkContext.broadcast(dictionary)
 
     def tok(batches):
-        import numpy as np
-
         from ..functions.tokenizer import tokenize_batch
-        from .compression import TURN_BITS
+        from .compression import pack_doc_keys
 
         d = bdict.value
         for pdf in batches:
             if len(pdf):
-                keys = None
-                if emit_doc_key:
-                    conv = pdf["conv_id"].str.extract(r"(\d+)", expand=False)
-                    ti = pdf["turn_idx"].to_numpy(dtype=np.int64)
-                    # defense-in-depth behind build_index's corpus-wide
-                    # round-trip gate: raise instead of corrupting keys
-                    if (
-                        conv.isna().any()
-                        or (ti < 0).any()
-                        or (ti >= (1 << TURN_BITS)).any()
-                    ):
-                        raise ValueError(
-                            "doc_key packing violated: conv_id must embed "
-                            f"digits and 0 <= turn_idx < {1 << TURN_BITS}; "
-                            "rebuild with string doc columns"
-                        )
-                    keys = (conv.astype("int64").to_numpy() << TURN_BITS) | ti
                 out = tokenize_batch(
-                    pdf, d, doc_cols, text_col, with_stats=with_stats, doc_keys=keys
+                    pdf, d, DOC_COLS, with_stats=True, doc_keys=pack_doc_keys(pdf)
                 )
                 out["tf"] = out["tf"].astype("int32")
                 yield out
 
-    return df.select(*doc_cols, text_col).mapInPandas(tok, schema=out_schema)
-
-
-def build_ntf(term_tf: DataFrame, doc_cols: list[str] | None = None) -> DataFrame:
-    """Quirk Q1 (``Indexer.java:131-139``): ntf = (Σ tf²)^¼.  Pure JVM
-    aggregation with map-side combine."""
-    doc_cols = doc_cols or DOC_COLS
-    return term_tf.groupBy(*doc_cols).agg(
-        # nested sqrt, NOT pow(x, 0.25): Indexer.java:136-139 applies
-        # Math.sqrt twice, and the two correctly-rounded functions differ
-        # in the last ulp — sqrt∘sqrt is the bit-exact form (the tokenizer
-        # kernel's np.sqrt(np.sqrt(...)) matches it; IEEE-754 sqrt is
-        # correctly rounded in both numpy and the JVM)
-        F.sqrt(F.sqrt(F.sum(F.col("tf").cast("double") * F.col("tf")))).alias("ntf")
+    return df.select(*DOC_COLS, "text").mapInPandas(
+        tok, schema="doc_key long, term string, tf int, ntf double, dl long, fd tinyint"
     )
+
+
+def check_doc_keys(transcripts: DataFrame) -> int:
+    """Refuse a corpus whose rows do not pack losslessly into the doc key
+    (``compression.doc_key_valid_expr``: distinct docs would silently
+    merge) with a ValueError; else return its row count.  One cheap
+    two-column aggregation."""
+    from .compression import doc_key_valid_expr
+
+    chk = transcripts.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.coalesce(doc_key_valid_expr(), F.lit(False))).alias("ok"),
+    ).first()
+    if chk["n"] and not chk["ok"]:
+        raise ValueError(
+            "this corpus failed the doc-key round-trip check (conv_id must "
+            "be conv-%08d and turn_idx must fit TURN_BITS): packing would "
+            "silently merge distinct docs. Remap conv_id and turn_idx to the "
+            "canonical form."
+        )
+    return int(chk["n"])
 
 
 def build_wmetric(term_tf: DataFrame, n_docs: int) -> DataFrame:
@@ -154,23 +126,23 @@ def build_wmetric(term_tf: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
-def build_doc_meta(
-    df: DataFrame, doc_cols: list[str] | None = None, text_col: str = "text"
-) -> DataFrame:
+def build_doc_meta(df: DataFrame) -> DataFrame:
     """Title/snippet per ``CrawlProcess.java:49-56`` default path (first 60 /
-    300 chars of tag- and punct/control-stripped text).  Spark's
-    ``regexp_replace`` uses Java regex, so the patterns are byte-identical
-    to the reference's."""
-    doc_cols = doc_cols or DOC_COLS
+    300 chars of tag- and punct/control-stripped text), keyed by the doc
+    columns and the packed ``doc_key``.  Spark's ``regexp_replace`` uses
+    Java regex, so the patterns are byte-identical to the reference's."""
+    from .compression import doc_key_expr
+
     stripped = F.regexp_replace(
-        F.regexp_replace(F.col(text_col), r"\<.*?\>", " "),
+        F.regexp_replace(F.col("text"), r"\<.*?\>", " "),
         r"[.,:;!?'\"()\-\p{Cntrl}]",
         " ",
     )
     return df.select(
-        *doc_cols,
+        *DOC_COLS,
         F.substring(stripped, 1, 60).alias("title"),
         F.substring(stripped, 1, 300).alias("snippet"),
+        doc_key_expr().alias("doc_key"),
     )
 
 
@@ -183,22 +155,12 @@ class IndexPaths:
         return os.path.join(self.root, "term_tf")
 
     @property
-    def ntf(self) -> str:
-        # ntf is a column of doc_stats; parquet column pruning makes a
-        # separate copy pointless (readers .select the columns they need)
-        return os.path.join(self.root, "doc_stats")
-
-    @property
     def wmetric(self) -> str:
         return os.path.join(self.root, "wmetric")
 
     @property
     def doc_meta(self) -> str:
         return os.path.join(self.root, "doc_meta")
-
-    @property
-    def doc_len(self) -> str:
-        return os.path.join(self.root, "doc_stats")
 
     @property
     def doc_stats(self) -> str:
@@ -259,11 +221,8 @@ def build_index(
     transcripts: DataFrame,
     out_dir: str,
     dictionary: frozenset[str],
-    doc_cols: list[str] | None = None,
-    text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
     n_for_idf: int | None = None,
-    build_blocks: bool = True,
     build_postings_table: bool = False,
     resume: bool = True,
 ) -> IndexPaths:
@@ -276,12 +235,14 @@ def build_index(
     done when its record's avgdl differs from ``_meta.json``: its
     block-max BM25 bounds were computed with the old one.
 
+    A corpus whose rows do not pack into the doc key is refused by
+    :func:`check_doc_keys` before anything is written.
+
     ``build_postings_table`` is accepted only as False: the array-per-term
     postings table that no engine read is no longer built.
     """
     if build_postings_table:
         raise ValueError("the array-per-term postings table is no longer built")
-    doc_cols = doc_cols or DOC_COLS
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
@@ -301,8 +262,7 @@ def build_index(
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return _build_index_inner(
-            spark, transcripts, paths, dictionary, doc_cols, text_col,
-            buckets, n_for_idf, build_blocks, resume,
+            spark, transcripts, paths, dictionary, buckets, n_for_idf, resume
         )
     finally:
         for k, v in prev.items():
@@ -317,11 +277,8 @@ def _build_index_inner(
     transcripts: DataFrame,
     paths: IndexPaths,
     dictionary: frozenset[str],
-    doc_cols: list[str],
-    text_col: str,
     buckets: int,
     n_for_idf: int | None,
-    build_blocks: bool,
     resume: bool,
 ) -> IndexPaths:
     out_dir = paths.root
@@ -341,62 +298,11 @@ def _build_index_inner(
 
         t0 = time.time()
         sub: dict[str, float] = {}
-        # The packed 8-byte doc key is only lossless when every conv_id is
-        # exactly 'conv-%08d' of its first digit-run AND every turn_idx
-        # fits TURN_BITS — 'a7'/'b7' would collide, a digit-free conv_id
-        # would crash the kernel, and turn_idx ≥ 2^TURN_BITS would corrupt
-        # keys silently.  Validate the ROUND-TRIP corpus-wide before
-        # choosing the key path (one cheap two-column agg, which also
-        # yields the corpus count stage A needs anyway); anything
-        # non-conforming falls back to string doc columns.
-        emit_key = False
-        if doc_cols == DOC_COLS:
-            from .compression import TURN_BITS
-
-            # try_cast, not cast: under Spark 4's default ANSI mode a
-            # digit-less conv_id makes a plain cast of the extracted ""
-            # THROW inside this very validation query — the guard must
-            # survive exactly the nonconforming input it exists to detect
-            # (null round-trip → rt_ok False → string-column fallback)
-            rt = F.format_string(
-                "conv-%08d",
-                F.regexp_extract("conv_id", r"(\d+)", 1).try_cast("long"),
-            )
-            chk = transcripts.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(F.coalesce(F.col("conv_id") == rt, F.lit(False))).alias("rt_ok"),
-                F.min(
-                    F.coalesce(
-                        (F.col("turn_idx") >= 0)
-                        & (F.col("turn_idx") < (1 << TURN_BITS)),
-                        F.lit(False),
-                    )
-                ).alias("turn_ok"),
-            ).first()
-            n_turns_pre = int(chk["n"])
-            emit_key = n_turns_pre == 0 or (bool(chk["rt_ok"]) and bool(chk["turn_ok"]))
-        else:
-            n_turns_pre = transcripts.count()
-        if build_blocks and doc_cols == DOC_COLS and not emit_key and n_turns_pre:
-            raise ValueError(
-                "block index requires the packed int64 doc key, but this "
-                "corpus failed the conv-%08d / turn_idx round-trip check — "
-                "packing would silently merge distinct docs. Remap conv_id "
-                "to the canonical form, or pass build_blocks=False for the "
-                "string-keyed parity artifacts."
-            )
-        term_raw = tokenize_terms(
-            transcripts,
-            dictionary,
-            doc_cols,
-            text_col,
-            with_stats=True,
-            # hot path carries the packed 8-byte doc key instead of the
-            # conv_id string — the widest column of the token stream; on a
-            # bandwidth-bound host/cluster this narrows every Arrow
-            # transfer, parquet file, and shuffle of ~n_postings rows
-            emit_doc_key=emit_key,
-        )
+        # refused before anything is written; the count is the one stage A
+        # needs anyway: (conv_id, turn_idx) is the primary key, one doc
+        # per turn
+        n_turns = check_doc_keys(transcripts)
+        term_raw = tokenize_terms(transcripts, dictionary)
         bucketed = term_raw.withColumn(
             "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
         )
@@ -418,11 +324,8 @@ def _build_index_inner(
             write_table(observed, paths.term_tf, partition_by=["bucket"])
 
         def small_jobs() -> None:
-            write_table(build_doc_meta(transcripts, doc_cols, text_col), paths.doc_meta)
+            write_table(build_doc_meta(transcripts), paths.doc_meta)
 
-        # (conv_id, turn_idx) is the primary key: one doc per turn — the
-        # validation agg above already counted the corpus
-        n_turns = n_turns_pre
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_big = pool.submit(big_write)
             f_small = pool.submit(small_jobs)
@@ -439,18 +342,11 @@ def _build_index_inner(
 
             empty_tf = spark.createDataFrame([], observed.schema).coalesce(1)
             write_table(empty_tf, paths.term_tf)
-            src_types = dict(
-                zip(
-                    transcripts.schema.names,
-                    [f.dataType.simpleString() for f in transcripts.schema.fields],
-                )
-            )
-            stats_schema = (
-                ", ".join(f"{c} {src_types[c]}" for c in doc_cols)
-                + ", ntf double, dl long"
-            )
             write_table(
-                spark.createDataFrame([], schema=stats_schema).coalesce(1),
+                spark.createDataFrame(
+                    [],
+                    schema="conv_id string, turn_idx int, ntf double, dl long, doc_key long",
+                ).coalesce(1),
                 paths.doc_stats,
             )
             write_table(
@@ -463,21 +359,19 @@ def _build_index_inner(
                 ).coalesce(1),
                 paths.wmetric,
             )
-            n_turns_empty = n_turns
             with open(paths.meta_json, "w") as f:
                 json.dump(
                     {
-                        "doc_cols": doc_cols,
-                        "n_docs": n_turns_empty,
-                        "n_for_idf": n_for_idf if n_for_idf is not None else n_turns_empty,
-                        "n_turns": n_turns_empty,
+                        "doc_cols": DOC_COLS,
+                        "n_docs": n_turns,
+                        "n_for_idf": n_for_idf if n_for_idf is not None else n_turns,
+                        "n_turns": n_turns,
                         "buckets": buckets,
                         "avgdl": 0.0,
-                        "packed_doc_key": emit_key,
                     },
                     f,
                 )
-            _manifest_write(paths, "stage_a", {"n_turns": n_turns_empty, "n_docs": n_turns_empty, "wall_sec": time.time() - t0, "turns_per_sec": None, "degenerate": True})
+            _manifest_write(paths, "stage_a", {"n_turns": n_turns, "n_docs": n_turns, "wall_sec": time.time() - t0, "turns_per_sec": None, "degenerate": True})
             _manifest_write(paths, "doc_stats", {"degenerate": True})
             _manifest_write(paths, "wmetric", {"degenerate": True})
             for b in range(buckets):
@@ -490,13 +384,12 @@ def _build_index_inner(
         with open(paths.meta_json, "w") as f:
             json.dump(
                 {
-                    "doc_cols": doc_cols,
+                    "doc_cols": DOC_COLS,
                     "n_docs": n_docs,
                     "n_for_idf": n_idf,
                     "n_turns": n_turns,
                     "buckets": buckets,
                     "avgdl": float(avgdl),
-                    "packed_doc_key": emit_key,
                 },
                 f,
             )
@@ -543,28 +436,21 @@ def _build_index_inner(
         b for b in range(buckets)
         if not resume
         or (_manifest_record(paths, "blocks", b) or {}).get("avgdl") != avgdl
-    ] if build_blocks else []
+    ]
 
     def doc_stats_job() -> None:
         from .compression import doc_cols_from_key_exprs
 
         t = time.time()
-        tf_r = read_table(spark, paths.term_tf)
-        if "doc_key" in tf_r.columns:
-            # aggregate on the narrow key; reconstruct the user-facing doc
-            # columns only on the ~n_docs output rows
-            stats = (
-                tf_r.select("doc_key", "ntf", "dl")
-                .groupBy("doc_key")
-                .agg(F.first("ntf").alias("ntf"), F.first("dl").alias("dl"))
-                .select(*doc_cols_from_key_exprs(doc_cols), "ntf", "dl", "doc_key")
-            )
-        else:
-            stats = (
-                tf_r.select(*doc_cols, "ntf", "dl")
-                .groupBy(*doc_cols)
-                .agg(F.first("ntf").alias("ntf"), F.first("dl").alias("dl"))
-            )
+        # aggregate on the narrow key; reconstruct the user-facing doc
+        # columns only on the ~n_docs output rows
+        stats = (
+            read_table(spark, paths.term_tf)
+            .select("doc_key", "ntf", "dl")
+            .groupBy("doc_key")
+            .agg(F.first("ntf").alias("ntf"), F.first("dl").alias("dl"))
+            .select(*doc_cols_from_key_exprs(), "ntf", "dl", "doc_key")
+        )
         write_table(stats, paths.doc_stats)
         _manifest_write(paths, "doc_stats", {"wall_sec": time.time() - t})
 
@@ -576,7 +462,6 @@ def _build_index_inner(
             spark,
             paths,
             bucket=None if len(blocks_remaining) == buckets else blocks_remaining,
-            doc_cols=doc_cols,
             buckets=buckets,
         )
         wall = time.time() - t
@@ -631,7 +516,7 @@ def _build_index_inner(
                 "term",
                 (F.col("df_true") + F.lit(1)).alias("df"),
                 # F.log = StrictMath.log: platform-deterministic, <=1 ulp
-                # from the reference's Math.log (see build_idf docstring)
+                # from the reference's Math.log (see build_wmetric docstring)
                 F.log(F.lit(float(n_idf)) / (F.col("df_true") + F.lit(1))).alias("idf"),
             ),
             paths.wmetric,

@@ -99,24 +99,16 @@ def build_reply_pagerank(spark, paths, max_iter: int = 50) -> str:
     analog for corpora that have one.  Engines treat the artifact as
     optional — absent ⇒ prior 0 (SURVEY.md §8's transcripts default).
 
-    Edges derive from the doc_len table alone: packed keys are
+    Edges derive from the doc_stats table alone: packed keys are
     ``conv_num<<TURN_BITS | turn_idx`` with turn_idx contiguous from 0,
     so ``key → key−1`` for every key with a nonzero turn component IS the
     reply edge — no second scan of the corpus.  Returns the artifact
     path.  One shuffle per iteration; same scale shape as
     :func:`pagerank`."""
-    from pyspark.sql import SparkSession  # noqa: F401 (signature clarity)
-
     from ..sources.catalog import read_table, write_table
     from .compression import TURN_BITS
-    from .index_build import read_meta
 
-    meta = read_meta(paths)
-    if meta["doc_cols"] != ["conv_id", "turn_idx"] or not meta.get("packed_doc_key"):
-        raise ValueError(
-            "reply-structure prior needs the packed (conv_id, turn_idx) key"
-        )
-    dl = read_table(spark, paths.doc_len).select("doc_key")
+    dl = read_table(spark, paths.doc_stats).select("doc_key")
     mask = (1 << TURN_BITS) - 1
     edges = dl.where(F.col("doc_key").bitwiseAND(F.lit(mask)) > 0).select(
         F.col("doc_key").alias("src"), (F.col("doc_key") - 1).alias("dst")

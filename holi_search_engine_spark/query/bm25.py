@@ -242,7 +242,7 @@ class BM25Engine:
         self.doc_cols: list[str] = meta["doc_cols"]
         self.n_docs: int = meta["n_docs"]
         self.avgdl: float = meta.get("avgdl") or 1.0
-        dl = self.reader.read_docs(paths.doc_len, ("dl",))
+        dl = self.reader.read_docs(paths.doc_stats, ("dl",))
         self._dl_norm = DocKeyLookup(
             dl.keys,
             1.0 - BM25_B + BM25_B * dl.vals.astype(np.float64) / self.avgdl,

@@ -39,7 +39,7 @@ from ..functions.javacompat import (
 from ..functions.xxhash import term_bucket
 import numpy as np
 
-from ..plans.compression import DocKeyLookup, decode_block, doc_key_expr, doc_key_to_cols
+from ..plans.compression import DocKeyLookup, decode_block, doc_key_to_cols
 from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
 from .ranker import EXPAND_THRESHOLD, TOP_CUT
@@ -329,7 +329,6 @@ class DistributedRanker:
                 if any(float(idf_map.get(t, 0.0)) < 0.0 for t in m["word_count"])
             }
             healthy = [qid for qid in metas if qid not in poisoned]
-            key = doc_key_expr(self.doc_cols)
             parts = []
             if poisoned:
                 parts.append(
@@ -341,8 +340,8 @@ class DistributedRanker:
                     )
                 )
             if healthy:
-                ntf = read_table(self.spark, self.paths.ntf).select(
-                    key.alias("doc_key"), "ntf"
+                ntf = read_table(self.spark, self.paths.doc_stats).select(
+                    "doc_key", "ntf"
                 )
                 qdf = self.spark.createDataFrame(
                     [
@@ -374,7 +373,7 @@ class DistributedRanker:
                 base = base.unionByName(p)
 
             meta_df = read_table(self.spark, self.paths.doc_meta).select(
-                key.alias("doc_key"), "title"
+                "doc_key", "title"
             )
             qmeta = self.spark.createDataFrame(
                 [
@@ -429,7 +428,7 @@ def doc_range_bounds(dl: DataFrame, r: int) -> list[tuple[int, int, int]]:
     packed keys (``conv_num<<6|turn_idx``) are sparse and conv-id
     clustering skews uniform spans arbitrarily, while quantile cuts put
     ~1/r of the docs in every range at any key distribution — one cheap
-    extra job over the 16 B/doc doc_len table.  Duplicate/out-of-range
+    extra job over the doc_stats table.  Duplicate/out-of-range
     cuts collapse (fewer, still-covering ranges).  Empty table → [].
     """
     lo_hi = dl.agg(F.min("doc_key"), F.max("doc_key")).first()
@@ -473,7 +472,7 @@ def _bm25_scan_frames(
     }
     if not w_by_term:
         return None
-    dl = read_table(spark, paths.doc_len)
+    dl = read_table(spark, paths.doc_stats)
     r = n_ranges or spark.sparkContext.defaultParallelism
     bounds = doc_range_bounds(dl, r)
     if not bounds:  # empty corpus: build writes meta but no doc rows

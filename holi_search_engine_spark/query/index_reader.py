@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
-from ..plans.compression import DocKeyLookup, decode_block, doc_key_expr, doc_key_to_cols
+from ..plans.compression import DocKeyLookup, decode_block
 from ..plans.index_build import IndexPaths, artifact_nbytes, read_meta
 from ..sources.catalog import read_table
 
@@ -94,13 +94,6 @@ class IndexReader:
         self.paths = paths
         self.meta = read_meta(paths)
         self.doc_cols: list[str] = self.meta["doc_cols"]
-        # True only when the build VALIDATED the conv-%08d round-trip (or
-        # the key is a single stored column): exactly the cases where
-        # doc_key_to_cols reconstruction is lossless and the pruned read's
-        # lead-column prefilter is sound
-        self._reconstructible_key = (
-            bool(self.meta.get("packed_doc_key")) or len(self.doc_cols) == 1
-        )
         if preload is None:
             cap = PRELOAD_MAX_BYTES if preload_max_bytes is None else preload_max_bytes
             preload = 0 <= artifact_nbytes(paths.blocks) <= cap
@@ -238,24 +231,11 @@ class IndexReader:
     def read_docs(
         self, path: str, cols: tuple[str, ...], keys: np.ndarray | None = None
     ) -> DocKeyLookup:
-        """One Spark job: the per-doc table at ``path`` as a sorted doc-key
-        lookup of ``cols`` (1-D values for one column, else one value
-        column per name), whole or pruned to ``keys``.  A table that stores ``doc_key`` is keyed and filtered on
-        it; otherwise the key is computed from the doc columns, and a
-        pruned read first filters on the leading doc column (a plain
-        stored column, so the predicate reaches the parquet scan).  keys
-        is ≤ TOP_CUT=250, so the isin lists stay tiny."""
-        df = read_table(self.spark, path)
-        if "doc_key" in df.columns:
-            df = df.select("doc_key", *cols)
-        else:
-            if keys is not None and self._reconstructible_key:
-                lead = self.doc_cols[0]
-                lead_vals = doc_key_to_cols(
-                    np.asarray(keys, dtype=np.int64), self.doc_cols
-                )[lead].unique().tolist()
-                df = df.where(F.col(lead).isin(lead_vals))
-            df = df.select(doc_key_expr(self.doc_cols).alias("doc_key"), *cols)
+        """One Spark job: the per-doc table at ``path`` as a sorted lookup
+        of ``cols`` on its stored ``doc_key`` (1-D values for one column,
+        else one value column per name), whole or pruned to ``keys``.  keys
+        is ≤ TOP_CUT=250, so the isin list stays tiny."""
+        df = read_table(self.spark, path).select("doc_key", *cols)
         if keys is not None:
             df = df.where(F.col("doc_key").isin([int(k) for k in keys]))
         pdf = df.toPandas()

@@ -65,7 +65,7 @@ class RankerEngine:
         # Ranker.java:112-120); absent ⇒ every doc's prior is 0
         self._has_pagerank = table_exists(spark, paths.pageranks)
         if self.preloaded:
-            self.reader.load_docs(paths.ntf, ("ntf",))
+            self.reader.load_docs(paths.doc_stats, ("ntf",))
             self.reader.load_docs(paths.doc_meta, ("title", "snippet"))
             if self._has_pagerank:
                 self.reader.load_docs(paths.pageranks, ("rank",))
@@ -74,7 +74,7 @@ class RankerEngine:
 
     def _ntf_for(self, keys: np.ndarray) -> np.ndarray:
         """ntf per candidate; NaN for a doc without a row."""
-        ntf = self.reader.doc_values(self.paths.ntf, ("ntf",), keys, np.nan)
+        ntf = self.reader.doc_values(self.paths.doc_stats, ("ntf",), keys, np.nan)
         return ntf.astype(np.float64, copy=False)
 
     def _pagerank_for(self, keys: np.ndarray) -> np.ndarray:

@@ -44,6 +44,19 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def default_driver_memory() -> str:
+    """Half the machine's memory (``MemTotal``), at least 1g.  In local
+    mode the executors run inside the driver JVM, and G1 grows a heap
+    toward its cap rather than collect, so a cap past the machine's memory
+    starves the Python workers.  4g where ``/proc/meminfo`` is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(1, kb // (2 << 20))}g"
+
+
 def get_spark(
     app_name: str = "holi_search_engine_spark",
     cores: int | None = None,
@@ -53,6 +66,8 @@ def get_spark(
     """Build (or fetch) the session.
 
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or ``*``.
+    The driver heap is ``$SPARK_DRIVER_MEM``, else
+    :func:`default_driver_memory`.
     ``shuffle_partitions`` defaults to the core count — at 100 TB scale this
     is instead sized so each shuffle partition stays ≲ 256 MB
     (AQE coalescing handles the downward adjustment at runtime).
@@ -84,7 +99,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

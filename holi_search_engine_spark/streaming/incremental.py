@@ -4,12 +4,12 @@ windowed event aggregation.
 The reference has no streaming at all (SURVEY.md §2.6) — its crawler loop
 is iterative batch with resume-from-table (``jobs/Crawler.java:26-51``).
 This module is the Spark-native upgrade of that pattern: new transcript
-files land in a directory, each micro-batch is tokenized with the SAME
-vectorized kernel as the batch build, and its (term, doc, tf) delta is
-appended to the bucket-partitioned term stream.  The block index of the
-touched buckets is then rebuilt by the ordinary resumable build (delete
-the touched buckets' ``blocks`` manifests → ``build_index`` redoes only
-them), which is exactly the SPIMI "segments then merge" lifecycle with
+files land in a directory, each micro-batch passes the SAME doc-key check
+and vectorized tokenize kernel as the batch build, and its (term, doc,
+tf) delta is appended to the bucket-partitioned term stream.  The block
+index of the touched buckets is then rebuilt by the ordinary resumable
+build (delete the touched buckets' ``blocks`` manifests → ``build_index``
+redoes only them), which is exactly the SPIMI "segments then merge" lifecycle with
 Spark's shuffle as the merge.  ``refresh_global_stats`` runs between the
 two: it rewrites df/idf and avgdl, and since every block's BM25 bound
 depends on avgdl, a changed avgdl makes the resumed build re-encode every
@@ -29,6 +29,7 @@ from ..plans.index_build import (
     IndexPaths,
     _manifest_path,
     build_doc_meta,
+    check_doc_keys,
     build_wmetric,
     read_meta,
     tokenize_terms,
@@ -67,11 +68,12 @@ def stream_transcript_deltas(
         from ..plans.compression import doc_cols_from_key_exprs
 
         batch_df = batch_df.cache()
-        # with_stats + emit_doc_key keep the delta's schema identical to
-        # the batch build's term_tf (doc_key-native; fd dropped pre-write)
-        term_tf = tokenize_terms(
-            batch_df, dictionary, with_stats=True, emit_doc_key=True
-        ).cache()
+        # the batch build's input check: a drop that does not pack into the
+        # doc key stops the stream before it writes anything
+        check_doc_keys(batch_df)
+        # the same kernel as the batch build, so the delta's schema is
+        # term_tf's (fd dropped pre-write)
+        term_tf = tokenize_terms(batch_df, dictionary).cache()
         bucketed = term_tf.drop("fd").withColumn(
             "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
         )
@@ -86,10 +88,9 @@ def stream_transcript_deltas(
         # overlap already-indexed docs — the doc key is the table's PK)
         doc_stats = (
             term_tf.where(F.col("fd") == 1)
-            .select(*doc_cols_from_key_exprs(["conv_id", "turn_idx"]), "ntf", "dl", "doc_key")
+            .select(*doc_cols_from_key_exprs(), "ntf", "dl", "doc_key")
             .cache()
         )
-        # paths.ntf / paths.doc_len are column views of doc_stats — one write
         doc_stats.write.mode("append").parquet(paths.doc_stats)
         doc_stats.unpersist()
         build_doc_meta(batch_df).write.mode("append").parquet(paths.doc_meta)
@@ -120,9 +121,9 @@ def refresh_global_stats(spark: SparkSession, paths: IndexPaths) -> None:
     import json
 
     term_tf = spark.read.parquet(paths.term_tf)
-    n_docs = spark.read.parquet(paths.ntf).count()
+    n_docs = spark.read.parquet(paths.doc_stats).count()
     build_wmetric(term_tf, n_docs).write.mode("overwrite").parquet(paths.wmetric)
-    avgdl = spark.read.parquet(paths.doc_len).agg(F.avg("dl")).collect()[0][0] or 0.0
+    avgdl = spark.read.parquet(paths.doc_stats).agg(F.avg("dl")).collect()[0][0] or 0.0
     meta = read_meta(paths)
     meta.update({"n_docs": n_docs, "n_for_idf": n_docs, "avgdl": float(avgdl)})
     with open(paths.meta_json, "w") as f:

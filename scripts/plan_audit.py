@@ -176,7 +176,6 @@ def special_frames(spark) -> dict:
         f"{d}/idx",
         frozenset(make_vocabulary()),
         buckets=4,
-        build_blocks=True,
     )
     frames = {
         # a single query is a batch of one

@@ -9,10 +9,9 @@ import shutil
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-# The session's default driver heap (48g) outgrows a test host: G1 expands
-# toward it rather than collect, and mid-suite the JVM alone held ~13 GB RSS
-# on a 16 GB host, leaving too little memory for the Python workers.  Every
-# test fits in 4g.
+# Every test fits in a 4g driver heap.  Pin it, so the suite's footprint
+# does not depend on the host (the session default is half the machine's
+# memory, and G1 grows a heap toward its cap rather than collect).
 os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 
@@ -65,4 +64,4 @@ def built_index(spark, xs_df, dictionary, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("index") / "xs")
     shutil.rmtree(out, ignore_errors=True)
-    return build_index(spark, xs_df, out, dictionary, buckets=2, build_blocks=True)
+    return build_index(spark, xs_df, out, dictionary, buckets=2)

@@ -91,27 +91,29 @@ def test_doc_key_lookup_absent_keys():
 def test_doc_key_exprs_roundtrip(spark):
     """doc_key_expr ∘ doc_cols_from_key_exprs == identity on (conv_id,
     turn_idx) — the hot path carries only the key, so the Catalyst inverse
-    must reconstruct the exact strings the tokenizer's pandas mirror saw."""
+    must reconstruct the exact strings the tokenizer's packer saw — and
+    the tokenizer's pandas packer gives the keys doc_key_expr gives."""
     from pyspark.sql import functions as F
 
     from holi_search_engine_spark.plans.compression import (
         doc_cols_from_key_exprs,
         doc_key_expr,
+        pack_doc_keys,
     )
 
     src = spark.createDataFrame(
-        [(f"conv-{i:08d}", t) for i in (0, 7, 12345, 99999999) for t in (0, 1, 11)],
+        [(f"conv-{i:08d}", t) for i in (0, 7, 12345, 99999999) for t in (0, 1, 11, 63)],
         "conv_id string, turn_idx int",
     )
-    key = doc_key_expr(["conv_id", "turn_idx"])
     back = (
-        src.select(key.alias("doc_key"), F.col("conv_id").alias("c0"), F.col("turn_idx").alias("t0"))
-        .select("c0", "t0", *doc_cols_from_key_exprs(["conv_id", "turn_idx"]))
-        .collect()
+        src.select(doc_key_expr().alias("doc_key"), F.col("conv_id").alias("c0"), F.col("turn_idx").alias("t0"))
+        .select("c0", "t0", "doc_key", *doc_cols_from_key_exprs())
+        .toPandas()
     )
-    for r in back:
-        assert r["conv_id"] == r["c0"], r
-        assert r["turn_idx"] == r["t0"], r
+    assert (back["conv_id"] == back["c0"]).all()
+    assert (back["turn_idx"] == back["t0"]).all()
+    packed = pack_doc_keys(back[["c0", "t0"]].set_axis(["conv_id", "turn_idx"], axis=1))
+    np.testing.assert_array_equal(packed, back["doc_key"].to_numpy(np.int64))
 
 
 def test_blocks_from_sorted_block_aligned_batch_boundary():

@@ -78,8 +78,7 @@ def clustered_index(spark, dictionary, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index") / "clustered")
     shutil.rmtree(out, ignore_errors=True)
     return build_index(
-        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=True,
+        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2
     )
 
 
@@ -110,7 +109,7 @@ def test_doc_range_bounds_balanced(spark, clustered_index):
     from holi_search_engine_spark.query.distributed import doc_range_bounds
     from holi_search_engine_spark.sources.catalog import read_table
 
-    dl = read_table(spark, clustered_index.doc_len)
+    dl = read_table(spark, clustered_index.doc_stats)
     n_docs = dl.count()
     bounds = doc_range_bounds(dl, 8)
     assert len(bounds) >= 6  # dup cuts may collapse a range or two
@@ -137,9 +136,7 @@ def test_distributed_empty_corpus(spark, dictionary, tmp_path_factory):
         "tool string, ts timestamp",
     )
     out = str(tmp_path_factory.mktemp("index") / "empty")
-    paths = build_index(
-        spark, empty, out, dictionary, buckets=2, build_blocks=True,
-    )
+    paths = build_index(spark, empty, out, dictionary, buckets=2)
     got = distributed_bm25_topk(spark, paths, "alpha bravo", 10, n_ranges=4)
     assert len(got) == 0
 

@@ -72,3 +72,13 @@ def test_entry_runs(entrymod, spark):
     df = entrymod.entry(spark)
     assert df.columns
     assert df.count() >= 0
+
+
+def test_driver_window_locked(entrymod):
+    """The driver's correctness window holds 50 entries, and each has a
+    DuckDB ``oracle_sql()`` twin: a dropped or oracle-less entry shrinks
+    the gate without failing any other test."""
+    queries = entrymod.queries()
+    assert len(queries) == 50
+    missing = sorted(set(queries) - set(entrymod.oracle_sql()))
+    assert not missing, f"entries without an oracle twin: {missing}"

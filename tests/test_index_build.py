@@ -7,8 +7,9 @@ import os
 
 import numpy as np
 import pandas as pd
+import pytest
 
-from holi_search_engine_spark.plans.compression import decode_block
+from holi_search_engine_spark.plans.compression import TURN_BITS, decode_block
 
 
 def _blocks_frame(spark, paths):
@@ -22,7 +23,7 @@ def _blocks_frame(spark, paths):
 
 
 def test_ntf_matches_oracle(spark, built_index, oracle_index):
-    ntf = spark.read.parquet(built_index.ntf).toPandas()
+    ntf = spark.read.parquet(built_index.doc_stats).toPandas()
     got = {(r.conv_id, int(r.turn_idx)): r.ntf for r in ntf.itertuples()}
     assert set(got) == set(oracle_index.ntf)
     for k, v in oracle_index.ntf.items():
@@ -123,9 +124,7 @@ def test_manifest_written_and_resume_skips(spark, built_index, xs_df, dictionary
     assert rec["avgdl"] == meta["avgdl"]
     # resume: all stages done → rebuild touches nothing (mtimes unchanged)
     mtimes = {m: os.path.getmtime(m) for m in manifest_files}
-    build_index(
-        spark, xs_df, built_index.root, dictionary, buckets=2, build_blocks=True
-    )
+    build_index(spark, xs_df, built_index.root, dictionary, buckets=2)
     for m, t in mtimes.items():
         assert os.path.getmtime(m) == t, f"resume re-ran {m}"
 
@@ -206,97 +205,47 @@ def test_degenerate_corpus_builds_empty_index(spark, dictionary, tmp_path):
     assert len(BM25Engine(spark, paths).search("anything at all")) == 0
 
 
-def test_nonconforming_conv_ids_fall_back_to_string_keys(spark, dictionary, tmp_path):
-    """conv_ids outside the 'conv-%08d' contract ('a7'/'b7' would COLLIDE
-    under first-digit-run packing) must disable the packed doc_key and
-    come back verbatim in every artifact."""
+@pytest.mark.parametrize(
+    "conv_ids, turn_idxs",
+    [
+        # 'a7'/'b7' would collide under first-digit-run packing
+        (["a7", "b7", "conv-00000001"], [0, 0, 0]),
+        # turn_idx >= 2^TURN_BITS would corrupt packed keys silently
+        (["conv-00000001", "conv-00000001"], [0, 1 << TURN_BITS]),
+        # no digits: under Spark 4's default ANSI mode a plain cast of the
+        # extracted "" throws inside the check itself
+        (["alpha", "conv-00000001"], [0, 1]),
+    ],
+    ids=["colliding_ids", "turn_idx_overflow", "digitless_ansi"],
+)
+def test_nonconforming_doc_ids_refused(spark, dictionary, tmp_path, conv_ids, turn_idxs):
+    """A corpus that does not pack into the doc key is refused by the
+    round-trip check with its ValueError (not a Spark cast error), before
+    any term_tf is written."""
     from holi_search_engine_spark.plans.index_build import build_index
 
     pdf = pd.DataFrame(
         {
-            "conv_id": ["a7", "b7", "conv-00000001"],
-            "turn_idx": [0, 0, 0],
-            "text": ["hello world", "hello hello", "world"],
+            "conv_id": conv_ids,
+            "turn_idx": turn_idxs,
+            "text": ["hello world beta gamma"] * len(conv_ids),
         }
     )
-    out = str(tmp_path / "idx_strkeys")
-    # the block index REQUIRES the packed key, so a non-conforming corpus
-    # must fail fast instead of silently merging 'a7'/'b7' postings
-    import pytest
-
+    out = str(tmp_path / "idx_refused")
     with pytest.raises(ValueError, match="round-trip"):
         build_index(spark, spark.createDataFrame(pdf), out, dictionary, buckets=2)
-    out = str(tmp_path / "idx_strkeys2")
-    paths = build_index(
-        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=False,
-    )
-    assert "doc_key" not in spark.read.parquet(paths.term_tf).columns
-    stats = spark.read.parquet(paths.doc_stats).toPandas()
-    assert set(stats["conv_id"]) == {"a7", "b7", "conv-00000001"}
-
-
-def test_turn_idx_overflow_falls_back_to_string_keys(spark, dictionary, tmp_path):
-    """turn_idx >= 2^TURN_BITS would corrupt packed keys silently — the
-    round-trip gate must route the build to string doc columns instead."""
-    from holi_search_engine_spark.plans.compression import TURN_BITS
-    from holi_search_engine_spark.plans.index_build import build_index
-
-    over = 1 << TURN_BITS
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["conv-00000001"] * 2,
-            "turn_idx": [0, over],
-            "text": ["alpha beta", "beta gamma"],
-        }
-    )
-    out = str(tmp_path / "idx_turnover")
-    paths = build_index(
-        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=False,
-    )
-    assert "doc_key" not in spark.read.parquet(paths.term_tf).columns
-    stats = spark.read.parquet(paths.doc_stats).toPandas()
-    assert set(int(t) for t in stats["turn_idx"]) == {0, over}
-
-
-def test_digitless_conv_id_falls_back_not_throws(spark, dictionary, tmp_path):
-    """A conv_id with NO digits makes regexp_extract yield '' — under
-    Spark 4's default ANSI mode a plain cast('' as long) THROWS inside
-    the round-trip validation itself, crashing the build before the
-    fallback it guards could trigger; try_cast must route such corpora
-    to string doc columns."""
-    from holi_search_engine_spark.plans.index_build import build_index
-
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["alpha", "conv-00000001"],
-            "turn_idx": [0, 1],
-            "text": ["alpha beta", "beta gamma"],
-        }
-    )
-    out = str(tmp_path / "idx_digitless")
-    paths = build_index(
-        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=False,
-    )
-    assert "doc_key" not in spark.read.parquet(paths.term_tf).columns
-    stats = spark.read.parquet(paths.doc_stats).toPandas()
-    assert set(stats["conv_id"]) == {"alpha", "conv-00000001"}
+    assert not os.path.exists(os.path.join(out, "term_tf"))
 
 
 def test_tokenize_terms_doc_key_guard_raises(spark):
-    """Kernel defense-in-depth: forcing emit_doc_key on a non-conforming
-    batch raises instead of corrupting keys."""
-    import pytest
-
-    from holi_search_engine_spark.plans.compression import TURN_BITS
+    """Kernel defense-in-depth: a batch that breaks the packing contract
+    raises instead of corrupting keys."""
     from holi_search_engine_spark.plans.index_build import tokenize_terms
 
     df = spark.createDataFrame(
         [("conv-00000001", 1 << TURN_BITS, "some words")],
         "conv_id string, turn_idx int, text string",
     )
-    out = tokenize_terms(df, frozenset(), ["conv_id", "turn_idx"], emit_doc_key=True)
+    out = tokenize_terms(df, frozenset())
     with pytest.raises(Exception, match="doc_key packing violated"):
         out.collect()

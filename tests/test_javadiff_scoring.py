@@ -285,7 +285,7 @@ def _export_payload(engine, queries: list[str]) -> str:
             f"{int(k)}:{repr(float(t))}" for k, t in zip(keys, tfs)
         )
         lines.append(f"IDX {b64(term)} {b64(row)}")
-    ntf = reader.load_docs(engine.paths.ntf, ("ntf",))
+    ntf = reader.load_docs(engine.paths.doc_stats, ("ntf",))
     for doc_key, v in zip(ntf.keys, ntf.vals):
         lines.append(f"NTF {b64(str(int(doc_key)))} {repr(float(v))}")
     for term in terms:

@@ -55,8 +55,7 @@ def prior_index(spark, dictionary, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index") / "prior")
     shutil.rmtree(out, ignore_errors=True)
     paths = build_index(
-        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2,
-        build_blocks=True,
+        spark, spark.createDataFrame(pdf), out, dictionary, buckets=2
     )
     build_reply_pagerank(spark, paths)
     return paths
@@ -108,3 +107,25 @@ def test_prior_modes_agree(spark, prior_index, vocabulary):
         assert list(other["doc_key"]) == list(pre["doc_key"])
         np.testing.assert_allclose(other["score"], pre["score"], atol=1e-9)
         np.testing.assert_allclose(other["page_rank"], pre["page_rank"], atol=1e-9)
+
+
+def test_reply_prior_matches_python_oracle(spark, prior_index):
+    """The reply-structure prior equals ``pagerank_python`` over the
+    corpus's turn i → turn i−1 edges, for every doc within 1e-9."""
+    from holi_search_engine_spark.corpus import generate_transcripts_pdf
+
+    pdf = generate_transcripts_pdf(30)
+    edges = [
+        ((c, t), (c, t - 1))
+        for c, t in zip(pdf["conv_id"], pdf["turn_idx"].astype(int))
+        if t > 0
+    ]
+    exp = pagerank_python(edges)
+    docs = spark.read.parquet(prior_index.doc_meta).select("doc_key", "conv_id", "turn_idx")
+    got = {
+        (r["conv_id"], int(r["turn_idx"])): r["rank"]
+        for r in spark.read.parquet(prior_index.pageranks).join(docs, "doc_key").collect()
+    }
+    assert set(got) == set(exp)
+    for v, r in exp.items():
+        assert abs(got[v] - r) < 1e-9, v

@@ -173,7 +173,6 @@ def test_envelope_titles_match_doc_meta(engine, spark, built_index):
     char truncations, CrawlProcess.java:49-56)."""
     from pyspark.sql import functions as F
 
-    from holi_search_engine_spark.plans.compression import doc_key_expr
     from holi_search_engine_spark.sources.catalog import read_table
 
     full = engine.search("the data")
@@ -182,11 +181,10 @@ def test_envelope_titles_match_doc_meta(engine, spark, built_index):
     env = engine.paginate(full, 1)
     assert env != ""
     keys = [int(k) for k in full["doc_key"].head(10)]
-    key = doc_key_expr(engine.doc_cols)
     meta = {
         r["doc_key"]: (r["title"], r["snippet"])
         for r in read_table(spark, built_index.doc_meta)
-        .select(key.alias("doc_key"), "title", "snippet")
+        .select("doc_key", "title", "snippet")
         .where(F.col("doc_key").isin(keys))
         .collect()
     }

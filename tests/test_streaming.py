@@ -11,13 +11,15 @@ from pyspark.sql import functions as F
 
 
 def _index_tables(spark, paths) -> dict:
-    """Blocks, wmetric and doc_stats of an index in a canonical row order."""
+    """Blocks, wmetric, doc_stats and doc_meta of an index in a canonical
+    row order."""
     return {
         name: spark.read.parquet(path).toPandas().sort_values(order).reset_index(drop=True)
         for name, path, order in (
             ("blocks", paths.blocks, ["term", "block_no"]),
             ("wmetric", paths.wmetric, ["term"]),
             ("doc_stats", paths.doc_stats, ["doc_key"]),
+            ("doc_meta", paths.doc_meta, ["doc_key"]),
         )
     }
 
@@ -35,9 +37,9 @@ def test_incremental_index_converges_to_batch(
     spark, xs_pdf, dictionary, tmp_path
 ):
     """Stream the corpus in two file drops; after refresh_global_stats and
-    the resumed build, the block index, wmetric and doc_stats equal a
-    one-shot batch build over the full corpus: bytes, ints and strings
-    exactly, float columns within 1e-9."""
+    the resumed build, the block index, wmetric, doc_stats and doc_meta
+    (with its stored doc_key) equal a one-shot batch build over the full
+    corpus: bytes, ints and strings exactly, float columns within 1e-9."""
     from holi_search_engine_spark.plans.index_build import build_index
     from holi_search_engine_spark.streaming.incremental import refresh_global_stats
 
@@ -299,3 +301,24 @@ def test_gate_stream_entries_drain_within_budget(spark):
         .count()
     )
     assert n_ded == exp
+
+
+def test_stream_refuses_drop_that_breaks_doc_key(spark, xs_pdf, dictionary, tmp_path):
+    """A drop whose conv_ids do not pack into the doc key ('conv-1' packs
+    to conv-00000001's key) stops the stream before it writes anything,
+    as the batch build refuses such a corpus: no doc key gains a second
+    row."""
+    from holi_search_engine_spark.plans.index_build import build_index
+
+    pdf = xs_pdf.copy()
+    pdf["ts"] = pdf["ts"].dt.tz_localize(None)
+    base = pdf[pdf["conv_id"] < "conv-00000003"]
+    paths = build_index(
+        spark, spark.createDataFrame(base), str(tmp_path / "idx"), dictionary, buckets=2
+    )
+    before = {p: spark.read.parquet(p).count() for p in (paths.term_tf, paths.doc_stats, paths.doc_meta)}
+    drop = base.assign(conv_id=base["conv_id"].str.replace("conv-0000000", "conv-"))
+    with pytest.raises(Exception, match="round-trip"):
+        _stream_in(spark, drop, tmp_path / "inbox", paths, dictionary, buckets=2)
+    for p, n in before.items():
+        assert spark.read.parquet(p).count() == n, p
