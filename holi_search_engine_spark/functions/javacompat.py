@@ -21,9 +21,8 @@ RE_QUERY_PUNCT = re.compile(r"[.,:;!?'\"\(\)-]")
 
 #: ``String.trim()`` strips chars <= U+0020 from both ends — NOT Unicode
 #: whitespace (NBSP survives), and MORE than Java regex ``\s`` (all control
-#: chars go).  Same class as a Java regex, for Spark ``regexp_replace``.
+#: chars go).
 _JAVA_TRIM_CHARS = "".join(chr(i) for i in range(0x21))
-JAVA_TRIM_PATTERN = r"^[\x00-\x20]+|[\x00-\x20]+$"
 
 #: Java regex ``\s`` is ASCII-only ``[ \t\n\x0B\f\r]`` (no
 #: UNICODE_CHARACTER_CLASS); Python's ``\s`` and ``str.split()`` are

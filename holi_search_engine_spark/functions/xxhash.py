@@ -19,6 +19,8 @@ microseconds with no job at all.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 _MASK = 0xFFFFFFFFFFFFFFFF
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -91,3 +93,10 @@ def term_bucket(term: str, buckets: int) -> int:
     assigns block partitions — Python's ``%`` on a positive modulus IS
     pmod (non-negative result for any sign of the hash)."""
     return xxhash64(term.encode("utf-8")) % buckets
+
+
+def term_bucket_expr(buckets: int):
+    """The build's block/term_tf partition of a ``term`` column:
+    ``pmod(xxhash64(term), buckets)`` as an int Catalyst expression, the
+    Spark-side twin of :func:`term_bucket`."""
+    return F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")

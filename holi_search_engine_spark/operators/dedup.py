@@ -396,6 +396,12 @@ def lsh_candidate_pairs(
     banded = banded.repartition(parts, "band", "sig").persist()
     if cache_registry is not None:
         cache_registry.append(banded)
+    # fill the cache before the self-join is planned: both sides then
+    # carry the table's real size, so AQE picks the join's build side
+    # from equal statistics instead of from whichever side's cache stage
+    # happened to finish first (which made the physical plan, and
+    # PLANS.md, differ from run to run)
+    banded.count()
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(

@@ -5,7 +5,7 @@ potentially-huge ``array<struct>`` row per term (a Zipf-head term at
 10^12-turn scale has ~10^11 postings — no single row/task may hold it),
 posting lists are stored as fixed-size **blocks**: one row per (term,
 block_no) with varbyte-compressed doc-key gaps and tfs plus skip metadata
-(min/max doc key, max tf, max tf/ntf partial-score bound for WAND).
+(min/max doc key and the block's BM25 partial-score bound for WAND).
 
 All encode/decode is numpy array math over Arrow batches — no per-row
 Python.  The reference has no compression at all (postings are ASCII
@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.xxhash import term_bucket_expr
 from ..sources.catalog import read_table, write_table
 
 BLOCK_SIZE = 128
@@ -101,11 +102,6 @@ def doc_key_columns(keys: np.ndarray, doc_cols: list[str]) -> dict:
     return {doc_cols[0]: keys}
 
 
-def doc_key_to_cols(keys: np.ndarray, doc_cols: list[str]) -> pd.DataFrame:
-    """Inverse of :func:`doc_key_expr` for surfacing results."""
-    return pd.DataFrame(doc_key_columns(keys, doc_cols))
-
-
 class DocKeyLookup:
     """doc_key → per-doc values via sorted-array binary search (a pandas
     reindex costs ~1µs/key in hash lookups; searchsorted is ~20ns).
@@ -177,7 +173,7 @@ def decode_block(doc_bytes: bytes, tf_bytes: bytes) -> tuple[np.ndarray, np.ndar
 
 BLOCK_SCHEMA = (
     "term string, block_no int, n int, key_min long, key_max long, "
-    "max_tf int, ub_tf_ntf double, ub_bm25 double, doc_bytes binary, tf_bytes binary"
+    "ub_bm25 double, doc_bytes binary, tf_bytes binary"
 )
 
 # BM25 knobs pinned at build time — the stored per-block upper bound
@@ -225,7 +221,6 @@ def _encode_frame(pdf: pd.DataFrame, bno0: int) -> pd.DataFrame:
     keys = pdf["doc_key"].to_numpy(dtype=np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64)
     tf_f = tfs.astype(np.float64)
-    ratio = tf_f / pdf["ntf"].to_numpy(dtype=np.float64)
     bm25 = tf_f * (BM25_K1 + 1.0) / (
         tf_f + BM25_K1 * pdf["bm25_norm"].to_numpy(dtype=np.float64)
     )
@@ -259,8 +254,6 @@ def _encode_frame(pdf: pd.DataFrame, bno0: int) -> pd.DataFrame:
             "n": counts.astype(np.int32),
             "key_min": keys[bs],
             "key_max": keys[be - 1],
-            "max_tf": np.maximum.reduceat(tfs, bs).astype(np.int32),
-            "ub_tf_ntf": np.maximum.reduceat(ratio, bs),
             "ub_bm25": np.maximum.reduceat(bm25, bs),
             "doc_bytes": [buf_d[s:e] for s, e in zip(off_d[bs], off_d[be])],
             "tf_bytes": [buf_t[s:e] for s, e in zip(off_t[bs], off_t[be])],
@@ -269,7 +262,7 @@ def _encode_frame(pdf: pd.DataFrame, bno0: int) -> pd.DataFrame:
 
 
 def _blocks_from_sorted(pdf_iter):
-    """mapInPandas kernel: consumes (term, doc_key, tf, ntf, bm25_norm)
+    """mapInPandas kernel: consumes (term, doc_key, tf, bm25_norm)
     rows sorted by (term, doc_key) within the partition and emits block
     rows.
 
@@ -339,7 +332,7 @@ def build_block_index(
     """Build the compressed block index (``bucket=None`` → all buckets in
     one job, a list/int → only those, pruned to their term_tf partitions).
 
-    Plan shape: bucket-pruned parquet scan of the (term, doc_key, tf, ntf, dl)
+    Plan shape: bucket-pruned parquet scan of the (term, doc_key, tf, dl)
     stream (or a caller's in-memory ``term_stream`` of the same columns) →
     repartition by term →
     sortWithinPartitions(term, doc_key) → mapInPandas block encoder →
@@ -363,7 +356,7 @@ def build_block_index(
     ).alias("bm25_norm")
     # per-doc stats ride on the token stream (tokenize emits them) — no
     # doc-keyed join, the term repartition is the ONLY shuffle
-    joined = term_tf.select("term", "doc_key", "tf", "ntf", norm)
+    joined = term_tf.select("term", "doc_key", "tf", norm)
     # 4 tasks per core: term-hash partitions are Zipf-skewed, so finer
     # granularity lets the scheduler even out the tail (a partition that
     # drew a head term finishes late; with 4× tasks the other cores keep
@@ -378,7 +371,5 @@ def build_block_index(
         from .index_build import read_meta
 
         buckets = read_meta(paths)["buckets"]
-    blocks = blocks.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-    )
+    blocks = blocks.withColumn("bucket", term_bucket_expr(buckets))
     write_table(blocks, paths.blocks, partition_by=["bucket"], dynamic=True)

@@ -45,6 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.xxhash import term_bucket_expr
 from ..sources.catalog import read_table, write_table
 
 DOC_COLS = ["conv_id", "turn_idx"]
@@ -303,9 +304,7 @@ def _build_index_inner(
         # per turn
         n_turns = check_doc_keys(transcripts)
         term_raw = tokenize_terms(transcripts, dictionary)
-        bucketed = term_raw.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-        )
+        bucketed = term_raw.withColumn("bucket", term_bucket_expr(buckets))
         obs = Observation("corpus_stats")
         observed = bucketed.observe(
             obs,
@@ -502,25 +501,10 @@ def _build_index_inner(
         # (doc, term) → count = df): a single-column pruned scan with
         # map-side partial aggregation, running concurrently under the
         # blocks encode instead of as a sequential re-read of the written
-        # index afterwards.  The quirk-Q3 artifact: df = df_true + 1,
-        # idf = ln(N / (df_true + 1)).
+        # index afterwards
         t0 = time.time()
         n_idf = read_meta(paths)["n_for_idf"]
-        df_per_term = (
-            read_table(spark, paths.term_tf)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df_true"))
-        )
-        write_table(
-            df_per_term.select(
-                "term",
-                (F.col("df_true") + F.lit(1)).alias("df"),
-                # F.log = StrictMath.log: platform-deterministic, <=1 ulp
-                # from the reference's Math.log (see build_wmetric docstring)
-                F.log(F.lit(float(n_idf)) / (F.col("df_true") + F.lit(1))).alias("idf"),
-            ),
-            paths.wmetric,
-        )
+        write_table(build_wmetric(read_table(spark, paths.term_tf), n_idf), paths.wmetric)
         _manifest_write(paths, "wmetric", {"wall_sec": time.time() - t0})
 
     stage2 = (

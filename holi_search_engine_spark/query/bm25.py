@@ -36,6 +36,12 @@ from ..plans.index_build import IndexPaths
 from .index_reader import IndexReader
 
 
+def bm25_terms(query: str) -> list[str]:
+    """The BM25 query terms: punctuation → space, lowercased, split on
+    whitespace, duplicates dropped in first-seen order."""
+    return list(dict.fromkeys(_RE_PUNCT.sub(" ", query).strip().lower().split()))
+
+
 def bm25_idf(n_docs: int, df: int) -> float:
     """Robertson-Sparck-Jones idf with the +1 floor (Lucene form)."""
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
@@ -259,21 +265,11 @@ class BM25Engine:
     def total_blocks(self, query: str) -> int:
         """Number of index blocks the query's terms hold in total (the
         decode count a skip-free scorer would pay)."""
-        terms = self._tokenize(query)
+        terms = bm25_terms(query)
         self.reader.fetch(terms)
         return sum(
             len(g) for g in (self.reader.blocks(t) for t in terms) if g is not None
         )
-
-    def _tokenize(self, query: str) -> list[str]:
-        words = _RE_PUNCT.sub(" ", query).strip().lower().split()
-        seen: set[str] = set()
-        out: list[str] = []
-        for w in words:
-            if w not in seen:
-                seen.add(w)
-                out.append(w)
-        return out
 
     def _weight(self, term: str) -> float:
         return bm25_idf(self.n_docs, self.reader.df(term))
@@ -283,7 +279,7 @@ class BM25Engine:
         query term.  Uses :func:`block_sweep_topk_and`, whose gap prune
         skips hot terms' blocks between the rarest term's docs without
         decoding; dense conjunctions route to the vectorized path."""
-        terms = self._tokenize(query)
+        terms = bm25_terms(query)
         self.reader.fetch(terms)
         term_blocks = [(t, self.reader.blocks(t)) for t in terms]
         if any(g is None for _, g in term_blocks) or not term_blocks:
@@ -313,7 +309,7 @@ class BM25Engine:
         """Exhaustive conjunctive scoring: per-doc sums kept only where
         every term matched (each term contributes one posting per doc, so
         the match count equals the term count exactly there)."""
-        terms = self._tokenize(query)
+        terms = bm25_terms(query)
         self.reader.fetch(terms)
         key_parts: list[np.ndarray] = []
         score_parts: list[np.ndarray] = []
@@ -340,7 +336,7 @@ class BM25Engine:
         than WAND when the query's posting mass is dense (stopword-heavy
         queries score nearly every document, so skipping buys nothing and
         the per-pivot loop loses to array math)."""
-        terms = self._tokenize(query)
+        terms = bm25_terms(query)
         self.reader.fetch(terms)
         key_parts: list[np.ndarray] = []
         score_parts: list[np.ndarray] = []
@@ -400,7 +396,7 @@ class BM25Engine:
         """Exact BM25 top-k: block-max WAND with block-granular skipping,
         switching to the vectorized exhaustive path for dense queries
         (both are exact with the same doc-asc tie-break)."""
-        terms = self._tokenize(query)
+        terms = bm25_terms(query)
         self.reader.fetch(terms)
         term_blocks = [(t, self.reader.blocks(t)) for t in terms]
         total = sum(self.reader.df(t) for t, g in term_blocks if g is not None)

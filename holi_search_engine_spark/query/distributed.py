@@ -1,8 +1,7 @@
-"""Distributed reference-semantics and BM25 search: the same Ranker steps
-1-11 as ``query/ranker.py``, and the same block-max sweep as
-``query/bm25.py``, executed as Spark jobs over the block index — the path
-a 10^12-turn corpus needs when a Zipf-head term's posting list cannot sit
-in driver memory.
+"""Distributed reference-semantics and BM25 search over the block index —
+the path a 10^12-turn corpus needs when a Zipf-head term's posting list
+cannot sit in driver memory.  Spark runs what grows with the corpus; the
+per-query work on a bounded set of docs runs the single-node code.
 
 Each semantics has ONE plan, and it scores a batch of queries; a single
 query is a batch of one (:meth:`DistributedRanker.search`,
@@ -18,116 +17,34 @@ Reference-semantics plan (:meth:`DistributedRanker.search_many`):
   expansion (re-run with stopwords included when candidates < 50,
   ``Ranker.java:177-200``) for every query at once;
 - top-250 occurrence cut per query (rank window);
-- scoring joins against broadcast idf + doc-keyed ntf/doc_meta.
+- one collect of the cut: per (query, doc) its occurrence, its
+  term → tf map without the Q5-dropped hit, and its ntf, title and rank
+  from left joins on the stored ``doc_key``.  The driver scores each
+  query's cut with :func:`~.ranker.score_cut`, the scorer of
+  ``RankerEngine.search``, so the two tiers answer bit-identically.
 
 BM25 plan (:func:`distributed_bm25_topk_many`): one doc-key-range cogroup
-whose kernel sweeps every query's blocks per range, then a driver merge
-of the per-range local top-ks.
+whose kernel runs the single-node :func:`~.bm25.block_sweep_topk` for
+every query per range, then a driver merge of the per-range local top-ks.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.javacompat import (
-    JAVA_TRIM_PATTERN,
-    RE_QUERY_PUNCT as _RE_PUNCT,
-    java_hashset_order,
-    java_query_tokens,
-)
 from ..functions.xxhash import term_bucket
-import numpy as np
-
-from ..plans.compression import DocKeyLookup, decode_block, doc_key_to_cols
+from ..plans.compression import DocKeyLookup, decode_block, doc_key_columns
 from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
-from .ranker import EXPAND_THRESHOLD, TOP_CUT
-from .stopwords import STOPWORDS
-
-#: the canonical pattern string, reused verbatim as a Java regex in
-#: regexp_replace (character class only — identical semantics)
-_PUNCT_PATTERN = _RE_PUNCT.pattern
+from .bm25 import BM25_B, _TermSweep, bm25_idf, bm25_terms, block_sweep_topk
+from .ranker import EXPAND_THRESHOLD, TOP_CUT, empty_result, plan_query, score_cut
 
 _DECODE_SCHEMA = "term string, doc_key long, tf double"
 
 
-def _query_meta(query: str) -> dict | None:
-    """The reference's query preamble for one query of a
-    :meth:`~DistributedRanker.search_many` batch: the quirk ordering
-    (COLLECTION-constructor HashSet order for the expansion pass, add-loop
-    order for the first pass — Q11).  None ⇔ no tokens (Java's
-    ``words.length < 1`` guard)."""
-    words = java_query_tokens(query)  # Java trim + ASCII-\s split
-    if not words:
-        return None
-    words_set_order = java_hashset_order(words, initial_from_collection=True)
-    words_sw = [w for w in words_set_order if w not in STOPWORDS]
-    removed = [w for w in words_set_order if w in STOPWORDS]
-    if not words_sw:
-        words_sw = removed
-    word_count: dict[str, int] = {}
-    for w in words:
-        word_count[w] = word_count.get(w, 0) + 1
-    return {
-        "query": query,
-        "words": words,
-        "words_set_order": words_set_order,
-        "first_order": java_hashset_order(words_sw),
-        "sw_set": list(dict.fromkeys(words_sw)),
-        "word_count": word_count,
-    }
-
-
-def _keyword_bonus_expr(qraw, sw_set, n_sw):
-    """The reference's title keyword bonus (``Ranker.java:223-232``) over
-    per-query COLUMN operands: full-substring 10.0, else overlap ≥ 0.6 →
-    overlap·10, else 0.  ``array_intersect`` dedups, so no
-    array_distinct is needed."""
-    n_overlap = F.size(F.array_intersect(_title_tokens_expr(), sw_set))
-    overlap = F.when(
-        n_sw > F.lit(0), n_overlap.cast("double") / n_sw
-    ).otherwise(F.lit(0.0))
-    return (
-        F.when(F.col("title").contains(qraw), F.lit(10.0))
-        .when(overlap >= 0.6, overlap * 10)
-        .otherwise(F.lit(0.0))
-    )
-
-
-def _final_score_expr(kw):
-    """``Ranker.java:255``: 3·tf-idf + 0.75·pagerank + keyword bonus."""
-    return 3 * F.col("weight") + 0.75 * F.col("page_rank") + kw
-
-
-def _title_tokens_expr():
-    """Token-set of the ``title`` column under the REFERENCE's
-    tokenization (``Ranker.java:223``): punctuation → space, Java trim
-    (chars <= U+0020), split on Java ``\\s+`` (ASCII-only —
-    regexp_replace/split run Java regex on the JVM, so ``\\s+`` and the
-    trim class are exact).  ς→σ folds the final-sigma forms like
-    ``java_query_tokens`` does on the query side (see
-    ``functions/javacompat.py`` — Spark's lower() and Java's toLowerCase
-    disagree on the contextual rule)."""
-    return F.split(
-        F.regexp_replace(
-            F.lower(
-                F.regexp_replace(
-                    F.regexp_replace("title", _PUNCT_PATTERN, " "),
-                    JAVA_TRIM_PATTERN,
-                    "",
-                )
-            ),
-            "ς",
-            "σ",
-        ),
-        r"\s+",
-    )
-
-
 def _decode_blocks(batches):
-    import numpy as np
-
     for pdf in batches:
         if not len(pdf):
             continue
@@ -169,23 +86,6 @@ class DistributedRanker:
         over a batch of one, without the ``query_id`` column."""
         return self.search_many([query], limit).drop(columns="query_id")
 
-    def _empty(self) -> pd.DataFrame:
-        cols = [*self.doc_cols, "doc_key", "occurrence", "tf_idf_weight",
-                "page_rank", "keyword_match", "score"]
-        out = pd.DataFrame(columns=cols)
-        out.insert(0, "query_id", pd.Series([], dtype="int32"))
-        return out
-
-    def _with_pagerank(self, base: DataFrame) -> DataFrame:
-        """Static prior 0.75·pagerank (``Ranker.java:255``): per-candidate
-        join against the doc-keyed pageranks artifact when built, else 0."""
-        if self._has_pagerank:
-            pr = read_table(self.spark, self.paths.pageranks).select(
-                "doc_key", F.col("rank").alias("page_rank")
-            )
-            return base.join(pr, "doc_key", "left").na.fill({"page_rank": 0.0})
-        return base.withColumn("page_rank", F.lit(0.0))
-
     def _postings_df_many(self, qid_orders: dict[int, list[str]]) -> DataFrame:
         """(query_id, term, ord, doc_key, tf) for MANY queries' lookup
         lists in one block scan: the scan prunes to the UNION of the
@@ -218,33 +118,25 @@ class DistributedRanker:
         """Reference-semantics search for a BATCH of queries in 3 Spark
         actions however many queries it holds: one pooled candidate-count
         action (all queries' first passes in one scan), one pruned
-        wmetric read for the union of the batch's words, and one
-        scoring/collect job, which also re-scans the blocks for just the
+        wmetric read for the union of the batch's words, and one collect
+        of the cut docs, which also re-scans the blocks for just the
         queries the reference's ``numResults < 50`` branch re-runs.
 
-        Semantics per query follow ``Ranker.java`` (expansion control
-        flow, Q5 first-term drop per query, Q8 absent-idf zero, the Java
-        NaN-poisoning quirk, title keyword bonus on the RAW query string,
-        0.75·pagerank prior) — pinned against the oracle and the
-        single-node engine in ``tests/test_distributed.py``, including
-        NaN-set equality.  The per-query score-sum order is
-        Spark-aggregation order (ulp-level vs the HashMap-order
-        single-node engine, Q12).  Output adds a leading ``query_id``
-        (position in ``queries``); rows per query are in (score desc,
-        doc_key asc) order with NaN scores first, as Spark's desc sort
-        places them, and ``limit`` applies per query.  Queries with no
-        tokens or no candidates contribute zero rows.  The cached
-        postings are released on every exit.
+        Spark builds each query's 250-doc cut (expansion control flow, Q5
+        first-term drop per query); the driver scores it with
+        :func:`~.ranker.score_cut`, the scorer of ``RankerEngine.search``,
+        so each query's rows equal its single-node answer exactly.
+        Output adds a leading ``query_id`` (position in ``queries``);
+        ``limit`` applies per query.  Queries with no candidates
+        contribute zero rows.  The cached postings are released on every
+        exit.
         """
         from pyspark.sql import Window
 
-        metas: dict[int, dict] = {}
-        for qid, query in enumerate(queries):
-            qm = _query_meta(query)
-            if qm is not None:
-                metas[qid] = qm
-        if not metas:
-            return self._empty()
+        plans = {qid: plan_query(q) for qid, q in enumerate(queries)}
+        plans = {qid: p for qid, p in plans.items() if p is not None}
+        if not plans:
+            return self._no_rows()
 
         def candidates(hits: DataFrame) -> DataFrame:
             return hits.groupBy("query_id", "doc_key").agg(
@@ -253,7 +145,7 @@ class DistributedRanker:
             )
 
         hits1 = self._postings_df_many(
-            {qid: m["first_order"] for qid, m in metas.items()}
+            {qid: p.first_order for qid, p in plans.items()}
         ).cache()
         hits2 = None
         try:
@@ -272,22 +164,22 @@ class DistributedRanker:
             # the Q5 tf-drops
             expand = {
                 qid
-                for qid, m in metas.items()
+                for qid, p in plans.items()
                 if counts.get(qid, 0) < EXPAND_THRESHOLD
-                and m["first_order"] != m["words_set_order"]
+                and p.first_order != p.words_set_order
             }
             # a query with no first-pass candidates that does not expand
             # has no rows (the reference's numResults == 0 return)
-            metas = {
-                qid: m for qid, m in metas.items() if qid in counts or qid in expand
+            plans = {
+                qid: p for qid, p in plans.items() if qid in counts or qid in expand
             }
-            if not metas:
-                return self._empty()
+            if not plans:
+                return self._no_rows()
             if expand:
                 hits2 = self._postings_df_many(
-                    {qid: metas[qid]["words_set_order"] for qid in expand}
+                    {qid: plans[qid].words_set_order for qid in expand}
                 ).cache()
-                keep1 = [qid for qid in metas if qid not in expand]
+                keep1 = [qid for qid in plans if qid not in expand]
                 hits = hits1.where(F.col("query_id").isin(keep1)).unionByName(hits2)
                 cand = cand.where(F.col("query_id").isin(keep1)).unionByName(
                     candidates(hits2)
@@ -304,119 +196,74 @@ class DistributedRanker:
                 .drop("_rk")
             )
 
-            # idfs resolved driver-side in ONE pruned read so the Java NaN
-            # quirk below is decidable per query before the plan is built
-            union_words = sorted(
-                {w for m in metas.values() for w in m["word_count"]}
-            )
             wm_pdf = (
                 read_table(self.spark, self.paths.wmetric)
-                .where(F.col("term").isin(union_words))
+                .where(F.col("term").isin(sorted(
+                    {w for p in plans.values() for w in p.word_count}
+                )))
                 .select("term", "idf")
                 .toPandas()
             )
-            idf_map = dict(zip(wm_pdf["term"], wm_pdf["idf"]))
-            # Ranker.java:249 accumulates qtf·pow(idf,1.5)·wf over EVERY
-            # query word for EVERY candidate, with wf = 0 when the word
-            # misses the doc — and Java's NaN·0.0 = NaN, so one
-            # negative-idf word (Q3: df == n gives ln(n/(n+1)) < 0)
-            # poisons every candidate's weight, including ones the scoring
-            # join would lose to an absent ntf row; those queries skip the
-            # scoring joins entirely
-            poisoned = {
-                qid
-                for qid, m in metas.items()
-                if any(float(idf_map.get(t, 0.0)) < 0.0 for t in m["word_count"])
-            }
-            healthy = [qid for qid in metas if qid not in poisoned]
-            parts = []
-            if poisoned:
-                parts.append(
-                    cut.where(F.col("query_id").isin(sorted(poisoned))).select(
-                        "query_id",
-                        "doc_key",
-                        "occurrence",
-                        F.lit(float("nan")).alias("weight"),
-                    )
-                )
-            if healthy:
-                ntf = read_table(self.spark, self.paths.doc_stats).select(
-                    "doc_key", "ntf"
-                )
-                qdf = self.spark.createDataFrame(
-                    [
-                        (qid, t, c, float(idf_map.get(t, 0.0)))  # Q8: absent → 0
-                        for qid in healthy
-                        for t, c in metas[qid]["word_count"].items()
-                    ],
-                    "query_id int, term string, qtf int, idf double",
-                )
-                # Q5: rows whose ord == first_ord contribute 0 (tf dropped)
-                weight_sum = F.sum(
-                    F.when(F.col("ord") == F.col("first_ord"), F.lit(0.0)).otherwise(
-                        F.col("qtf") * F.pow("idf", 1.5) * F.col("tf") / F.col("ntf")
-                    )
-                )
-                # one aggregation over the cut's hits; a doc without an
-                # ntf row keeps weight 0 (the sum of nulls is filled)
-                parts.append(
-                    cut.where(F.col("query_id").isin(healthy))
-                    .join(hits, ["query_id", "doc_key"])
-                    .join(F.broadcast(qdf), ["query_id", "term"])
-                    .join(ntf, "doc_key", "left")
-                    .groupBy("query_id", "doc_key", "occurrence")
-                    .agg(weight_sum.alias("weight"))
-                    .na.fill({"weight": 0.0})
-                )
-            base = parts[0]
-            for p in parts[1:]:
-                base = base.unionByName(p)
+            idf = {t: float(i) for t, i in zip(wm_pdf["term"], wm_pdf["idf"])}
 
-            meta_df = read_table(self.spark, self.paths.doc_meta).select(
-                "doc_key", "title"
+            # one row per cut doc: its tfs by term, Q5's dropped hit (the
+            # first term in lookup order) left out, and its per-doc values
+            kept_tf = F.when(
+                F.col("ord") != F.col("first_ord"), F.struct("term", "tf")
             )
-            qmeta = self.spark.createDataFrame(
-                [
-                    (qid, m["query"], m["sw_set"], len(m["sw_set"]))
-                    for qid, m in metas.items()
-                ],
-                "query_id int, qraw string, sw_set array<string>, n_sw int",
+            rows = (
+                cut.join(hits, ["query_id", "doc_key"])
+                .groupBy("query_id", "doc_key", "occurrence")
+                .agg(F.map_from_entries(F.collect_list(kept_tf)).alias("tf_by_term"))
+                .join(self._doc_table(self.paths.doc_stats, "ntf"), "doc_key", "left")
+                .join(self._doc_table(self.paths.doc_meta, "title"), "doc_key", "left")
             )
-            # sw_set is never empty (the stopword fallback guarantees it)
-            kw = _keyword_bonus_expr(F.col("qraw"), F.col("sw_set"), F.col("n_sw"))
-            base = self._with_pagerank(
-                base.join(meta_df, "doc_key", "left").join(
-                    F.broadcast(qmeta), "query_id"
+            if self._has_pagerank:
+                rows = rows.join(
+                    self._doc_table(self.paths.pageranks, "rank"), "doc_key", "left"
                 )
-            )
-            pdf = base.select(
-                "query_id",
-                "doc_key",
-                "occurrence",
-                F.col("weight").alias("tf_idf_weight"),
-                "page_rank",
-                kw.alias("keyword_match"),
-                _final_score_expr(kw).alias("score"),
-            ).toPandas()
+            pdf = rows.toPandas()
         finally:
             hits1.unpersist()
             if hits2 is not None:
                 hits2.unpersist()
-        # ≤ TOP_CUT rows per query: rank driver-side (score desc with NaN
-        # first, as Spark's desc sort places it; doc_key asc)
-        pdf = pdf.sort_values(
-            ["query_id", "score", "doc_key"],
-            ascending=[True, False, True],
-            na_position="first",
-            kind="mergesort",
-        )
-        if limit is not None:
-            pdf = pdf.groupby("query_id", sort=False).head(limit)
-        keys = pdf["doc_key"].to_numpy(dtype=np.int64)
-        out = doc_key_to_cols(keys, self.doc_cols)
-        qcol = pdf.pop("query_id").astype("int32")
-        out = pd.concat([out.reset_index(drop=True), pdf.reset_index(drop=True)], axis=1)
-        out.insert(0, "query_id", qcol.reset_index(drop=True))
+
+        parts = []
+        for qid, g in pdf.groupby("query_id", sort=True):
+            keys = g["doc_key"].to_numpy(dtype=np.int64)
+            tfs: dict[str, np.ndarray] = {}
+            for i, tf_by_term in enumerate(g["tf_by_term"]):
+                for t, tf in tf_by_term.items():
+                    if t not in tfs:
+                        tfs[t] = np.full(len(keys), np.nan)
+                    tfs[t][i] = tf
+            if self._has_pagerank:
+                rank = g["rank"].to_numpy(dtype=np.float64)
+                page_rank = np.where(np.isnan(rank), 0.0, rank)
+            else:
+                page_rank = np.zeros(len(keys), dtype=np.float64)
+            part = score_cut(
+                plans[qid],
+                keys,
+                g["occurrence"].to_numpy(dtype=np.int64),
+                tfs,
+                idf,
+                g["ntf"].to_numpy(dtype=np.float64),
+                [t if isinstance(t, str) else "" for t in g["title"]],
+                page_rank,
+                self.doc_cols,
+                limit,
+            )
+            part.insert(0, "query_id", np.full(len(part), qid, dtype=np.int32))
+            parts.append(part)
+        return pd.concat(parts, ignore_index=True) if parts else self._no_rows()
+
+    def _doc_table(self, path: str, col: str) -> DataFrame:
+        return read_table(self.spark, path).select("doc_key", col)
+
+    def _no_rows(self) -> pd.DataFrame:
+        out = empty_result(self.doc_cols)
+        out.insert(0, "query_id", pd.Series([], dtype="int32"))
         return out
 
 
@@ -457,8 +304,6 @@ def _bm25_scan_frames(
     term-pushed block scan, and the broadcast range joins.  Returns
     ``(w_by_term, blocks, dl_r)`` or None when nothing can score (no
     indexed terms / empty corpus)."""
-    from .bm25 import bm25_idf
-
     n_docs = meta["n_docs"]
     wm = (
         read_table(spark, paths.wmetric)
@@ -533,14 +378,12 @@ def distributed_bm25_local_topk_many(
     no query can produce rows (no terms / no matching terms / empty
     corpus).  ``meta`` lets the caller share its one artifact read.
     """
-    from .bm25 import BM25_B, _TermSweep, block_sweep_topk
-
     if meta is None:
         meta = read_meta(paths)
     avgdl = meta.get("avgdl") or 1.0
     per_q_terms: dict[int, list[str]] = {}
     for qid, q in enumerate(queries):
-        terms = list(dict.fromkeys(_RE_PUNCT.sub(" ", q).strip().lower().split()))
+        terms = bm25_terms(q)
         if terms:
             per_q_terms[qid] = terms
     union_terms = sorted({t for ts in per_q_terms.values() for t in ts})
@@ -661,9 +504,13 @@ def distributed_bm25_topk_many(
 
     meta = read_meta(paths)
     doc_cols = meta["doc_cols"]
-    empty = doc_key_to_cols(np.array([], dtype=np.int64), doc_cols)
-    empty.insert(0, "query_id", pd.Series([], dtype="int32"))
-    empty["score"] = pd.Series([], dtype="float64")
+    empty = pd.DataFrame(
+        {
+            "query_id": pd.Series([], dtype="int32"),
+            **doc_key_columns(np.array([], dtype=np.int64), doc_cols),
+            "score": pd.Series([], dtype="float64"),
+        }
+    )
     local = distributed_bm25_local_topk_many(
         spark, paths, queries, k, n_ranges, meta=meta
     )
@@ -692,10 +539,15 @@ def distributed_bm25_topk_many(
         top = g.sort_values(
             ["score", "doc_key"], ascending=[False, True], kind="mergesort"
         ).head(k)
-        part = doc_key_to_cols(top["doc_key"].to_numpy(dtype=np.int64), doc_cols)
-        part.insert(0, "query_id", np.full(len(part), qid, dtype=np.int32))
-        part["score"] = top["score"].to_numpy(dtype=np.float64)
-        out_parts.append(part)
+        out_parts.append(
+            pd.DataFrame(
+                {
+                    "query_id": np.full(len(top), qid, dtype=np.int32),
+                    **doc_key_columns(top["doc_key"].to_numpy(dtype=np.int64), doc_cols),
+                    "score": top["score"].to_numpy(dtype=np.float64),
+                }
+            )
+        )
     return pd.concat(out_parts, ignore_index=True)
 
 

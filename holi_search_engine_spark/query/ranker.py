@@ -12,16 +12,21 @@ Two execution modes:
   ``Ranker.java:231-251`` issues O(250·|q|) gets), else term- and
   key-pruned parquet reads per query.  Postings are decoded and scored
   with numpy; the answer is one DataFrame built at the end.
-- ``distributed``: candidate generation and scoring run as a Spark job —
+- ``distributed``: candidate generation and the cut run as Spark jobs —
   the path a 10^12-turn corpus needs when a Zipf-head term's posting list
   exceeds driver memory (``query/distributed.py``).
 
-Candidates are cut to the top 250 by occurrence with the normalized
-tie-break (doc key asc) before scoring, as in the reference
-(``Ranker.java:204-205``).
+The reference ranker splits at the cut: candidates are cut to the top 250
+by occurrence with the normalized tie-break (doc key asc) before scoring,
+as in the reference (``Ranker.java:204-205``).  Only candidate generation
+grows with the corpus.  Both tiers share the rest: :func:`plan_query` is
+the query preamble and :func:`score_cut` scores and ranks a cut, so the
+two tiers' answers are bit-identical.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -38,6 +43,114 @@ from .stopwords import STOPWORDS
 TOP_CUT = 250  # Ranker.java:205
 EXPAND_THRESHOLD = 50  # Ranker.java:179,190
 PAGE_SIZE = 10  # Ranker.java:257
+
+
+class QueryPlan(NamedTuple):
+    """The reference's query preamble (``Ranker.java:152-176,207-210``)."""
+
+    query: str  # raw, for the title-substring bonus
+    #: the expansion pass's order: a COLLECTION-constructed HashSet sized
+    #: from the raw token count (Q11)
+    words_set_order: list[str]
+    #: the first pass's order: an add-loop HashSet of the non-stopwords
+    #: (all words when every word is a stopword)
+    first_order: list[str]
+    sw_set: set[str]  # the title bonus's word set; never empty
+    word_count: dict[str, int]  # qtf over ALL raw words incl. stopwords
+
+
+def plan_query(query: str) -> QueryPlan | None:
+    """The preamble of one query; None ⇔ no tokens (Java's
+    ``words.length < 1`` guard — unreachable, as ``split`` never returns
+    an empty array)."""
+    words = java_query_tokens(query)
+    if not words:
+        return None
+    words_set_order = java_hashset_order(words, initial_from_collection=True)
+    words_sw = [w for w in words_set_order if w not in STOPWORDS]
+    if not words_sw:
+        words_sw = [w for w in words_set_order if w in STOPWORDS]
+    word_count: dict[str, int] = {}
+    for w in words:
+        word_count[w] = word_count.get(w, 0) + 1
+    return QueryPlan(
+        query,
+        words_set_order,
+        java_hashset_order(words_sw),
+        set(words_sw),
+        word_count,
+    )
+
+
+def empty_result(doc_cols: list[str]) -> pd.DataFrame:
+    """The answer of a query without candidates."""
+    return pd.DataFrame(columns=[*doc_cols, "doc_key", "occurrence", "tf_idf_weight",
+                                 "page_rank", "keyword_match", "score"])
+
+
+def score_cut(
+    plan: QueryPlan,
+    keys: np.ndarray,
+    occ: np.ndarray,
+    tfs: dict[str, np.ndarray],
+    idf: dict[str, float],
+    ntf: np.ndarray,
+    titles: list[str],
+    page_rank: np.ndarray,
+    doc_cols: list[str],
+    limit: int | None = None,
+) -> pd.DataFrame:
+    """Score one query's ≤ 250-doc cut (``Ranker.java:207-255``) and rank
+    it: the one scorer of both tiers.  Per cut doc (any order): ``keys``
+    and ``occ``; per matched term its tf (NaN where the term misses the
+    doc or Q5 dropped it); ``ntf`` (NaN without a row); ``titles`` (``""``
+    for a missing row or null title); ``page_rank`` (0 without a prior).
+    ``idf`` holds the query words' idfs; an absent word scores idf 0
+    (Q8).  Rows come back by score desc, doc key asc, NaN scores last in
+    doc-key order; ``limit`` truncates after ranking."""
+    weight = np.zeros(len(keys), dtype=np.float64)
+    nan_col = np.full(len(keys), np.nan)
+    # Java accumulates over wordCount.entrySet() in HashMap bucket
+    # order (Ranker.java:232-249); float addition is non-associative,
+    # so the iteration order is part of bit-exactness (pinned against
+    # the compiled reference in tests/test_javadiff_scoring.py)
+    for w in java_hashmap_value_order(list(plan.word_count)):
+        qtf = plan.word_count[w]
+        w_idf = idf.get(w, 0.0)
+        # Java Math.pow semantics (Ranker.java:249): negative base with
+        # fractional exponent is NaN.  Python float ** returns a complex
+        # here, which crashed the weight accumulation for any
+        # corpus-ubiquitous term (Q3's df+1 makes idf = ln(n/(n+1)) < 0
+        # when df == n); Java's NaN·0.0 = NaN then poisons every doc.
+        idf_pow = w_idf ** 1.5 if w_idf >= 0.0 else float("nan")
+        tf = tfs.get(w, nan_col)
+        wf = np.where(np.isnan(tf) | (ntf == 0) | np.isnan(ntf), 0.0, tf / np.where(ntf == 0, 1, ntf))
+        weight += qtf * idf_pow * wf
+    # title bonus (Ranker.java:211-230)
+    n_sw = len(plan.sw_set)
+    kw = np.zeros(len(keys), dtype=np.float64)
+    for i, title in enumerate(titles):
+        if plan.query in title:
+            kw[i] = 10.0
+            continue
+        # Ranker.java:223 normalizes each title like the query
+        overlap = len(plan.sw_set.intersection(java_query_tokens(title))) / n_sw
+        if overlap >= 0.6:
+            kw[i] = overlap * 10
+    # static prior: 0.75·pagerank (Ranker.java:255)
+    score = 3 * weight + 0.75 * page_rank + kw
+    rank = np.lexsort((keys, -score))[:limit]
+    return pd.DataFrame(
+        {
+            **doc_key_columns(keys[rank], doc_cols),
+            "doc_key": keys[rank],
+            "occurrence": occ[rank],
+            "tf_idf_weight": weight[rank],
+            "page_rank": page_rank[rank],
+            "keyword_match": kw[rank],
+            "score": score[rank],
+        }
+    )
 
 
 class RankerEngine:
@@ -159,18 +272,12 @@ class RankerEngine:
         """Full ranked results (reference steps 1-11); ``limit`` truncates
         after ranking (pagination is a driver-side slice, as in the
         reference)."""
-        words = java_query_tokens(query)  # Java trim + ASCII-\s split
-        if not words:  # unreachable, like Java's words.length < 1 guard
-            return self._empty_result()
-        words_set_order = java_hashset_order(words, initial_from_collection=True)
-        words_sw = [w for w in words_set_order if w not in STOPWORDS]
-        removed = [w for w in words_set_order if w in STOPWORDS]
-        if not words_sw:
-            words_sw = removed
-        first_order = java_hashset_order(words_sw)
+        plan = plan_query(query)
+        if plan is None:
+            return empty_result(self.doc_cols)
         # the idfs of every query word ride the first pass's fetch
-        self.reader.fetch(first_order, stats_only=words_set_order)
-        keys, occ, tfs = self._candidates(first_order)
+        self.reader.fetch(plan.first_order, stats_only=plan.words_set_order)
+        keys, occ, tfs = self._candidates(plan.first_order)
         # expansion (Q4 makes the stemmed branch a no-op).  The reference
         # re-runs candidate generation over words_set whose ITERATION
         # ORDER is the collection-constructor bucket order (capacity sized
@@ -181,69 +288,26 @@ class RankerEngine:
         # a capacity boundary (e.g. 13+ raw tokens, <=12 distinct)
         # iterates the re-run differently and shifts the Q5 tf-drops even
         # when no stopword was removed.
-        if len(keys) < EXPAND_THRESHOLD and first_order != words_set_order:
-            self.reader.fetch(words_set_order)
-            keys, occ, tfs = self._candidates(words_set_order)
+        if len(keys) < EXPAND_THRESHOLD and plan.first_order != plan.words_set_order:
+            self.reader.fetch(plan.words_set_order)
+            keys, occ, tfs = self._candidates(plan.words_set_order)
         if not len(keys):
-            return self._empty_result()
+            return empty_result(self.doc_cols)
         # pre-rank: occurrence desc, doc key asc (normalized tie-break), cut 250
         cut = np.lexsort((keys, -occ))[:TOP_CUT]
-        keys, occ = keys[cut], occ[cut]
-        ntf = self._ntf_for(keys)
-        # qtf over ALL raw query words incl. stopwords (Ranker.java:207-210)
-        word_count: dict[str, int] = {}
-        for w in words:
-            word_count[w] = word_count.get(w, 0) + 1
-        weight = np.zeros(len(keys), dtype=np.float64)
-        # Java accumulates over wordCount.entrySet() in HashMap bucket
-        # order (Ranker.java:232-249); float addition is non-associative,
-        # so the iteration order is part of bit-exactness (pinned against
-        # the compiled reference in tests/test_javadiff_scoring.py)
-        for w in java_hashmap_value_order(list(word_count)):
-            qtf = word_count[w]
-            idf = self.reader.idf(w)  # Q8: absent → 0
-            # Java Math.pow semantics (Ranker.java:249 / the distributed
-            # twin's F.pow): negative base with fractional exponent is NaN.
-            # Python float ** returns a complex here, which crashed the
-            # weight accumulation for any corpus-ubiquitous term (Q3's
-            # df+1 makes idf = ln(n/(n+1)) < 0 when df == n).
-            idf_pow = idf ** 1.5 if idf >= 0.0 else float("nan")
-            tf = tfs[w][cut] if w in tfs else np.full(len(keys), np.nan)
-            wf = np.where(np.isnan(tf) | (ntf == 0) | np.isnan(ntf), 0.0, tf / np.where(ntf == 0, 1, ntf))
-            weight += qtf * idf_pow * wf
-        # title bonus (Ranker.java:211-230); words_sw is never empty here
-        # (the all-stopword query falls back to the removed words above)
-        sw_set = set(words_sw)
-        kw = np.zeros(len(keys), dtype=np.float64)
-        for i, title in enumerate(self._titles_for(keys)):
-            if query in title:
-                kw[i] = 10.0
-                continue
-            # Ranker.java:223 normalizes each title like the query
-            overlap = len(sw_set.intersection(java_query_tokens(title))) / len(sw_set)
-            if overlap >= 0.6:
-                kw[i] = overlap * 10
-        # static prior: 0.75·pagerank (Ranker.java:255); zeros unless the
-        # optional pageranks artifact was built (build_reply_pagerank)
-        page_rank = self._pagerank_for(keys)
-        score = 3 * weight + 0.75 * page_rank + kw
-        rank = np.lexsort((keys, -score))[:limit]
-        return pd.DataFrame(
-            {
-                **doc_key_columns(keys[rank], self.doc_cols),
-                "doc_key": keys[rank],
-                "occurrence": occ[rank],
-                "tf_idf_weight": weight[rank],
-                "page_rank": page_rank[rank],
-                "keyword_match": kw[rank],
-                "score": score[rank],
-            }
+        keys = keys[cut]
+        return score_cut(
+            plan,
+            keys,
+            occ[cut],
+            {t: col[cut] for t, col in tfs.items()},
+            {w: self.reader.idf(w) for w in plan.word_count},
+            self._ntf_for(keys),
+            self._titles_for(keys),
+            self._pagerank_for(keys),
+            self.doc_cols,
+            limit,
         )
-
-    def _empty_result(self) -> pd.DataFrame:
-        cols = [*self.doc_cols, "doc_key", "occurrence", "tf_idf_weight",
-                "page_rank", "keyword_match", "score"]
-        return pd.DataFrame(columns=cols)
 
     def search_page(self, query: str, page: int = 1) -> pd.DataFrame:
         """Reference pagination: 10 results/page (``Ranker.java:256-279``)."""

@@ -25,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.xxhash import term_bucket_expr
 from ..plans.index_build import (
     IndexPaths,
     _manifest_path,
@@ -74,9 +75,7 @@ def stream_transcript_deltas(
         # the same kernel as the batch build, so the delta's schema is
         # term_tf's (fd dropped pre-write)
         term_tf = tokenize_terms(batch_df, dictionary).cache()
-        bucketed = term_tf.drop("fd").withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-        )
+        bucketed = term_tf.drop("fd").withColumn("bucket", term_bucket_expr(buckets))
         touched = [r["bucket"] for r in bucketed.select("bucket").distinct().collect()]
         (
             bucketed.repartition(F.col("bucket"))

@@ -23,7 +23,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -158,8 +160,6 @@ def special_frames(spark) -> dict:
     deterministic corpus (plans are data-size independent)."""
     if _SPECIAL_CACHE.get("spark") is spark:
         return _SPECIAL_CACHE["frames"]
-    import tempfile
-
     from holi_search_engine_spark.corpus import (
         generate_transcripts_df,
         make_vocabulary,
@@ -214,6 +214,27 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+#: what two runs of the same plan print differently: expression ids,
+#: exchange plan ids, the whole-stage-codegen and AQE query-stage ids
+#: (numbered in the order concurrent stages finish) and the random suffix
+#: of a ``tempfile.mkdtemp`` index directory
+_RUN_VARIANT = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    (re.compile(r"(QueryStage\nOutput \[\d+\]: \[.*\]\nArguments: )\d+"), r"\1N"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/(\w+?_)[a-z0-9_]{8}/"), r"<tmp>/\1*/"),
+]
+
+
+def normalized(plan: str) -> str:
+    """``plan`` without what varies from run to run, so a rerun of the
+    audit over unchanged plans rewrites ``PLANS.md`` identically."""
+    for pattern, repl in _RUN_VARIANT:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
 def audit_one(queries, spark, name: str, must: list[str], must_not: list[str]):
     if name in queries:
         df = queries[name](spark, SF_DIR)
@@ -259,7 +280,7 @@ def main() -> None:
                 else ""
             )
             + "```\n"
-            + plan.strip()
+            + normalized(plan).strip()
             + "\n```\n"
         )
         print(("ok   " if ok else "FAIL ") + name + ("" if ok else f": {problems}"))

@@ -1,6 +1,5 @@
 """The rank contract of the Spark query paths against the single-node
-engines, written once for pytest (``tests/test_distributed.py``) and the
-soak (``scripts/soak_distributed.py``)."""
+engines, written once for pytest (``tests/test_distributed.py``)."""
 
 
 def rank_check(exp, got, key="doc_key", atol=1e-9):
@@ -8,13 +7,12 @@ def rank_check(exp, got, key="doc_key", atol=1e-9):
     same doc set, per-doc scores within ``atol``, and the Spark sequence
     non-increasing in the ENGINE's scores up to ``atol``.
 
-    Exact sequence equality is STRONGER than the documented contract —
-    the Spark aggregation sums score terms in partition order, not the
-    engine's HashMap order (quirk Q12), so two docs whose engine scores
-    differ by 1 ulp can legitimately swap (first seen at soak seed 119:
-    engine 0.06386309394396882 vs ...88, Spark computed them equal and
-    broke the tie doc-asc).  A genuinely misplaced doc still fails: its
-    engine score is out of non-increasing order by more than atol.
+    The contract is weaker than exact sequence equality: two docs whose
+    engine scores differ by 1 ulp may come back in either order (a sum
+    taken in another order can make them equal, as at soak seed 119:
+    engine 0.06386309394396882 vs ...88).  A genuinely misplaced doc
+    still fails: its engine score is out of non-increasing order by more
+    than atol.
 
     A NaN-poisoned query (a negative idf, Q3) scores every candidate NaN
     on both sides; its order is unspecified in the reference too (Q10),

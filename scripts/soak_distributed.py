@@ -4,16 +4,10 @@ For each random corpus (same generator as ``scripts/soak_javadiff.py``,
 whose compiled-Java differential pins the single-node ``RankerEngine``
 bit-exactly), this drives the two distributed plans and requires:
 
-- ``DistributedRanker.search`` (a batch of one) rank-equivalent to
-  ``RankerEngine.search`` under the documented contract (``rank_check``
-  in ``scripts/rank_contract.py``): same doc set, per-doc
-  scores within 1e-9, sequence non-increasing in the engine's scores up
-  to 1e-9 — NOT exact sequence equality, because the Spark aggregation
-  sums score terms in partition order rather than the engine's HashMap
-  order (Q12), so 1-ulp near-ties can legitimately swap (first seen at
-  seed 119).  For NaN-poisoned queries (negative idf) the same
-  candidate SET with all-NaN scores on both sides (NaN order is
-  unspecified in the reference too, Q10).
+- ``DistributedRanker.search`` (a batch of one) and each query's slice
+  of one ``search_many`` batch over ALL the corpus's queries equal to
+  ``RankerEngine.search`` exactly, every column and the row order: both
+  score the 250-doc cut with ``ranker.score_cut``.
 - ``distributed_bm25_topk`` (a batch of one) rank-identical (docs AND
   scores to 1e-9) to
   ``BM25Engine.search`` at n_ranges in {1, 5} — the degenerate
@@ -38,7 +32,9 @@ equal Spark-side); re-run with ``rank_check`` over the same five seeds
 — 0 mismatches.  Re-run after the single-query entry points became
 batches of one, with ``rank_check`` moved to ``scripts/rank_contract.py``
 and folding in the NaN-set check: seed 137 x 12 queries (4 vCPU) — 0
-mismatches.  Exits nonzero on any mismatch.
+mismatches.  The ranker checks became exact frame equality once the
+distributed ranker scored its cut with the single-node scorer.  Exits
+nonzero on any mismatch.
 """
 import os
 import random
@@ -49,6 +45,7 @@ sys.path.insert(0, ".")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 from holi_search_engine_spark.corpus import (  # noqa: E402
@@ -61,8 +58,20 @@ from holi_search_engine_spark.query.distributed import (  # noqa: E402
 )
 from holi_search_engine_spark.query.ranker import RankerEngine  # noqa: E402
 
-from rank_contract import rank_check  # noqa: E402  (scripts/ on sys.path)
-from soak_javadiff import make_queries  # noqa: E402
+from soak_javadiff import make_queries  # noqa: E402  (scripts/ on sys.path)
+
+
+def ranker_diff(exp, got):
+    """None when ``got`` (one query's rows, ``query_id`` dropped) equals
+    the engine's frame exactly, else a short failure tag."""
+    got = got.drop(columns="query_id", errors="ignore").reset_index(drop=True)
+    if not len(exp):
+        return None if got.empty else "len"
+    try:
+        pd.testing.assert_frame_equal(got, exp, check_exact=True)
+    except AssertionError:
+        return "frame"
+    return None
 
 
 def run_corpus(spark, vocab, seed, workdir, n_queries):
@@ -90,7 +99,7 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
     for qid, q in enumerate(queries):
         exp = engine.search(q)
         exp_by_qid[qid] = exp
-        bad = rank_check(exp, dist.search(q))
+        bad = ranker_diff(exp, dist.search(q))
         if bad:
             fails.append((q, f"ranker-{bad}", None, None))
     # BM25 distributed on a subset (each query is several Spark jobs)
@@ -105,11 +114,11 @@ def run_corpus(spark, vocab, seed, workdir, n_queries):
                                               atol=1e-9):
                 fails.append((q, f"bm25-score-nr{nr}", None, None))
     # the batched reference-semantics replay: ALL queries in one job
-    # chain, each query's slice held to the same contract
+    # chain, each query's slice held to the same check
     rbatch = dist.search_many(queries)
     for qid, q in enumerate(queries):
         exp = exp_by_qid[qid]  # same reference frame as the single check
-        bad = rank_check(exp, rbatch[rbatch["query_id"] == qid])
+        bad = ranker_diff(exp, rbatch[rbatch["query_id"] == qid])
         if bad:
             fails.append((q, f"ranker-batch-{bad}", None, None))
     # the batched bm25 plan: ALL of the corpus's queries in one job, each

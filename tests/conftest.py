@@ -65,3 +65,36 @@ def built_index(spark, xs_df, dictionary, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index") / "xs")
     shutil.rmtree(out, ignore_errors=True)
     return build_index(spark, xs_df, out, dictionary, buckets=2)
+
+
+@pytest.fixture(scope="session")
+def edge_index(spark, tmp_path_factory):
+    """Tiny corpus with (a) a term literally named like the candidate
+    frame's bookkeeping columns ('occurrence') and (b) a term present in
+    EVERY doc, whose Q3 idf = ln(n/(n+1)) is negative."""
+    import pandas as pd
+
+    from holi_search_engine_spark.oracle import pandas_oracle as O
+    from holi_search_engine_spark.plans.index_build import build_index
+
+    texts = [
+        "occurrence rate of the signal occurrence here",
+        "rate of decay in the signal path",
+        "occurrence counts matter for the signal",
+        "the signal decay path matters",
+        "signal only here",
+    ]
+    rows = [
+        (f"conv-{i:08d}", 0, "user", t, "", pd.Timestamp("2026-01-01"))
+        for i, t in enumerate(texts)
+    ]
+    pdf = pd.DataFrame(
+        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    )
+    vocab = frozenset(
+        "occurrence rate signal decay counts matter matters path only here".split()
+    )
+    d = str(tmp_path_factory.mktemp("edge_idx"))
+    paths = build_index(spark, pdf.pipe(spark.createDataFrame), d, vocab, buckets=2)
+    docs = [((r.conv_id, int(r.turn_idx)), r.text) for r in pdf.itertuples()]
+    return paths, O.build_index(docs, vocab)

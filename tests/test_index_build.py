@@ -98,13 +98,12 @@ def test_postings_doc_ordered(spark, built_index):
 
 
 def test_blocks_roundtrip_to_postings(spark, built_index, oracle_index):
-    """Each block's skip metadata (n, key_min, key_max, max_tf) equals what
+    """Each block's skip metadata (n, key_min, key_max) equals what
     its decoded postings say, and a term's blocks together hold its df."""
     for term, (g, blocks) in _decoded_blocks(spark, built_index).items():
         for r, (keys, tfs) in zip(g.itertuples(), blocks):
             assert r.n == len(keys) == len(tfs) > 0, (term, r.block_no)
             assert r.key_min == int(keys[0]) and r.key_max == int(keys[-1]), term
-            assert r.max_tf == int(tfs.max()), (term, r.block_no)
         assert int(g["n"].sum()) == len(oracle_index.postings[term]), term
 
 

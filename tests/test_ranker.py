@@ -243,38 +243,6 @@ def test_gson_dumps_non_string_keys():
         gson_dumps({(1, 2): "tuple-key"})
 
 
-@pytest.fixture(scope="module")
-def edge_index(spark, tmp_path_factory):
-    """Tiny corpus with (a) a term literally named like the candidate
-    frame's bookkeeping columns ('occurrence') and (b) a term present in
-    EVERY doc, whose Q3 idf = ln(n/(n+1)) is negative."""
-    import pandas as pd
-
-    from holi_search_engine_spark.plans.index_build import build_index
-
-    texts = [
-        "occurrence rate of the signal occurrence here",
-        "rate of decay in the signal path",
-        "occurrence counts matter for the signal",
-        "the signal decay path matters",
-        "signal only here",
-    ]
-    rows = [
-        (f"conv-{i:08d}", 0, "user", t, "", pd.Timestamp("2026-01-01"))
-        for i, t in enumerate(texts)
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    vocab = frozenset(
-        "occurrence rate signal decay counts matter matters path only here".split()
-    )
-    d = str(tmp_path_factory.mktemp("edge_idx"))
-    paths = build_index(spark, pdf.pipe(spark.createDataFrame), d, vocab, buckets=2)
-    docs = [((r.conv_id, int(r.turn_idx)), r.text) for r in pdf.itertuples()]
-    return paths, O.build_index(docs, vocab)
-
-
 def test_query_word_colliding_with_result_columns(spark, edge_index):
     """A query word literally named 'occurrence' (or 'doc_key') must not
     overwrite the candidate frame's bookkeeping columns: before the tf:
@@ -297,7 +265,8 @@ def test_missing_doc_rows_score_as_reference(spark, edge_index, tmp_path):
     """Candidates the per-doc artifacts lack: no doc_meta row or a null
     title scores keyword_match 0 (the reference reads a blank title), a
     missing or stored-NaN pagerank scores 0, and the preloaded and the
-    degraded (pruned-read) modes serve the same frame."""
+    degraded (pruned-read) modes and the distributed ranker serve the
+    same frame."""
     import shutil
 
     import numpy as np
@@ -305,6 +274,7 @@ def test_missing_doc_rows_score_as_reference(spark, edge_index, tmp_path):
     from pyspark.sql import functions as F
 
     from holi_search_engine_spark.plans.index_build import IndexPaths
+    from holi_search_engine_spark.query.distributed import DistributedRanker
 
     paths, _ = edge_index
     q = "rate decay path"  # docs 0, 1 and 3: keys 0, 64 and 192
@@ -326,7 +296,9 @@ def test_missing_doc_rows_score_as_reference(spark, edge_index, tmp_path):
 
     pre = RankerEngine(spark, holed, preload=True).search(q)
     deg = RankerEngine(spark, holed, preload=False).search(q)
+    dist = DistributedRanker(spark, holed).search(q)
     pd.testing.assert_frame_equal(pre, deg, check_exact=True)
+    pd.testing.assert_frame_equal(pre, dist, check_exact=True)
     got = pre.set_index("doc_key")
     assert list(got.loc[[64, 192], "keyword_match"]) == [0.0, 0.0]
     assert list(got.loc[[0, 64, 192], "page_rank"]) == [0.5, 0.0, 0.0]
