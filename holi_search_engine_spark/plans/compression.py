@@ -277,7 +277,7 @@ def _blocks_from_sorted(pdf_iter):
     still continue in the next batch — resetting the block offset there
     restarted that term's numbering at 0, producing duplicate
     ``(term, block_no)`` labels that scrambled every reader's
-    ``sort_values("block_no")`` posting order (hit in production at
+    block_no posting order (hit in production at
     sf0.1 under local[32]: a ~95k-posting term crossed the 10,000-row
     Arrow boundary at exactly 80,000 = 625·128 rows; regression pinned
     in ``tests/test_compression.py``).

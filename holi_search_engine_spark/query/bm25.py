@@ -33,7 +33,7 @@ from ..plans.compression import (
 )
 from ..functions.javacompat import RE_QUERY_PUNCT as _RE_PUNCT  # ONE alphabet
 from ..plans.index_build import IndexPaths
-from .index_reader import IndexReader
+from .index_reader import IndexReader, TermBlocks
 
 
 def bm25_terms(query: str) -> list[str]:
@@ -48,9 +48,10 @@ def bm25_idf(n_docs: int, df: int) -> float:
 
 
 class _TermSweep:
-    """Per-term state for the block-range sweep: block metadata arrays,
-    lazy block decode (with floor slicing for partially skipped blocks),
-    and a consumption offset within the decoded block."""
+    """Per-term state for the block-range sweep over a term's
+    :class:`TermBlocks` slices: lazy block decode (with floor slicing for
+    partially skipped blocks) and a consumption offset within the decoded
+    block."""
 
     __slots__ = (
         "key_min_arr", "key_max_arr", "ub_arr", "doc_bytes", "tf_bytes",
@@ -60,16 +61,16 @@ class _TermSweep:
 
     def __init__(
         self,
-        blocks: pd.DataFrame,
+        blocks: TermBlocks,
         weight: float,
         dl_norm: DocKeyLookup,
         decode_counter: list[int] | None = None,
     ) -> None:
-        self.key_min_arr = blocks["key_min"].to_numpy(dtype=np.int64)
-        self.key_max_arr = blocks["key_max"].to_numpy(dtype=np.int64)
-        self.ub_arr = blocks["ub_bm25"].to_numpy(dtype=np.float64)
-        self.doc_bytes = blocks["doc_bytes"].tolist()
-        self.tf_bytes = blocks["tf_bytes"].tolist()
+        self.key_min_arr = blocks.key_min
+        self.key_max_arr = blocks.key_max
+        self.ub_arr = blocks.ub_bm25
+        self.doc_bytes = blocks.doc_bytes
+        self.tf_bytes = blocks.tf_bytes
         self.weight = weight
         self.dl_norm = dl_norm
         self.n_blocks = len(blocks)

@@ -39,6 +39,7 @@ from ..plans.compression import DocKeyLookup, decode_block, doc_key_columns
 from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
 from .bm25 import BM25_B, _TermSweep, bm25_idf, bm25_terms, block_sweep_topk
+from .index_reader import _by_term
 from .ranker import EXPAND_THRESHOLD, TOP_CUT, empty_result, plan_query, score_cut
 
 _DECODE_SCHEMA = "term string, doc_key long, tf double"
@@ -419,12 +420,9 @@ def distributed_bm25_local_topk_many(
             dl_pdf["doc_key"].to_numpy(dtype=np.int64),
             1.0 - BM25_B + BM25_B * dl_pdf["dl"].to_numpy(dtype=np.float64) / b_avgdl,
         )
-        # group each term's blocks ONCE; every query's sweep over that
-        # term re-reads the same (already materialized) group frame
-        term_groups = {
-            t: g.sort_values("block_no").reset_index(drop=True)
-            for t, g in blocks_pdf.groupby("term", sort=False)
-        }
+        # slice each term's blocks ONCE; every query's sweep over that
+        # term reads the same column slices
+        term_groups = _by_term(blocks_pdf)
         qids: list[int] = []
         keys: list[int] = []
         scores: list[float] = []

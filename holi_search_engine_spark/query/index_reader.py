@@ -8,15 +8,24 @@ the index the reference's single ranker node reads, SURVEY §1):
   driver while the block table fits ``preload_max_bytes`` (the single
   ranker-node serving model, lowest latency); past it, or when its size is
   unknown, the reader degrades to term-pruned reads with no caller change;
-- per term, the block rows and the df/idf of its wmetric row.  Degraded
-  mode fetches a whole query's missing terms at once: one term-pruned
-  read of the block table and one of wmetric, two Spark jobs per query
-  however many terms it has;
+- per term, the block rows and the df/idf of its wmetric row.  The block
+  rows of a read are sorted once by ``(term, block_no)`` and each term
+  holds a :class:`TermBlocks`: array slices (views) of that table's
+  ``key_min``, ``key_max``, ``ub_bm25``, ``doc_bytes`` and ``tf_bytes``
+  columns, so neither the open nor a query builds a per-term DataFrame.
+  Degraded mode fetches a whole query's missing terms at once: one read
+  of the block table pruned to the terms' ``bucket`` partitions and then
+  to the terms, and one term-pruned read of wmetric, two Spark jobs per
+  query however many terms it has;
 - one LRU of per-term entries, capped in terms and in bytes: the block
   rows a degraded read fetched and the decoded postings;
 - the per-doc lookups (ntf, title/snippet, pagerank, doc length) as
   sorted doc-key arrays: a whole table read once, or a pruned read of
   just the candidates' rows.
+
+An open reader is a snapshot of the index it opened: a preloaded reader
+never rereads, and a degraded one keeps what it cached.  After an ingest,
+callers open the engines again.
 """
 
 from __future__ import annotations
@@ -27,6 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
+from ..functions.xxhash import term_bucket
 from ..plans.compression import DocKeyLookup, decode_block
 from ..plans.index_build import IndexPaths, artifact_nbytes, read_meta
 from ..sources.catalog import read_table
@@ -50,11 +60,36 @@ def _read_only(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
 _EMPTY = _read_only(np.empty(0, np.int64), np.empty(0, np.float64))
 
 
+class TermBlocks:
+    """One term's block rows in block_no order: read-only slices of the
+    term-sorted block table's columns.  ``len()`` is the block count."""
+
+    __slots__ = ("key_min", "key_max", "ub_bm25", "doc_bytes", "tf_bytes")
+
+    def __init__(self, key_min, key_max, ub_bm25, doc_bytes, tf_bytes) -> None:
+        self.key_min: np.ndarray = key_min  # int64
+        self.key_max: np.ndarray = key_max  # int64
+        self.ub_bm25: np.ndarray = ub_bm25  # float64
+        self.doc_bytes: np.ndarray = doc_bytes  # object: bytes per block
+        self.tf_bytes: np.ndarray = tf_bytes  # object: bytes per block
+
+    def __len__(self) -> int:
+        return len(self.key_min)
+
+    @property
+    def nbytes(self) -> int:
+        """Driver bytes the rows hold: the column slices plus the encoded
+        block bytes they point to."""
+        cols = (self.key_min, self.key_max, self.ub_bm25, self.doc_bytes, self.tf_bytes)
+        return sum(c.nbytes for c in cols) + sum(
+            len(b) for c in (self.doc_bytes, self.tf_bytes) for b in c
+        )
+
+
 class _Term:
-    """One term's resident slice of the index: its block rows sorted by
-    block_no (None when the index lacks the term), df (postings count, 0
-    when absent), idf (0 when absent, quirk Q8) and, once decoded, its
-    doc-ordered postings."""
+    """One term's resident slice of the index: its block rows (None when
+    the index lacks the term), df (postings count, 0 when absent), idf (0
+    when absent, quirk Q8) and, once decoded, its doc-ordered postings."""
 
     __slots__ = ("blocks", "df", "idf", "postings", "nbytes")
 
@@ -98,7 +133,7 @@ class IndexReader:
             cap = PRELOAD_MAX_BYTES if preload_max_bytes is None else preload_max_bytes
             preload = 0 <= artifact_nbytes(paths.blocks) <= cap
         self.preloaded: bool = preload
-        self._blocks: dict[str, pd.DataFrame] | None = None
+        self._blocks: dict[str, TermBlocks] | None = None
         self._stats: dict[str, tuple[int, float]] | None = None
         self._cache: OrderedDict[str, _Term] = OrderedDict()
         self._cache_bytes = 0
@@ -111,7 +146,7 @@ class IndexReader:
     # ------------------------------------------------------------ terms
 
     def terms(self) -> list[str]:
-        """Every term of a preloaded index."""
+        """Every term of a preloaded index, sorted."""
         if self._blocks is None:
             raise ValueError("terms() needs a preloaded index")
         return list(self._blocks)
@@ -127,8 +162,8 @@ class IndexReader:
         self._query_terms = frozenset([*terms, *stats_only])
         self._load(terms, [t for t in stats_only if t not in terms])
 
-    def blocks(self, term: str) -> pd.DataFrame | None:
-        """The term's block rows sorted by block_no, None if absent."""
+    def blocks(self, term: str) -> TermBlocks | None:
+        """The term's block rows in block_no order, None if absent."""
         if self._blocks is not None:
             return self._blocks.get(term)
         return self._entry(term, blocks=True).blocks
@@ -151,7 +186,7 @@ class IndexReader:
         g = entry.blocks
         if g is None:
             return _EMPTY
-        parts = [decode_block(d, t) for d, t in zip(g["doc_bytes"], g["tf_bytes"])]
+        parts = [decode_block(d, t) for d, t in zip(g.doc_bytes, g.tf_bytes)]
         out = _read_only(
             np.concatenate([p[0] for p in parts]).astype(np.int64),
             np.concatenate([p[1] for p in parts]).astype(np.float64),
@@ -192,14 +227,16 @@ class IndexReader:
                 entry = self._cache[t]
                 entry.blocks = found.get(t)
                 if entry.blocks is not None:
-                    self._charge(entry, int(entry.blocks.memory_usage(deep=True).sum()))
+                    self._charge(entry, entry.blocks.nbytes)
         for t in [*block_terms, *stat_terms]:
             self._cache.move_to_end(t)
         self._evict()
 
-    def _read_blocks(self, terms: list[str]) -> dict[str, pd.DataFrame]:
+    def _read_blocks(self, terms: list[str]) -> dict[str, TermBlocks]:
+        buckets = sorted({term_bucket(t, self.meta["buckets"]) for t in terms})
         return _by_term(
             read_table(self.spark, self.paths.blocks)
+            .where(F.col("bucket").isin(buckets))
             .where(F.col("term").isin(terms))
             .toPandas()
         )
@@ -266,10 +303,25 @@ class IndexReader:
         return vals[:, idx[0]] if len(idx) == 1 else vals[:, idx]
 
 
-def _by_term(blocks: pd.DataFrame) -> dict[str, pd.DataFrame]:
+def _by_term(blocks: pd.DataFrame) -> dict[str, TermBlocks]:
+    """Block rows as one :class:`TermBlocks` per term, in term order: one
+    sort by ``(term, block_no)``, then every term's row range from one
+    comparison of neighbouring terms."""
+    if not len(blocks):
+        return {}
+    blocks = blocks.sort_values(["term", "block_no"])
+    term = blocks["term"].to_numpy()
+    cols = _read_only(
+        blocks["key_min"].to_numpy(dtype=np.int64),
+        blocks["key_max"].to_numpy(dtype=np.int64),
+        blocks["ub_bm25"].to_numpy(dtype=np.float64),
+        blocks["doc_bytes"].to_numpy(dtype=object),
+        blocks["tf_bytes"].to_numpy(dtype=object),
+    )
+    edges = [0, *(np.flatnonzero(term[1:] != term[:-1]) + 1).tolist(), len(term)]
     return {
-        t: g.sort_values("block_no").reset_index(drop=True)
-        for t, g in blocks.groupby("term", sort=False)
+        term[lo]: TermBlocks(*(c[lo:hi] for c in cols))
+        for lo, hi in zip(edges[:-1], edges[1:])
     }
 
 

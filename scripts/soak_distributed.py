@@ -33,8 +33,9 @@ equal Spark-side); re-run with ``rank_check`` over the same five seeds
 batches of one, with ``rank_check`` moved to ``scripts/rank_contract.py``
 and folding in the NaN-set check: seed 137 x 12 queries (4 vCPU) — 0
 mismatches.  The ranker checks became exact frame equality once the
-distributed ranker scored its cut with the single-node scorer.  Exits
-nonzero on any mismatch.
+distributed ranker scored its cut with the single-node scorer.  With
+the session taken from ``session.get_spark`` (one task per core): seed
+137 x 12 queries, 0 mismatches.  Exits nonzero on any mismatch.
 """
 import os
 import random
@@ -46,7 +47,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 
 from holi_search_engine_spark.corpus import (  # noqa: E402
     generate_conversations_pdf, make_vocabulary,
@@ -57,6 +57,7 @@ from holi_search_engine_spark.query.distributed import (  # noqa: E402
     DistributedRanker, distributed_bm25_topk, distributed_bm25_topk_many,
 )
 from holi_search_engine_spark.query.ranker import RankerEngine  # noqa: E402
+from holi_search_engine_spark.session import get_spark  # noqa: E402
 
 from soak_javadiff import make_queries  # noqa: E402  (scripts/ on sys.path)
 
@@ -141,10 +142,7 @@ def main():
     import tempfile
     workdir = tempfile.mkdtemp(prefix="soak_dist_")
     vocab = make_vocabulary()
-    spark = (SparkSession.builder.master("local[16]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.driver.memory", "12g")
-             .appName("soak-dist").getOrCreate())
+    spark = get_spark("soak-dist")
     spark.sparkContext.setLogLevel("ERROR")
 
     seeds = [int(s) for s in sys.argv[1].split(",")] if len(sys.argv) > 1 \

@@ -41,7 +41,6 @@ from tests.test_javadiff_scoring import (  # noqa: E402
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 
 from holi_search_engine_spark.corpus import (  # noqa: E402
     generate_conversations_pdf, make_vocabulary,
@@ -49,6 +48,7 @@ from holi_search_engine_spark.corpus import (  # noqa: E402
 from holi_search_engine_spark.plans.index_build import build_index  # noqa: E402
 from holi_search_engine_spark.query.ranker import RankerEngine  # noqa: E402
 from holi_search_engine_spark.query.stopwords import STOPWORDS  # noqa: E402
+from holi_search_engine_spark.session import get_spark  # noqa: E402
 
 WS = [" ", "\t", "\n", "\x0b", "\f", "\r", " ", "　", "  ", " \t "]
 PUNCT = list(".,:;!?'\"()-") + ["--", "...", "!?"]
@@ -224,10 +224,7 @@ def main():
     subprocess.run(["javac", "RefScore.java"], cwd=workdir, check=True,
                    capture_output=True, timeout=120)
 
-    spark = (SparkSession.builder.master("local[16]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.driver.memory", "12g")
-             .appName("soak").getOrCreate())
+    spark = get_spark("soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     seeds = [int(s) for s in sys.argv[1].split(",")] if len(sys.argv) > 1 \

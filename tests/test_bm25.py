@@ -114,6 +114,40 @@ def test_auto_degraded_mode_identical(spark, built_index, bm25, vocabulary):
     assert deg.total_blocks("the") == bm25.total_blocks("the")
 
 
+def test_degraded_reader_holds_preloaded_term_blocks(spark, built_index):
+    """A degraded read, pruned to one bucket partition at a time, slices
+    the block table into the same TermBlocks as the preloaded open; each
+    term's blocks ascend in key_min, and together the terms hold every
+    block the build wrote."""
+    import glob
+    import json
+    import os
+
+    from holi_search_engine_spark.functions.xxhash import term_bucket
+    from holi_search_engine_spark.query.index_reader import IndexReader, TermBlocks
+
+    pre = IndexReader(spark, built_index)
+    deg = IndexReader(spark, built_index, preload_max_bytes=0)
+    assert pre.preloaded and not deg.preloaded
+    terms = pre.terms()
+    assert terms and terms == sorted(terms)
+    n_buckets = deg.meta["buckets"]
+    for b in range(n_buckets):
+        in_bucket = [t for t in terms if term_bucket(t, n_buckets) == b]
+        deg.fetch(in_bucket)  # one read of bucket b's partition
+        for t in in_bucket:
+            got, exp = deg.blocks(t), pre.blocks(t)
+            assert got is not None and len(got) == len(exp) > 0, t
+            for col in TermBlocks.__slots__:
+                assert (getattr(got, col) == getattr(exp, col)).all(), (t, col)
+            assert (np.diff(exp.key_min) > 0).all(), t
+    manifests = glob.glob(os.path.join(built_index.manifest, "blocks_bucket_*.json"))
+    assert len(manifests) == n_buckets
+    assert sum(len(pre.blocks(t)) for t in terms) == sum(
+        json.load(open(m))["n_blocks"] for m in manifests
+    )
+
+
 # ---------------------------------------------------------------- property
 
 from hypothesis import given, settings
@@ -121,7 +155,8 @@ from hypothesis import strategies as st
 
 
 def _make_sweep(postings, weight, block_size, counter):
-    """Encode a (doc -> tf) dict into a blocks frame and wrap a _TermSweep."""
+    """Encode a (doc -> tf) dict into a blocks frame, slice it per term
+    as the index reader does and wrap a _TermSweep."""
     import pandas as pd
 
     from holi_search_engine_spark.plans.compression import (
@@ -130,6 +165,7 @@ def _make_sweep(postings, weight, block_size, counter):
         encode_block,
     )
     from holi_search_engine_spark.query.bm25 import _TermSweep
+    from holi_search_engine_spark.query.index_reader import _by_term
 
     keys = np.array(sorted(postings), dtype=np.uint64)
     tfs = np.array([postings[k] for k in sorted(postings)], dtype=np.uint64)
@@ -138,13 +174,14 @@ def _make_sweep(postings, weight, block_size, counter):
         bk, bt = keys[s : s + block_size], tfs[s : s + block_size]
         db, tb = encode_block(bk, bt)
         ub = float(np.max(bt * (BM25_K1 + 1.0) / (bt + BM25_K1)))
-        rows.append((bno, len(bk), int(bk[0]), int(bk[-1]), ub, db, tb))
+        rows.append(("t", bno, len(bk), int(bk[0]), int(bk[-1]), ub, db, tb))
     blocks = pd.DataFrame(
-        rows,
-        columns=["block_no", "n", "key_min", "key_max", "ub_bm25", "doc_bytes", "tf_bytes"],
+        rows[::-1],  # _by_term puts the blocks in block_no order
+        columns=["term", "block_no", "n", "key_min", "key_max", "ub_bm25",
+                 "doc_bytes", "tf_bytes"],
     )
     norms = DocKeyLookup(np.array([0], dtype=np.int64), np.array([1.0]))
-    return _TermSweep(blocks, weight, norms, counter)
+    return _TermSweep(_by_term(blocks)["t"], weight, norms, counter)
 
 
 @settings(max_examples=60, deadline=None)

@@ -57,6 +57,23 @@ def test_df_equals_distinct_term_doc(spark, built_index):
     assert ((wm["df"] - 1) == counts.reindex(wm.index)).all()
 
 
+def test_df_is_one_plus_block_postings(spark, built_index):
+    # the same Q3 invariant from the block table: a term's stored df is
+    # 1 + the postings its blocks hold
+    from pyspark.sql import functions as F
+
+    n = (
+        spark.read.parquet(built_index.blocks)
+        .groupBy("term")
+        .agg(F.sum("n").alias("n"))
+        .toPandas()
+        .set_index("term")["n"]
+    )
+    wm = spark.read.parquet(built_index.wmetric).toPandas().set_index("term")
+    assert len(wm) and set(n.index) == set(wm.index)
+    assert ((wm["df"] - 1) == n.reindex(wm.index)).all()
+
+
 def _decoded_blocks(spark, paths):
     """Per term: its block rows in block order and the decoded keys/tfs of
     each block."""
