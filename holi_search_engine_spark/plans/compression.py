@@ -96,7 +96,7 @@ def doc_key_columns(keys: np.ndarray, doc_cols: list[str]) -> dict:
         conv = keys >> TURN_BITS
         turn = keys & ((1 << TURN_BITS) - 1)
         return {
-            "conv_id": [f"conv-{int(c):08d}" for c in conv],
+            "conv_id": ["conv-%08d" % c for c in conv.tolist()],
             "turn_idx": turn.astype("int32"),
         }
     return {doc_cols[0]: keys}

@@ -40,7 +40,14 @@ from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
 from .bm25 import BM25_B, _TermSweep, bm25_idf, bm25_terms, block_sweep_topk
 from .index_reader import _by_term
-from .ranker import EXPAND_THRESHOLD, TOP_CUT, empty_result, plan_query, score_cut
+from .ranker import (
+    EXPAND_THRESHOLD,
+    TOP_CUT,
+    TitleWords,
+    empty_result,
+    plan_query,
+    score_cut,
+)
 
 _DECODE_SCHEMA = "term string, doc_key long, tf double"
 
@@ -243,6 +250,7 @@ class DistributedRanker:
                 page_rank = np.where(np.isnan(rank), 0.0, rank)
             else:
                 page_rank = np.zeros(len(keys), dtype=np.float64)
+            titles = [t if isinstance(t, str) else "" for t in g["title"]]
             part = score_cut(
                 plans[qid],
                 keys,
@@ -250,7 +258,8 @@ class DistributedRanker:
                 tfs,
                 idf,
                 g["ntf"].to_numpy(dtype=np.float64),
-                [t if isinstance(t, str) else "" for t in g["title"]],
+                titles,
+                TitleWords(keys, titles),
                 page_rank,
                 self.doc_cols,
                 limit,

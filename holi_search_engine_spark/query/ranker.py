@@ -22,6 +22,13 @@ as in the reference (``Ranker.java:204-205``).  Only candidate generation
 grows with the corpus.  Both tiers share the rest: :func:`plan_query` is
 the query preamble and :func:`score_cut` scores and ranks a cut, so the
 two tiers' answers are bit-identical.
+
+The title bonus reads each cut doc's title words from a
+:class:`TitleWords` index (word → sorted doc keys).  The reference
+re-tokenizes every cut title per query (``Ranker.java:223``); a title
+depends only on its doc, so the preloaded engine tokenizes each title
+once, at open.  The degraded engine and the distributed ranker build the
+same index per query from the ≤ 250 cut titles they fetch.
 """
 
 from __future__ import annotations
@@ -82,6 +89,45 @@ def plan_query(query: str) -> QueryPlan | None:
     )
 
 
+class TitleWords:
+    """The title bonus's index: per title word, the sorted keys of the
+    docs whose title holds it, each title split by
+    :func:`java_query_tokens` (``Ranker.java:223``).  The keys of all
+    words sit in one array, grouped by word.  Blank titles (a null title
+    is one) are left out: :func:`score_cut` gives a blank title, like a
+    key without a doc_meta row, the words ``[""]``."""
+
+    __slots__ = ("_ids", "_starts", "_keys")
+
+    def __init__(self, keys: np.ndarray, titles) -> None:
+        words: list[str] = []
+        counts: list[int] = []
+        for title in titles:
+            split = set(java_query_tokens(title)) if isinstance(title, str) and title else ()
+            words.extend(split)
+            counts.append(len(split))
+        self._ids: dict[str, int] = {}
+        word_id = np.fromiter(
+            (self._ids.setdefault(w, len(self._ids)) for w in words), np.int64, len(words)
+        )
+        owner = np.repeat(keys, counts)
+        order = np.lexsort((owner, word_id))
+        self._keys = owner[order]
+        self._starts = np.searchsorted(word_id[order], np.arange(len(self._ids) + 1))
+
+    def hits(self, words, keys: np.ndarray) -> np.ndarray:
+        """Per key of ``keys``, how many of ``words`` its title holds."""
+        hits = np.zeros(len(keys), dtype=np.int64)
+        for w in words:
+            i = self._ids.get(w)
+            if i is None:
+                continue
+            have = self._keys[self._starts[i] : self._starts[i + 1]]
+            at = np.minimum(np.searchsorted(have, keys), len(have) - 1)
+            hits += have[at] == keys
+        return hits
+
+
 def empty_result(doc_cols: list[str]) -> pd.DataFrame:
     """The answer of a query without candidates."""
     return pd.DataFrame(columns=[*doc_cols, "doc_key", "occurrence", "tf_idf_weight",
@@ -96,6 +142,7 @@ def score_cut(
     idf: dict[str, float],
     ntf: np.ndarray,
     titles: list[str],
+    title_words: TitleWords,
     page_rank: np.ndarray,
     doc_cols: list[str],
     limit: int | None = None,
@@ -105,9 +152,14 @@ def score_cut(
     and ``occ``; per matched term its tf (NaN where the term misses the
     doc or Q5 dropped it); ``ntf`` (NaN without a row); ``titles`` (``""``
     for a missing row or null title); ``page_rank`` (0 without a prior).
-    ``idf`` holds the query words' idfs; an absent word scores idf 0
-    (Q8).  Rows come back by score desc, doc key asc, NaN scores last in
-    doc-key order; ``limit`` truncates after ranking."""
+    ``title_words`` indexes the words of every non-blank title among
+    ``keys``: the preloaded engine's holds the whole doc_meta table,
+    tokenized once at open; the degraded engine and the distributed
+    ranker build one per query over the cut's titles.  Only the raw
+    query-in-title check reads ``titles``.  ``idf`` holds the query
+    words' idfs; an absent word scores idf 0 (Q8).  Rows come back by
+    score desc, doc key asc, NaN scores last in doc-key order; ``limit``
+    truncates after ranking."""
     weight = np.zeros(len(keys), dtype=np.float64)
     nan_col = np.full(len(keys), np.nan)
     # Java accumulates over wordCount.entrySet() in HashMap bucket
@@ -126,17 +178,17 @@ def score_cut(
         tf = tfs.get(w, nan_col)
         wf = np.where(np.isnan(tf) | (ntf == 0) | np.isnan(ntf), 0.0, tf / np.where(ntf == 0, 1, ntf))
         weight += qtf * idf_pow * wf
-    # title bonus (Ranker.java:211-230)
-    n_sw = len(plan.sw_set)
-    kw = np.zeros(len(keys), dtype=np.float64)
-    for i, title in enumerate(titles):
-        if plan.query in title:
-            kw[i] = 10.0
-            continue
-        # Ranker.java:223 normalizes each title like the query
-        overlap = len(plan.sw_set.intersection(java_query_tokens(title))) / n_sw
-        if overlap >= 0.6:
-            kw[i] = overlap * 10
+    # title bonus (Ranker.java:211-230): 10 if the title holds the raw
+    # query, else 10·overlap when the overlap, the share of the query's
+    # words the title holds, is ≥ 0.6 (Ranker.java:223 splits each title
+    # like the query)
+    hits = title_words.hits(plan.sw_set, keys)
+    if "" in plan.sw_set:
+        # a blank title splits to [""]
+        hits += np.fromiter((not t for t in titles), np.int64, len(titles))
+    overlap = hits / len(plan.sw_set)
+    kw = np.where(overlap >= 0.6, overlap * 10, 0.0)
+    kw[np.fromiter((plan.query in t for t in titles), bool, len(titles))] = 10.0
     # static prior: 0.75·pagerank (Ranker.java:255)
     score = 3 * weight + 0.75 * page_rank + kw
     rank = np.lexsort((keys, -score))[:limit]
@@ -177,9 +229,13 @@ class RankerEngine:
         # optional static prior (the reference's pageranks table,
         # Ranker.java:112-120); absent ⇒ every doc's prior is 0
         self._has_pagerank = table_exists(spark, paths.pageranks)
+        #: every doc_meta title's words, while preloaded; degraded
+        #: queries index their cut's titles
+        self._title_words: TitleWords | None = None
         if self.preloaded:
             self.reader.load_docs(paths.doc_stats, ("ntf",))
-            self.reader.load_docs(paths.doc_meta, ("title", "snippet"))
+            meta = self.reader.load_docs(paths.doc_meta, ("title", "snippet"))
+            self._title_words = TitleWords(meta.keys, meta.vals[:, 0])
             if self._has_pagerank:
                 self.reader.load_docs(paths.pageranks, ("rank",))
 
@@ -296,6 +352,7 @@ class RankerEngine:
         # pre-rank: occurrence desc, doc key asc (normalized tie-break), cut 250
         cut = np.lexsort((keys, -occ))[:TOP_CUT]
         keys = keys[cut]
+        titles = self._titles_for(keys)
         return score_cut(
             plan,
             keys,
@@ -303,7 +360,8 @@ class RankerEngine:
             {t: col[cut] for t, col in tfs.items()},
             {w: self.reader.idf(w) for w in plan.word_count},
             self._ntf_for(keys),
-            self._titles_for(keys),
+            titles,
+            self._title_words or TitleWords(keys, titles),
             self._pagerank_for(keys),
             self.doc_cols,
             limit,

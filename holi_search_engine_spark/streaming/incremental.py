@@ -21,6 +21,7 @@ an event stream (late data dropped beyond the watermark).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -71,7 +72,7 @@ def stream_transcript_deltas(
         batch_df = batch_df.cache()
         # the batch build's input check: a drop that does not pack into the
         # doc key stops the stream before it writes anything
-        check_doc_keys(batch_df)
+        n_turns = check_doc_keys(batch_df)
         # the same kernel as the batch build, so the delta's schema is
         # term_tf's (fd dropped pre-write)
         term_tf = tokenize_terms(batch_df, dictionary).cache()
@@ -95,6 +96,11 @@ def stream_transcript_deltas(
         build_doc_meta(batch_df).write.mode("append").parquet(paths.doc_meta)
         term_tf.unpersist()
         batch_df.unpersist()
+        # N counts turns, as in the build; a token-less turn has no
+        # doc_stats row, so refresh_global_stats reads the count from here
+        meta = read_meta(paths)
+        meta["n_turns"] += n_turns
+        _write_meta(paths, meta)
         # invalidate the touched buckets' block index → the next
         # resumable build_index() run re-merges these
         for b in touched:
@@ -116,15 +122,24 @@ def refresh_global_stats(spark: SparkSession, paths: IndexPaths) -> None:
     """Recompute the corpus-global statistics (df/idf, n_docs, avgdl) from
     the appended term stream after a streaming ingest session.  Doc-local
     stats (ntf, dl, meta) were appended per micro-batch; only the global
-    aggregates need a refresh pass."""
-    import json
+    aggregates need a refresh pass.
 
-    term_tf = spark.read.parquet(paths.term_tf)
-    n_docs = spark.read.parquet(paths.doc_stats).count()
-    build_wmetric(term_tf, n_docs).write.mode("overwrite").parquet(paths.wmetric)
-    avgdl = spark.read.parquet(paths.doc_stats).agg(F.avg("dl")).collect()[0][0] or 0.0
+    N is the turn count the build and each micro-batch recorded, as the
+    build defines it (doc_stats has no row for a turn without tokens).
+    ``n_for_idf`` follows it only when it equalled ``n_docs``: an
+    explicit idf corpus size stays."""
     meta = read_meta(paths)
-    meta.update({"n_docs": n_docs, "n_for_idf": n_docs, "avgdl": float(avgdl)})
+    if meta["n_for_idf"] == meta["n_docs"]:
+        meta["n_for_idf"] = meta["n_turns"]
+    meta["n_docs"] = meta["n_turns"]
+    term_tf = spark.read.parquet(paths.term_tf)
+    build_wmetric(term_tf, meta["n_for_idf"]).write.mode("overwrite").parquet(paths.wmetric)
+    avgdl = spark.read.parquet(paths.doc_stats).agg(F.avg("dl")).collect()[0][0] or 0.0
+    meta["avgdl"] = float(avgdl)
+    _write_meta(paths, meta)
+
+
+def _write_meta(paths: IndexPaths, meta: dict) -> None:
     with open(paths.meta_json, "w") as f:
         json.dump(meta, f)
 

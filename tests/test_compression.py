@@ -116,6 +116,22 @@ def test_doc_key_exprs_roundtrip(spark):
     np.testing.assert_array_equal(packed, back["doc_key"].to_numpy(np.int64))
 
 
+def test_doc_key_columns_edge_keys():
+    """The result frames' doc columns from packed keys: the first and the
+    last conv id the key format holds, each with the first and the last
+    turn, format exactly as the per-row ``int()`` f-string did."""
+    from holi_search_engine_spark.plans.compression import TURN_BITS, doc_key_columns
+
+    keys = np.array(
+        [c << TURN_BITS | t for c in (0, 99_999_999) for t in (0, 63)], dtype=np.int64
+    )
+    cols = doc_key_columns(keys, ["conv_id", "turn_idx"])
+    assert cols["conv_id"] == [f"conv-{int(c):08d}" for c in keys >> TURN_BITS]
+    assert cols["conv_id"] == ["conv-00000000"] * 2 + ["conv-99999999"] * 2
+    np.testing.assert_array_equal(cols["turn_idx"], np.array([0, 63, 0, 63], dtype=np.int32))
+    assert cols["turn_idx"].dtype == np.int32
+
+
 def test_blocks_from_sorted_block_aligned_batch_boundary():
     """Regression: a term whose rows cross an Arrow-batch boundary at an
     EXACT block multiple (empty carry) must keep one contiguous

@@ -307,6 +307,77 @@ def test_missing_doc_rows_score_as_reference(spark, edge_index, tmp_path):
     )
 
 
+def test_title_bonus_tiers_agree(spark, built_index, engine, dictionary):
+    """The title bonus on queries built from doc_meta titles: a title's
+    leading words (the raw query is a substring: 10), two of three title
+    words (overlap 2/3 ≥ 0.6: 10·2/3) and one of three (1/3 < 0.6: 0).
+    The preloaded engine's title-word index, the degraded engine's and
+    the distributed ranker's per-query ones give equal frames."""
+    import re
+
+    import pandas as pd
+
+    from holi_search_engine_spark.functions.javacompat import java_query_tokens
+    from holi_search_engine_spark.query.distributed import DistributedRanker
+    from holi_search_engine_spark.query.stopwords import STOPWORDS
+
+    meta = spark.read.parquet(built_index.doc_meta).toPandas().sort_values("doc_key")
+    content = sorted(w for w in dictionary if w not in STOPWORDS)
+    cases = []  # (query, source doc key, its expected keyword_match)
+    for key, title in zip(meta["doc_key"], meta["title"]):
+        # the last word may be cut by the 60-char truncation
+        words = list(dict.fromkeys(
+            w for w in java_query_tokens(title)[:-1] if w in dictionary and w not in STOPWORDS
+        ))
+        if len(words) < 2:
+            continue
+        others = [w for w in content if w not in java_query_tokens(title)][:2]
+        lead = re.match(rf"^.*?\b{re.escape(words[0])}\b", title).group(0)
+        cases += [
+            (lead, key, 10.0),
+            (f"{words[0]} {words[1]} {others[0]}", key, 2 / 3 * 10),
+            (f"{words[0]} {others[0]} {others[1]}", key, 0.0),
+        ]
+        if len(cases) >= 12:
+            break
+    qs = [q for q, _, _ in cases]
+    deg = RankerEngine(spark, built_index, preload_max_bytes=0)
+    dist = DistributedRanker(spark, built_index).search_many(qs)
+    assert not deg.preloaded
+    for qid, (q, key, kw) in enumerate(cases):
+        pre = engine.search(q)
+        pd.testing.assert_frame_equal(deg.search(q), pre, check_exact=True, obj=q)
+        got = dist[dist["query_id"] == qid].drop(columns="query_id").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, pre, check_exact=True, obj=q)
+        assert pre.set_index("doc_key").loc[key, "keyword_match"] == kw, q
+    assert (dist["keyword_match"] > 0).sum() > len(qs) // 3
+
+
+def test_score_cut_blank_titles():
+    """The all-blank query's one word is "" (sw_set == {""}), the word a
+    blank title splits to.  A cut key without a doc_meta row and one with a
+    null title score like a title of punctuation only (10), a worded
+    title scores 0; alike from an index of the whole doc_meta table (which
+    lacks the first key) and from one over the cut's titles."""
+    import numpy as np
+
+    from holi_search_engine_spark.query.ranker import TitleWords, plan_query, score_cut
+
+    plan = plan_query("   ")
+    assert plan.sw_set == {""}
+    keys = np.array([64, 128, 192, 256], dtype=np.int64)  # 64 has no doc_meta row
+    meta_keys = np.array([128, 192, 256, 320], dtype=np.int64)
+    meta_titles = np.array([None, "hello world", " ?! ", "x"], dtype=object)
+    titles = ["", "", "hello world", " ?! "]
+    nan = np.full(len(keys), np.nan)
+    for title_words in (TitleWords(meta_keys, meta_titles), TitleWords(keys, titles)):
+        got = score_cut(
+            plan, keys, np.ones(len(keys), dtype=np.int64), {}, {}, nan, titles,
+            title_words, np.zeros(len(keys)), ["conv_id", "turn_idx"],
+        ).set_index("doc_key")
+        assert list(got.loc[keys, "keyword_match"]) == [10.0, 10.0, 0.0, 10.0]
+
+
 def test_negative_idf_scores_nan_like_java(spark, edge_index):
     """'signal' is in every doc, so Q3 gives idf = ln(5/6) < 0.  Java
     Math.pow(idf, 1.5) is NaN and the reference's weight accumulation

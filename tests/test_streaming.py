@@ -128,6 +128,101 @@ def test_ingest_rebuilds_stale_bm25_bounds(spark, xs_pdf, dictionary, vocabulary
         assert list(got["turn_idx"]) == list(exp["turn_idx"]), q
 
 
+def _with_tokenless_turn(pdf, conv_id):
+    """``pdf`` plus one turn whose text holds no token: the index has no
+    doc_stats row for it, but it counts in N."""
+    row = pdf.iloc[[0]].assign(conv_id=conv_id, turn_idx=pdf["turn_idx"].iloc[:1] * 0, text="!!! ???")
+    return pd.concat([pdf, row], ignore_index=True)
+
+
+@pytest.mark.parametrize("n_for_idf", [None, 462_821])
+def test_refresh_without_drop_changes_nothing(spark, xs_pdf, dictionary, tmp_path, n_for_idf):
+    """N is the turn count: refresh_global_stats on an index no drop
+    reached leaves ``_meta.json`` and wmetric as the build wrote them, for
+    a corpus with a token-less turn and for an explicit idf corpus size."""
+    from holi_search_engine_spark.plans.index_build import build_index, read_meta
+    from holi_search_engine_spark.streaming.incremental import refresh_global_stats
+
+    pdf = xs_pdf[xs_pdf["conv_id"] < "conv-00000004"].copy()
+    pdf["ts"] = pdf["ts"].dt.tz_localize(None)
+    pdf = _with_tokenless_turn(pdf, "conv-00000004")
+    paths = build_index(
+        spark, spark.createDataFrame(pdf), str(tmp_path / "idx"), dictionary,
+        buckets=2, n_for_idf=n_for_idf,
+    )
+    assert spark.read.parquet(paths.doc_stats).count() == len(pdf) - 1
+    meta0, wm0 = read_meta(paths), _index_tables(spark, paths)["wmetric"]
+    refresh_global_stats(spark, paths)
+    assert read_meta(paths) == meta0
+    assert meta0["n_docs"] == len(pdf)
+    assert meta0["n_for_idf"] == (n_for_idf or len(pdf))
+    pd.testing.assert_frame_equal(_index_tables(spark, paths)["wmetric"], wm0, check_exact=True)
+
+
+def test_drop_with_tokenless_turn_matches_oracle(
+    spark, xs_pdf, dictionary, vocabulary, tmp_path
+):
+    """Stream a drop that holds a token-less turn, refresh and resume the
+    build: the ranker is rank-identical to the oracle over the union, and
+    BM25 scores as an exhaustive scorer over the oracle's postings with
+    N = the union's turn count."""
+    import math
+
+    from holi_search_engine_spark.corpus import make_query_fixtures
+    from holi_search_engine_spark.oracle import pandas_oracle as O
+    from holi_search_engine_spark.plans.compression import BM25_B, BM25_K1
+    from holi_search_engine_spark.plans.index_build import build_index, read_meta
+    from holi_search_engine_spark.query.bm25 import BM25Engine, bm25_terms
+    from holi_search_engine_spark.query.ranker import RankerEngine
+    from holi_search_engine_spark.streaming.incremental import refresh_global_stats
+
+    pdf = xs_pdf.copy()
+    pdf["ts"] = pdf["ts"].dt.tz_localize(None)
+    half = pdf["conv_id"] < "conv-00000025"
+    base, drop = pdf[half], _with_tokenless_turn(pdf[~half], "conv-00000900")
+    union = pd.concat([base, drop], ignore_index=True)
+    paths = build_index(
+        spark, spark.createDataFrame(base), str(tmp_path / "idx"), dictionary, buckets=2
+    )
+    _stream_in(spark, drop, tmp_path / "inbox", paths, dictionary, buckets=2)
+    refresh_global_stats(spark, paths)
+    build_index(spark, spark.createDataFrame(union), paths.root, dictionary, buckets=2)
+    meta = read_meta(paths)
+    assert meta["n_docs"] == meta["n_for_idf"] == len(union)
+
+    oracle = O.build_index(
+        [((r.conv_id, int(r.turn_idx)), r.text) for r in union.itertuples()], dictionary
+    )
+    queries = [q for _, q in make_query_fixtures(vocabulary)]
+    ranker = RankerEngine(spark, paths, preload=True)
+    for q in queries:
+        got, exp = ranker.search(q), O.search(oracle, q)
+        assert list(zip(got["conv_id"], got["turn_idx"])) == [c.doc for c in exp], q
+        for g, c in zip(got["score"], exp):
+            assert abs(g - c.score()) < 1e-9, q
+
+    # exhaustive BM25 over the oracle's postings
+    dl: dict = {}
+    for plist in oracle.postings.values():
+        for doc, tf in plist:
+            dl[doc] = dl.get(doc, 0) + tf
+    avgdl = sum(dl.values()) / len(dl)
+    bm25 = BM25Engine(spark, paths)
+    for q in queries:
+        exp: dict = {}
+        for t in bm25_terms(q):
+            plist = oracle.postings.get(t, [])
+            idf = math.log(1.0 + (len(union) - len(plist) + 0.5) / (len(plist) + 0.5))
+            for doc, tf in plist:
+                norm = 1.0 - BM25_B + BM25_B * dl[doc] / avgdl
+                exp[doc] = exp.get(doc, 0.0) + idf * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * norm)
+        top = sorted(exp.values(), reverse=True)[:10]
+        got = bm25.search(q, 10)
+        np.testing.assert_allclose(got["score"], top, rtol=0, atol=1e-9, err_msg=q)
+        for c, t, score in zip(got["conv_id"], got["turn_idx"], got["score"]):
+            assert abs(exp[(c, int(t))] - score) < 1e-9, q
+
+
 def test_windowed_stream_matches_batch(spark, tmp_path):
     from holi_search_engine_spark.streaming.incremental import stream_events_windowed
 
