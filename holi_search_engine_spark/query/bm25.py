@@ -14,6 +14,12 @@ its blocks decode once and score vectorized.  Python work is O(blocks),
 not O(postings).  Pruning uses ``< θ`` (not ``≤``) so exact score ties
 still resolve by the doc-asc tie-break, making the top-k exactly equal
 to brute force — ``tests/test_bm25.py`` asserts doc-and-score equality.
+
+Each block is decoded and scored at most once per open engine: the first
+read of a block, by either path, fills its slot in the term's
+:class:`~.index_reader.BlockCache` with ``(doc keys, BM25 scores)``, and
+every later read is a slice.  The sweeps fill only the blocks they do
+not skip; the exhaustive path reads every block of its terms.
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ from ..plans.compression import (
 )
 from ..functions.javacompat import RE_QUERY_PUNCT as _RE_PUNCT  # ONE alphabet
 from ..plans.index_build import IndexPaths
-from .index_reader import IndexReader, TermBlocks
+from .index_reader import BlockCache, IndexReader
 
 
 def bm25_terms(query: str) -> list[str]:
@@ -47,30 +53,46 @@ def bm25_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def _scored_block(
+    cache: BlockCache, bi: int, weight: float, dl_norm: DocKeyLookup
+) -> tuple[np.ndarray, np.ndarray]:
+    """Block ``bi`` of a term as (int64 doc keys, float64 BM25 scores):
+    decoded and scored on its first read, the cached slot after."""
+    slot = cache.slots[bi]
+    if slot is None:
+        g = cache.blocks
+        keys, tfs = decode_block(g.doc_bytes[bi], g.tf_bytes[bi])
+        keys = keys.astype(np.int64)
+        tf = tfs.astype(np.float64)
+        scores = weight * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * dl_norm(keys))
+        slot = cache.fill(bi, keys, scores)
+    return slot
+
+
 class _TermSweep:
     """Per-term state for the block-range sweep over a term's
-    :class:`TermBlocks` slices: lazy block decode (with floor slicing for
-    partially skipped blocks) and a consumption offset within the decoded
-    block."""
+    :class:`BlockCache`: lazy block reads (with floor slicing for
+    partially skipped blocks) and a consumption offset within the read
+    block.  ``decode_counter`` counts the blocks the sweep reads, from
+    the cache or not."""
 
     __slots__ = (
-        "key_min_arr", "key_max_arr", "ub_arr", "doc_bytes", "tf_bytes",
-        "weight", "dl_norm", "n_blocks", "bi", "keys", "scores", "pos",
-        "floor", "decode_counter",
+        "key_min_arr", "key_max_arr", "ub_arr", "cache", "weight", "dl_norm",
+        "n_blocks", "bi", "keys", "scores", "pos", "floor", "decode_counter",
     )
 
     def __init__(
         self,
-        blocks: TermBlocks,
+        cache: BlockCache,
         weight: float,
         dl_norm: DocKeyLookup,
         decode_counter: list[int] | None = None,
     ) -> None:
+        blocks = cache.blocks
         self.key_min_arr = blocks.key_min
         self.key_max_arr = blocks.key_max
         self.ub_arr = blocks.ub_bm25
-        self.doc_bytes = blocks.doc_bytes
-        self.tf_bytes = blocks.tf_bytes
+        self.cache = cache
         self.weight = weight
         self.dl_norm = dl_norm
         self.n_blocks = len(blocks)
@@ -79,7 +101,7 @@ class _TermSweep:
         self.scores: np.ndarray | None = None
         self.pos = 0
         # keys ≤ floor of the CURRENT block were skipped while the block
-        # was still encoded; applied as a slice if the block decodes later
+        # was still unread; applied as a slice if the block is read later
         self.floor = -1
         self.decode_counter = decode_counter if decode_counter is not None else [0]
 
@@ -106,11 +128,9 @@ class _TermSweep:
         if self.keys is not None:
             return
         self.decode_counter[0] += 1
-        keys, tfs = decode_block(self.doc_bytes[self.bi], self.tf_bytes[self.bi])
-        self.keys = keys.astype(np.int64)
-        tf = tfs.astype(np.float64)
-        norm = self.dl_norm(self.keys)
-        self.scores = self.weight * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * norm)
+        self.keys, self.scores = _scored_block(
+            self.cache, self.bi, self.weight, self.dl_norm
+        )
         self.pos = (
             int(np.searchsorted(self.keys, self.floor, side="right"))
             if self.floor >= 0
@@ -224,11 +244,14 @@ class BM25Engine:
     """Driver-side BM25 engine over an :class:`IndexReader`.
 
     Preloaded mode (small indexes) holds the block BYTES in-process and
-    decodes lazily per touched block.  Above the block-table size
-    threshold (``index_reader.PRELOAD_MAX_BYTES``) the reader
-    auto-degrades: each query fetches only its own terms' blocks and df
-    rows, one term-pruned read of each per query (LRU-cached) — identical
-    results, no caller change.  Doc-length norms stay preloaded in both
+    decodes lazily per touched block, once per open: a block's doc keys
+    and scores stay in the reader's LRU (``IndexReader.block_cache``,
+    capped in terms and bytes) for every later query that reads it.
+    Above the block-table size threshold (``index_reader.PRELOAD_MAX_BYTES``)
+    the reader auto-degrades: each query fetches only its own terms' blocks
+    and df rows, one term-pruned read of each per query (LRU-cached) —
+    identical results, no caller change; the blocks it reads are scored
+    once as long as its entry stays in the LRU.  Doc-length norms stay preloaded in both
     modes: at 16 B/doc they are orders of magnitude smaller than the
     block table, and WAND consults them per decoded posting; the corpus
     size where *they* no longer fit is the documented hand-off to
@@ -254,10 +277,9 @@ class BM25Engine:
             dl.keys,
             1.0 - BM25_B + BM25_B * dl.vals.astype(np.float64) / self.avgdl,
         )
-        # instrumentation for skip-rate tests: count of blocks actually
-        # decoded by WAND cursors (shared mutable cell, summed per search)
+        # instrumentation for skip-rate tests: count of blocks the WAND
+        # cursors read, from the cache or not (shared mutable cell)
         self._decode_counter: list[int] = [0]
-        self._score_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
     @property
     def blocks_decoded(self) -> int:
@@ -282,8 +304,8 @@ class BM25Engine:
         decoding; dense conjunctions route to the vectorized path."""
         terms = bm25_terms(query)
         self.reader.fetch(terms)
-        term_blocks = [(t, self.reader.blocks(t)) for t in terms]
-        if any(g is None for _, g in term_blocks) or not term_blocks:
+        term_caches = [(t, self.reader.block_cache(t)) for t in terms]
+        if any(c is None for _, c in term_caches) or not term_caches:
             return self._to_frame([])  # a missing term empties the AND
         # candidate mass is bounded by the RAREST term's list.  Route to
         # the gap-pruned sweep when the rarest list is small in absolute
@@ -292,15 +314,15 @@ class BM25Engine:
         # huge list in block units between the rare docs, while brute
         # force pays the full union decode.  Brute-force only when the
         # lists are comparably sized (no gap to exploit) or single-term.
-        dfs = [self.reader.df(t) for t, _ in term_blocks]
+        dfs = [self.reader.df(t) for t, _ in term_caches]
         rarest, total = min(dfs), sum(dfs)
-        if len(term_blocks) == 1 or (
+        if len(term_caches) == 1 or (
             rarest > self.TAAT_THRESHOLD and total < self.AND_ASYM_RATIO * rarest
         ):
             return self.search_bruteforce_and(query, k)
         sweeps = [
-            _TermSweep(g, self._weight(t), self._dl_norm, self._decode_counter)
-            for t, g in term_blocks
+            _TermSweep(c, self._weight(t), self._dl_norm, self._decode_counter)
+            for t, c in term_caches
         ]
         if any(s.exhausted() for s in sweeps):
             return self._to_frame([])
@@ -312,20 +334,20 @@ class BM25Engine:
         the match count equals the term count exactly there)."""
         terms = bm25_terms(query)
         self.reader.fetch(terms)
-        key_parts: list[np.ndarray] = []
-        score_parts: list[np.ndarray] = []
+        parts: list[tuple[np.ndarray, np.ndarray]] = []
         for t in terms:
-            if self.reader.blocks(t) is None:
+            scored = self._scored_blocks(t)
+            if scored is None:
                 return self._to_frame([])
-            keys, scores = self._term_scores(t)
-            key_parts.append(keys)
-            score_parts.append(scores)
-        if not key_parts:
+            parts += scored
+        if not parts:
             return self._to_frame([])
         uniq, inv, cnt = np.unique(
-            np.concatenate(key_parts), return_inverse=True, return_counts=True
+            np.concatenate([p[0] for p in parts]),
+            return_inverse=True,
+            return_counts=True,
         )
-        acc = np.bincount(inv, weights=np.concatenate(score_parts))
+        acc = np.bincount(inv, weights=np.concatenate([p[1] for p in parts]))
         full = np.flatnonzero(cnt == len(terms))
         if not len(full):
             return self._to_frame([])
@@ -339,18 +361,15 @@ class BM25Engine:
         the per-pivot loop loses to array math)."""
         terms = bm25_terms(query)
         self.reader.fetch(terms)
-        key_parts: list[np.ndarray] = []
-        score_parts: list[np.ndarray] = []
+        parts: list[tuple[np.ndarray, np.ndarray]] = []
         for t in terms:
-            if self.reader.blocks(t) is None:
-                continue
-            keys, scores = self._term_scores(t)
-            key_parts.append(keys)
-            score_parts.append(scores)
-        if not key_parts:
+            parts += self._scored_blocks(t) or []
+        if not parts:
             return self._to_frame([])
-        uniq, inv = np.unique(np.concatenate(key_parts), return_inverse=True)
-        acc = np.bincount(inv, weights=np.concatenate(score_parts))
+        uniq, inv = np.unique(
+            np.concatenate([p[0] for p in parts]), return_inverse=True
+        )
+        acc = np.bincount(inv, weights=np.concatenate([p[1] for p in parts]))
         if len(acc) > k:
             thr = np.partition(acc, len(acc) - k)[len(acc) - k]
             cand = np.flatnonzero(acc >= thr)  # ≥ keeps score ties for the
@@ -359,25 +378,16 @@ class BM25Engine:
         order = cand[np.lexsort((uniq[cand], -acc[cand]))][:k]
         return self._to_frame([(int(uniq[i]), float(acc[i])) for i in order])
 
-    #: per-term scores over the reader's decoded postings: Zipf-head
-    #: terms recur across queries, and their length-norm lookup costs
-    #: more than the decode the reader already caches
-    SCORE_CACHE_TERMS = 64
-
-    def _term_scores(self, term: str) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_keys, bm25_scores) for one term; small LRU."""
-        hit = self._score_cache.get(term)
-        if hit is not None:
-            self._score_cache[term] = self._score_cache.pop(term)  # refresh
-            return hit
-        keys, tf = self.reader.postings(term)
-        norm = self._dl_norm(keys)
+    def _scored_blocks(self, term: str) -> list[tuple[np.ndarray, np.ndarray]] | None:
+        """Every block of the term as (doc keys, scores), in key order;
+        None if the index lacks the term."""
+        cache = self.reader.block_cache(term)
+        if cache is None:
+            return None
         w = self._weight(term)
-        scores = w * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * norm)
-        if len(self._score_cache) >= self.SCORE_CACHE_TERMS:
-            self._score_cache.pop(next(iter(self._score_cache)))
-        self._score_cache[term] = (keys, scores)
-        return keys, scores
+        return [
+            _scored_block(cache, i, w, self._dl_norm) for i in range(len(cache.slots))
+        ]
 
     # Above this many total postings across the query's terms, the
     # vectorized exhaustive path beats the per-pivot WAND loop: when the
@@ -399,9 +409,9 @@ class BM25Engine:
         (both are exact with the same doc-asc tie-break)."""
         terms = bm25_terms(query)
         self.reader.fetch(terms)
-        term_blocks = [(t, self.reader.blocks(t)) for t in terms]
-        total = sum(self.reader.df(t) for t, g in term_blocks if g is not None)
-        n_live = sum(1 for _, g in term_blocks if g is not None)
+        term_caches = [(t, self.reader.block_cache(t)) for t in terms]
+        total = sum(self.reader.df(t) for t, c in term_caches if c is not None)
+        n_live = sum(1 for _, c in term_caches if c is not None)
         # single-term queries: block-max bounds cannot prune (every block
         # of the one list is a candidate until the heap fills with ITS own
         # scores), so WAND degenerates to a per-posting Python loop; the
@@ -409,9 +419,9 @@ class BM25Engine:
         if total > self.TAAT_THRESHOLD or n_live <= 1:
             return self.search_bruteforce(query, k)
         sweeps = [
-            _TermSweep(g, self._weight(t), self._dl_norm, self._decode_counter)
-            for t, g in term_blocks
-            if g is not None
+            _TermSweep(c, self._weight(t), self._dl_norm, self._decode_counter)
+            for t, c in term_caches
+            if c is not None
         ]
         sweeps = [s for s in sweeps if not s.exhausted()]
         if not sweeps:

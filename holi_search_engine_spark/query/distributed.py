@@ -39,7 +39,7 @@ from ..plans.compression import DocKeyLookup, decode_block, doc_key_columns
 from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
 from .bm25 import BM25_B, _TermSweep, bm25_idf, bm25_terms, block_sweep_topk
-from .index_reader import _by_term
+from .index_reader import BlockCache, _by_term
 from .ranker import (
     EXPAND_THRESHOLD,
     TOP_CUT,
@@ -379,9 +379,8 @@ def distributed_bm25_local_topk_many(
     range-bounds computation, one block scan pruned to the union's
     buckets+terms, one cogroup — and a term shared by multiple queries
     ships its blocks to a range task ONCE, where each query's sweep
-    reuses the same block rows (block-max skipping keeps per-query decode
-    sub-linear, so the duplicate decode across queries touching the same
-    term is bounded by each sweep's own skip behavior).
+    reads the same scored blocks: a block is decoded and scored by the
+    first sweep that does not skip it, and sliced by every later one.
 
     ``query_id`` is the position in ``queries``; a query with no
     tokenizable / indexed terms contributes zero rows.  Returns None when
@@ -429,17 +428,18 @@ def distributed_bm25_local_topk_many(
             dl_pdf["doc_key"].to_numpy(dtype=np.int64),
             1.0 - BM25_B + BM25_B * dl_pdf["dl"].to_numpy(dtype=np.float64) / b_avgdl,
         )
-        # slice each term's blocks ONCE; every query's sweep over that
-        # term reads the same column slices
-        term_groups = _by_term(blocks_pdf)
+        # slice each term's blocks ONCE, and score each block at most
+        # once: a term's weight is the same for every query of the batch,
+        # so every query's sweep over that term reads one BlockCache
+        caches = {t: BlockCache(g) for t, g in _by_term(blocks_pdf).items()}
         qids: list[int] = []
         keys: list[int] = []
         scores: list[float] = []
         for qid, weights in b_qweights.items():
             sweeps = [
-                _TermSweep(term_groups[t], w, norms)
+                _TermSweep(caches[t], w, norms)
                 for t, w in weights.items()
-                if t in term_groups
+                if t in caches
             ]
             if not sweeps:
                 continue

@@ -18,7 +18,8 @@ the index the reference's single ranker node reads, SURVEY §1):
   to the terms, and one term-pruned read of wmetric, two Spark jobs per
   query however many terms it has;
 - one LRU of per-term entries, capped in terms and in bytes: the block
-  rows a degraded read fetched and the decoded postings;
+  rows a degraded read fetched, the ranker's decoded postings and BM25's
+  scored blocks (a :class:`BlockCache` per term, filled block by block);
 - the per-doc lookups (ntf, title/snippet, pagerank, doc length) as
   sorted doc-key arrays: a whole table read once, or a pruned read of
   just the candidates' rows.
@@ -31,6 +32,7 @@ callers open the engines again.
 from __future__ import annotations
 
 from collections import OrderedDict
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -86,18 +88,41 @@ class TermBlocks:
         )
 
 
+class BlockCache:
+    """What a scorer derives from one term's blocks, kept per block:
+    ``slots[i]`` is None until block i is first read, then holds the arrays
+    computed from it, frozen.  ``fill`` charges their bytes through
+    ``charge``: the reader's LRU while the cache's entry is in it, nothing
+    for a cache that lives only as long as one task or one query."""
+
+    __slots__ = ("blocks", "slots", "charge")
+
+    def __init__(self, blocks: TermBlocks, charge=None) -> None:
+        self.blocks = blocks
+        self.slots: list[tuple[np.ndarray, ...] | None] = [None] * len(blocks)
+        self.charge = charge
+
+    def fill(self, i: int, *arrays: np.ndarray) -> tuple[np.ndarray, ...]:
+        slot = self.slots[i] = _read_only(*arrays)
+        if self.charge is not None:
+            self.charge(sum(a.nbytes for a in arrays))
+        return slot
+
+
 class _Term:
     """One term's resident slice of the index: its block rows (None when
     the index lacks the term), df (postings count, 0 when absent), idf (0
-    when absent, quirk Q8) and, once decoded, its doc-ordered postings."""
+    when absent, quirk Q8), once decoded its doc-ordered postings, and its
+    scorer's :class:`BlockCache`."""
 
-    __slots__ = ("blocks", "df", "idf", "postings", "nbytes")
+    __slots__ = ("blocks", "df", "idf", "postings", "block_cache", "nbytes")
 
     def __init__(self, df: int, idf: float) -> None:
         self.blocks = _UNREAD
         self.df = df
         self.idf = idf
         self.postings: tuple[np.ndarray, np.ndarray] | None = None
+        self.block_cache: BlockCache | None = None
         self.nbytes = 0
 
 
@@ -105,12 +130,12 @@ class IndexReader:
     """Reads a built index for one engine; see the module docstring."""
 
     #: LRU caps.  Zipf-head terms dominate decode cost and repeat across
-    #: queries; a small cache of decoded lists is the standard ranker-node
-    #: move (cf. Lucene's LRUQueryCache).  The cap is in BYTES as well as
-    #: terms: a decoded hot-term list is O(corpus) (16 B/posting), so a
-    #: term-count cap alone would scale driver memory with the corpus and
-    #: defeat the preload_max_bytes gate.  A list over 1/8 of the byte cap
-    #: is decoded per use, not kept.
+    #: queries; a small cache of decoded lists and scored blocks is the
+    #: standard ranker-node move (cf. Lucene's LRUQueryCache).  The cap is
+    #: in BYTES as well as terms: a decoded hot-term list is O(corpus)
+    #: (16 B/posting), so a term-count cap alone would scale driver memory
+    #: with the corpus and defeat the preload_max_bytes gate.  A decoded
+    #: list over 1/8 of the byte cap is decoded per use, not kept.
     CACHE_TERMS = 256
     CACHE_BYTES = 256 << 20
 
@@ -156,11 +181,12 @@ class IndexReader:
         ``terms``, stats of ``stats_only``.  None of them is evicted
         before the next fetch; a degraded read of the missing ones costs
         one Spark job for blocks and one for wmetric."""
-        if self.preloaded:
-            return  # every term is resident
         terms = list(dict.fromkeys(terms))
         self._query_terms = frozenset([*terms, *stats_only])
-        self._load(terms, [t for t in stats_only if t not in terms])
+        if self.preloaded:  # every term is resident: only drop what the
+            self._evict()  # last query's terms held past the caps
+        else:
+            self._load(terms, [t for t in stats_only if t not in terms])
 
     def blocks(self, term: str) -> TermBlocks | None:
         """The term's block rows in block_no order, None if absent."""
@@ -196,6 +222,17 @@ class IndexReader:
             entry.postings = out
             self._charge(entry, nbytes)
         return out
+
+    def block_cache(self, term: str) -> BlockCache | None:
+        """The term's :class:`BlockCache` on its LRU entry, None if the
+        index lacks the term.  Its slots are charged to the LRU while the
+        entry is cached, and go with the entry when it is evicted."""
+        entry = self._entry(term, blocks=True)
+        if entry.blocks is None:
+            return None
+        if entry.block_cache is None:
+            entry.block_cache = BlockCache(entry.blocks, partial(self._charge, entry))
+        return entry.block_cache
 
     def _entry(self, term: str, blocks: bool = False) -> _Term:
         entry = self._cache.get(term)
@@ -261,7 +298,12 @@ class IndexReader:
             victim = next((t for t in self._cache if t not in self._query_terms), None)
             if victim is None:
                 return
-            self._cache_bytes -= self._cache.pop(victim).nbytes
+            entry = self._cache.pop(victim)
+            self._cache_bytes -= entry.nbytes
+            if entry.block_cache is not None:
+                # a sweep still holding it (a term read without a fetch)
+                # fills slots the LRU no longer counts
+                entry.block_cache.charge = None
 
     # ------------------------------------------------------------- docs
 

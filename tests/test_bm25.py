@@ -1,6 +1,7 @@
 """Block-max WAND BM25: exact top-k equality vs brute-force scoring."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from holi_search_engine_spark.corpus import make_query_fixtures
@@ -12,19 +13,36 @@ def bm25(spark, built_index):
     return BM25Engine(spark, built_index)
 
 
+@pytest.fixture
+def bm25_cold(spark, built_index):
+    """A second engine on the same index, opened per test and only ever
+    asked for exhaustive answers: its scored blocks share nothing with the
+    ``bm25`` engine's, where WAND and brute force read one cache."""
+    return BM25Engine(spark, built_index)
+
+
 def _assert_equal(got, exp, label):
     assert list(got["conv_id"]) == list(exp["conv_id"]), label
     assert list(got["turn_idx"]) == list(exp["turn_idx"]), label
     assert np.allclose(got["score"], exp["score"], atol=1e-12), label
 
 
-def test_wand_matches_bruteforce_fixture_queries(bm25, vocabulary):
+def _assert_cold(got, exp, cold, label):
+    """``got`` (a sweep) and ``exp`` (brute force on the same engine)
+    against ``cold``, brute force on an engine with its own cache."""
+    _assert_equal(got, cold, f"{label} vs cold")
+    pd.testing.assert_frame_equal(exp, cold, check_exact=True, obj=label)
+
+
+def test_wand_matches_bruteforce_fixture_queries(bm25, bm25_cold, vocabulary):
     for qid, q in make_query_fixtures(vocabulary):
         for k in (1, 5, 10):
-            _assert_equal(bm25.search(q, k), bm25.search_bruteforce(q, k), f"{qid} k={k}")
+            got, exp = bm25.search(q, k), bm25.search_bruteforce(q, k)
+            _assert_equal(got, exp, f"{qid} k={k}")
+            _assert_cold(got, exp, bm25_cold.search_bruteforce(q, k), f"{qid} k={k}")
 
 
-def test_wand_matches_bruteforce_hot_terms(bm25, vocabulary):
+def test_wand_matches_bruteforce_hot_terms(bm25, bm25_cold, vocabulary):
     # Zipf-head terms (incl. stopwords — longest posting lists)
     hot = vocabulary[:5]
     queries = [
@@ -35,7 +53,9 @@ def test_wand_matches_bruteforce_hot_terms(bm25, vocabulary):
     ]
     for q in queries:
         for k in (1, 10, 50, 250):
-            _assert_equal(bm25.search(q, k), bm25.search_bruteforce(q, k), f"{q[:30]} k={k}")
+            got, exp = bm25.search(q, k), bm25.search_bruteforce(q, k)
+            _assert_equal(got, exp, f"{q[:30]} k={k}")
+            _assert_cold(got, exp, bm25_cold.search_bruteforce(q, k), f"{q[:30]} k={k}")
 
 
 def test_k_larger_than_candidates(bm25, vocabulary):
@@ -92,6 +112,78 @@ def test_wand_skips_blocks(bm25_skip):
     _assert_equal(
         got, bm25_skip.search_bruteforce(q, 1), "skip query still exact"
     )
+
+
+def test_blocks_decode_once_per_open(spark, bm25_skip, monkeypatch):
+    """A fresh engine decodes each block once: a repeated sweep reads
+    every block from the cache, and brute force then decodes only the
+    blocks the sweep skipped.  ``blocks_decoded`` counts the sweep's block
+    reads either way."""
+    from holi_search_engine_spark.query import bm25 as bm25_mod
+
+    calls = [0]
+    decode = bm25_mod.decode_block
+
+    def counting(doc_bytes, tf_bytes):
+        calls[0] += 1
+        return decode(doc_bytes, tf_bytes)
+
+    monkeypatch.setattr(bm25_mod, "decode_block", counting)
+    eng = BM25Engine(spark, bm25_skip.paths)
+    q = "common rareterm"
+    frames, reads, decodes = [], [], []
+    for _ in range(2):
+        c0, r0 = calls[0], eng.blocks_decoded
+        frames.append(eng.search(q, 1))
+        decodes.append(calls[0] - c0)
+        reads.append(eng.blocks_decoded - r0)
+    assert 0 < decodes[0] == reads[0] == reads[1] < eng.total_blocks(q)
+    assert decodes[1] == 0
+    pd.testing.assert_frame_equal(frames[0], frames[1], check_exact=True)
+    c0 = calls[0]
+    _assert_equal(eng.search_bruteforce(q, 1), frames[0], "bruteforce after sweep")
+    assert calls[0] - c0 == eng.total_blocks(q) - reads[0]
+
+
+def test_capped_cache_same_answers(spark, built_index, bm25, vocabulary):
+    """A block cache capped at a few KB evicts all the time and answers
+    exactly as an uncapped one.  Between queries it holds at most the cap
+    plus the current query's entries, and counts exactly the bytes of the
+    entries it holds."""
+    capped = BM25Engine(spark, built_index)
+    reader = capped.reader
+    reader.CACHE_BYTES = 4 << 10
+    rng = np.random.default_rng(11)
+    for i in range(200):
+        # Zipf-ish: head terms recur (exhaustive path), tail terms do not
+        n = int(rng.integers(1, 5))
+        words = [vocabulary[int(rng.zipf(1.3)) % len(vocabulary)] for _ in range(n)]
+        q = " ".join(words)
+        for name in ("search", "search_and"):
+            pd.testing.assert_frame_equal(
+                getattr(capped, name)(q, 10), getattr(bm25, name)(q, 10),
+                check_exact=True, obj=f"{name} {q!r}",
+            )
+        held = {t: e.nbytes for t, e in reader._cache.items()}
+        assert reader._cache_bytes == sum(held.values()), q
+        current = sum(held.get(t, 0) for t in reader._query_terms)
+        assert reader._cache_bytes <= reader.CACHE_BYTES + current, q
+
+
+def test_evicted_entry_fill_not_counted(spark, built_index, vocabulary):
+    """A block cache whose entry left the LRU (its term read without a
+    fetch, then pushed out) still fills, but the LRU does not count it."""
+    from holi_search_engine_spark.query.index_reader import IndexReader
+
+    reader = IndexReader(spark, built_index)
+    reader.CACHE_TERMS = 1
+    first, second = [t for t in vocabulary if reader.blocks(t) is not None][:2]
+    cache = reader.block_cache(first)
+    reader.block_cache(second)  # evicts first
+    assert first not in reader._cache
+    before = reader._cache_bytes
+    cache.fill(0, np.arange(4, dtype=np.int64))
+    assert cache.slots[0] is not None and reader._cache_bytes == before
 
 
 def test_scores_positive_and_sorted(bm25, vocabulary):
@@ -156,7 +248,7 @@ from hypothesis import strategies as st
 
 def _make_sweep(postings, weight, block_size, counter):
     """Encode a (doc -> tf) dict into a blocks frame, slice it per term
-    as the index reader does and wrap a _TermSweep."""
+    as the index reader does and wrap a _TermSweep over a fresh cache."""
     import pandas as pd
 
     from holi_search_engine_spark.plans.compression import (
@@ -165,7 +257,7 @@ def _make_sweep(postings, weight, block_size, counter):
         encode_block,
     )
     from holi_search_engine_spark.query.bm25 import _TermSweep
-    from holi_search_engine_spark.query.index_reader import _by_term
+    from holi_search_engine_spark.query.index_reader import BlockCache, _by_term
 
     keys = np.array(sorted(postings), dtype=np.uint64)
     tfs = np.array([postings[k] for k in sorted(postings)], dtype=np.uint64)
@@ -181,7 +273,7 @@ def _make_sweep(postings, weight, block_size, counter):
                  "doc_bytes", "tf_bytes"],
     )
     norms = DocKeyLookup(np.array([0], dtype=np.int64), np.array([1.0]))
-    return _TermSweep(_by_term(blocks)["t"], weight, norms, counter)
+    return _TermSweep(BlockCache(_by_term(blocks)["t"]), weight, norms, counter)
 
 
 @settings(max_examples=60, deadline=None)
@@ -222,19 +314,18 @@ def test_block_sweep_matches_bruteforce_property(terms, k, block_size):
     assert np.allclose([s for _, s in got], [s for _, s in exp], atol=1e-12)
 
 
-def test_and_matches_bruteforce(bm25, vocabulary):
+def test_and_matches_bruteforce(bm25, bm25_cold, vocabulary):
     for qid, q in make_query_fixtures(vocabulary):
         for k in (1, 10):
-            _assert_equal(
-                bm25.search_and(q, k), bm25.search_bruteforce_and(q, k),
-                f"AND {qid} k={k}",
+            got, exp = bm25.search_and(q, k), bm25.search_bruteforce_and(q, k)
+            _assert_equal(got, exp, f"AND {qid} k={k}")
+            _assert_cold(
+                got, exp, bm25_cold.search_bruteforce_and(q, k), f"AND {qid} k={k}"
             )
-    hot = vocabulary[:3]
-    _assert_equal(
-        bm25.search_and(" ".join(hot), 25),
-        bm25.search_bruteforce_and(" ".join(hot), 25),
-        "AND hot",
-    )
+    hot = " ".join(vocabulary[:3])
+    got, exp = bm25.search_and(hot, 25), bm25.search_bruteforce_and(hot, 25)
+    _assert_equal(got, exp, "AND hot")
+    _assert_cold(got, exp, bm25_cold.search_bruteforce_and(hot, 25), "AND hot")
 
 
 def test_and_absent_term_empty(bm25, vocabulary):
