@@ -1,7 +1,7 @@
 """Pure-Python xxHash64, bit-identical to Spark's ``F.xxhash64`` on
 string columns.
 
-Why this exists: ``DistributedRanker`` prunes the block scan to the query
+Why this exists: both distributed plans prune the block scan to the query
 terms' partition buckets (``bucket = pmod(xxhash64(term), B)``, assigned
 at build time in ``plans/index_build.py:409``).  Computing that bucket at
 query time with a Spark job (``createDataFrame([...]).collect()``) costs

@@ -1,31 +1,24 @@
 """Distributed reference-semantics and BM25 search over the block index —
 the path a 10^12-turn corpus needs when a Zipf-head term's posting list
-cannot sit in driver memory.  Spark runs what grows with the corpus; the
-per-query work on a bounded set of docs runs the single-node code.
+cannot sit in driver memory.
 
 Each semantics has ONE plan, and it scores a batch of queries; a single
 query is a batch of one (:meth:`DistributedRanker.search`,
-:func:`distributed_bm25_topk`).
+:func:`distributed_bm25_topk`).  Both plans have one shape: a block scan
+pruned to the batch's buckets and terms and joined to the doc-key ranges
+each block overlaps (:func:`_range_scan`), one kernel per range running
+the single-node code for every query, and a driver merge of the ranges'
+local top-ks.  Every posting of a doc shares its key, so a range
+computes each of its docs exactly, and a doc of the global top-k is in
+its range's top-k (the partial-aggregate-then-merge of "Cache-Efficient
+Top-k Aggregation over High Cardinality Large Datasets", VLDB 2023).
 
-Reference-semantics plan (:meth:`DistributedRanker.search_many`):
-- block scan pruned TWICE to the union of the batch's lookup terms:
-  partition pruning on ``bucket`` + predicate pushdown on ``term``;
-- mapInPandas decode of only those blocks → (term, doc_key, tf) rows,
-  fanned out to the queries that look each term up;
-- candidate aggregation per (query, doc) (occurrence, first-term order
-  for quirk Q5), with one pooled count action deciding the two-step
-  expansion (re-run with stopwords included when candidates < 50,
-  ``Ranker.java:177-200``) for every query at once;
-- top-250 occurrence cut per query (rank window);
-- one collect of the cut: per (query, doc) its occurrence, its
-  term → tf map without the Q5-dropped hit, and its ntf, title and rank
-  from left joins on the stored ``doc_key``.  The driver scores each
-  query's cut with :func:`~.ranker.score_cut`, the scorer of
-  ``RankerEngine.search``, so the two tiers answer bit-identically.
-
-BM25 plan (:func:`distributed_bm25_topk_many`): one doc-key-range cogroup
-whose kernel runs the single-node :func:`~.bm25.block_sweep_topk` for
-every query per range, then a driver merge of the per-range local top-ks.
+- Reference semantics (:meth:`DistributedRanker.search_many`): the
+  kernel runs :func:`~.ranker.candidates` and :func:`~.ranker.top_cut`;
+  the driver scores each query's merged cut with
+  :func:`~.ranker.score_cut`, as ``RankerEngine.search`` does.
+- BM25 (:func:`distributed_bm25_topk_many`): the kernel, a cogroup with
+  the range's doc lengths, runs :func:`~.bm25.block_sweep_topk`.
 """
 
 from __future__ import annotations
@@ -35,216 +28,95 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.xxhash import term_bucket
-from ..plans.compression import DocKeyLookup, decode_block, doc_key_columns
+from ..plans.compression import DocKeyLookup, doc_key_columns
 from ..plans.index_build import IndexPaths, read_meta
 from ..sources.catalog import read_table, table_exists
 from .bm25 import BM25_B, _TermSweep, bm25_idf, bm25_terms, block_sweep_topk
-from .index_reader import BlockCache, _by_term
+from .index_reader import BlockCache, _by_term, decode_postings
 from .ranker import (
-    EXPAND_THRESHOLD,
-    TOP_CUT,
+    QueryPlan,
     TitleWords,
+    candidates,
     empty_result,
     plan_query,
     score_cut,
+    top_cut,
 )
-
-_DECODE_SCHEMA = "term string, doc_key long, tf double"
-
-
-def _decode_blocks(batches):
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        outs = []
-        for term, db, tb in zip(pdf["term"], pdf["doc_bytes"], pdf["tf_bytes"]):
-            keys, tfs = decode_block(db, tb)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term": term,
-                        "doc_key": keys.astype(np.int64),
-                        "tf": tfs.astype(np.float64),
-                    }
-                )
-            )
-        yield pd.concat(outs, ignore_index=True)
 
 
 class DistributedRanker:
     def __init__(self, spark: SparkSession, paths: IndexPaths) -> None:
         self.spark = spark
         self.paths = paths
-        meta = read_meta(paths)
-        self.doc_cols: list[str] = meta["doc_cols"]
-        self.buckets: int = meta["buckets"]
+        self.meta = read_meta(paths)
+        self.doc_cols: list[str] = self.meta["doc_cols"]
         # optional static prior (Ranker.java:112-120); absent ⇒ 0
         self._has_pagerank = table_exists(spark, paths.pageranks)
-
-    def _term_buckets(self, terms: list[str]) -> dict[str, int]:
-        # driver-side pure-Python xxhash64 (validated bit-identical to
-        # F.xxhash64 in tests/test_distributed.py) — the previous
-        # createDataFrame(...).collect() form submitted a ~100 ms Spark
-        # job per query just to evaluate pmod(xxhash64(term), buckets),
-        # dominating a serving path whose p95 budget is ~10 ms
-        return {t: term_bucket(t, self.buckets) for t in terms}
 
     def search(self, query: str, limit: int | None = None) -> pd.DataFrame:
         """Reference-semantics search for one query: :meth:`search_many`
         over a batch of one, without the ``query_id`` column."""
         return self.search_many([query], limit).drop(columns="query_id")
 
-    def _postings_df_many(self, qid_orders: dict[int, list[str]]) -> DataFrame:
-        """(query_id, term, ord, doc_key, tf) for MANY queries' lookup
-        lists in one block scan: the scan prunes to the UNION of the
-        batch's buckets+terms, decodes each block ONCE, and the broadcast
-        (query_id, term, ord) map fans a decoded term row out to exactly
-        the queries that look it up — per-query ``ord`` preserved, so the
-        quirk-Q5 first-term-drop stays per query."""
-        union_terms = sorted({t for ts in qid_orders.values() for t in ts})
-        tb = self._term_buckets(union_terms)
-        blocks = (
-            read_table(self.spark, self.paths.blocks)
-            .where(F.col("bucket").isin(sorted(set(tb.values()))))
-            .where(F.col("term").isin(union_terms))
-            .select("term", "doc_bytes", "tf_bytes")
-        )
-        decoded = blocks.mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-        odf = self.spark.createDataFrame(
-            [
-                (qid, t, o)
-                for qid, ts in qid_orders.items()
-                for o, t in enumerate(ts)
-            ],
-            "query_id int, term string, ord int",
-        )
-        return decoded.join(F.broadcast(odf), "term")
-
     def search_many(
         self, queries: list[str], limit: int | None = None
     ) -> pd.DataFrame:
-        """Reference-semantics search for a BATCH of queries in 3 Spark
-        actions however many queries it holds: one pooled candidate-count
-        action (all queries' first passes in one scan), one pruned
-        wmetric read for the union of the batch's words, and one collect
-        of the cut docs, which also re-scans the blocks for just the
-        queries the reference's ``numResults < 50`` branch re-runs.
+        """Reference-semantics search for a BATCH of queries: one pruned
+        wmetric read for the idfs of the batch's words, and one collect
+        of every query's per-range cuts (:func:`_ranker_range_cuts`) with
+        their ntf, title and rank left-joined on the stored ``doc_key``.
+        The driver merges each query's range cuts, cuts them with
+        :func:`~.ranker.top_cut` and scores the cut with
+        :func:`~.ranker.score_cut`, so each query's rows equal its
+        single-node answer exactly.
 
-        Spark builds each query's 250-doc cut (expansion control flow, Q5
-        first-term drop per query); the driver scores it with
-        :func:`~.ranker.score_cut`, the scorer of ``RankerEngine.search``,
-        so each query's rows equal its single-node answer exactly.
         Output adds a leading ``query_id`` (position in ``queries``);
         ``limit`` applies per query.  Queries with no candidates
-        contribute zero rows.  The cached postings are released on every
-        exit.
+        contribute zero rows.
         """
-        from pyspark.sql import Window
-
         plans = {qid: plan_query(q) for qid, q in enumerate(queries)}
         plans = {qid: p for qid, p in plans.items() if p is not None}
-        if not plans:
+        docs = read_table(self.spark, self.paths.doc_stats)
+        cuts = _ranker_range_cuts(self.spark, self.paths, plans, docs, meta=self.meta)
+        if cuts is None:
             return self._no_rows()
-
-        def candidates(hits: DataFrame) -> DataFrame:
-            return hits.groupBy("query_id", "doc_key").agg(
-                F.count(F.lit(1)).alias("occurrence"),
-                F.min("ord").alias("first_ord"),
+        wm_pdf = (
+            read_table(self.spark, self.paths.wmetric)
+            .where(F.col("term").isin(sorted(
+                {w for p in plans.values() for w in p.word_count}
+            )))
+            .select("term", "idf")
+            .toPandas()
+        )
+        idf = {t: float(i) for t, i in zip(wm_pdf["term"], wm_pdf["idf"])}
+        rows = (
+            cuts.join(docs.select("doc_key", "ntf"), "doc_key", "left")
+            .join(self._doc_table(self.paths.doc_meta, "title"), "doc_key", "left")
+        )
+        if self._has_pagerank:
+            rows = rows.join(
+                self._doc_table(self.paths.pageranks, "rank"), "doc_key", "left"
             )
+        pdf = rows.toPandas()
 
-        hits1 = self._postings_df_many(
-            {qid: p.first_order for qid, p in plans.items()}
-        ).cache()
-        hits2 = None
-        try:
-            hits, cand = hits1, candidates(hits1)
-            counts = {
-                int(r["query_id"]): int(r["n"])
-                for r in cand.groupBy("query_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            # expansion branch (Q4 stemming is ∅); skipped only when the
-            # re-run would iterate identically — the reference's second
-            # pass iterates words_set in COLLECTION-constructor bucket
-            # order, which can differ from the first pass's add-loop order
-            # at a capacity boundary (see RankerEngine.search), shifting
-            # the Q5 tf-drops
-            expand = {
-                qid
-                for qid, p in plans.items()
-                if counts.get(qid, 0) < EXPAND_THRESHOLD
-                and p.first_order != p.words_set_order
-            }
-            # a query with no first-pass candidates that does not expand
-            # has no rows (the reference's numResults == 0 return)
-            plans = {
-                qid: p for qid, p in plans.items() if qid in counts or qid in expand
-            }
-            if not plans:
-                return self._no_rows()
-            if expand:
-                hits2 = self._postings_df_many(
-                    {qid: plans[qid].words_set_order for qid in expand}
-                ).cache()
-                keep1 = [qid for qid in plans if qid not in expand]
-                hits = hits1.where(F.col("query_id").isin(keep1)).unionByName(hits2)
-                cand = cand.where(F.col("query_id").isin(keep1)).unionByName(
-                    candidates(hits2)
-                )
-
-            cut_rank = F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("occurrence").desc(), "doc_key"
-                )
-            )
-            cut = (
-                cand.withColumn("_rk", cut_rank)
-                .where(F.col("_rk") <= TOP_CUT)
-                .drop("_rk")
-            )
-
-            wm_pdf = (
-                read_table(self.spark, self.paths.wmetric)
-                .where(F.col("term").isin(sorted(
-                    {w for p in plans.values() for w in p.word_count}
-                )))
-                .select("term", "idf")
-                .toPandas()
-            )
-            idf = {t: float(i) for t, i in zip(wm_pdf["term"], wm_pdf["idf"])}
-
-            # one row per cut doc: its tfs by term, Q5's dropped hit (the
-            # first term in lookup order) left out, and its per-doc values
-            kept_tf = F.when(
-                F.col("ord") != F.col("first_ord"), F.struct("term", "tf")
-            )
-            rows = (
-                cut.join(hits, ["query_id", "doc_key"])
-                .groupBy("query_id", "doc_key", "occurrence")
-                .agg(F.map_from_entries(F.collect_list(kept_tf)).alias("tf_by_term"))
-                .join(self._doc_table(self.paths.doc_stats, "ntf"), "doc_key", "left")
-                .join(self._doc_table(self.paths.doc_meta, "title"), "doc_key", "left")
-            )
-            if self._has_pagerank:
-                rows = rows.join(
-                    self._doc_table(self.paths.pageranks, "rank"), "doc_key", "left"
-                )
-            pdf = rows.toPandas()
-        finally:
-            hits1.unpersist()
-            if hits2 is not None:
-                hits2.unpersist()
-
+        groups = dict(iter(pdf.groupby(["query_id", "expanded"], sort=False)))
         parts = []
-        for qid, g in pdf.groupby("query_id", sort=True):
+        for qid, plan in plans.items():
+            g = groups.get((qid, False))
+            order = plan.first_order
+            # every range emits min(TOP_CUT, its candidates) rows, and
+            # TOP_CUT ≥ EXPAND_THRESHOLD: a first pass emitted fewer rows
+            # than EXPAND_THRESHOLD exactly when it had fewer candidates
+            if plan.expands(0 if g is None else len(g)):
+                g = groups.get((qid, True))
+                order = plan.words_set_order
+            if g is None:
+                continue
             keys = g["doc_key"].to_numpy(dtype=np.int64)
-            tfs: dict[str, np.ndarray] = {}
-            for i, tf_by_term in enumerate(g["tf_by_term"]):
-                for t, tf in tf_by_term.items():
-                    if t not in tfs:
-                        tfs[t] = np.full(len(keys), np.nan)
-                    tfs[t][i] = tf
+            occ = g["occurrence"].to_numpy(dtype=np.int64)
+            cut = top_cut(keys, occ)
+            g, keys = g.iloc[cut], keys[cut]
+            tf = np.array(g["tfs"].tolist(), dtype=np.float64)
             if self._has_pagerank:
                 rank = g["rank"].to_numpy(dtype=np.float64)
                 page_rank = np.where(np.isnan(rank), 0.0, rank)
@@ -252,10 +124,10 @@ class DistributedRanker:
                 page_rank = np.zeros(len(keys), dtype=np.float64)
             titles = [t if isinstance(t, str) else "" for t in g["title"]]
             part = score_cut(
-                plans[qid],
+                plan,
                 keys,
-                g["occurrence"].to_numpy(dtype=np.int64),
-                tfs,
+                occ[cut],
+                {t: tf[:, i] for i, t in enumerate(order)},
                 idf,
                 g["ntf"].to_numpy(dtype=np.float64),
                 titles,
@@ -275,6 +147,74 @@ class DistributedRanker:
         out = empty_result(self.doc_cols)
         out.insert(0, "query_id", pd.Series([], dtype="int32"))
         return out
+
+
+def _ranker_range_cuts(
+    spark: SparkSession,
+    paths: IndexPaths,
+    plans: dict[int, QueryPlan],
+    docs: DataFrame,
+    n_ranges: int | None = None,
+    meta: dict | None = None,
+) -> DataFrame | None:
+    """The Spark side of :meth:`DistributedRanker.search_many`: per query
+    (keyed by query id) and doc-key range, the range's :func:`top_cut` of
+    the first pass and, when the query's two lookup orders differ, of the
+    expansion pass, as rows ``(query_id, expanded, doc_key, occurrence,
+    tfs)``, ``tfs`` holding the doc's tf per lookup term in the pass's
+    order (NaN where the term misses the doc or Q5 dropped it).  None
+    when no query has a lookup term or the corpus is empty.  Exposed
+    separately so the plan audit can assert the job's physical shape."""
+    if meta is None:
+        meta = read_meta(paths)
+    # the expansion pass of every query that expands on a short first pass
+    passes = {
+        qid: [(False, p.first_order)] + ([(True, p.words_set_order)] if p.expands(0) else [])
+        for qid, p in plans.items()
+    }
+    terms = sorted({t for ps in passes.values() for _, order in ps for t in order})
+    if not terms:
+        return None
+    scan = _range_scan(spark, paths, docs, terms, n_ranges, meta["buckets"])
+    if scan is None:
+        return None
+    _, blocks = scan
+    no_postings = (np.empty(0, np.int64), np.empty(0, np.float64))
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        lo, hi = int(pdf["lo"].iloc[0]), int(pdf["hi"].iloc[0])
+        # decode each term's blocks once per task; a block can overlap
+        # two ranges, so keep only this range's keys
+        postings = {}
+        for t, g in _by_term(pdf).items():
+            keys, tfs = decode_postings(g)
+            inside = (keys >= lo) & (keys <= hi)
+            postings[t] = keys[inside], tfs[inside]
+        cols: dict[str, list] = {c: [] for c in ("query_id", "expanded", "doc_key",
+                                                 "occurrence", "tfs")}
+        for qid, qpasses in passes.items():
+            for expanded, order in qpasses:
+                keys, occ, tfs = candidates(
+                    order, lambda t: postings.get(t, no_postings)
+                )
+                cut = top_cut(keys, occ)
+                nan_col = np.full(len(cut), np.nan)
+                cols["query_id"].append(np.full(len(cut), qid, dtype=np.int32))
+                cols["expanded"].append(np.full(len(cut), expanded))
+                cols["doc_key"].append(keys[cut])
+                cols["occurrence"].append(occ[cut].astype(np.int64))
+                cols["tfs"].extend(np.column_stack(
+                    [tfs[t][cut] if t in tfs else nan_col for t in order]
+                ))
+        return pd.DataFrame({
+            c: pd.Series(v, dtype=object) if c == "tfs" else np.concatenate(v)
+            for c, v in cols.items()
+        })
+
+    return blocks.groupBy("range_id").applyInPandas(
+        kernel,
+        "query_id int, expanded boolean, doc_key long, occurrence long, tfs array<double>",
+    )
 
 
 def doc_range_bounds(dl: DataFrame, r: int) -> list[tuple[int, int, int]]:
@@ -302,6 +242,46 @@ def doc_range_bounds(dl: DataFrame, r: int) -> list[tuple[int, int, int]]:
     return [(i, edges[i] + 1, edges[i + 1]) for i in range(len(edges) - 1)]
 
 
+def _range_scan(
+    spark: SparkSession,
+    paths: IndexPaths,
+    docs: DataFrame,
+    terms: list[str],
+    n_ranges: int | None,
+    buckets: int,
+) -> tuple[list[tuple[int, int, int]], DataFrame] | None:
+    """The scan under both distributed plans: ``n_ranges`` (default: the
+    session's parallelism) quantile doc-key ranges of ``docs`` (the
+    doc_stats table, read once by the caller), and the block rows of
+    ``terms`` joined to every range they overlap, carrying its
+    ``range_id``, ``lo`` and ``hi``.  Returns ``(bounds, blocks)``, or
+    None for an empty corpus (the build writes meta but no doc rows)."""
+    r = n_ranges or spark.sparkContext.defaultParallelism
+    bounds = doc_range_bounds(docs, r)
+    if not bounds:
+        return None
+    rdf = spark.createDataFrame(bounds, "range_id int, lo long, hi long")
+    # the block table is PARTITIONED by bucket: the driver-computed
+    # term->bucket set (pure-Python xxhash64, no job) makes the scan list
+    # only the query terms' bucket directories; the term IN-filter then
+    # pushes into those partitions' row groups.  key_min/key_max are
+    # plain columns, so the tiny range table joins broadcast on the
+    # overlap predicate.
+    tb = sorted({term_bucket(t, buckets) for t in terms})
+    blocks = (
+        read_table(spark, paths.blocks)
+        .where(F.col("bucket").isin(tb))
+        .where(F.col("term").isin(terms))
+        .select("term", "block_no", "key_min", "key_max", "ub_bm25",
+                "doc_bytes", "tf_bytes")
+        .join(
+            F.broadcast(rdf),
+            (F.col("key_max") >= F.col("lo")) & (F.col("key_min") <= F.col("hi")),
+        )
+    )
+    return bounds, blocks
+
+
 def _bm25_scan_frames(
     spark: SparkSession,
     paths: IndexPaths,
@@ -309,11 +289,10 @@ def _bm25_scan_frames(
     n_ranges: int | None,
     meta: dict,
 ):
-    """The scan/range setup of the local-topk plan: the df-1 idf-quirk
-    undo, the quantile range bounds, the bucket-partition-pruned +
-    term-pushed block scan, and the broadcast range joins.  Returns
-    ``(w_by_term, blocks, dl_r)`` or None when nothing can score (no
-    indexed terms / empty corpus)."""
+    """The local-topk plan's inputs: the df-1 idf-quirk undo, then
+    :func:`_range_scan` and each range's slice of the doc-length table.
+    Returns ``(w_by_term, blocks, dl_r)`` or None when nothing can score
+    (no indexed terms / empty corpus)."""
     n_docs = meta["n_docs"]
     wm = (
         read_table(spark, paths.wmetric)
@@ -328,30 +307,13 @@ def _bm25_scan_frames(
     if not w_by_term:
         return None
     dl = read_table(spark, paths.doc_stats)
-    r = n_ranges or spark.sparkContext.defaultParallelism
-    bounds = doc_range_bounds(dl, r)
-    if not bounds:  # empty corpus: build writes meta but no doc rows
+    scan = _range_scan(spark, paths, dl, list(w_by_term), n_ranges, meta["buckets"])
+    if scan is None:
         return None
-    # two independent range frames: reusing one lineage on both cogroup
+    bounds, blocks = scan
+    # a second range frame: reusing the scan's lineage on both cogroup
     # sides trips Spark's ambiguous-self-join check
-    rdf = spark.createDataFrame(bounds, "range_id int, lo long, hi long")
     rdf_dl = spark.createDataFrame(bounds, "range_id int, lo long, hi long")
-    # the block table is PARTITIONED by bucket: the driver-computed
-    # term->bucket set (pure-Python xxhash64, no job) makes the scan list
-    # only the query terms' bucket directories; the term IN-filter then
-    # pushes into those partitions' row groups
-    tb = sorted({term_bucket(t, meta["buckets"]) for t in w_by_term})
-    blocks = (
-        read_table(spark, paths.blocks)
-        .where(F.col("bucket").isin(tb))
-        .where(F.col("term").isin(list(w_by_term)))
-        .select("term", "block_no", "key_min", "key_max", "ub_bm25",
-                "doc_bytes", "tf_bytes")
-        .join(
-            F.broadcast(rdf),
-            (F.col("key_max") >= F.col("lo")) & (F.col("key_min") <= F.col("hi")),
-        )
-    )
     dl_r = dl.join(
         F.broadcast(rdf_dl),
         (F.col("doc_key") >= F.col("lo")) & (F.col("doc_key") <= F.col("hi")),
@@ -484,16 +446,10 @@ def distributed_bm25_topk_many(
     score)`` with each query's rows in rank order (score desc, doc asc —
     the engine's tie-break).
 
-    Each range task receives only the batch's blocks overlapping its key
-    range (``key_min``/``key_max`` are plain columns, so the overlap
-    predicate prunes at the scan) plus its range's slice of the
-    doc-length table, runs the same :func:`~..query.bm25.block_sweep_topk`
-    per query bounded to the range, and emits local top-ks.  Every
-    posting of a doc shares its key, so a range sees each doc's full
-    score or none of it — the union of per-range top-ks contains the
-    global top-k, and a tiny driver merge of ≤ |queries|·r·k rows
-    finishes exactly (scores AND doc-asc tie-breaks identical to
-    ``BM25Engine.search``).  Past ``_DRIVER_MERGE_ROWS`` candidate rows
+    Each range task runs :func:`~.bm25.block_sweep_topk` per query over
+    the blocks overlapping its range, and a driver merge of ≤
+    |queries|·r·k local top-k rows finishes exactly (scores AND doc-asc
+    tie-breaks identical to ``BM25Engine.search``).  Past ``_DRIVER_MERGE_ROWS`` candidate rows
     (a relevance sweep over tens of thousands of queries at high range
     counts) the per-query top-k is taken Spark-side first — a rank
     window over (query_id) on the already-tiny local-topk frame — so the

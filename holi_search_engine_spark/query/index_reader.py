@@ -88,6 +88,16 @@ class TermBlocks:
         )
 
 
+def decode_postings(blocks: TermBlocks) -> tuple[np.ndarray, np.ndarray]:
+    """A term's blocks decoded into doc-ordered (int64 doc keys, float64
+    tfs)."""
+    parts = [decode_block(d, t) for d, t in zip(blocks.doc_bytes, blocks.tf_bytes)]
+    return (
+        np.concatenate([p[0] for p in parts]).astype(np.int64),
+        np.concatenate([p[1] for p in parts]).astype(np.float64),
+    )
+
+
 class BlockCache:
     """What a scorer derives from one term's blocks, kept per block:
     ``slots[i]`` is None until block i is first read, then holds the arrays
@@ -209,14 +219,9 @@ class IndexReader:
         entry = self._entry(term, blocks=True)
         if entry.postings is not None:
             return entry.postings
-        g = entry.blocks
-        if g is None:
+        if entry.blocks is None:
             return _EMPTY
-        parts = [decode_block(d, t) for d, t in zip(g.doc_bytes, g.tf_bytes)]
-        out = _read_only(
-            np.concatenate([p[0] for p in parts]).astype(np.int64),
-            np.concatenate([p[1] for p in parts]).astype(np.float64),
-        )
+        out = _read_only(*decode_postings(entry.blocks))
         nbytes = out[0].nbytes + out[1].nbytes
         if nbytes <= self.CACHE_BYTES // 8:
             entry.postings = out

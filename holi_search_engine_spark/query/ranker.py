@@ -12,16 +12,19 @@ Two execution modes:
   ``Ranker.java:231-251`` issues O(250·|q|) gets), else term- and
   key-pruned parquet reads per query.  Postings are decoded and scored
   with numpy; the answer is one DataFrame built at the end.
-- ``distributed``: candidate generation and the cut run as Spark jobs —
-  the path a 10^12-turn corpus needs when a Zipf-head term's posting list
-  exceeds driver memory (``query/distributed.py``).
+- ``distributed``: Spark runs :func:`candidates` and :func:`top_cut` per
+  doc-key range, over a block scan split by range — the path a
+  10^12-turn corpus needs when a Zipf-head term's posting list exceeds
+  driver memory (``query/distributed.py``).
 
 The reference ranker splits at the cut: candidates are cut to the top 250
 by occurrence with the normalized tie-break (doc key asc) before scoring,
 as in the reference (``Ranker.java:204-205``).  Only candidate generation
-grows with the corpus.  Both tiers share the rest: :func:`plan_query` is
-the query preamble and :func:`score_cut` scores and ranks a cut, so the
-two tiers' answers are bit-identical.
+grows with the corpus.  Both tiers run the same functions for every step:
+:func:`plan_query` is the query preamble, :func:`candidates` the union
+with Q5, :meth:`QueryPlan.expands` the expansion rule, :func:`top_cut` the
+cut, and :func:`score_cut` scores and ranks a cut, so the two tiers'
+answers are bit-identical.
 
 The title bonus reads each cut doc's title words from a
 :class:`TitleWords` index (word → sorted doc keys).  The reference
@@ -65,6 +68,17 @@ class QueryPlan(NamedTuple):
     sw_set: set[str]  # the title bonus's word set; never empty
     word_count: dict[str, int]  # qtf over ALL raw words incl. stopwords
 
+    def expands(self, n_first: int) -> bool:
+        """Whether the reference re-runs candidate generation over
+        ``words_set_order`` after a first pass of ``n_first`` candidates
+        (``Ranker.java:177-200``; Q4 makes the stemmed branch a no-op).
+        Skipping the re-run is sound only when the two orders coincide
+        (the rebuilt map is then identical); a query whose duplicates
+        push the raw length across a capacity boundary (e.g. 13+ raw
+        tokens, <=12 distinct) iterates the re-run differently and
+        shifts the Q5 tf-drops even when no stopword was removed."""
+        return n_first < EXPAND_THRESHOLD and self.first_order != self.words_set_order
+
 
 def plan_query(query: str) -> QueryPlan | None:
     """The preamble of one query; None ⇔ no tokens (Java's
@@ -87,6 +101,66 @@ def plan_query(query: str) -> QueryPlan | None:
         set(words_sw),
         word_count,
     )
+
+
+def candidates(
+    lookup_terms: list[str], postings
+) -> tuple[np.ndarray, np.ndarray, dict[str, np.ndarray]]:
+    """Union of the postings of ``lookup_terms`` in the order GIVEN;
+    implements Q5 (the first term hitting a doc does not record its tf).
+    ``postings(term)`` returns the term's doc-ordered ``(keys, tfs)``.
+    The caller supplies the reference's iteration order — these differ
+    per call site: the first pass iterates a ``new HashSet<>()`` built by
+    per-element adds (default capacity 16), the expansion pass iterates
+    ``words_set``, a collection-constructed HashSet whose capacity is
+    sized from the RAW token count including duplicates
+    (``Ranker.java:156,176,192``) — so the same term set can iterate
+    differently in the two passes, shifting which term Q5-drops.
+
+    Returns ``(doc_key, occurrence, tfs)``: doc-key-ordered arrays, and
+    per matched term its tf per doc (NaN where unmatched or Q5-dropped).
+    """
+    key_arrays: list[np.ndarray] = []
+    tf_arrays: list[np.ndarray] = []
+    orders: list[int] = []
+    terms_present: list[str] = []
+    for order, term in enumerate(lookup_terms):
+        keys, tfs = postings(term)
+        if len(keys) == 0:
+            continue
+        key_arrays.append(keys)
+        tf_arrays.append(tfs)
+        orders.append(order)
+        terms_present.append(term)
+    if not key_arrays:
+        return np.empty(0, np.int64), np.empty(0, np.int64), {}
+    lens = [len(k) for k in key_arrays]
+    uniq, inv = np.unique(np.concatenate(key_arrays), return_inverse=True)
+    occ = np.bincount(inv, minlength=len(uniq))
+    # first_order[d] = order of the first (HashSet-order) term hitting d
+    first = np.full(len(uniq), -1, dtype=np.int64)
+    off = 0
+    for n, o in zip(lens, orders):
+        idx = inv[off : off + n]
+        unseen = first[idx] == -1
+        first[idx[unseen]] = o
+        off += n
+    tf_cols: dict[str, np.ndarray] = {}
+    off = 0
+    for term, n, o, tfs in zip(terms_present, lens, orders, tf_arrays):
+        col = np.full(len(uniq), np.nan)
+        col[inv[off : off + n]] = tfs
+        # Q5: the earliest term (HashSet order) to hit a doc drops its tf
+        col[first == o] = np.nan
+        tf_cols[term] = col
+        off += n
+    return uniq.astype(np.int64), occ, tf_cols
+
+
+def top_cut(keys: np.ndarray, occ: np.ndarray) -> np.ndarray:
+    """Positions of the cut: the top 250 candidates by occurrence desc,
+    doc key asc (the normalized tie-break, ``Ranker.java:204-205``)."""
+    return np.lexsort((keys, -occ))[:TOP_CUT]
 
 
 class TitleWords:
@@ -271,59 +345,6 @@ class RankerEngine:
 
     # ---------------------------------------------------------- search
 
-    def _candidates(
-        self, lookup_terms: list[str]
-    ) -> tuple[np.ndarray, np.ndarray, dict[str, np.ndarray]]:
-        """Union of postings in the order GIVEN; implements Q5 (the first
-        term hitting a doc does not record its tf).  The caller supplies
-        the reference's iteration order — these differ per call site: the
-        first pass iterates a ``new HashSet<>()`` built by per-element
-        adds (default capacity 16), the expansion pass iterates
-        ``words_set``, a collection-constructed HashSet whose capacity is
-        sized from the RAW token count including duplicates
-        (``Ranker.java:156,176,192``) — so the same term set can iterate
-        differently in the two passes, shifting which term Q5-drops.
-
-        Returns ``(doc_key, occurrence, tfs)``: doc-key-ordered arrays, and
-        per matched term its tf per doc (NaN where unmatched or
-        Q5-dropped).
-        """
-        key_arrays: list[np.ndarray] = []
-        tf_arrays: list[np.ndarray] = []
-        orders: list[int] = []
-        terms_present: list[str] = []
-        for order, term in enumerate(lookup_terms):
-            keys, tfs = self.reader.postings(term)
-            if len(keys) == 0:
-                continue
-            key_arrays.append(keys)
-            tf_arrays.append(tfs)
-            orders.append(order)
-            terms_present.append(term)
-        if not key_arrays:
-            return np.empty(0, np.int64), np.empty(0, np.int64), {}
-        lens = [len(k) for k in key_arrays]
-        uniq, inv = np.unique(np.concatenate(key_arrays), return_inverse=True)
-        occ = np.bincount(inv, minlength=len(uniq))
-        # first_order[d] = order of the first (HashSet-order) term hitting d
-        first = np.full(len(uniq), -1, dtype=np.int64)
-        off = 0
-        for n, o in zip(lens, orders):
-            idx = inv[off : off + n]
-            unseen = first[idx] == -1
-            first[idx[unseen]] = o
-            off += n
-        tf_cols: dict[str, np.ndarray] = {}
-        off = 0
-        for term, n, o, tfs in zip(terms_present, lens, orders, tf_arrays):
-            col = np.full(len(uniq), np.nan)
-            col[inv[off : off + n]] = tfs
-            # Q5: the earliest term (HashSet order) to hit a doc drops its tf
-            col[first == o] = np.nan
-            tf_cols[term] = col
-            off += n
-        return uniq.astype(np.int64), occ, tf_cols
-
     def search(self, query: str, limit: int | None = None) -> pd.DataFrame:
         """Full ranked results (reference steps 1-11); ``limit`` truncates
         after ranking (pagination is a driver-side slice, as in the
@@ -333,24 +354,13 @@ class RankerEngine:
             return empty_result(self.doc_cols)
         # the idfs of every query word ride the first pass's fetch
         self.reader.fetch(plan.first_order, stats_only=plan.words_set_order)
-        keys, occ, tfs = self._candidates(plan.first_order)
-        # expansion (Q4 makes the stemmed branch a no-op).  The reference
-        # re-runs candidate generation over words_set whose ITERATION
-        # ORDER is the collection-constructor bucket order (capacity sized
-        # from the raw token count INCLUDING duplicates) — not the
-        # add-loop order the first pass used.  Skipping the re-run is
-        # sound only when the two orders coincide (the rebuilt map is then
-        # identical); a query whose duplicates push the raw length across
-        # a capacity boundary (e.g. 13+ raw tokens, <=12 distinct)
-        # iterates the re-run differently and shifts the Q5 tf-drops even
-        # when no stopword was removed.
-        if len(keys) < EXPAND_THRESHOLD and plan.first_order != plan.words_set_order:
+        keys, occ, tfs = candidates(plan.first_order, self.reader.postings)
+        if plan.expands(len(keys)):
             self.reader.fetch(plan.words_set_order)
-            keys, occ, tfs = self._candidates(plan.words_set_order)
+            keys, occ, tfs = candidates(plan.words_set_order, self.reader.postings)
         if not len(keys):
             return empty_result(self.doc_cols)
-        # pre-rank: occurrence desc, doc key asc (normalized tie-break), cut 250
-        cut = np.lexsort((keys, -occ))[:TOP_CUT]
+        cut = top_cut(keys, occ)
         keys = keys[cut]
         titles = self._titles_for(keys)
         return score_cut(

@@ -122,6 +122,20 @@ AUDIT: list[tuple[str, list[str], list[str]]] = [
         ],
         ["SortMergeJoin"],
     ),
+    # the reference-semantics batch over the same scan: the same bucket
+    # pruning, term pushdown and broadcast range join, then one
+    # groupBy→applyInPandas kernel per doc-key range (the range cuts,
+    # before the driver-side doc joins) — no shuffle join
+    (
+        "distributed_ranker_many",
+        [
+            "FlatMapGroupsInPandas",
+            "PartitionFilters: [bucket#",
+            "In(term",
+            "BroadcastNestedLoopJoin",
+        ],
+        ["SortMergeJoin"],
+    ),
     # IVF kNN join: BOTH side assignments are map-side Arrow kernels
     # (MapInPandas — no join against a centroid table), candidates score
     # inside ONE cogroup kernel, and the only joins in the plan are...
@@ -166,8 +180,11 @@ def special_frames(spark) -> dict:
     )
     from holi_search_engine_spark.plans.index_build import build_index
     from holi_search_engine_spark.query.distributed import (
+        _ranker_range_cuts,
         distributed_bm25_local_topk_many,
     )
+    from holi_search_engine_spark.query.ranker import plan_query
+    from holi_search_engine_spark.sources.catalog import read_table
 
     d = tempfile.mkdtemp(prefix="plan_audit_idx_")
     paths = build_index(
@@ -177,16 +194,20 @@ def special_frames(spark) -> dict:
         frozenset(make_vocabulary()),
         buckets=4,
     )
+    batch = ["the data pipeline", "spark shuffle", "data spark"]
     frames = {
         # a single query is a batch of one
         "distributed_bm25_topk": distributed_bm25_local_topk_many(
             spark, paths, ["the data pipeline"], 10, n_ranges=4
         ),
         "distributed_bm25_topk_many": distributed_bm25_local_topk_many(
+            spark, paths, batch, 10, n_ranges=4
+        ),
+        "distributed_ranker_many": _ranker_range_cuts(
             spark,
             paths,
-            ["the data pipeline", "spark shuffle", "data spark"],
-            10,
+            {i: plan_query(q) for i, q in enumerate(batch)},
+            read_table(spark, paths.doc_stats),
             n_ranges=4,
         ),
     }

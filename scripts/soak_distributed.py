@@ -35,7 +35,9 @@ and folding in the NaN-set check: seed 137 x 12 queries (4 vCPU) — 0
 mismatches.  The ranker checks became exact frame equality once the
 distributed ranker scored its cut with the single-node scorer.  With
 the session taken from ``session.get_spark`` (one task per core): seed
-137 x 12 queries, 0 mismatches.  Exits nonzero on any mismatch.
+137 x 12 queries, 0 mismatches.  After the distributed ranker moved to
+the single-node candidate step per doc-key range: seeds 137,11,22 x 40
+queries (4 vCPU), 0 mismatches.  Exits nonzero on any mismatch.
 """
 import os
 import random

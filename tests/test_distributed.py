@@ -169,21 +169,22 @@ def test_xxhash64_matches_spark(spark):
 
 
 def test_term_buckets_no_spark_job(built_index, spark):
-    """_term_buckets must not submit a Spark job: it runs with a dead
-    SparkSession reference and finishes in well under a millisecond per
-    term (a job submission alone costs ~100 ms)."""
+    """term_bucket, which prunes both distributed block scans to the query
+    terms' bucket partitions, takes no SparkSession, so it submits no
+    Spark job, and it finishes in well under a millisecond per term (a
+    job submission alone costs ~100 ms)."""
     import time
 
-    from holi_search_engine_spark.query.distributed import DistributedRanker
+    from holi_search_engine_spark.functions.xxhash import term_bucket
+    from holi_search_engine_spark.plans.index_build import read_meta
 
-    dr = DistributedRanker(spark, built_index)
-    dr.spark = None  # any Spark usage would AttributeError
+    buckets = read_meta(built_index)["buckets"]
     terms = [f"term{i}" for i in range(100)]
     t0 = time.perf_counter()
-    out = dr._term_buckets(terms)
+    out = [term_bucket(t, buckets) for t in terms]
     wall = time.perf_counter() - t0
     assert len(out) == 100
-    assert all(0 <= b < dr.buckets for b in out.values())
+    assert all(0 <= b < buckets for b in out)
     assert wall < 0.05, f"term->bucket took {wall * 1e3:.1f} ms for 100 terms"
 
 
@@ -413,12 +414,79 @@ def test_distributed_ranker_many_matches_single(
     assert eng.search("signal decay")["score"].isna().all()
 
 
+def test_distributed_ranker_expansion_across_ranges(spark, built_index, vocabulary):
+    """The expansion rule reads a query's first-pass candidate count over
+    ALL doc-key ranges, though each range task sees only its own.  A
+    query whose first pass has >= 50 candidates, none of its ranges
+    holding 50, must not expand (a driver that counted one range's rows
+    would expand it, and the expanded cut differs); a query that does
+    expand, with candidates in several ranges, must merge the ranges'
+    expansion passes.  Both at the session's default range count."""
+    import numpy as np
+
+    from holi_search_engine_spark.query.distributed import doc_range_bounds
+    from holi_search_engine_spark.query.ranker import (
+        EXPAND_THRESHOLD,
+        RankerEngine,
+        candidates,
+        plan_query,
+        top_cut,
+    )
+    from holi_search_engine_spark.query.stopwords import STOPWORDS
+    from holi_search_engine_spark.sources.catalog import read_table
+
+    eng = RankerEngine(spark, built_index, preload=True)
+    bounds = doc_range_bounds(
+        read_table(spark, built_index.doc_stats), spark.sparkContext.defaultParallelism
+    )
+    his = np.array([hi for _, _, hi in bounds])
+
+    def per_range(keys):
+        return np.bincount(np.searchsorted(his, keys), minlength=len(bounds))
+
+    def cut_keys(order):
+        keys, occ, _ = candidates(order, eng.reader.postings)
+        return keys, set(keys[top_cut(keys, occ)].tolist())
+
+    # after "the", the index's most frequent non-stopwords of df < 50,
+    # until the first pass (the non-stopwords) reaches the threshold
+    hot = sorted(
+        (t for t in eng.reader.terms()
+         if t not in STOPWORDS and t.isalpha() and eng.reader.df(t) < EXPAND_THRESHOLD),
+        key=lambda t: (-eng.reader.df(t), t),
+    )
+    words = ["the"]
+    for t in hot:
+        words.append(t)
+        plan = plan_query(" ".join(words))
+        if len(cut_keys(plan.first_order)[0]) >= EXPAND_THRESHOLD:
+            break
+    wide = " ".join(words)
+    keys1, cut1 = cut_keys(plan.first_order)
+    assert len(keys1) >= EXPAND_THRESHOLD, wide
+    assert plan.first_order != plan.words_set_order, wide
+    assert per_range(keys1).max() < EXPAND_THRESHOLD, (wide, per_range(keys1))
+    assert cut_keys(plan.words_set_order)[1] != cut1, wide
+
+    queries = dict(make_query_fixtures(vocabulary))
+    expanding = queries["q_stop_mix"]
+    plan = plan_query(expanding)
+    keys1, _ = cut_keys(plan.first_order)
+    keys2, _ = cut_keys(plan.words_set_order)
+    assert plan.expands(len(keys1)), expanding
+    assert (per_range(keys2) > 0).sum() >= 2, (expanding, per_range(keys2))
+
+    dist = DistributedRanker(spark, built_index)
+    for limit in (None, 3):
+        _assert_batch_equals_engine(dist, eng, [wide, expanding, wide], limit)
+
+
 def test_distributed_ranker_many_releases_cache_on_error(
     spark, built_index, vocabulary, monkeypatch
 ):
-    """A failure in the final collect must not leak the cached postings:
-    the session holds no more persisted data after the failed call than
-    before it."""
+    """A failure in the final collect of the range cuts propagates and
+    leaves the session with no more persisted data than before the
+    call."""
     from holi_search_engine_spark.corpus import make_query_fixtures
     from holi_search_engine_spark.query.distributed import DistributedRanker
 
@@ -428,7 +496,7 @@ def test_distributed_ranker_many_releases_cache_on_error(
     real_to_pandas = frame_cls.toPandas
 
     def failing_to_pandas(self):
-        if "tf_by_term" in self.columns:  # the final collect of the cut
+        if "occurrence" in self.columns:  # the final collect of the cuts
             raise RuntimeError("injected collect failure")
         return real_to_pandas(self)
 

@@ -306,6 +306,7 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
 
     from holi_search_engine_spark.corpus import make_query_fixtures
     from holi_search_engine_spark.functions.javacompat import java_hashset_order
+    from holi_search_engine_spark.query.ranker import candidates
 
     qs = [q for _, q in make_query_fixtures(vocabulary)]
     # boundary query: >=13 raw tokens, <=12 distinct corpus terms whose
@@ -329,8 +330,8 @@ def _make_queries(pdf, vocabulary, engine) -> list[str]:
         # doc matches >= 2 of the reordered terms), and the candidate set
         # must stay under the expansion threshold so the reference's
         # second findAllMatchingURLs pass actually runs
-        keys_a, occ_a, tfs_a = engine._candidates(coll)
-        keys_b, occ_b, tfs_b = engine._candidates(java_hashset_order(coll))
+        keys_a, occ_a, tfs_a = candidates(coll, engine.reader.postings)
+        keys_b, occ_b, tfs_b = candidates(java_hashset_order(coll), engine.reader.postings)
         if not len(keys_a) or len(keys_a) >= 50:
             continue
         # both passes return doc-key-ordered arrays over the same term set
