@@ -6,25 +6,43 @@ at index build — see ``plans/compression.py``) and document-at-a-time WAND
 with per-block upper bounds, so hot terms' posting lists are skipped in
 block units rather than decoded in full.
 
-The skipping scorer is a block-RANGE sweep (document-at-a-time at block
-granularity): the key space is consumed in ranges bounded by the earliest
-current-block end across the query's terms; a range whose summed
-block-max bounds cannot reach θ is skipped without decoding, otherwise
-its blocks decode once and score vectorized.  Python work is O(blocks),
-not O(postings).  Pruning uses ``< θ`` (not ``≤``) so exact score ties
-still resolve by the doc-asc tie-break, making the top-k exactly equal
-to brute force — ``tests/test_bm25.py`` asserts doc-and-score equality.
+One scorer serves disjunction (OR) and conjunction (AND): both score the
+docs that at least ``need`` of the query's ``n`` terms match, ``need`` = 1
+for OR and ``n`` for AND (WAND's weighted threshold over the query terms,
+Broder et al., CIKM 2003).  :func:`block_sweep_topk` is the skipping
+scorer, a block-RANGE sweep (document-at-a-time at block granularity):
+the key space is consumed in ranges bounded by the earliest current-block
+end across the live terms; a range that fewer than ``need`` terms' blocks
+overlap, or whose summed block-max bounds cannot reach θ, is skipped
+without decoding, otherwise its blocks decode once and score vectorized.
+With ``need`` = ``n`` the first skip is the conjunction's gap jump: a hot
+term's blocks are passed over between the rare term's docs.  Python work
+is O(blocks), not O(postings).  Pruning uses ``< θ`` (not ``≤``) so exact
+score ties still resolve by the doc-asc tie-break, making the top-k
+exactly equal to brute force — ``tests/test_bm25.py`` asserts
+doc-and-score equality.
+
+One rule routes a query between the sweep and the exhaustive scorer.
+Let ``mass`` be the summed df of the ``n − need + 1`` rarest terms: by
+pigeonhole a doc that ``need`` of the ``n`` terms match is in at least one
+of those lists, so ``mass`` bounds the candidates.  The exhaustive path
+is taken for a single term (block-max bounds cannot prune one list), and
+when ``mass`` exceeds ``TAAT_THRESHOLD`` while the union's postings stay
+under ``AND_ASYM_RATIO · mass`` (dense, with no gap for the sweep to
+jump).  For OR, ``mass`` is the union itself.
 
 Each block is decoded and scored at most once per open engine: the first
 read of a block, by either path, fills its slot in the term's
 :class:`~.index_reader.BlockCache` with ``(doc keys, BM25 scores)``, and
-every later read is a slice.  The sweeps fill only the blocks they do
-not skip; the exhaustive path reads every block of its terms.
+every later read is a slice.  The sweep fills only the blocks it does
+not skip; the exhaustive path reads every block of its terms.  Every
+path returns ``(int64 doc keys, float64 scores)`` in rank order.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -40,6 +58,8 @@ from ..plans.compression import (
 from ..functions.javacompat import RE_QUERY_PUNCT as _RE_PUNCT  # ONE alphabet
 from ..plans.index_build import IndexPaths
 from .index_reader import BlockCache, IndexReader
+
+_NO_ROWS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
 def bm25_terms(query: str) -> list[str]:
@@ -148,11 +168,9 @@ class _TermSweep:
             else:
                 self.floor = max(self.floor, end)
 
-    def take_through(self, end: int) -> tuple[np.ndarray, np.ndarray] | None:
-        """Decode (if needed) and consume postings ≤ end; returns the
-        (keys, scores) slice, or None when the block starts after end."""
-        if self.block_min() > end:
-            return None
+    def take_through(self, end: int) -> tuple[np.ndarray, np.ndarray]:
+        """Decode (if needed) and consume postings ≤ end of a block that
+        starts at or before ``end``; returns the (keys, scores) slice."""
         self.ensure_decoded()
         hi = int(np.searchsorted(self.keys, end, side="right"))
         lo = self.pos
@@ -168,21 +186,26 @@ def block_sweep_topk(
     k: int,
     lo: int | None = None,
     hi: int | None = None,
-) -> list[tuple[int, float]]:
-    """Exact top-k over a set of term sweeps via the block-range sweep
-    (document-at-a-time at BLOCK granularity).
+    need: int = 1,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact top-k, as (int64 doc keys, float64 scores) in rank order,
+    of the docs that at least ``need`` of the term sweeps match, via the
+    block-range sweep (document-at-a-time at BLOCK granularity).
 
     Repeatedly take the key range [.., end] up to the earliest
     current-block end across live terms.  Every posting ≤ end lives in
     the terms' CURRENT blocks (earlier blocks are consumed, later blocks
-    start after end), so the range's score bound is the sum of the
-    overlapping blocks' block-max bounds — if it cannot reach θ the whole
-    range is skipped WITHOUT decoding; otherwise the range is decoded and
-    scored vectorized (per-doc totals via one unique+add.at, top-k via
-    one lexsort).  Python work is O(total blocks), not O(total postings)
-    — the per-doc WAND pivot loop this replaced cost ~8µs/posting and
-    dominated query p95.  Exactness (incl. the doc-asc tie-break) is
-    property-tested against brute force in ``tests/test_bm25.py``.
+    start after end), so only the terms whose current block starts at or
+    before end can match a doc of the range.  If fewer than ``need`` of
+    them do, or the sum of their block-max bounds cannot reach θ, the
+    whole range is skipped WITHOUT decoding; otherwise the range is
+    decoded and scored vectorized (per-doc totals via one unique+add.at,
+    docs with fewer than ``need`` postings dropped, top-k via one
+    lexsort).  The sweep stops once fewer than ``need`` terms are live.
+    Python work is O(total blocks), not O(total postings) — the per-doc
+    WAND pivot loop this replaced cost ~8µs/posting and dominated query
+    p95.  Exactness (incl. the doc-asc tie-break) is property-tested
+    against brute force in ``tests/test_bm25.py``.
 
     ``lo``/``hi`` restrict scoring to doc keys in [lo, hi] — the
     doc-range partition contract of the distributed top-k (every posting
@@ -203,41 +226,48 @@ def block_sweep_topk(
         live = [s for s in sweeps if not s.exhausted()]
         if hi is not None:
             live = [s for s in live if s.block_min() <= hi]
-        if not live:
+        if len(live) < need:
             break
         end = min(s.block_max() for s in live)
         final = hi is not None and end >= hi
         if final:
             end = hi
-        bound = sum(s.block_ub() for s in live if s.block_min() <= end)
-        if len(top_keys) == k and bound < theta:
+        over = [s for s in live if s.block_min() <= end]
+        if len(over) < need or (
+            len(top_keys) == k and sum(s.block_ub() for s in over) < theta
+        ):
             # < θ strictly: ranges that could TIE still decode, so the
             # doc-asc tie-break stays exactly equal to brute force
-            for s in live:
+            for s in over:
                 s.skip_through(end)
         else:
-            pieces = [
-                p for s in live for p in (s.take_through(end),) if p is not None
-            ]
-            kparts = [p[0] for p in pieces if len(p[0])]
-            if kparts:
-                if len(kparts) == 1:
-                    uk, agg = kparts[0], [p[1] for p in pieces if len(p[0])][0]
+            pieces = [p for p in (s.take_through(end) for s in over) if len(p[0])]
+            if len(pieces) >= need:
+                if len(pieces) == 1:
+                    uk, agg = pieces[0]
                 else:
-                    keys_cat = np.concatenate(kparts)
-                    sc_cat = np.concatenate([p[1] for p in pieces if len(p[0])])
-                    uk, inv = np.unique(keys_cat, return_inverse=True)
+                    # a doc has one posting per term; counted only when
+                    # a doc needs more than one
+                    uk, inv, *cnt = np.unique(
+                        np.concatenate([p[0] for p in pieces]),
+                        return_inverse=True,
+                        return_counts=need > 1,
+                    )
                     agg = np.zeros(len(uk), dtype=np.float64)
-                    np.add.at(agg, inv, sc_cat)
-                ks = np.concatenate([top_keys, uk])
-                sc = np.concatenate([top_scores, agg])
-                order = np.lexsort((ks, -sc))[:k]
-                top_keys, top_scores = ks[order], sc[order]
-                if len(top_keys) == k:
-                    theta = float(top_scores[-1])
+                    np.add.at(agg, inv, np.concatenate([p[1] for p in pieces]))
+                    if need > 1:
+                        matched = cnt[0] >= need
+                        uk, agg = uk[matched], agg[matched]
+                if len(uk):
+                    ks = np.concatenate([top_keys, uk])
+                    sc = np.concatenate([top_scores, agg])
+                    order = np.lexsort((ks, -sc))[:k]
+                    top_keys, top_scores = ks[order], sc[order]
+                    if len(top_keys) == k:
+                        theta = float(top_scores[-1])
         if final:  # the range is fully consumed at hi — a block spanning
             break  # hi would otherwise pin end==hi forever
-    return list(zip(top_keys.tolist(), top_scores.tolist()))
+    return top_keys, top_scores
 
 
 class BM25Engine:
@@ -294,196 +324,100 @@ class BM25Engine:
             len(g) for g in (self.reader.blocks(t) for t in terms) if g is not None
         )
 
-    def _weight(self, term: str) -> float:
-        return bm25_idf(self.n_docs, self.reader.df(term))
+    # Above this many postings in the candidate lists (``mass``, see the
+    # module docstring), the vectorized exhaustive path beats the sweep:
+    # when the block-max bounds cannot prune (uniform score mass), WAND
+    # degenerates to per-document Python over the posting union (~8µs/doc)
+    # while the numpy path costs ~50ns/posting — the crossover is a few
+    # thousand.
+    TAAT_THRESHOLD = 5_000
+
+    # Asymmetry ratio: when the posting union exceeds this multiple of
+    # ``mass``, the sweep's gap jumps amortize the per-block Python even
+    # for a large ``mass`` (it touches O(union blocks) at worst but
+    # usually far fewer; brute force always decodes the full union).
+    AND_ASYM_RATIO = 8
+
+    def search(self, query: str, k: int = 10) -> pd.DataFrame:
+        """Exact BM25 top-k (OR): block-max WAND with block-granular
+        skipping, switching to the vectorized exhaustive path for dense
+        queries (both are exact with the same doc-asc tie-break)."""
+        return self._search(query, k, conjunctive=False, exhaustive=False)
 
     def search_and(self, query: str, k: int = 10) -> pd.DataFrame:
         """Conjunctive (AND) exact BM25 top-k: only docs containing EVERY
-        query term.  Uses :func:`block_sweep_topk_and`, whose gap prune
-        skips hot terms' blocks between the rarest term's docs without
-        decoding; dense conjunctions route to the vectorized path."""
-        terms = bm25_terms(query)
-        self.reader.fetch(terms)
-        term_caches = [(t, self.reader.block_cache(t)) for t in terms]
-        if any(c is None for _, c in term_caches) or not term_caches:
-            return self._to_frame([])  # a missing term empties the AND
-        # candidate mass is bounded by the RAREST term's list.  Route to
-        # the gap-pruned sweep when the rarest list is small in absolute
-        # terms OR small RELATIVE to the union: for "rare-ish AND
-        # enormous" (df 10k vs 10M) the sweep still wins by jumping the
-        # huge list in block units between the rare docs, while brute
-        # force pays the full union decode.  Brute-force only when the
-        # lists are comparably sized (no gap to exploit) or single-term.
-        dfs = [self.reader.df(t) for t, _ in term_caches]
-        rarest, total = min(dfs), sum(dfs)
-        if len(term_caches) == 1 or (
-            rarest > self.TAAT_THRESHOLD and total < self.AND_ASYM_RATIO * rarest
-        ):
-            return self.search_bruteforce_and(query, k)
-        sweeps = [
-            _TermSweep(c, self._weight(t), self._dl_norm, self._decode_counter)
-            for t, c in term_caches
-        ]
-        if any(s.exhausted() for s in sweeps):
-            return self._to_frame([])
-        return self._to_frame(block_sweep_topk_and(sweeps, k, len(sweeps)))
-
-    def search_bruteforce_and(self, query: str, k: int = 10) -> pd.DataFrame:
-        """Exhaustive conjunctive scoring: per-doc sums kept only where
-        every term matched (each term contributes one posting per doc, so
-        the match count equals the term count exactly there)."""
-        terms = bm25_terms(query)
-        self.reader.fetch(terms)
-        parts: list[tuple[np.ndarray, np.ndarray]] = []
-        for t in terms:
-            scored = self._scored_blocks(t)
-            if scored is None:
-                return self._to_frame([])
-            parts += scored
-        if not parts:
-            return self._to_frame([])
-        uniq, inv, cnt = np.unique(
-            np.concatenate([p[0] for p in parts]),
-            return_inverse=True,
-            return_counts=True,
-        )
-        acc = np.bincount(inv, weights=np.concatenate([p[1] for p in parts]))
-        full = np.flatnonzero(cnt == len(terms))
-        if not len(full):
-            return self._to_frame([])
-        order = full[np.lexsort((uniq[full], -acc[full]))][:k]
-        return self._to_frame([(int(uniq[i]), float(acc[i])) for i in order])
+        query term.  The sweep's gap prune skips hot terms' blocks between
+        the rarest term's docs without decoding; dense conjunctions route
+        to the vectorized path."""
+        return self._search(query, k, conjunctive=True, exhaustive=False)
 
     def search_bruteforce(self, query: str, k: int = 10) -> pd.DataFrame:
         """Exhaustive vectorized term-at-a-time scoring — exact, and faster
         than WAND when the query's posting mass is dense (stopword-heavy
         queries score nearly every document, so skipping buys nothing and
         the per-pivot loop loses to array math)."""
+        return self._search(query, k, conjunctive=False, exhaustive=True)
+
+    def search_bruteforce_and(self, query: str, k: int = 10) -> pd.DataFrame:
+        """Exhaustive conjunctive scoring: per-doc sums kept only where
+        every term matched."""
+        return self._search(query, k, conjunctive=True, exhaustive=True)
+
+    def _search(
+        self, query: str, k: int, conjunctive: bool, exhaustive: bool
+    ) -> pd.DataFrame:
+        """The body of the four searches: one fetch of the query's terms,
+        ``need`` = every term (AND) or 1 (OR), then the sweep or the
+        exhaustive scorer by the routing rule of the module docstring,
+        unless ``exhaustive`` forces the latter."""
+        if k < 1:
+            raise ValueError(f"k must be at least 1, got {k}")
         terms = bm25_terms(query)
         self.reader.fetch(terms)
-        parts: list[tuple[np.ndarray, np.ndarray]] = []
-        for t in terms:
-            parts += self._scored_blocks(t) or []
-        if not parts:
-            return self._to_frame([])
-        uniq, inv = np.unique(
-            np.concatenate([p[0] for p in parts]), return_inverse=True
+        caches = {t: c for t in terms if (c := self.reader.block_cache(t)) is not None}
+        need = len(terms) if conjunctive else 1
+        if not caches or len(caches) < need:  # AND: a missing term empties it
+            return self._to_frame(*_NO_ROWS)
+        dfs = [self.reader.df(t) for t in caches]
+        weights = [bm25_idf(self.n_docs, df) for df in dfs]
+        mass = sum(sorted(dfs)[: len(dfs) - need + 1])
+        if exhaustive or len(dfs) <= 1 or (
+            mass > self.TAAT_THRESHOLD and sum(dfs) < self.AND_ASYM_RATIO * mass
+        ):
+            return self._to_frame(*self._exhaustive(caches.values(), weights, k, need))
+        sweeps = [
+            _TermSweep(c, w, self._dl_norm, self._decode_counter)
+            for c, w in zip(caches.values(), weights)
+        ]
+        return self._to_frame(*block_sweep_topk(sweeps, k, need=need))
+
+    def _exhaustive(
+        self, caches: Iterable[BlockCache], weights: list[float], k: int, need: int
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Every block of every term, summed per doc; docs with fewer than
+        ``need`` postings dropped (one posting per term and doc, counted
+        only when ``need`` > 1), then the top k by partition and sort."""
+        parts = [
+            _scored_block(c, i, w, self._dl_norm)
+            for c, w in zip(caches, weights)
+            for i in range(len(c.slots))
+        ]
+        uniq, inv, *cnt = np.unique(
+            np.concatenate([p[0] for p in parts]),
+            return_inverse=True,
+            return_counts=need > 1,
         )
         acc = np.bincount(inv, weights=np.concatenate([p[1] for p in parts]))
+        if need > 1:
+            matched = cnt[0] >= need
+            uniq, acc = uniq[matched], acc[matched]
         if len(acc) > k:
             thr = np.partition(acc, len(acc) - k)[len(acc) - k]
             cand = np.flatnonzero(acc >= thr)  # ≥ keeps score ties for the
         else:  # doc-asc tie-break below
             cand = np.arange(len(acc))
         order = cand[np.lexsort((uniq[cand], -acc[cand]))][:k]
-        return self._to_frame([(int(uniq[i]), float(acc[i])) for i in order])
+        return uniq[order], acc[order]
 
-    def _scored_blocks(self, term: str) -> list[tuple[np.ndarray, np.ndarray]] | None:
-        """Every block of the term as (doc keys, scores), in key order;
-        None if the index lacks the term."""
-        cache = self.reader.block_cache(term)
-        if cache is None:
-            return None
-        w = self._weight(term)
-        return [
-            _scored_block(cache, i, w, self._dl_norm) for i in range(len(cache.slots))
-        ]
-
-    # Above this many total postings across the query's terms, the
-    # vectorized exhaustive path beats the per-pivot WAND loop: when the
-    # block-max bounds cannot prune (uniform score mass), WAND degenerates
-    # to per-document Python over the posting union (~8µs/doc) while the
-    # numpy path costs ~50ns/posting — the crossover is a few thousand.
-    TAAT_THRESHOLD = 5_000
-
-    # Conjunctive asymmetry ratio: when the posting-union exceeds this
-    # multiple of the rarest list, the AND sweep's gap jumps amortize the
-    # per-block Python even for a large rarest list (it touches O(union
-    # blocks) at worst but usually far fewer; brute force always decodes
-    # the full union).
-    AND_ASYM_RATIO = 8
-
-    def search(self, query: str, k: int = 10) -> pd.DataFrame:
-        """Exact BM25 top-k: block-max WAND with block-granular skipping,
-        switching to the vectorized exhaustive path for dense queries
-        (both are exact with the same doc-asc tie-break)."""
-        terms = bm25_terms(query)
-        self.reader.fetch(terms)
-        term_caches = [(t, self.reader.block_cache(t)) for t in terms]
-        total = sum(self.reader.df(t) for t, c in term_caches if c is not None)
-        n_live = sum(1 for _, c in term_caches if c is not None)
-        # single-term queries: block-max bounds cannot prune (every block
-        # of the one list is a candidate until the heap fills with ITS own
-        # scores), so WAND degenerates to a per-posting Python loop; the
-        # vectorized exhaustive path is exact and ~100x cheaper per posting
-        if total > self.TAAT_THRESHOLD or n_live <= 1:
-            return self.search_bruteforce(query, k)
-        sweeps = [
-            _TermSweep(c, self._weight(t), self._dl_norm, self._decode_counter)
-            for t, c in term_caches
-            if c is not None
-        ]
-        sweeps = [s for s in sweeps if not s.exhausted()]
-        if not sweeps:
-            return self._to_frame([])
-        return self._to_frame(block_sweep_topk(sweeps, k))
-
-    def _to_frame(self, pairs: list[tuple[int, float]]) -> pd.DataFrame:
-        keys = np.array([d for d, _ in pairs], dtype=np.int64)
-        return pd.DataFrame(
-            {
-                **doc_key_columns(keys, self.doc_cols),
-                "score": np.array([s for _, s in pairs], dtype=np.float64),
-            }
-        )
-
-
-def block_sweep_topk_and(
-    sweeps: list[_TermSweep], k: int, m: int
-) -> list[tuple[int, float]]:
-    """Conjunctive (AND) exact top-k: only docs matched by ALL ``m`` terms
-    score.  Same range sweep as :func:`block_sweep_topk`, with two extra
-    prunes the conjunction makes sound:
-
-    - if ANY term is exhausted, no further doc can match — stop;
-    - if ANY term's current block starts after the range end, no doc in
-      the range has that term — skip the whole range WITHOUT decoding
-      (this is the next_geq-style gap jump; with one rare term the hot
-      terms' lists are skipped in block units between the rare docs).
-    """
-    top_keys = np.empty(0, dtype=np.int64)
-    top_scores = np.empty(0, dtype=np.float64)
-    theta = -math.inf
-
-    while True:
-        if any(s.exhausted() for s in sweeps):
-            break
-        end = min(s.block_max() for s in sweeps)
-        gap = any(s.block_min() > end for s in sweeps)
-        bound = sum(s.block_ub() for s in sweeps)
-        if gap or (len(top_keys) == k and bound < theta):
-            for s in sweeps:
-                s.skip_through(end)
-            continue
-        pieces = [s.take_through(end) for s in sweeps]
-        kparts = [p[0] for p in pieces if p is not None and len(p[0])]
-        if len(kparts) < m:
-            continue
-        keys_cat = np.concatenate(kparts)
-        sc_cat = np.concatenate(
-            [p[1] for p in pieces if p is not None and len(p[0])]
-        )
-        uk, inv, cnt = np.unique(keys_cat, return_inverse=True, return_counts=True)
-        agg = np.zeros(len(uk), dtype=np.float64)
-        np.add.at(agg, inv, sc_cat)
-        full = cnt == m  # doc matched by every term (one posting per term)
-        uk, agg = uk[full], agg[full]
-        if not len(uk):
-            continue
-        ks = np.concatenate([top_keys, uk])
-        sc = np.concatenate([top_scores, agg])
-        order = np.lexsort((ks, -sc))[:k]
-        top_keys, top_scores = ks[order], sc[order]
-        if len(top_keys) == k:
-            theta = float(top_scores[-1])
-    return list(zip(top_keys.tolist(), top_scores.tolist()))
+    def _to_frame(self, keys: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+        return pd.DataFrame({**doc_key_columns(keys, self.doc_cols), "score": scores})

@@ -394,9 +394,7 @@ def distributed_bm25_local_topk_many(
         # once: a term's weight is the same for every query of the batch,
         # so every query's sweep over that term reads one BlockCache
         caches = {t: BlockCache(g) for t, g in _by_term(blocks_pdf).items()}
-        qids: list[int] = []
-        keys: list[int] = []
-        scores: list[float] = []
+        qids, keys, scores = [], [], []
         for qid, weights in b_qweights.items():
             sweeps = [
                 _TermSweep(caches[t], w, norms)
@@ -405,17 +403,17 @@ def distributed_bm25_local_topk_many(
             ]
             if not sweeps:
                 continue
-            for d, s in block_sweep_topk(sweeps, b_k, lo=lo, hi=hi):
-                qids.append(qid)
-                keys.append(d)
-                scores.append(s)
+            top_keys, top_scores = block_sweep_topk(sweeps, b_k, lo=lo, hi=hi)
+            qids.append(np.full(len(top_keys), qid, dtype=np.int32))
+            keys.append(top_keys)
+            scores.append(top_scores)
         if not qids:
             return _empty
         return pd.DataFrame(
             {
-                "query_id": pd.Series(qids, dtype="int32"),
-                "doc_key": pd.Series(keys, dtype="int64"),
-                "score": pd.Series(scores, dtype="float64"),
+                "query_id": np.concatenate(qids),
+                "doc_key": np.concatenate(keys),
+                "score": np.concatenate(scores),
             }
         )
 
@@ -465,6 +463,8 @@ def distributed_bm25_topk_many(
     """
     from pyspark.sql import Window
 
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
     meta = read_meta(paths)
     doc_cols = meta["doc_cols"]
     empty = pd.DataFrame(
@@ -487,32 +487,26 @@ def distributed_bm25_topk_many(
             )
         )
         local = local.withColumn("_rk", rank).where(F.col("_rk") <= k).drop("_rk")
-    rows = local.collect()
-    if not rows:
+    pdf = local.toPandas()
+    if not len(pdf):
         return empty
-    pdf = pd.DataFrame(
+    # a doc lies in one range, so (query_id, doc_key) is unique and the
+    # sort is total
+    top = (
+        pdf.sort_values(
+            ["query_id", "score", "doc_key"], ascending=[True, False, True],
+            kind="stable",
+        )
+        .groupby("query_id")
+        .head(k)
+    )
+    return pd.DataFrame(
         {
-            "query_id": [r["query_id"] for r in rows],
-            "doc_key": [r["doc_key"] for r in rows],
-            "score": [r["score"] for r in rows],
+            "query_id": top["query_id"].to_numpy(dtype=np.int32),
+            **doc_key_columns(top["doc_key"].to_numpy(dtype=np.int64), doc_cols),
+            "score": top["score"].to_numpy(dtype=np.float64),
         }
     )
-    out_parts = []
-    for qid, g in pdf.groupby("query_id", sort=True):
-        top = g.sort_values(
-            ["score", "doc_key"], ascending=[False, True], kind="mergesort"
-        ).head(k)
-        out_parts.append(
-            pd.DataFrame(
-                {
-                    "query_id": np.full(len(top), qid, dtype=np.int32),
-                    **doc_key_columns(top["doc_key"].to_numpy(dtype=np.int64), doc_cols),
-                    "score": top["score"].to_numpy(dtype=np.float64),
-                }
-            )
-        )
-    return pd.concat(out_parts, ignore_index=True)
-
 
 def distributed_bm25_topk(
     spark: SparkSession,

@@ -114,6 +114,35 @@ def test_wand_skips_blocks(bm25_skip):
     )
 
 
+def test_or_dense_and_single_term_route_to_exhaustive(bm25_skip, monkeypatch):
+    """OR routing: a single-term query, and a query whose total df is
+    over TAAT_THRESHOLD, take the exhaustive path, which reads no block
+    through a sweep.  Forced by dropping the threshold under the 4100
+    postings of "common rareterm", which sweeps at the default."""
+    for q in ("common", "rareterm"):
+        before = bm25_skip.blocks_decoded
+        bm25_skip.search(q, 5)
+        assert bm25_skip.blocks_decoded == before, q
+    q = "common rareterm"
+    monkeypatch.setattr(bm25_skip, "TAAT_THRESHOLD", 4_000)
+    before = bm25_skip.blocks_decoded
+    got = bm25_skip.search(q, 10)
+    assert bm25_skip.blocks_decoded == before
+    pd.testing.assert_frame_equal(got, bm25_skip.search_bruteforce(q, 10), check_exact=True)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_k_below_one_raises(bm25, vocabulary, k):
+    """Every search raises on k < 1 for a single-term, a dense and a
+    sparse query alike (before: a partition error, an IndexError, or
+    every row but the last for k = -1)."""
+    queries = [vocabulary[0], " ".join(vocabulary[:5]), f"{vocabulary[500]} {vocabulary[600]}"]
+    for name in ("search", "search_and", "search_bruteforce", "search_bruteforce_and"):
+        for q in queries:
+            with pytest.raises(ValueError, match="k must be at least 1"):
+                getattr(bm25, name)(q, k)
+
+
 def test_blocks_decode_once_per_open(spark, bm25_skip, monkeypatch):
     """A fresh engine decodes each block once: a repeated sweep reads
     every block from the cache, and brute force then decodes only the
@@ -303,15 +332,16 @@ def test_block_sweep_matches_bruteforce_property(terms, k, block_size):
 
     counter = [0]
     sweeps = [_make_sweep(p, w, block_size, counter) for p, w in terms]
-    got = block_sweep_topk(sweeps, k)
+    keys, scores = block_sweep_topk(sweeps, k)
 
     truth: dict[int, float] = {}
     for postings, w in terms:
         for d, tf in postings.items():
             truth[d] = truth.get(d, 0.0) + w * tf * (BM25_K1 + 1.0) / (tf + BM25_K1)
     exp = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    assert [d for d, _ in got] == [d for d, _ in exp]
-    assert np.allclose([s for _, s in got], [s for _, s in exp], atol=1e-12)
+    assert keys.dtype == np.int64 and scores.dtype == np.float64
+    assert keys.tolist() == [d for d, _ in exp]
+    assert np.allclose(scores, [s for _, s in exp], atol=1e-12)
 
 
 def test_and_matches_bruteforce(bm25, bm25_cold, vocabulary):
@@ -366,11 +396,11 @@ def test_and_gap_prune_skips_blocks(bm25_skip):
 )
 def test_block_sweep_and_matches_truth_property(terms, k, block_size):
     from holi_search_engine_spark.plans.compression import BM25_K1
-    from holi_search_engine_spark.query.bm25 import block_sweep_topk_and
+    from holi_search_engine_spark.query.bm25 import block_sweep_topk
 
     counter = [0]
     sweeps = [_make_sweep(p, w, block_size, counter) for p, w in terms]
-    got = block_sweep_topk_and(sweeps, k, len(terms))
+    keys, scores = block_sweep_topk(sweeps, k, need=len(terms))
 
     common = set(terms[0][0])
     for postings, _ in terms[1:]:
@@ -382,8 +412,8 @@ def test_block_sweep_and_matches_truth_property(terms, k, block_size):
         for d in common
     }
     exp = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    assert [d for d, _ in got] == [d for d, _ in exp]
-    assert np.allclose([s for _, s in got], [s for _, s in exp], atol=1e-12)
+    assert keys.tolist() == [d for d, _ in exp]
+    assert np.allclose(scores, [s for _, s in exp], atol=1e-12)
 
 
 def test_and_rareish_vs_enormous_routes_to_sweep(bm25_skip):

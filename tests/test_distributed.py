@@ -347,6 +347,22 @@ def test_distributed_bm25_many_matches_single(spark, built_index, vocabulary):
     assert len(none) == 0
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_distributed_bm25_k_below_one_raises(spark, built_index, vocabulary, k):
+    """The batch rejects k < 1 as the single-node engine does, for a
+    batch and for a batch of one."""
+    from holi_search_engine_spark.query.distributed import (
+        distributed_bm25_topk,
+        distributed_bm25_topk_many,
+    )
+
+    batch = [vocabulary[0], " ".join(vocabulary[:5]), f"{vocabulary[500]} {vocabulary[600]}"]
+    with pytest.raises(ValueError, match="k must be at least 1"):
+        distributed_bm25_topk_many(spark, built_index, batch, k, n_ranges=7)
+    with pytest.raises(ValueError, match="k must be at least 1"):
+        distributed_bm25_topk(spark, built_index, batch[0], k)
+
+
 def test_distributed_bm25_many_spark_side_merge(
     spark, built_index, vocabulary, monkeypatch
 ):
