@@ -523,18 +523,3 @@ def _build_index_inner(
 def read_meta(paths: IndexPaths) -> dict:
     with open(paths.meta_json) as f:
         return json.load(f)
-
-
-def artifact_nbytes(path: str) -> int:
-    """Total on-disk bytes of a (local) parquet artifact directory — the
-    cheap input to the engines' preload-vs-pruned-read decision.  Unknown
-    (non-local / unreadable) paths return -1; callers treat unknown as
-    too big and degrade to pruned per-term reads."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-    except OSError:
-        return -1
-    return total if total else -1

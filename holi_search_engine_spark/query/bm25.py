@@ -273,19 +273,21 @@ def block_sweep_topk(
 class BM25Engine:
     """Driver-side BM25 engine over an :class:`IndexReader`.
 
-    Preloaded mode (small indexes) holds the block BYTES in-process and
-    decodes lazily per touched block, once per open: a block's doc keys
-    and scores stay in the reader's LRU (``IndexReader.block_cache``,
-    capped in terms and bytes) for every later query that reads it.
-    Above the block-table size threshold (``index_reader.PRELOAD_MAX_BYTES``)
-    the reader auto-degrades: each query fetches only its own terms' blocks
-    and df rows, one term-pruned read of each per query (LRU-cached) —
-    identical results, no caller change; the blocks it reads are scored
-    once as long as its entry stays in the LRU.  Doc-length norms stay preloaded in both
-    modes: at 16 B/doc they are orders of magnitude smaller than the
-    block table, and WAND consults them per decoded posting; the corpus
-    size where *they* no longer fit is the documented hand-off to
-    ``query/distributed.py``."""
+    The engine starts no Spark job: the reader reads the files of the
+    snapshot it took at open with Arrow.  Preloaded mode (small indexes)
+    holds the block BYTES in-process and decodes lazily per touched block,
+    once per open: a block's doc keys and scores stay in the reader's LRU
+    (``IndexReader.block_cache``, capped in terms and bytes) for every
+    later query that reads it.  Above the block-table size threshold
+    (``index_reader.PRELOAD_MAX_BYTES``) the reader auto-degrades: each
+    query reads only its own terms' blocks (from the files of their
+    buckets) and df rows, one term-filtered read of each per query
+    (LRU-cached) — identical results, no caller change; the blocks it
+    reads are scored once as long as its entry stays in the LRU.
+    Doc-length norms stay preloaded in both modes: at 16 B/doc they are
+    orders of magnitude smaller than the block table, and WAND consults
+    them per decoded posting; the corpus size where *they* no longer fit
+    is the documented hand-off to ``query/distributed.py``."""
 
     def __init__(
         self,

@@ -1,22 +1,25 @@
 """One reader of a built index under both single-node engines.
 
 ``RankerEngine`` and ``BM25Engine`` score on top of an :class:`IndexReader`,
-which owns every ``toPandas()`` boundary of the index (the block table is
-the index the reference's single ranker node reads, SURVEY §1):
+which does every read of the index the engines make.  Like the
+reference's single ranker node, which reads its tables directly
+(SURVEY §1), it starts no Spark job: at open it takes a snapshot of each
+table's data files (``sources.catalog.snapshot``) and reads those files
+with ``pyarrow.dataset``, projecting only the columns it uses.
 
 - the preload decision: the block table and wmetric are read into the
-  driver while the block table fits ``preload_max_bytes`` (the single
-  ranker-node serving model, lowest latency); past it, or when its size is
-  unknown, the reader degrades to term-pruned reads with no caller change;
+  driver while the block table's files fit ``preload_max_bytes`` (the
+  single ranker-node serving model, lowest latency); past it the reader
+  degrades to term-pruned reads with no caller change;
 - per term, the block rows and the df/idf of its wmetric row.  The block
   rows of a read are sorted once by ``(term, block_no)`` and each term
   holds a :class:`TermBlocks`: array slices (views) of that table's
   ``key_min``, ``key_max``, ``ub_bm25``, ``doc_bytes`` and ``tf_bytes``
   columns, so neither the open nor a query builds a per-term DataFrame.
   Degraded mode fetches a whole query's missing terms at once: one read
-  of the block table pruned to the terms' ``bucket`` partitions and then
-  to the terms, and one term-pruned read of wmetric, two Spark jobs per
-  query however many terms it has;
+  of the block files of the terms' ``bucket`` partitions, filtered to the
+  terms, and one term-filtered read of wmetric, however many terms the
+  query has;
 - one LRU of per-term entries, capped in terms and in bytes: the block
   rows a degraded read fetched, the ranker's decoded postings and BM25's
   scored blocks (a :class:`BlockCache` per term, filled block by block);
@@ -25,8 +28,10 @@ the index the reference's single ranker node reads, SURVEY §1):
   just the candidates' rows.
 
 An open reader is a snapshot of the index it opened: a preloaded reader
-never rereads, and a degraded one keeps what it cached.  After an ingest,
-callers open the engines again.
+never rereads, and a degraded one reads only the files it listed at open.
+After an ingest, callers open the engines again; a degraded reader whose
+files a rebuild replaced raises ``StaleSnapshot`` rather than mix the old
+open's statistics with new blocks.
 """
 
 from __future__ import annotations
@@ -36,18 +41,25 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession
 
 from ..functions.xxhash import term_bucket
 from ..plans.compression import DocKeyLookup, decode_block
-from ..plans.index_build import IndexPaths, artifact_nbytes, read_meta
-from ..sources.catalog import read_table
+from ..plans.index_build import IndexPaths, read_meta
+from ..sources.catalog import TableFiles, snapshot
 
-#: Default preload budget in block-table bytes.  Preloading is right while
-#: the index fits comfortably in driver memory; past this the reader falls
-#: back to pruned per-query reads — the 100× corpus path.  Callers that
-#: need another budget pass ``preload_max_bytes``.
+#: Default preload budget: the summed size of the block table's data files
+#: in the open's snapshot.  Preloading is right while the index fits
+#: comfortably in driver memory; past this the reader falls back to pruned
+#: per-query reads — the 100× corpus path.  Callers that need another
+#: budget pass ``preload_max_bytes``.
 PRELOAD_MAX_BYTES = 2 << 30
+
+#: The columns the reader reads of the block table and of wmetric.
+BLOCK_COLS = ["term", "block_no", "key_min", "key_max", "ub_bm25", "doc_bytes", "tf_bytes"]
+STAT_COLS = ["term", "df", "idf"]
 
 _UNREAD = object()  # an entry whose block rows were not fetched yet
 
@@ -156,17 +168,23 @@ class IndexReader:
         preload: bool | None = None,
         preload_max_bytes: int | None = None,
     ) -> None:
-        """``preload=None`` preloads while the block table is under
+        """Snapshots every table's data files, then ``preload=None``
+        preloads while the block table's files sum to at most
         ``preload_max_bytes`` (default ``PRELOAD_MAX_BYTES``) and degrades
-        otherwise; unknown sizes (non-local FS) degrade.  True/False
-        forces a mode."""
-        self.spark = spark
+        otherwise.  True/False forces a mode.  ``spark`` lists an Iceberg
+        table's files; a parquet index is listed and read without it."""
         self.paths = paths
         self.meta = read_meta(paths)
         self.doc_cols: list[str] = self.meta["doc_cols"]
+        #: each table's data files at open, None for a table without any
+        self.tables: dict[str, TableFiles | None] = {
+            p: snapshot(spark, p)
+            for p in (paths.blocks, paths.wmetric, paths.doc_stats, paths.doc_meta, paths.pageranks)
+        }
         if preload is None:
             cap = PRELOAD_MAX_BYTES if preload_max_bytes is None else preload_max_bytes
-            preload = 0 <= artifact_nbytes(paths.blocks) <= cap
+            blocks = self.tables[paths.blocks]
+            preload = (blocks.nbytes if blocks is not None else 0) <= cap
         self.preloaded: bool = preload
         self._blocks: dict[str, TermBlocks] | None = None
         self._stats: dict[str, tuple[int, float]] | None = None
@@ -175,8 +193,16 @@ class IndexReader:
         self._query_terms: frozenset[str] = frozenset()  # never evicted
         self._docs: dict[str, tuple[tuple[str, ...], DocKeyLookup]] = {}
         if preload:
-            self._blocks = _by_term(read_table(spark, paths.blocks).toPandas())
-            self._stats = _by_term_stats(read_table(spark, paths.wmetric).toPandas())
+            self._blocks = _by_term(self._read(paths.blocks, BLOCK_COLS))
+            self._stats = _by_term_stats(self._read(paths.wmetric, STAT_COLS))
+
+    def _read(self, path: str, columns: list[str], where=None, buckets=None) -> pd.DataFrame:
+        """``columns`` of the snapshot's rows of ``path`` that match
+        ``where``, from the files of ``buckets`` or from all."""
+        files = self.tables[path]
+        if files is None:
+            return pd.DataFrame(columns=columns)
+        return files.read(columns, where, buckets).to_pandas()
 
     # ------------------------------------------------------------ terms
 
@@ -190,7 +216,7 @@ class IndexReader:
         """Make one query's terms resident: block rows and stats of
         ``terms``, stats of ``stats_only``.  None of them is evicted
         before the next fetch; a degraded read of the missing ones costs
-        one Spark job for blocks and one for wmetric."""
+        one read of the block table and one of wmetric."""
         terms = list(dict.fromkeys(terms))
         self._query_terms = frozenset([*terms, *stats_only])
         if self.preloaded:  # every term is resident: only drop what the
@@ -275,20 +301,13 @@ class IndexReader:
         self._evict()
 
     def _read_blocks(self, terms: list[str]) -> dict[str, TermBlocks]:
-        buckets = sorted({term_bucket(t, self.meta["buckets"]) for t in terms})
-        return _by_term(
-            read_table(self.spark, self.paths.blocks)
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(terms))
-            .toPandas()
-        )
+        buckets = {term_bucket(t, self.meta["buckets"]) for t in terms}
+        where = pc.field("term").isin(terms)
+        return _by_term(self._read(self.paths.blocks, BLOCK_COLS, where, buckets))
 
     def _read_stats(self, terms: list[str]) -> dict[str, tuple[int, float]]:
-        return _by_term_stats(
-            read_table(self.spark, self.paths.wmetric)
-            .where(F.col("term").isin(terms))
-            .toPandas()
-        )
+        where = pc.field("term").isin(terms)
+        return _by_term_stats(self._read(self.paths.wmetric, STAT_COLS, where))
 
     def _charge(self, entry: _Term, nbytes: int) -> None:
         entry.nbytes += nbytes
@@ -298,7 +317,7 @@ class IndexReader:
     def _evict(self) -> None:
         """Drop least-recently-used entries past either cap, never one of
         the current query's terms: evicting those would re-read them one
-        Spark job per term, exactly the round trips batching avoids."""
+        read per term, exactly the round trips batching avoids."""
         while len(self._cache) > self.CACHE_TERMS or self._cache_bytes > self.CACHE_BYTES:
             victim = next((t for t in self._cache if t not in self._query_terms), None)
             if victim is None:
@@ -315,14 +334,13 @@ class IndexReader:
     def read_docs(
         self, path: str, cols: tuple[str, ...], keys: np.ndarray | None = None
     ) -> DocKeyLookup:
-        """One Spark job: the per-doc table at ``path`` as a sorted lookup
-        of ``cols`` on its stored ``doc_key`` (1-D values for one column,
-        else one value column per name), whole or pruned to ``keys``.  keys
-        is ≤ TOP_CUT=250, so the isin list stays tiny."""
-        df = read_table(self.spark, path).select("doc_key", *cols)
-        if keys is not None:
-            df = df.where(F.col("doc_key").isin([int(k) for k in keys]))
-        pdf = df.toPandas()
+        """One read of the snapshot's files: the per-doc table at ``path``
+        as a sorted lookup of ``cols`` on its stored ``doc_key`` (1-D
+        values for one column, else one value column per name), whole or
+        filtered to ``keys``.  keys is ≤ TOP_CUT=250, so the isin list
+        stays tiny."""
+        where = None if keys is None else pc.field("doc_key").isin(pa.array(keys, pa.int64()))
+        pdf = self._read(path, ["doc_key", *cols], where)
         vals = pdf[cols[0] if len(cols) == 1 else list(cols)].to_numpy()
         return DocKeyLookup(pdf["doc_key"].to_numpy(dtype=np.int64), vals)
 

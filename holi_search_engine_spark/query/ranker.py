@@ -10,8 +10,10 @@ Two execution modes:
   driver while they fit (what the reference's single ranker node does
   with its KVS point-gets, minus the per-candidate HTTP round trips —
   ``Ranker.java:231-251`` issues O(250·|q|) gets), else term- and
-  key-pruned parquet reads per query.  Postings are decoded and scored
-  with numpy; the answer is one DataFrame built at the end.
+  key-pruned parquet reads per query.  Either way the reader reads the
+  files it listed at open with Arrow, so no Spark job runs.  Postings
+  are decoded and scored with numpy; the answer is one DataFrame built
+  at the end.
 - ``distributed``: Spark runs :func:`candidates` and :func:`top_cut` per
   doc-key range, over a block scan split by range — the path a
   10^12-turn corpus needs when a Zipf-head term's posting list exceeds
@@ -46,7 +48,6 @@ from ..functions.javacompat import java_hashmap_value_order, java_hashset_order
 from ..functions.javacompat import java_query_tokens
 from ..plans.compression import doc_key_columns
 from ..plans.index_build import IndexPaths
-from ..sources.catalog import table_exists
 from .index_reader import IndexReader
 from .stopwords import STOPWORDS
 
@@ -302,7 +303,7 @@ class RankerEngine:
         self.doc_cols: list[str] = self.reader.doc_cols
         # optional static prior (the reference's pageranks table,
         # Ranker.java:112-120); absent ⇒ every doc's prior is 0
-        self._has_pagerank = table_exists(spark, paths.pageranks)
+        self._has_pagerank = self.reader.tables[paths.pageranks] is not None
         #: every doc_meta title's words, while preloaded; degraded
         #: queries index their cut's titles
         self._title_words: TitleWords | None = None

@@ -1,5 +1,7 @@
 """Transcripts source schema validation."""
 
+import os
+
 import pytest
 
 from holi_search_engine_spark.sources.transcripts import (
@@ -171,3 +173,93 @@ def test_ensure_transcripts_table_branches(spark, monkeypatch):
     assert ensure_transcripts_table(stub, name="transcripts", catalog="lake") is True
     assert "CREATE TABLE IF NOT EXISTS lake.transcripts" in ddls[0]
     assert "USING iceberg" in ddls[0] and "bucket(64, conv_id)" in ddls[0]
+
+
+def test_snapshot_parquet_branch(spark, tmp_path, monkeypatch):
+    """One listing of a parquet table: data files with their sizes and
+    hive ``bucket`` partition, Spark's hidden names (``_SUCCESS``,
+    ``.crc``, ``_temporary/``) skipped; an absent path and a directory
+    without data files have no snapshot."""
+    from holi_search_engine_spark.sources import catalog as C
+
+    monkeypatch.delenv(C.ENV_DB, raising=False)
+    path = str(tmp_path / "art")
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (2, "c")], "bucket int, v string")
+    C.write_table(df.repartition(1), path, partition_by=["bucket"])
+    hidden = tmp_path / "art" / "_temporary" / "0"
+    hidden.mkdir(parents=True)
+    (hidden / "part-0.parquet").write_bytes(b"x")
+    snap = C.snapshot(spark, path)
+    assert snap.files and all(f.endswith(".parquet") for f in snap.files)
+    assert not any("/_" in f or "/." in f for f in snap.files)
+    assert sorted(snap.buckets) == [1, 2]
+    assert snap.sizes == tuple(os.path.getsize(f) for f in snap.files)
+    assert snap.nbytes == sum(snap.sizes)
+    got = snap.read(["v"], buckets={2}).to_pydict()
+    assert sorted(got["v"]) == ["b", "c"]
+    assert snap.read(["v"], buckets={3}).num_rows == 0
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    assert C.snapshot(spark, str(empty)) is None
+    assert C.snapshot(spark, str(tmp_path / "absent")) is None
+
+
+class _FilesTable:
+    """A recording stand-in for an Iceberg ``files`` metadata table."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.columns = list(rows[0].asDict()) if rows else []
+
+    def select(self, *cols):
+        assert set(cols) <= set(self.columns)
+        return self
+
+    def collect(self):
+        return self.rows
+
+
+def test_snapshot_iceberg_branch(monkeypatch):
+    """The Iceberg listing reads ``<db>.<table>.files`` once, maps each
+    data file to its ``partition.bucket``, and refuses a table with a
+    delete file by name; an absent table has no snapshot."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import Row
+
+    from holi_search_engine_spark.sources import catalog as C
+
+    monkeypatch.setenv(C.ENV_DB, "lake.search")
+    monkeypatch.setattr(C, "iceberg_available", lambda s: True)
+
+    def stub(rows, exists=True):
+        reads = []
+        spark = SimpleNamespace(
+            catalog=SimpleNamespace(tableExists=lambda n: exists),
+            read=SimpleNamespace(table=lambda n: reads.append(n) or _FilesTable(rows)),
+        )
+        return spark, reads
+
+    def row(path, size, content=0, bucket=3):
+        return Row(
+            content=content, file_path=path, file_size_in_bytes=size,
+            partition=Row(bucket=bucket),
+        )
+
+    spark, reads = stub([row("file:/lake/blocks/a.parquet", 10), row("file:/lake/blocks/b.parquet", 20, bucket=5)])
+    snap = C.snapshot(spark, "/idx/blocks")
+    assert reads == ["lake.search.blocks.files"]
+    assert snap.table == "lake.search.blocks"
+    assert snap.files == ("/lake/blocks/a.parquet", "/lake/blocks/b.parquet")
+    assert snap.sizes == (10, 20) and snap.buckets == (3, 5)
+
+    spark, reads = stub([row("file:/lake/blocks/a.parquet", 10), row("file:/lake/blocks/d.parquet", 5, content=1)])
+    with pytest.raises(ValueError, match="lake.search.blocks has delete files"):
+        C.snapshot(spark, "/idx/blocks")
+    assert reads == ["lake.search.blocks.files"]
+
+    spark, reads = stub([], exists=False)
+    assert C.snapshot(spark, "/idx/pageranks") is None
+    assert reads == []
